@@ -10,13 +10,16 @@ import graft.search.SearchEngine
   * lineage-committed, so concurrent/repeated callers (each Verify /
   * Bench JVM) resume instead of rebuilding. */
 object DocIndex {
-  /** bump when the on-disk index layout changes */
-  final val FormatVersion = 8
-
   private val engines = scala.collection.concurrent.TrieMap.empty[String, SearchEngine]
 
-  def indexDir(sfDir: String): String =
-    s"/tmp/graft-docindex-v$FormatVersion/${sfDir.replaceAll("[^a-zA-Z0-9.]+", "_")}"
+  /** /tmp home of the cached index `name` over `sfDir`, versioned by
+    * [[IndexBuild.FormatVersion]]: a format bump moves every cached
+    * index to a fresh directory instead of tripping the format stamp. */
+  def cacheDir(name: String, sfDir: String): String =
+    s"/tmp/graft-$name-v${IndexBuild.FormatVersion}/" +
+      sfDir.replaceAll("[^a-zA-Z0-9.]+", "_")
+
+  def indexDir(sfDir: String): String = cacheDir("docindex", sfDir)
 
   def engine(spark: SparkSession, sfDir: String): SearchEngine =
     engines.getOrElseUpdate(sfDir, {

@@ -30,10 +30,6 @@ object SparkEntry {
     e.searchHits("batch stream", 10)
   }
 
-  /** /tmp side-index tag for a testdata dir (shared by every query
-    * that builds its own index). */
-  private def dirTag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9.]+", "_")
-
   /** Construction-time SearchEngine cache for the /tmp side indexes
     * (index METADATA and table readers only — never query results; every
     * query still computes from the index parquet). An engine eagerly
@@ -79,7 +75,7 @@ object SparkEntry {
     * non-boost title — the shared tokenization spec breaks on
     * digit-bearing values like 'src3'. Lineage-committed: cheap rerun. */
   private def mfIndexDir(s: SparkSession, dir: String): String = {
-    val idxDir = s"/tmp/graft-mfidx-v2/${dirTag(dir)}"
+    val idxDir = DocIndex.cacheDir("mfidx", dir)
     val src = docsDf(s, dir).select(col("doc_id"),
       when(col("doc_id") % 7 === 0, lit("spark boost"))
         .otherwise(col("lang")).as("title"),
@@ -97,8 +93,7 @@ object SparkEntry {
     * probed bucket partitions). Shared by q_knn_lsh and the hybrid
     * semantic-arm routing. */
   private def lshIndexDir(s: SparkSession, dir: String): String = {
-    // v3: byid carries (vec, nn) so the query-row lookup is one scan
-    val idxDir = s"/tmp/graft-lshidx-v3/${dirTag(dir)}"
+    val idxDir = DocIndex.cacheDir("lshidx", dir)
     if (!new java.io.File(s"$idxDir/meta/_SUCCESS").exists())
       graft.ops.Similarity.buildLshIndex(s, embDf(s, dir), "vec_id", "embedding",
         idxDir, nPlanes = 4)
@@ -434,7 +429,7 @@ object SparkEntry {
     }),
     // ---- deletion: tombstoned docs excluded, Lucene stats (U1 del) ------
     "q_delete" -> ((s, dir) => {
-      val idxDir = s"/tmp/graft-delidx-v2/${dirTag(dir)}"
+      val idxDir = DocIndex.cacheDir("delidx", dir)
       val first200 = docsDf(s, dir).orderBy(col("doc_id")).limit(200)
       // lineage-committed: repeated calls resume/no-op
       graft.index.IndexBuild.buildFromTable(s, first200,
@@ -474,7 +469,7 @@ object SparkEntry {
     // ---- stop words as an index setting (X3): dropped from dict/
     // postings/positions; surrounding positions and doc len preserved ----
     "q_stopword" -> ((s, dir) => {
-      val idxDir = s"/tmp/graft-stopidx-v2/${dirTag(dir)}"
+      val idxDir = DocIndex.cacheDir("stopidx", dir)
       val sub = docsDf(s, dir).filter(col("doc_id") < 300)
       graft.index.IndexBuild.buildFromTable(s, sub,
         docIdCol = "doc_id", contentCol = "text", langCol = "lang",
@@ -493,7 +488,7 @@ object SparkEntry {
     // whole index pipeline (chunked shuffle, VByte blocks, dict stats)
     // runs over the segmented tokens ----------------------------------
     "q_thai_dict" -> ((s, dir) => {
-      val idxDir = s"/tmp/graft-thaiidx-v1/${dirTag(dir)}"
+      val idxDir = DocIndex.cacheDir("thaiidx", dir)
       val thaiText = expr(
         "CASE CAST(doc_id % 4 AS INT) " +
           "WHEN 0 THEN 'แมวกินปลา' WHEN 1 THEN 'ปลาทองนอน' " +
@@ -534,7 +529,7 @@ object SparkEntry {
     }),
     // ---- federated multi-index search (weighted score merge) -----------
     "q_federation" -> ((s, dir) => {
-      val base = s"/tmp/graft-fedidx-v2/${dirTag(dir)}"
+      val base = DocIndex.cacheDir("fedidx", dir)
       val cfg = graft.index.IndexConfig(docsPerShard = 256, termBuckets = 4,
         blockSize = 128, numPartitions = 8)
       val d = docsDf(s, dir)
@@ -555,9 +550,8 @@ object SparkEntry {
     }),
     // ---- dump export -> import -> search roundtrip (S5) ----------------
     "q_dump" -> ((s, dir) => {
-      val tag = dir.replaceAll("[^a-zA-Z0-9.]+", "_")
-      val dumpDir = s"/tmp/graft-dump-v2/$tag"
-      val impDir = s"/tmp/graft-dumpidx-v2/$tag"
+      val dumpDir = DocIndex.cacheDir("dump", dir)
+      val impDir = DocIndex.cacheDir("dumpidx", dir)
       graft.index.Dump.exportDump(s, DocIndex.engine(s, dir).indexDir, dumpDir)
       graft.index.Dump.importDump(s, dumpDir, impDir,
         graft.index.IndexConfig(numPartitions = 8))

@@ -37,16 +37,13 @@ final case class OffsetToken(term: String, pos: Int, start: Int, end: Int)
   * and query-side, so both ends agree by construction.
   */
 object Tokenizer extends Serializable {
-  /** Version of [[normalize]]'s character-folding rules, persisted into
-    * every index's stats table at build time and checked at engine
-    * load: an index built under DIFFERENT folds stores terms the query
-    * side can no longer produce (e.g. unfolded ة vs folded ه) and
-    * would silently return zero hits for affected words. Bump this
+  /** Version of [[normalize]]'s character-folding rules, part of every
+    * index's format stamp (graft.index.Lineage.FormatStamp) and checked
+    * at engine load: an index built under DIFFERENT folds stores terms
+    * the query side can no longer produce (e.g. unfolded ة vs folded ه)
+    * and would silently return zero hits for affected words. Bump this
     * whenever normalize()'s folds change. Version history: 2 = the
-    * current rules (Arabic/Hebrew folding + SEA-mark preservation);
-    * indexes with NO persisted version predate the check but were
-    * built by these same rules, so they load fine — the check exists
-    * for the NEXT change. */
+    * current rules (Arabic/Hebrew folding + SEA-mark preservation). */
   final val NormalizerVersion = 2
 
   final val MaxWordLength = 250
@@ -223,12 +220,10 @@ object Tokenizer extends Serializable {
     *
     * Unconditional (like lowercase/NFKD): both the index and the query
     * pass through this one function, so both ends agree by construction
-    * WITHIN one engine version. ACROSS versions the persisted index
-    * pins [[NormalizerVersion]] (stats table): an index whose stored
-    * terms were folded by an older normalizer would silently return
-    * zero hits for affected words, so the engine fails fast instead
-    * (SearchEngine checks at load; pre-version indexes — all built by
-    * folds ≤ current — are accepted, see the constant's doc). */
+    * WITHIN one engine version. ACROSS versions the index's format
+    * stamp pins [[NormalizerVersion]]: an index whose stored terms were
+    * folded by an older normalizer would silently return zero hits for
+    * affected words, so the engine fails fast at load instead. */
   def normalize(s: String): String = {
     val lower = s.toLowerCase(java.util.Locale.ROOT)
     val nfkd = Normalizer.normalize(lower, Normalizer.Form.NFKD)

@@ -27,6 +27,7 @@ object Dump {
   def exportDump(spark: SparkSession, indexDir: String, dumpDir: String): Unit = {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
+    Lineage.requireFormat(spark, indexDir)
     val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // multi-field indexes flatten to the concatenated content column in
     // this dump format — exporting one would silently lose the field
@@ -72,23 +73,8 @@ object Dump {
     // tokenizer settings travel with the dump (segmentation must match
     // on rebuild or indexed terms change); `separatorTokens` entries mix
     // single- and multi-char strings, like the reference's
-    val (seps, nonSeps, tokDict, locales, cjk)
-        : (Seq[String], Seq[String], Seq[String], Seq[String], String) = {
-      val tp = new Path(s"$indexDir/tokenizer")
-      if (!fs.exists(tp)) (Nil, Nil, Nil, Nil, "")
-      else {
-        val r = spark.read.parquet(s"$indexDir/tokenizer").collect()(0)
-        def strs(f: String): Seq[String] =
-          if (!r.schema.fieldNames.contains(f)) Nil
-          else Option(r.getAs[scala.collection.Seq[String]](f))
-            .fold(Seq.empty[String])(_.toSeq)
-        (strs("separators"), strs("nonSeparators"), strs("dictionary"),
-          strs("locales"),
-          if (r.schema.fieldNames.contains("cjkUnigrams"))
-            Option(r.getAs[String]("cjkUnigrams")).getOrElse("")
-          else "")
-      }
-    }
+    val (seps, nonSeps, tokDict, locales, cjk) =
+      IndexBuild.tokSettingsRow(IndexBuild.readTokSettings(spark, indexDir))
     // precomputed prefix tables are a build artifact, not a setting —
     // but WHETHER they exist changes serving behavior (capped on-the-fly
     // fallback vs one pseudo-term read), so record it and rebuild on

@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
@@ -78,7 +79,7 @@ final case class IndexConfig(
   * Job economy (matters for build throughput AND scaling efficiency:
   * serial driver overhead is what breaks Amdahl at 4x cores):
   *   1 sample+sort shuffle and 1 count for docid assignment, 1 write for
-  *   docs(+len+sha), 1 stats agg, 1 shuffle+write for all posting
+  *   docs(+sha), 1 stats agg, 1 shuffle+write for all posting
   *   buckets (unless bucketWaves), 1 column-pruned metadata scan each
   *   for dict and lineage. The tokenize passes re-read the committed
   *   docs parquet (column-pruned) instead of caching contents in the
@@ -93,15 +94,23 @@ final case class IndexConfig(
   * concurrency (BENCH.md round 4).
   *
   * Layout under `indexDir`:
-  *   docs/      docId, repo, path, commit, lang, content, content_sha256, len
+  *   docs/      docId, repo, path, commit, lang, content, content_sha256
   *   dict/      term, termId, df, cf
   *   stats/     key, value  (N, avgdl, k1, b, docsPerShard, termBuckets, blockSize)
   *   postings/bucket=B/  term, shard, blockId, firstDoc, lastDoc, count,
   *                       docBytes, tfBytes, blockMaxTf, tfSum, encBytes
   *   positions/bucket=B/ term, docId, positions (optional)
-  *   lineage/<stage>/rows + _COMMITTED
+  *   doclen/    docId, tf  (tf = the doc's token count, the BM25 `len`)
+  *   lineage/<stage>/rows + _COMMITTED, lineage/_FORMAT
   */
 object IndexBuild {
+
+  /** The on-disk index format: bump whenever a table's layout changes.
+    * Stamped into every index directory together with the normalizer
+    * version (Lineage.FormatStamp); a directory written under another
+    * format is refused with a rebuild error, never read through a
+    * fallback. */
+  final val FormatVersion = 9
 
   /** Deterministic term -> bucket (also computed query-side in plain
     * Scala; String.hashCode is specified by the JLS so it is stable
@@ -479,21 +488,26 @@ object IndexBuild {
     * the per-engine cached equivalent). */
   def liveDocs(spark: SparkSession, indexDir: String): DataFrame = {
     val docs0 = spark.read.parquet(s"$indexDir/docs")
-    val delP = new org.apache.hadoop.fs.Path(s"$indexDir/deleted")
-    val fs = delP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(delP))
+    if (exists(spark, s"$indexDir/deleted"))
       docs0.join(broadcast(spark.read.parquet(s"$indexDir/deleted")
         .select(col("docId"))), Seq("docId"), "left_anti")
     else docs0
   }
 
-  /** [[liveDocs]] with the `len` column re-attached from the narrow
-    * doclen table (docs/ no longer stores it physically; pre-doclen
-    * index layouts that do pass through unchanged). */
-  def liveDocsWithLen(spark: SparkSession, indexDir: String): DataFrame = {
-    val live = liveDocs(spark, indexDir)
-    if (live.columns.contains("len")) live
-    else live.join(readDoclen(spark, indexDir), Seq("docId"))
+  /** One document's posting keys from ONE tokenize call: a
+    * (term, packKey(docId, tf)) row per distinct non-stop term, then the
+    * [[LenTerm]] sentinel whose tf is the full token count (the BM25
+    * `len`, stop words included). */
+  private def termKeysOf(docId: Int, content: String, stop: Set[String],
+                         tok: Tokenizer.TokSettings): Iterator[(String, Long)] = {
+    val toks = Tokenizer.tokenize(content, tok)
+    val m = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    toks.foreach { t =>
+      if (stop.isEmpty || !stop.contains(t.term))
+        m.update(t.term, m.getOrElse(t.term, 0) + 1)
+    }
+    m.iterator.map { case (term, tf) => (term, packKey(docId, tf)) } ++
+      Iterator.single((LenTerm, packKey(docId, toks.length)))
   }
 
   /** Per-doc tokenize + aggregate: one TermDoc row per distinct term.
@@ -580,7 +594,7 @@ object IndexBuild {
             row
           }
         },
-        org.apache.spark.sql.types.StructType.fromDDL(DocsSchemaDdl))
+        StructType.fromDDL(DocsSchemaDdl))
         .write.mode("overwrite").parquet(s"$indexDir/docs")
       // per-partition lineage from the offsets themselves — no read-back
       val rows = counts.zipWithIndex.collect { case (c, p) if c > 0 =>
@@ -694,7 +708,7 @@ object IndexBuild {
           s"$indexDir/positions", cfg, cfg.numPartitions)
         Nil
       }
-      doclenStage(spark, indexDir, cfg, fromPositions = true)
+      doclenStage(spark, indexDir, cfg)
       // postings derive from a narrow column-pruned (term, docId, tf)
       // scan of the committed positions — never a second tokenize
       def termKeys(b: Option[Int]): DataFrame = {
@@ -726,16 +740,7 @@ object IndexBuild {
       val tok0 = tok.forFid(0)
       def termDocKeys: Dataset[(String, Long)] = docsDf.select($"docId", $"content")
         .as[(Int, String)]
-        .flatMap { case (id, c) =>
-          val toks = Tokenizer.tokenize(c, tok0)
-          val m = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-          toks.foreach { t =>
-            if (stop.isEmpty || !stop.contains(t.term))
-              m.update(t.term, m.getOrElse(t.term, 0) + 1)
-          }
-          m.iterator.map { case (term, tf) => (term, packKey(id, tf)) } ++
-            Iterator.single((LenTerm, packKey(id, toks.length)))
-        }
+        .flatMap { case (id, c) => termKeysOf(id, c, stop, tok0) }
       def encoded(ds: Dataset[(String, Long)]): DataFrame =
         encodeBlocks(ds.toDF("term", "key"), cfg)
 
@@ -753,7 +758,7 @@ object IndexBuild {
         Lineage.stage(spark, indexDir, "doclen") {
           termDocKeys.filter(_._1 == LenTerm)
             .map(t => (keyDoc(t._2), keyTf(t._2)))
-            .toDF("docId", "len")
+            .toDF("docId", "tf")
             .write.mode("overwrite").parquet(s"$indexDir/doclen")
           Nil
         }
@@ -762,14 +767,18 @@ object IndexBuild {
           encoded(termDocKeys)
             .write.mode("overwrite").partitionBy("bucket")
             .parquet(s"$indexDir/postings")
-          // doclen extraction FUSED into this stage (the reason it used
-          // to be two extra stages — a partial-sentinel kill window —
-          // is gone: a kill anywhere in here re-runs the whole stage
-          // from a clean overwrite)
-          extractDoclenEncoded(spark, indexDir, cfg)
+          // doclen extraction FUSED into this stage: a kill anywhere in
+          // here re-runs the whole stage from a clean overwrite
+          val sentinel = s"$indexDir/postings/bucket=${cfg.termBuckets}"
+          if (exists(spark, sentinel)) {
+            // no repartition: the decoded rows inherit the shard-salted,
+            // docId-sorted layout of the sentinel blocks
+            sentinelDoclen(spark, sentinel)
+              .write.mode("overwrite").parquet(s"$indexDir/doclen")
+            deleteDir(spark, sentinel)
+          } else emptyDoclen(spark, indexDir) // empty corpus
           postingLineage(spark, s"$indexDir/postings", "postings")
         }
-        doclenStage(spark, indexDir, cfg, fromPositions = false)
       }
     }
 
@@ -794,8 +803,8 @@ object IndexBuild {
     }
   }
 
-  /** docs/ schema (the `len` column of earlier layouts now lives in the
-    * narrow doclen/ table — SearchEngine.docs re-attaches it). */
+  /** docs/ schema of a single-field index (the BM25 `len` lives in
+    * doclen/; SearchEngine.docs joins it back). */
   final val DocsSchemaDdl =
     "docId INT, repo STRING, path STRING, commit STRING, lang STRING, " +
       "content STRING, content_sha256 STRING"
@@ -833,92 +842,70 @@ object IndexBuild {
     } ++ Iterator.single((LenTerm, docId, Array(total), total, termBuckets))
   }
 
-  /** Decode the encoded [[LenTerm]] sentinel blocks (postings
-    * `bucket=<termBuckets>`) into the narrow doclen/ table, then delete
-    * the sentinel partition. Called INSIDE the postings stage: a kill
-    * anywhere in the sequence re-runs the whole stage from a clean
-    * overwrite, so there is no partial-sentinel window (the reason the
-    * extraction used to be two extra lineage stages). No repartition:
-    * the decoded rows inherit the shard-salted, docId-sorted layout of
-    * the sentinel blocks. */
-  private def extractDoclenEncoded(spark: SparkSession, indexDir: String,
-                                   cfg: IndexConfig): Unit = {
-    import spark.implicits._
-    val sentinelDir = new org.apache.hadoop.fs.Path(
-      s"$indexDir/postings/bucket=${cfg.termBuckets}")
-    val fs = sentinelDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sentinelDir)) {
-      spark.read.parquet(sentinelDir.toString)
-        .select($"docBytes", $"tfBytes")
-        .as[(Array[Byte], Array[Byte])]
-        .flatMap { case (db, tfb) =>
-          VByte.decodeDeltas(db).iterator.zip(VByte.decode(tfb).iterator)
-        }
-        .toDF("docId", "len")
-        .write.mode("overwrite").parquet(s"$indexDir/doclen")
-      fs.delete(sentinelDir, true): Unit
-    }
+  /** The one doclen/ schema every writer produces: one row per document,
+    * `tf` = its token count (the BM25 `len`). The positions path's
+    * renamed sentinel partition carries extra (term, positions) columns
+    * that this fixed read schema prunes. */
+  final val DoclenSchemaDdl = "docId INT, tf INT"
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** The doclen/ commit stage.
-    *
-    * Positions path: ZERO Spark jobs — the sentinel partition
-    * (`positions/bucket=<termBuckets>`, one (docId, tf=len) row per
-    * document, shard-salted and docId-sorted by the positions write) IS
-    * the doclen table; it is claimed by an atomic directory rename.
-    * Readers go through [[readDoclen]], which prunes the extra columns.
-    * At the 10^12-doc target this also removes what used to be a full
-    * (docId, len) re-shuffle + rewrite of one row per corpus document.
-    *
-    * Non-positions path: extraction is fused into the postings stage
-    * ([[extractDoclenEncoded]]); this stage is the cross-version /
-    * empty-corpus guard — it only acts when doclen/ is still missing
-    * (pre-fusion postings commit, pre-doclen docs layout, or an empty
-    * corpus). */
-  private def doclenStage(spark: SparkSession, indexDir: String,
-                          cfg: IndexConfig, fromPositions: Boolean): Unit = {
+  private def deleteDir(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
+  }
+
+  /** Doclen rows decoded from encoded [[LenTerm]] sentinel blocks (a
+    * postings `bucket=<termBuckets>` partition). */
+  private def sentinelDoclen(spark: SparkSession, sentinelDir: String): DataFrame = {
     import spark.implicits._
-    val src = if (fromPositions) "positions" else "postings"
+    spark.read.schema("docBytes BINARY, tfBytes BINARY").parquet(sentinelDir)
+      .as[(Array[Byte], Array[Byte])]
+      .flatMap { case (db, tfb) =>
+        VByte.decodeDeltas(db).iterator.zip(VByte.decode(tfb).iterator)
+      }
+      .toDF("docId", "tf")
+  }
+
+  /** An empty corpus has no sentinel rows: commit an empty doclen/ so
+    * stats and readers work. */
+  private def emptyDoclen(spark: SparkSession, indexDir: String): Unit = {
+    import spark.implicits._
+    Seq.empty[(Int, Int)].toDF("docId", "tf")
+      .write.mode("overwrite").parquet(s"$indexDir/doclen")
+  }
+
+  /** The positions path's doclen/ commit stage, ZERO Spark jobs: the
+    * sentinel partition (`positions/bucket=<termBuckets>`, one
+    * (docId, tf=len) row per document, shard-salted and docId-sorted by
+    * the positions write) IS the doclen table; it is claimed by an
+    * atomic directory rename. At the 10^12-doc target this avoids a full
+    * (docId, len) re-shuffle + rewrite of one row per corpus document. */
+  private def doclenStage(spark: SparkSession, indexDir: String,
+                          cfg: IndexConfig): Unit = {
     val sentinelDir = new org.apache.hadoop.fs.Path(
-      s"$indexDir/$src/bucket=${cfg.termBuckets}")
+      s"$indexDir/positions/bucket=${cfg.termBuckets}")
     Lineage.stage(spark, indexDir, "doclen") {
       val fs = sentinelDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val doclenPath = new org.apache.hadoop.fs.Path(s"$indexDir/doclen")
-      if (fromPositions && fs.exists(sentinelDir)) {
+      if (fs.exists(sentinelDir)) {
         if (fs.exists(doclenPath)) fs.delete(doclenPath, true)
         require(fs.rename(sentinelDir, doclenPath),
           s"rename $sentinelDir -> $doclenPath failed")
-      } else if (!fromPositions && fs.exists(sentinelDir)) {
-        // cross-version resume: postings committed by a layout that had
-        // not fused the extraction — run it here
-        extractDoclenEncoded(spark, indexDir, cfg)
-      } else if (!fs.exists(doclenPath)) {
-        // no sentinel and no doclen: either a pre-doclen layout resumed
-        // in place (docs/ still carries len — derive from it), or a
-        // genuinely empty corpus (commit an empty doclen so
-        // stats/readers work)
-        val docs0 = spark.read.parquet(s"$indexDir/docs")
-        (if (docs0.columns.contains("len")) docs0.select($"docId", $"len")
-         else docs0.select($"docId", lit(0).cast("int").as("len")).limit(0))
-          .write.mode("overwrite").parquet(s"$indexDir/doclen")
-      }
+      } else if (!fs.exists(doclenPath)) emptyDoclen(spark, indexDir)
       Nil
     }: Unit
   }
 
-  /** The narrow (docId, len) doc-length view, whatever the physical
-    * doclen/ layout: projected (docId, len) files (non-positions builds,
-    * appends, legacy), or the renamed positions sentinel partition
-    * where `tf` carries the length and extra columns are pruned by a
-    * fixed read schema. The single definition for every reader (stats,
-    * docs views, SearchEngine). */
-  def readDoclen(spark: SparkSession, indexDir: String): DataFrame = {
-    val df = spark.read.parquet(s"$indexDir/doclen")
-    if (df.columns.contains("len")) df.select("docId", "len")
-    else
-      spark.read.schema("docId INT, tf INT").parquet(s"$indexDir/doclen")
-        .select(col("docId"), col("tf").as("len"))
-  }
+  /** The narrow (docId, len) doc-length view: one fixed-schema read of
+    * doclen/ (no schema-inference job). The single definition for every
+    * reader (stats, docs views, SearchEngine). */
+  def readDoclen(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema(DoclenSchemaDdl).parquet(s"$indexDir/doclen")
+      .select(col("docId"), col("tf").as("len"))
 
   /** dict/ from a column-pruned posting-metadata scan (shared by build
     * and append; the [[LenTerm]] filter is pure defense — the sentinel
@@ -950,11 +937,17 @@ object IndexBuild {
              cfg: IndexConfig, batchId: String): Unit = {
     import spark.implicits._
     val tok = cfg.tokenizer
+    // multi-field docs/ rows also carry every field column, which the
+    // single-content delta rows below cannot supply — fail fast
+    require(!exists(spark, s"$indexDir/fields"),
+      "append does not support multi-field indexes: the delta rows store " +
+        "only the concatenated content column; rebuild with buildMultiField")
+    def docsDf = spark.read.schema(DocsSchemaDdl).parquet(s"$indexDir/docs")
 
     Lineage.stage(spark, indexDir, s"docs_delta_$batchId") {
       // base read INSIDE the stage: on resume the stage is skipped, so a
       // kill between the two stages can't shift the batch's docid range
-      val base = spark.read.parquet(s"$indexDir/docs")
+      val base = docsDf
         .agg(coalesce(max($"docId"), lit(-1))).collect()(0).getInt(0) + 1
       val sortedRdd = delta
         .repartitionByRange(cfg.numPartitions, $"repo", $"path", $"commit")
@@ -968,11 +961,6 @@ object IndexBuild {
       // staged write (overwrite = idempotent) + tagged publish into docs/:
       // a kill during either step re-runs the stage and converges
       val staging = s"$indexDir/_stage_docs_$batchId"
-      val baseSchema = spark.read.parquet(s"$indexDir/docs").schema
-      // pre-doclen (v7) layouts store len IN docs/ — delta rows must
-      // match the base schema, and the batch stays on the v7
-      // convention (no doclen/ delta; readers derive len from docs)
-      val legacyLen = baseSchema.fieldNames.contains("len")
       spark.createDataFrame(
         sortedRdd.mapPartitionsWithIndex { (pid, it) =>
           var id = bOffsets.value(pid)
@@ -980,19 +968,13 @@ object IndexBuild {
             require(id <= Int.MaxValue,
               s"docId $id exceeds the per-index Int cap; shard into a new " +
                 "index and merge via search.Federation")
-            val r =
-              if (legacyLen)
-                org.apache.spark.sql.Row(id.toInt, f.repo, f.path,
-                  f.commit, f.lang, f.content, Sha.hex(f.content),
-                  Tokenizer.countTokens(f.content, tok.forFid(0)))
-              else
-                org.apache.spark.sql.Row(id.toInt, f.repo, f.path,
-                  f.commit, f.lang, f.content, Sha.hex(f.content))
+            val r = org.apache.spark.sql.Row(id.toInt, f.repo, f.path,
+              f.commit, f.lang, f.content, Sha.hex(f.content))
             id += 1
             r
           }
         },
-        baseSchema)
+        StructType.fromDDL(DocsSchemaDdl))
         .write.mode("overwrite").parquet(staging)
       Lineage.publishAppend(spark, staging, s"$indexDir/docs", s"b$batchId")
       counts.zipWithIndex.collect { case (c, p) if c > 0 =>
@@ -1013,88 +995,40 @@ object IndexBuild {
       if (!range.isNullAt(0)) {
         val (lo, hi) = (range.getInt(0), range.getInt(1))
         val tb = cfg.termBuckets
-        val baseDocs = spark.read.parquet(s"$indexDir/docs")
-        // v7 layout: len lives in docs/ (just written there by the docs
-        // stage) — publishing a doclen/ delta would create a PARTIAL
-        // doclen table that readers would trust over the docs column
-        val legacyLen = baseDocs.columns.contains("len")
-        val deltaDocs = baseDocs.filter($"docId".between(lo, hi))
+        val deltaDocs = docsDf.filter($"docId".between(lo, hi))
+          .select($"docId", $"content").as[(Int, String)]
         val stop = cfg.stopWords
         // ONE tokenize pass over the delta: position rows (when enabled)
-        // or term keys, with sentinel len rows riding the same shuffle
+        // or term keys, with sentinel len rows riding the same shuffle;
+        // the sentinel partition becomes the batch's doclen/ delta
         val staging = s"$indexDir/_stage_postings_$batchId"
         if (cfg.positions) {
           val pstaging = s"$indexDir/_stage_positions_$batchId"
           writePositions(
-            deltaDocs.select($"docId", $"content").as[(Int, String)]
-              .flatMap { case (id, c) => positionRowsOf(id, Seq(c), stop, tok, tb) },
+            deltaDocs.flatMap { case (id, c) => positionRowsOf(id, Seq(c), stop, tok, tb) },
             pstaging, cfg, math.max(1, cfg.numPartitions / 2))
           // postings delta from the STAGED positions (narrow scan, no
-          // second tokenize); the sentinel partition is not published
+          // second tokenize)
           spark.read.parquet(pstaging).filter($"bucket" =!= tb)
             .select($"term", packKeyCol($"docId", $"tf").as("key"))
             .transform(encodeBlocks(_, cfg))
             .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-          if (!legacyLen) {
-            // match the base doclen layout: raw (renamed sentinel,
-            // read via readDoclen's fixed docId/tf schema) gets the
-            // staged sentinel files moved in as-is — zero jobs; a
-            // projected (docId, len) base gets a projected delta
-            if (!spark.read.parquet(s"$indexDir/doclen").columns.contains("len"))
-              Lineage.publishAppend(spark, s"$pstaging/bucket=$tb",
-                s"$indexDir/doclen", s"b$batchId")
-            else {
-              val lstaging = s"$indexDir/_stage_doclen_$batchId"
-              spark.read.parquet(s"$pstaging/bucket=$tb")
-                .select($"docId", $"tf".as("len"))
-                .repartition(1)
-                .write.mode("overwrite").parquet(lstaging)
-              Lineage.publishAppend(spark, lstaging, s"$indexDir/doclen", s"b$batchId")
-            }
-          }
-          val sfs = new org.apache.hadoop.fs.Path(pstaging)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          sfs.delete(new org.apache.hadoop.fs.Path(s"$pstaging/bucket=$tb"), true)
+          // the staged sentinel files move into doclen/ as-is — zero jobs
+          Lineage.publishAppend(spark, s"$pstaging/bucket=$tb",
+            s"$indexDir/doclen", s"b$batchId")
           Lineage.publishAppend(spark, staging, s"$indexDir/postings", s"b$batchId")
           Lineage.publishAppend(spark, pstaging, s"$indexDir/positions", s"b$batchId")
         } else {
           val tok0 = tok.forFid(0) // single-field content = field 0
-          deltaDocs.select($"docId", $"content").as[(Int, String)]
-            .flatMap { case (id, c) =>
-              val toks = Tokenizer.tokenize(c, tok0)
-              val m = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-              toks.foreach { t =>
-                if (stop.isEmpty || !stop.contains(t.term))
-                  m.update(t.term, m.getOrElse(t.term, 0) + 1)
-              }
-              m.iterator.map { case (term, tf) => (term, packKey(id, tf)) } ++
-                Iterator.single((LenTerm, packKey(id, toks.length)))
-            }
+          deltaDocs.flatMap { case (id, c) => termKeysOf(id, c, stop, tok0) }
             .toDF("term", "key")
             .transform(encodeBlocks(_, cfg))
             .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-          // extract the sentinel partition into a doclen delta, then
-          // publish only the real posting buckets
-          if (!legacyLen) {
-            val lstaging = s"$indexDir/_stage_doclen_$batchId"
-            // delta files must match the base doclen layout (raw
-            // sentinel layouts read (docId, tf) via readDoclen)
-            val rawBase =
-              !spark.read.parquet(s"$indexDir/doclen").columns.contains("len")
-            spark.read.parquet(s"$staging/bucket=$tb")
-              .select($"docBytes", $"tfBytes")
-              .as[(Array[Byte], Array[Byte])]
-              .flatMap { case (db, tfb) =>
-                VByte.decodeDeltas(db).iterator.zip(VByte.decode(tfb).iterator)
-              }
-              .toDF("docId", if (rawBase) "tf" else "len")
-              .repartition(1)
-              .write.mode("overwrite").parquet(lstaging)
-            Lineage.publishAppend(spark, lstaging, s"$indexDir/doclen", s"b$batchId")
-          }
-          val sfs = new org.apache.hadoop.fs.Path(staging)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          sfs.delete(new org.apache.hadoop.fs.Path(s"$staging/bucket=$tb"), true)
+          val lstaging = s"$indexDir/_stage_doclen_$batchId"
+          sentinelDoclen(spark, s"$staging/bucket=$tb").repartition(1)
+            .write.mode("overwrite").parquet(lstaging)
+          deleteDir(spark, s"$staging/bucket=$tb")
+          Lineage.publishAppend(spark, lstaging, s"$indexDir/doclen", s"b$batchId")
           Lineage.publishAppend(spark, staging, s"$indexDir/postings", s"b$batchId")
         }
       }
@@ -1146,6 +1080,7 @@ object IndexBuild {
   def buildFacetIndex(spark: SparkSession, indexDir: String,
                       cols: Seq[String], numPartitions: Int = 4): Unit = {
     import spark.implicits._
+    Lineage.requireFormat(spark, indexDir)
     // staleness = the SOURCE tables changed (docs/doclen/deleted): a
     // driver-side file-listing fingerprint decides, costing zero Spark
     // jobs — a repeated call over an unchanged index (every resumed
@@ -1156,10 +1091,11 @@ object IndexBuild {
     val sig = dirFingerprint(spark, Seq(s"$indexDir/docs",
       s"$indexDir/doclen", s"$indexDir/deleted")) + s":$numPartitions"
     val stale = cols.filterNot(c =>
-      readMarker(spark, s"$indexDir/facets/$c/$FprFile").contains(sig))
+      Lineage.readMarker(spark, s"$indexDir/facets/$c/$FprFile").contains(sig))
     if (stale.isEmpty) return
     val live =
-      if (stale.contains("len")) liveDocsWithLen(spark, indexDir)
+      if (stale.contains("len"))
+        liveDocs(spark, indexDir).join(readDoclen(spark, indexDir), Seq("docId"))
       else liveDocs(spark, indexDir)
     stale.foreach { c =>
       live.groupBy(col(c).as("value"))
@@ -1168,7 +1104,7 @@ object IndexBuild {
         .repartitionByRange(numPartitions, $"value")
         .sortWithinPartitions($"value")
         .write.mode("overwrite").parquet(s"$indexDir/facets/$c")
-      writeMarker(spark, s"$indexDir/facets/$c/$FprFile", sig)
+      Lineage.writeMarker(spark, s"$indexDir/facets/$c/$FprFile", sig)
     }
   }
 
@@ -1196,23 +1132,6 @@ object IndexBuild {
       }
     }
     Sha.hex(sb.toString)
-  }
-
-  private def readMarker(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    }
-  }
-
-  private def writeMarker(spark: SparkSession, path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
   /** Precomputed prefix posting tables (reference U3: the index
@@ -1250,6 +1169,7 @@ object IndexBuild {
   def buildPrefixIndex(spark: SparkSession, indexDir: String, cfg: IndexConfig,
                        maxLen: Int = PrefixMaxLen, minDf: Long = PrefixMinDf): Unit = {
     import spark.implicits._
+    Lineage.requireFormat(spark, indexDir)
     // staleness fingerprint from the postings FILE LISTING, not an
     // aggregation over the block metadata: same trigger surface (any
     // append/compact rewrites posting files), but the check is pure
@@ -1257,7 +1177,7 @@ object IndexBuild {
     // a prefix_meta read per call even when nothing changed
     val sig = dirFingerprint(spark, Seq(s"$indexDir/postings")) +
       s":$maxLen:$minDf"
-    if (readMarker(spark, s"$indexDir/prefix_meta/$FprFile").contains(sig)) return
+    if (Lineage.readMarker(spark, s"$indexDir/prefix_meta/$FprFile").contains(sig)) return
 
     spark.read.parquet(s"$indexDir/dict")
       .select($"term", $"df").as[(String, Long)]
@@ -1295,8 +1215,7 @@ object IndexBuild {
 
     // merged prefix positions (only when the index has positions)
     val tb = cfg.termBuckets
-    val posP = new org.apache.hadoop.fs.Path(s"$indexDir/positions")
-    if (posP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(posP)) {
+    if (exists(spark, s"$indexDir/positions")) {
       spark.read.parquet(s"$indexDir/positions")
         .select($"term", $"docId", $"positions")
         .as[(String, Int, Array[Int])]
@@ -1318,7 +1237,7 @@ object IndexBuild {
         .parquet(s"$indexDir/prefix_positions")
     }
     // marker LAST (killed rebuild re-runs); plain file, no Spark job
-    writeMarker(spark, s"$indexDir/prefix_meta/$FprFile", sig)
+    Lineage.writeMarker(spark, s"$indexDir/prefix_meta/$FprFile", sig)
   }
 
   /** Reference thresholds (index.rs:1711-1713). */
@@ -1329,7 +1248,10 @@ object IndexBuild {
     * the standard pipeline from the live doc store (bounded tombstone
     * model: delete() is O(batch), compact() is the amortized rewrite —
     * at 10^12 files it is a full parallel re-index, run it when the
-    * tombstone fraction justifies reclaiming scan/skip efficiency). */
+    * tombstone fraction justifies reclaiming scan/skip efficiency).
+    * Reads only docs/ and deleted/ of `indexDir`, so its format stamp is
+    * not checked: compacting into a fresh directory is also the way to
+    * carry an index written by an older format forward. */
   def compact(spark: SparkSession, indexDir: String, outDir: String,
               cfg: IndexConfig): Unit = {
     import spark.implicits._
@@ -1347,14 +1269,8 @@ object IndexBuild {
     // avgdl from the doclen table, NOT from dict cf sums: with stop
     // words the dictionary undercounts tokens while `len` (the BM25
     // norm) counts them all — avgdl must match len's definition or
-    // norms skew. Pre-doclen (v7) layouts keep len in docs/.
-    val lenDf = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/doclen")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) readDoclen(spark, indexDir)
-      else spark.read.parquet(s"$indexDir/docs")
-    }
-    val row = lenDf.select($"len")
+    // norms skew
+    val row = readDoclen(spark, indexDir)
       .agg(count(lit(1)), coalesce(sum($"len"), lit(0L))).collect()(0)
     val n = row.getLong(0)
     val tokens = row.getLong(1)
@@ -1362,34 +1278,56 @@ object IndexBuild {
     Seq(("N", n.toDouble), ("avgdl", avgdl), ("k1", BM25.K1), ("b", BM25.B),
       ("docsPerShard", cfg.docsPerShard.toDouble),
       ("termBuckets", cfg.termBuckets.toDouble),
-      ("blockSize", cfg.blockSize.toDouble),
-      // pin the normalizer folds the stored terms went through — the
-      // engine fails fast on a version mismatch instead of silently
-      // missing affected words (Tokenizer.NormalizerVersion)
-      ("normalizerVersion", Tokenizer.NormalizerVersion.toDouble))
+      ("blockSize", cfg.blockSize.toDouble))
       .toDF("key", "value")
       .repartition(1).write.mode("overwrite").parquet(s"$indexDir/stats")
     // persist the tokenizer settings (same contract as stop words: the
     // query side loads them from the index, so both ends segment
     // identically by construction)
-    if (!cfg.tokenizer.isDefault) {
-      val t = cfg.tokenizer
-      // separators mix single-char and multi-char entries in ONE string
-      // column; the reader routes by length (charabia's model: they are
-      // all just string tokens)
-      Seq(((t.separatorTokens.map(_.toString) ++ t.separatorStrings).toSeq.sorted,
-          t.nonSeparatorTokens.toSeq.map(_.toString).sorted,
-          t.dictionary.toSeq.sorted,
-          t.localesByFid.toSeq.sorted.map { case (fid, loc) => s"$fid:$loc" },
-          // index-LEVEL CJK unigram override ("" = autodetect): must
-          // roundtrip or the query side would segment CJK differently
-          // from the index
-          t.cjkUnigrams.fold("")(_.toString)))
-        .toDF("separators", "nonSeparators", "dictionary", "locales",
-          "cjkUnigrams")
+    if (!cfg.tokenizer.isDefault)
+      Seq(tokSettingsRow(cfg.tokenizer))
+        .toDF(StructType.fromDDL(TokSchemaDdl).fieldNames.toIndexedSeq: _*)
         .repartition(1).write.mode("overwrite").parquet(s"$indexDir/tokenizer")
-    }
   }
+
+  /** tokenizer/ schema, in [[tokSettingsRow]] order. */
+  private final val TokSchemaDdl =
+    "separators ARRAY<STRING>, nonSeparators ARRAY<STRING>, " +
+      "dictionary ARRAY<STRING>, locales ARRAY<STRING>, cjkUnigrams STRING"
+
+  /** [[Tokenizer.TokSettings]] as plain sorted strings — the ONE
+    * serialization, shared by tokenizer/ and dump settings. Separators
+    * mix single-char and multi-char entries in one column; the reader
+    * routes by length (charabia's model: they are all string tokens).
+    * The index-level CJK unigram override is "" for autodetect: it must
+    * roundtrip or the query side would segment CJK differently from the
+    * index. */
+  private[index] def tokSettingsRow(t: Tokenizer.TokSettings)
+      : (Seq[String], Seq[String], Seq[String], Seq[String], String) =
+    ((t.separatorTokens.map(_.toString) ++ t.separatorStrings).toSeq.sorted,
+      t.nonSeparatorTokens.toSeq.map(_.toString).sorted,
+      t.dictionary.toSeq.sorted,
+      t.localesByFid.toSeq.sorted.map { case (fid, loc) => s"$fid:$loc" },
+      t.cjkUnigrams.fold("")(_.toString))
+
+  /** Index-time tokenizer settings persisted by the build (Default when
+    * none were set): the query side and dumps segment with exactly
+    * these, so both ends agree by construction. */
+  def readTokSettings(spark: SparkSession, indexDir: String): Tokenizer.TokSettings =
+    if (!exists(spark, s"$indexDir/tokenizer")) Tokenizer.TokSettings.Default
+    else {
+      val r = spark.read.schema(TokSchemaDdl)
+        .parquet(s"$indexDir/tokenizer").collect()(0)
+      def strs(i: Int): Seq[String] = r.getSeq[String](i)
+      val seps = strs(0).filter(_.nonEmpty)
+      Tokenizer.TokSettings(
+        seps.filter(_.length == 1).map(_.charAt(0)).toSet,
+        strs(1).filter(_.nonEmpty).map(_.charAt(0)).toSet,
+        strs(2).toSet,
+        separatorStrings = seps.filter(_.length > 1).toSet,
+        localesByFid = strs(3).map(Tokenizer.TokSettings.parseFidLocale).toMap,
+        cjkUnigrams = Some(r.getString(4)).filter(_.nonEmpty).map(_.toBoolean))
+    }
 
   /** Update-merge ingest (reference S1 replace vs update semantics,
     * document_operation.rs): keep the latest version per primary key
@@ -1493,7 +1431,7 @@ object IndexBuild {
         s"$indexDir/positions", cfg, cfg.numPartitions)
       Nil
     }
-    doclenStage(spark, indexDir, cfg, fromPositions = true)
+    doclenStage(spark, indexDir, cfg)
 
     Lineage.stage(spark, indexDir, "postings") {
       encodeBlocks(

@@ -3,6 +3,8 @@ package graft.index
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.Tokenizer
+
 /** Checkpoint/lineage bookkeeping for resumable index builds (north
   * rule: "checkpoint each stage ... with per-partition lineage rows so a
   * killed job resumes from the last committed segment").
@@ -16,6 +18,8 @@ import org.apache.spark.sql.SparkSession
   *  - lineage rows carry (partitionId, docidMin, docidMax, postingCount,
   *    bytes, sha256) computed from the *written* files, so they describe
   *    exactly what was committed.
+  *  - `lineage/_FORMAT` stamps the directory's on-disk format
+  *    ([[FormatStamp]]); writers and readers refuse any other.
   *
   * Uses the Hadoop FileSystem API so the same code runs on local FS in
   * tests and on HDFS/S3A on a cluster.
@@ -112,10 +116,71 @@ object Lineage {
     f.delete(src, true): Unit
   }
 
+  /** The on-disk format stamp, `lineage/_FORMAT`: one line naming the
+    * table layout ([[IndexBuild.FormatVersion]]) and the normalizer
+    * folds the stored terms went through ([[Tokenizer.NormalizerVersion]]).
+    * A directory written under any other stamp is refused, never read
+    * or extended through a fallback. */
+  val FormatStamp: String =
+    s"layout=${IndexBuild.FormatVersion} normalizer=${Tokenizer.NormalizerVersion}"
+
+  def formatPath(dir: String): Path = new Path(s"$dir/lineage/_FORMAT")
+
+  private def refuse(dir: String, found: Option[String]): Nothing =
+    throw new IllegalArgumentException(
+      s"index at $dir has format ${found.getOrElse("<no lineage/_FORMAT stamp>")} " +
+        s"but this engine reads $FormatStamp (layout version and normalizer " +
+        "version must both match): rebuild the index, or IndexBuild.compact " +
+        "it into a fresh directory")
+
+  /** Stamp `dir` with [[FormatStamp]] (overwrites). */
+  def writeFormat(spark: SparkSession, dir: String): Unit =
+    writeMarker(spark, formatPath(dir).toString, FormatStamp)
+
+  /** Fail fast unless `dir` carries exactly [[FormatStamp]]: the check
+    * every reader entry point runs before it touches a table. */
+  def requireFormat(spark: SparkSession, dir: String): Unit = {
+    val found = readMarker(spark, formatPath(dir).toString)
+    if (!found.contains(FormatStamp)) refuse(dir, found)
+  }
+
+  /** The writer-side check, run by every [[stage]]: a stamped directory
+    * must match; an unstamped one is stamped before its first stage body
+    * runs, unless it already holds committed stages (an older format). */
+  private def checkOrStamp(spark: SparkSession, dir: String): Unit = {
+    val f = fs(spark, dir)
+    val base = new Path(s"$dir/lineage")
+    def hasCommitted = f.exists(base) && f.listStatus(base).exists(s =>
+      s.isDirectory && f.exists(new Path(s.getPath, "_COMMITTED")))
+    readMarker(spark, formatPath(dir).toString) match {
+      case Some(FormatStamp) => ()
+      case None if !hasCommitted => writeFormat(spark, dir)
+      case found => refuse(dir, found)
+    }
+  }
+
+  /** Small marker files (format stamp, fingerprints): plain FileSystem
+    * reads and writes, like `_COMMITTED` — no Spark job. */
+  private[index] def readMarker(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val f = fs(spark, path)
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
+  }
+
+  private[index] def writeMarker(spark: SparkSession, path: String, content: String): Unit = {
+    val out = fs(spark, path).create(new Path(path), true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+  }
+
   /** Run `body` only if the stage is not yet committed; `body` must
     * return the lineage rows describing what it wrote. */
   def stage(spark: SparkSession, indexDir: String, stage: String)
            (body: => Seq[LineageRow]): Boolean = {
+    checkOrStamp(spark, indexDir)
     if (isCommitted(spark, indexDir, stage)) false
     else {
       val t0 = System.nanoTime()

@@ -148,31 +148,36 @@ object Similarity {
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/rows")
     // byid/: (id, bucket, vec, nn) range-sorted by id — the corpus-id
     // query path resolves the WHOLE query row (bucket + vector + norm)
-    // through parquet row-group min/max pruning in ONE pruned scan (the
-    // previous (id, bucket)-only layout needed a second fetch from the
-    // bucket partition — one extra driver round trip per query); no
+    // through parquet row-group min/max pruning in ONE pruned scan; no
     // lookup ever scans the index
     spark.read.parquet(s"$dir/rows")
-      .select(col("id"), col("bucket"), col("vec"), col("nn"))
+      .select(col("id"), col("bucket"), col("vec").cast("array<float>"), col("nn"))
       .repartitionByRange(math.max(1, spark.sparkContext.defaultParallelism / 4),
         col("id"))
       .sortWithinPartitions(col("id"))
       .write.mode("overwrite").parquet(s"$dir/byid")
+    graft.index.Lineage.writeFormat(spark, dir)
     Seq((nPlanes, d, seed)).toDF("nPlanes", "dim", "seed")
       .repartition(1).write.mode("overwrite").parquet(s"$dir/meta")
     metaCache.remove(dir): Unit
   }
 
+  /** byid/ schema (partition discovery of rows/ typed `bucket` INT). */
+  private final val ByidSchemaDdl = "id BIGINT, bucket INT, vec ARRAY<FLOAT>, nn BIGINT"
+
   /** Per-dir cache of the immutable meta row (nPlanes, dim, seed) —
     * algorithm parameters written once by [[buildLshIndex]]; re-reading
-    * them is one Spark job per query. Invalidated on rebuild. */
+    * them is one Spark job per query. Invalidated on rebuild. The format
+    * stamp is checked on every call (a plain file read, no job). */
   private val metaCache =
     scala.collection.concurrent.TrieMap.empty[String, (Int, Int, Long)]
-  private def lshMeta(spark: SparkSession, dir: String): (Int, Int, Long) =
+  private def lshMeta(spark: SparkSession, dir: String): (Int, Int, Long) = {
+    graft.index.Lineage.requireFormat(spark, dir)
     metaCache.getOrElseUpdate(dir, {
       val m = spark.read.parquet(s"$dir/meta").collect()(0)
       (m.getInt(0), m.getInt(1), m.getLong(2))
     })
+  }
 
   /** One hyperplane-LSH bucket as a self-contained Column (planes
     * inlined as literals — no helper columns, so independent bands can
@@ -321,29 +326,12 @@ object Similarity {
     * 137/65536 buckets). */
   def lshIndexTopK(spark: SparkSession, dir: String, queryId: Long,
                    k: Int, probeHamming: Int = 2): DataFrame = {
-    val rows = spark.read.parquet(s"$dir/rows")
-    val byidP = new org.apache.hadoop.fs.Path(s"$dir/byid")
-    val hasByid =
-      byidP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(byidP)
-    // partition discovery re-infers the bucket column as INT: cast back
-    val byid = if (hasByid) Some(spark.read.parquet(s"$dir/byid")) else None
-    val q = byid match {
-      case Some(bi) if bi.columns.contains("vec") =>
-        // the whole query row (bucket, vec, nn) from the range-sorted
-        // byid table in ONE row-group-pruned scan
-        bi.where(col("id") === queryId)
-          .select(col("bucket").cast("long"), col("vec"), col("nn")).collect()(0)
-      case Some(bi) =>
-        // older (id, bucket)-only byid layout: two-step pruned fetch
-        val b = bi.where(col("id") === queryId)
-          .select(col("bucket").cast("long")).collect()(0).getLong(0)
-        rows.where(col("bucket") === b && col("id") === queryId)
-          .select(col("bucket").cast("long"), col("vec"), col("nn")).collect()(0)
-      case None => // pre-byid index layout: the one remaining full-scan fetch
-        rows.where(col("id") === queryId)
-          .select(col("bucket").cast("long"), col("vec"), col("nn")).collect()(0)
-    }
     val nPlanes = lshMeta(spark, dir)._1
+    // the whole query row (bucket, vec, nn) from the range-sorted byid
+    // table in ONE row-group-pruned scan
+    val q = spark.read.schema(ByidSchemaDdl).parquet(s"$dir/byid")
+      .where(col("id") === queryId)
+      .select(col("bucket").cast("long"), col("vec"), col("nn")).collect()(0)
     lshProbedTopK(spark, dir, nPlanes, q.getLong(0),
       q.getSeq[Float](1).toArray, q.getLong(2), k, probeHamming, None)
   }

@@ -494,7 +494,7 @@ final class MeiliRank(engine: SearchEngine,
     if (n == 0)
       return engine.docsRaw.limit(0)
         .select($"docId", lit(0).as("rankingScore"))
-    val metaSrc = engine.docsRaw.drop("len")
+    val metaSrc = engine.docsRaw
     // Doc columns a rule needs BEFORE the top-k cut: a sort rule or a
     // custom `field:asc|desc` rule ranks by a document attribute that
     // only exists after the metadata join.

@@ -56,21 +56,16 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     extends Serializable {
   import spark.implicits._
 
+  // an index written by another format (table layout or normalizer
+  // folds) fails fast with the remedy instead of answering wrong
+  graft.index.Lineage.requireFormat(spark, indexDir)
+
   // ---- loaded-once index metadata (the FST/dictionary analogue) -------
   val stats: Map[String, Double] =
-    spark.read.parquet(s"$indexDir/stats").as[(String, Double)].collect().toMap
+    spark.read.schema("key STRING, value DOUBLE").parquet(s"$indexDir/stats")
+      .as[(String, Double)].collect().toMap
   val nDocs: Long = stats("N").toLong
   val avgdl: Double = stats("avgdl")
-  // normalizer-fold version pinning: an index whose terms were folded
-  // by a different normalize() would silently return zero hits for
-  // affected words — fail fast with the remedy instead. Indexes
-  // without the key predate the check and were built under the current
-  // folds (see Tokenizer.NormalizerVersion).
-  stats.get("normalizerVersion").foreach(v =>
-    require(v.toInt == Tokenizer.NormalizerVersion,
-      s"index at $indexDir was built with normalizer version ${v.toInt} " +
-        s"but this engine folds with version ${Tokenizer.NormalizerVersion}: " +
-        "rebuild the index (terms on disk no longer match query-side folding)"))
   val termBuckets: Int = stats("termBuckets").toInt
   val docsPerShard: Int = stats("docsPerShard").toInt
 
@@ -94,30 +89,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   /** Index-time tokenizer settings (IndexConfig.tokenizer, persisted by
     * the build): the query side MUST segment with the same settings or
     * query terms would not match indexed terms. */
-  val tokSettings: Tokenizer.TokSettings = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tokenizer")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Tokenizer.TokSettings.Default
-    else {
-      val r = spark.read.parquet(s"$indexDir/tokenizer").collect()(0)
-      def strs(f: String): Seq[String] =
-        if (!r.schema.fieldNames.contains(f)) Nil
-        else Option(r.getAs[scala.collection.Seq[String]](f))
-          .fold(Seq.empty[String])(_.toSeq)
-      val seps = strs("separators").filter(_.nonEmpty)
-      Tokenizer.TokSettings(
-        seps.filter(_.length == 1).map(_.charAt(0)).toSet,
-        strs("nonSeparators").filter(_.nonEmpty).map(_.charAt(0)).toSet,
-        strs("dictionary").toSet,
-        separatorStrings = seps.filter(_.length > 1).toSet,
-        localesByFid = strs("locales")
-          .map(Tokenizer.TokSettings.parseFidLocale).toMap,
-        cjkUnigrams =
-          if (!r.schema.fieldNames.contains("cjkUnigrams")) None
-          else Option(r.getAs[String]("cjkUnigrams"))
-            .filter(_.nonEmpty).map(_.toBoolean))
-    }
-  }
+  val tokSettings: Tokenizer.TokSettings =
+    IndexBuild.readTokSettings(spark, indexDir)
 
   /** Parse a query string under this index's tokenizer settings. A
     * single-field index has exactly one attribute (fid 0), so its
@@ -195,9 +168,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   private def tableDF(table: String): DataFrame =
     tableDFs.getOrElseUpdate(table, spark.read.parquet(s"$indexDir/$table"))
 
-  /** Doc store WITHOUT the derived `len` column (unless the index is an
-    * old layout that stored it physically) — the cheap view for paths
-    * that don't need the BM25 norm. */
+  /** Doc store WITHOUT the derived `len` column — the cheap view for
+    * paths that don't need the BM25 norm. */
   lazy val docsRaw: DataFrame = liveOnly(spark.read.parquet(s"$indexDir/docs"))
 
   /** True iff this index persisted a positions table (phrase /
@@ -209,23 +181,14 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Narrow (docId, len) table — the BM25-norm lookup side. Reads the
-    * dedicated doclen/ parquet (written by the build's single tokenize
-    * pass); falls back to the docs `len` column for pre-doclen layouts. */
-  lazy val doclen: DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/doclen")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) liveOnly(IndexBuild.readDoclen(spark, indexDir))
-    else docsRaw.select($"docId", $"len")
-  }
+  /** Narrow (docId, len) table — the BM25-norm lookup side, read from
+    * the doclen/ table the build's single tokenize pass wrote. */
+  lazy val doclen: DataFrame = liveOnly(IndexBuild.readDoclen(spark, indexDir))
 
-  /** Full doc view including `len` (joined from [[doclen]] when the
-    * layout keeps it separate) — the back-compat surface for filters,
-    * facets and field distribution; hot paths use [[doclen]]/[[docsRaw]]
-    * directly. */
-  lazy val docs: DataFrame =
-    if (docsRaw.columns.contains("len")) docsRaw
-    else docsRaw.join(doclen, Seq("docId"))
+  /** Full doc view including `len` (joined from [[doclen]]) — the
+    * surface for filters, facets and field distribution; hot paths use
+    * [[doclen]]/[[docsRaw]] directly. */
+  lazy val docs: DataFrame = docsRaw.join(doclen, Seq("docId"))
 
   /** Dictionary-resolved QueryTerms for already-tokenized terms. */
   def termsOf(ts: Seq[String]): Seq[QueryTerm] = {

@@ -23,38 +23,6 @@ class ResumeSpec extends AnyFunSuite {
   private def fs(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  test("append onto a pre-doclen (v7) layout stays on the v7 convention") {
-    val dir = Files.createTempDirectory("legacyAppend").toString
-    val base = (0 until 8).map(i => src(i, "alpha common words")).toDS()
-    IndexBuild.build(spark, base, dir, cfg)
-    // convert the index IN PLACE to the v7 layout: len physically in
-    // docs/, no doclen/ table (the layout this engine's earlier
-    // releases wrote; readers and append must keep supporting it)
-    val f = fs(dir)
-    val v7docs = spark.read.parquet(s"$dir/docs")
-      .join(IndexBuild.readDoclen(spark, dir), Seq("docId"))
-    val tmp = s"$dir/_v7docs"
-    v7docs.write.mode("overwrite").parquet(tmp)
-    f.delete(new Path(s"$dir/docs"), true)
-    f.rename(new Path(tmp), new Path(s"$dir/docs"))
-    f.delete(new Path(s"$dir/doclen"), true)
-
-    val delta = (8 until 12).map(i => src(i, "zulu unique delta")).toDS()
-    IndexBuild.append(spark, delta, dir, cfg, "b1")
-
-    // still v7: no partial doclen/ table was created
-    assert(!f.exists(new Path(s"$dir/doclen")),
-      "append must not create a delta-only doclen on a v7 index")
-    val e = new graft.search.SearchEngine(spark, dir)
-    // every doc (base + delta) has a physical len and is searchable
-    val lens = e.docs.select($"docId", $"len").as[(Int, Int)].collect().toMap
-    assert(lens.keySet == (0 until 12).toSet && lens.values.forall(_ > 0), s"$lens")
-    assert(e.searchDF("zulu", 10).collect().map(_.getInt(0)).toSet == (8 until 12).toSet)
-    assert(e.searchDF("alpha", 10).collect().map(_.getInt(0)).toSet == (0 until 8).toSet)
-    // stats derived through the v7 fallback: N counts all docs
-    assert(e.nDocs == 12)
-  }
-
   test("append resume after kill between stages indexes the delta docs") {
     val dir = Files.createTempDirectory("resumeA").toString
     val base = (0 until 8).map(i => src(i, "alpha common words")).toDS()

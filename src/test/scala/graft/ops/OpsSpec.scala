@@ -164,9 +164,7 @@ class OpsSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toSeq
     assert(exactVec == exactId)
     // byid side table: the id path resolves id -> bucket through it
-    // (range-sorted, row-group pruned) instead of scanning rows/;
-    // deleting it falls back to the legacy full-scan fetch with
-    // identical results (pre-byid index layouts keep working)
+    // (range-sorted, row-group pruned) instead of scanning rows/
     val byidP = new org.apache.hadoop.fs.Path(s"$dir/byid")
     val fs = byidP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(byidP), "buildLshIndex must write byid/")
@@ -174,10 +172,13 @@ class OpsSpec extends AnyFunSuite {
       .mapPartitions(it => Iterator.single(it.map(_.getLong(0)).toSeq))
       .collect()
     perPart.foreach(p => assert(p == p.sorted, "byid must be id-sorted"))
-    fs.delete(byidP, true)
-    val legacy = Similarity.lshIndexTopK(spark, dir, 0L, 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(legacy == byId)
+    // an LSH directory without the format stamp is refused, not read
+    fs.delete(graft.index.Lineage.formatPath(dir), false)
+    Seq[() => Any](() => Similarity.lshIndexTopK(spark, dir, 0L, 10),
+        () => Similarity.lshIndexTopK(spark, dir, q0, 10, 2, None)).foreach { q =>
+      val e = intercept[IllegalArgumentException](q())
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
+    }
   }
 
   test("simhash64: exact per-bit recompute; planted near-dups at small Hamming, unrelated far") {

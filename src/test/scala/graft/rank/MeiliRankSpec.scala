@@ -331,15 +331,14 @@ class MeiliRankSpec extends AnyFunSuite {
     IndexBuild.buildFromTable(spark, df, "doc_id", "text", "lang", "source",
       dir, IndexConfig(docsPerShard = 4, termBuckets = 2, blockSize = 4,
         numPartitions = 2))
-    // the build pinned the current version; a matching engine loads
+    // the build stamped the current version; a matching engine loads
     new SearchEngine(spark, dir)
-    // rewrite the pin to a bogus future version -> load must fail fast
-    val st = spark.read.parquet(s"$dir/stats").collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-      .map { case ("normalizerVersion", _) => ("normalizerVersion", 999.0)
-             case kv => kv }.toSeq
-    st.toDF("key", "value").repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    // rewrite the stamp's normalizer to a bogus future version -> load
+    // must fail fast
+    val p = graft.index.Lineage.formatPath(dir)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(s"layout=${IndexBuild.FormatVersion} normalizer=999".getBytes("UTF-8"))
+    finally out.close()
     val e = intercept[IllegalArgumentException](new SearchEngine(spark, dir))
     assert(e.getMessage.contains("normalizer version"))
   }
