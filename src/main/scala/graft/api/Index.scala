@@ -60,14 +60,8 @@ final class Index(val engine: SearchEngine,
   import engine.spark.implicits._
 
   /** field name → fid for attributesToSearchOn (multi-field indexes). */
-  private lazy val fieldIds: Map[String, Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"${engine.indexDir}/fields")
-    val fs = p.getFileSystem(engine.spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      engine.spark.read.parquet(s"${engine.indexDir}/fields")
-        .select($"name", $"fid").as[(String, Int)].collect().toMap
-    else Map.empty
-  }
+  private val fieldIds: Map[String, Int] =
+    engine.fields.map { case (fid, name, _) => name -> fid }.toMap
 
   // exactAttributes (the reference's typoTolerance.disableOnAttributes,
   // index.rs:125-126): resolve names to fids and fold into the typo
@@ -138,9 +132,7 @@ final class Index(val engine: SearchEngine,
         // slice the already-ranked top-(offset+limit) driver-side,
         // exactly like the reference's paginator — never a global-sort
         // skip
-        val rows = ranked.collect().drop(r.offset).toSeq
-        engine.spark.createDataFrame(
-          engine.spark.sparkContext.parallelize(rows, 1), ranked.schema)
+        engine.localDF(ranked.collect().drop(r.offset).toSeq, ranked.schema)
       }
     val wantsFormat = r.highlight || r.cropLength.isDefined ||
       r.showMatchesPosition || r.attributesToHighlight.exists(_.nonEmpty) ||
@@ -201,11 +193,8 @@ final class Index(val engine: SearchEngine,
         es.collectFirst { case e if e.contains(':') =>
           e.substring(e.indexOf(':') + 1).toInt }.getOrElse(10)))
     val rows = page.collect()
-    val ids = rows.map(_.getAs[Int]("docId")).toSeq
-    val contents =
-      if (ids.isEmpty) Map.empty[Int, String]
-      else engine.docs.filter(col("docId").isin(ids: _*))
-        .select($"docId", $"content").as[(Int, String)].collect().toMap
+    val contents = engine.docRows(rows.map(_.getAs[Int]("docId")).toSeq,
+      Seq("content")).map { case (d, row) => d -> row.getString(1) }
     val wantFmt = doHighlight || cropLen.isDefined
     val out = rows.map { row =>
       val text = contents.getOrElse(row.getAs[Int]("docId"), "")
@@ -233,9 +222,7 @@ final class Index(val engine: SearchEngine,
     val extraFields =
       (if (wantFmt) Seq(StructField("_formatted", StringType)) else Nil) ++
         (if (r.showMatchesPosition) Seq(StructField("_matchesPosition", StringType)) else Nil)
-    engine.spark.createDataFrame(
-      engine.spark.sparkContext.parallelize(out, 1),
-      StructType(page.schema.fields ++ extraFields))
+    engine.localDF(out, StructType(page.schema.fields ++ extraFields))
   }
 
   /** Per-field `_formatted` for multi-field indexes (reference: the
@@ -278,15 +265,12 @@ final class Index(val engine: SearchEngine,
     val wantFmt = hlSet.nonEmpty || cropMap.nonEmpty ||
       (r.highlight || r.cropLength.isDefined)
     val rows = page.collect()
-    val ids = rows.map(_.getAs[Int]("docId")).toSeq
     val texts: Map[Int, Map[String, String]] =
-      if (ids.isEmpty) Map.empty
-      else engine.docs.filter(col("docId").isin(ids: _*))
-        .select(col("docId") +: fmtFields.map(f => col(f).cast("string")): _*)
-        .collect().map(row => row.getInt(0) ->
+      engine.docRows(rows.map(_.getAs[Int]("docId")).toSeq, fmtFields)
+        .map { case (d, row) => d ->
           fmtFields.zipWithIndex.map { case (f, i) =>
             f -> Option(row.getString(i + 1)).getOrElse("")
-          }.toMap).toMap
+          }.toMap }
     val H = graft.search.Highlighter
     val out = rows.map { row =>
       val fields = texts.getOrElse(row.getAs[Int]("docId"), Map.empty)
@@ -319,9 +303,7 @@ final class Index(val engine: SearchEngine,
     val extraFields =
       (if (wantFmt) Seq(StructField("_formatted", mapT)) else Nil) ++
         (if (r.showMatchesPosition) Seq(StructField("_matchesPosition", mapT)) else Nil)
-    engine.spark.createDataFrame(
-      engine.spark.sparkContext.parallelize(out, 1),
-      StructType(page.schema.fields ++ extraFields))
+    engine.localDF(out, StructType(page.schema.fields ++ extraFields))
   }
 
   /** Placeholder ranking (reference: an empty `q` matches every
@@ -480,9 +462,8 @@ final class Index(val engine: SearchEngine,
     if (offset == 0) scored.limit(limit)
     else {
       // page-sized slice, like search(): never a global-sort skip
-      val rows = scored.limit(offset + limit).collect().drop(offset).toSeq
-      engine.spark.createDataFrame(
-        engine.spark.sparkContext.parallelize(rows, 1), scored.schema)
+      engine.localDF(scored.limit(offset + limit).collect().drop(offset).toSeq,
+        scored.schema)
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
@@ -797,7 +797,7 @@ object IndexBuild {
       // persist the stop-word setting so the query side agrees with the
       // index by construction
       if (cfg.stopWords.nonEmpty)
-        cfg.stopWords.toSeq.sorted.toDF("term").repartition(1)
+        cfg.stopWords.toSeq.sorted.toDF("term").coalesce(1)
           .write.mode("overwrite").parquet(s"$indexDir/stopwords")
       Nil
     }
@@ -809,8 +809,22 @@ object IndexBuild {
     "docId INT, repo STRING, path STRING, commit STRING, lang STRING, " +
       "content STRING, content_sha256 STRING"
 
+  /** docs/ schema of a multi-field index ([[buildMultiField]]): the
+    * single-field columns with one STRING column per field, in fid
+    * order, before `content_sha256`. */
+  def docsSchema(fieldCols: Seq[String]): StructType = {
+    val base = StructType.fromDDL(DocsSchemaDdl)
+    StructType(base.fields.init ++
+      fieldCols.map(StructField(_, StringType)) :+ base.fields.last)
+  }
+
   final val PositionsCols: Seq[String] =
     Seq("term", "docId", "positions", "tf", "bucket")
+
+  /** Read schema of positions/ and prefix_positions/ (the latter has no
+    * `tf`; no reader needs it, so it is pruned from both). */
+  final val PositionsSchemaDdl =
+    "term STRING, docId INT, positions ARRAY<INT>, bucket INT"
 
   /** One document's position-table rows from ONE tokenize call: per-term
     * occurrence positions (stop words excluded, positions clamped to
@@ -912,7 +926,7 @@ object IndexBuild {
     * partition is extracted and deleted before dict derivation). */
   private def writeDict(spark: SparkSession, indexDir: String): Unit = {
     import spark.implicits._
-    spark.read.parquet(s"$indexDir/postings")
+    spark.read.schema(BlocksSchemaDdl).parquet(s"$indexDir/postings")
       .filter($"term" =!= LenTerm)
       .groupBy($"term")
       .agg(sum($"count").as("df"), sum($"tfSum").as("cf"))
@@ -1053,7 +1067,7 @@ object IndexBuild {
              batchId: String): Unit = {
     import spark.implicits._
     Lineage.stage(spark, indexDir, s"delete_$batchId") {
-      ids.toDF("docId").repartition(1)
+      ids.toDF("docId").coalesce(1)
         .write.mode("overwrite").parquet(s"$indexDir/deleted/batch=d$batchId")
       Nil
     }
@@ -1280,14 +1294,14 @@ object IndexBuild {
       ("termBuckets", cfg.termBuckets.toDouble),
       ("blockSize", cfg.blockSize.toDouble))
       .toDF("key", "value")
-      .repartition(1).write.mode("overwrite").parquet(s"$indexDir/stats")
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/stats")
     // persist the tokenizer settings (same contract as stop words: the
     // query side loads them from the index, so both ends segment
     // identically by construction)
     if (!cfg.tokenizer.isDefault)
       Seq(tokSettingsRow(cfg.tokenizer))
         .toDF(StructType.fromDDL(TokSchemaDdl).fieldNames.toIndexedSeq: _*)
-        .repartition(1).write.mode("overwrite").parquet(s"$indexDir/tokenizer")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/tokenizer")
   }
 
   /** tokenizer/ schema, in [[tokSettingsRow]] order. */
@@ -1393,7 +1407,7 @@ object IndexBuild {
     Lineage.stage(spark, indexDir, "fields") {
       fields.zipWithIndex.map { case ((name, w), fid) => (fid, name, w) }
         .toDF("fid", "name", "weight")
-        .repartition(1).write.mode("overwrite").parquet(s"$indexDir/fields")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/fields")
       Nil
     }
 
@@ -1493,6 +1507,16 @@ object IndexBuild {
   val EncodedCols: Seq[String] = Seq("term", "shard", "blockId", "firstDoc",
     "lastDoc", "count", "docBytes", "tfBytes", "blockMaxTf", "tfSum",
     "encBytes", "bucket")
+
+  /** Read schema of postings/ and prefixes/ ([[EncodedCols]] as
+    * [[encodePartition]] types them). */
+  final val BlocksSchemaDdl =
+    "term STRING, shard INT, blockId INT, firstDoc INT, lastDoc INT, " +
+      "count INT, docBytes BINARY, tfBytes BINARY, blockMaxTf INT, " +
+      "tfSum BIGINT, encBytes INT, bucket INT"
+
+  /** Read schema of fields/ ([[buildMultiField]]). */
+  final val FieldsSchemaDdl = "fid INT, name STRING, weight INT"
 
   private def lineageOf(spark: SparkSession, dir: String,
                         docIdCol: String): Seq[LineageRow] = {

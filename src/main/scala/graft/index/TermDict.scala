@@ -29,7 +29,10 @@ final class TermDict(spark: SparkSession, dictPath: String,
   import spark.implicits._
   import org.apache.spark.sql.functions._
 
-  private def dictDf = spark.read.parquet(dictPath)
+  /** The one dict/ (or prefix_dict/) relation, read with the writers'
+    * fixed schema: no schema-inference job. */
+  @transient private lazy val dictDf =
+    spark.read.schema(TermDict.SchemaDdl).parquet(dictPath)
 
   lazy val size: Long = dictDf.count()
 
@@ -117,6 +120,10 @@ object TermDict {
     * ~2M terms ≈ tens of MB — comfortably a driver map, while real
     * web-scale vocabularies (10^8+) route to the bucketed path. */
   final val DefaultCollectThreshold: Long = 2L << 20
+
+  /** The columns TermDict reads: dict/ and prefix_dict/ both carry
+    * them (dict/'s termId and cf are pruned). */
+  final val SchemaDdl = "term STRING, df BIGINT, len INT"
 
   /** LRU entry cap for the band/prefix caches. */
   final val DefaultCacheEntries: Int = 64

@@ -273,7 +273,7 @@ final class MeiliRank(engine: SearchEngine,
     * word_fid_docids, search/new/mod.rs:115-170). With typo.exactFids
     * set, derivations costing > 0 route through the SAME fid-restricted
     * path minus the typo-disabled fids (reference db_cache.rs:183-205). */
-  private def slotMatchRows(slots: Seq[Slot], fids: Option[Set[Int]]): DataFrame = {
+  private[rank] def slotMatchRows(slots: Seq[Slot], fids: Option[Set[Int]]): DataFrame = {
     val derivRows = slots.flatMap(s => s.derivations.map { case (t, c) =>
       (t, s.idx, c, if (t == s.original) 1 else 0)
     })
@@ -282,25 +282,26 @@ final class MeiliRank(engine: SearchEngine,
     val (typoRows, plainRows) =
       if (typo.exactFids.isEmpty) (Nil, derivRows)
       else derivRows.partition(_._3 > 0)
+    // (slot, cost, exact) per derivation term ride in the decode's
+    // closure; a term shared by several slots yields a row per slot
     def occurrencesOf(rows: Seq[(String, Int, Int, Int)],
                       f: Option[Set[Int]]): Option[DataFrame] =
       if (rows.isEmpty) None else Some {
-        val dt = rows.toDF("term", "slot", "cost", "isExact")
-        val terms = rows.map(_._1).distinct
+        val consts = rows.groupBy(_._1).map { case (t, rs) =>
+          t -> rs.map(r => (r._2, r._3, r._4)) }
         val occurrences = f match {
           case Some(_) =>
             // NO distinct: one row per position occurrence is fine —
             // the per-doc min/max aggregation dedups per slot anyway,
             // and the distinct was a whole extra exchange
-            engine.positionRows(terms, f).select($"term", $"docId")
+            engine.positionsWith(consts, f)((d, _, c) => (d, c._1, c._2, c._3))
           case None =>
             // df=0: only term+bucket feed the pruned posting scan
-            val qts = terms.map(t => graft.search.QueryTerm(t, 0L, 0.0,
+            val qts = consts.keys.toSeq.map(t => graft.search.QueryTerm(t, 0L, 0.0,
               IndexBuild.bucketOf(t, engine.termBuckets)))
-            engine.decoded(qts).toDF().select($"term", $"docId")
+            engine.decodedWith(qts, consts)((d, _, c) => (d, c._1, c._2, c._3))
         }
-        occurrences.join(broadcast(dt), Seq("term"))
-          .select($"docId", $"slot", $"cost", $"isExact".as("exact"))
+        occurrences.toDF("docId", "slot", "cost", "exact")
       }
     // phrase derivations (split words, multi-word synonyms): the slot
     // matches where the words occur adjacently; never exact. Splits
@@ -336,7 +337,7 @@ final class MeiliRank(engine: SearchEngine,
     * prefixes their merged position table). Typo-derived forms
     * (cost > 0) keep the exactFids restriction, so the rank costs never
     * see a typo match inside a typo-disabled attribute. */
-  private def slotPositions(slots: Seq[Slot], fids: Option[Set[Int]]): DataFrame = {
+  private[rank] def slotPositions(slots: Seq[Slot], fids: Option[Set[Int]]): DataFrame = {
     val derivRows = slots.flatMap(s =>
       s.derivations.map(d => (d._1, s.idx, d._2)) ++
         s.phraseDerivs.map(pd => (pd._1.head, s.idx, pd._2)))
@@ -345,10 +346,9 @@ final class MeiliRank(engine: SearchEngine,
       else derivRows.partition(_._3 > 0)
     def posOf(rows: Seq[(String, Int, Int)], f: Option[Set[Int]]): Option[DataFrame] =
       if (rows.isEmpty) None else Some {
-        val dt = rows.map(r => (r._1, r._2)).toDF("term", "slot")
-        engine.positionRows(rows.map(_._1).distinct, f)
-          .join(broadcast(dt), Seq("term"))
-          .select($"docId", $"slot", $"pos")
+        val slotsOf = rows.groupBy(_._1).map { case (t, rs) => t -> rs.map(_._2) }
+        engine.positionsWith(slotsOf, f)((d, p, slot) => (d, slot, p))
+          .toDF("docId", "slot", "pos")
       }
     val direct = (posOf(plainRows, fids) ++ posOf(typoRows, typoFids(fids)))
       .reduceOption(_ unionByName _)
@@ -474,7 +474,9 @@ final class MeiliRank(engine: SearchEngine,
     * EAGER like the reference's search: the top-k cut materializes
     * driver-side (k is a page size — the facade caps it at
     * maxTotalHits) so document metadata can be fetched with a
-    * docId-pushed pruned scan instead of joining the whole doc store.
+    * docId-pushed pruned scan instead of joining the whole doc store;
+    * the page comes back as local rows in rank order, so collecting it
+    * runs no further job.
     * Callers needing a deep lazy ordering without metadata should use
     * [[scoredUniverse]] (as Hybrid's keyword arm does). */
   def search(q: String, k: Int,
@@ -495,6 +497,11 @@ final class MeiliRank(engine: SearchEngine,
       return engine.docsRaw.limit(0)
         .select($"docId", lit(0).as("rankingScore"))
     val metaSrc = engine.docsRaw
+    val rankCols = Seq("docId", "wordsRank", "typoCost", "proxCost",
+      "fidCost", "posCost", "exactAttr", "exactWords", "rankingScore")
+    val metaCols = Seq("repo", "path", "lang")
+    val detailCols = if (withScoreDetails) Seq("_rankingScoreDetails") else Nil
+    val cols = (rankCols ++ metaCols ++ detailCols).map(col)
     // Doc columns a rule needs BEFORE the top-k cut: a sort rule or a
     // custom `field:asc|desc` rule ranks by a document attribute that
     // only exists after the metadata join.
@@ -514,30 +521,17 @@ final class MeiliRank(engine: SearchEngine,
         // FIRST (the cascade runs once, k is page-sized), then fetch
         // metadata for exactly those docids with an IN predicate the
         // parquet scan prunes on — the doc store is never joined
-        // wholesale. (The previous shape joined the full docs table
-        // before the cut; at corpus scale that join shuffles the doc
-        // store, and even locally it broadcast-scanned every row. Same
-        // results: the docId-asc tiebreak makes the cut deterministic,
-        // and the k joined rows re-sort below.)
+        // wholesale. The merge happens on the driver, in rank order, so
+        // the returned local rows cost the caller's collect no job.
         val top = filtered.orderBy(sortCols: _*).limit(k)
-        val rows = top.collect() // one job; ≤ k rows (page-sized)
-        val idIdx = top.schema.fieldIndex("docId")
-        val ids = rows.map(_.getInt(idIdx)).toSeq
-        val topDf = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), top.schema)
-        // broadcast the ≤ k-row LOCAL side: it ships without a Spark
-        // job, so materialization costs one job (the pruned doc scan),
-        // not a broadcast-build job + a probe job
-        broadcast(topDf).join(metaSrc.filter($"docId".isin(ids: _*)), Seq("docId"))
+          .select((rankCols ++ detailCols).map(col): _*)
+        return engine.withDocCols(top.collect(), top.schema, metaCols)
+          .select(cols: _*)
       case None =>
         // k above the eager ceiling (or doc-attribute sort keys): lazy
         // join shape — no driver collect, no O(k) isin literal
         filtered.join(metaSrc, Seq("docId"))
     }
-    val cols = Seq($"docId", $"wordsRank", $"typoCost", $"proxCost",
-      $"fidCost", $"posCost", $"exactAttr", $"exactWords", $"rankingScore",
-      $"repo", $"path", $"lang") ++
-      (if (withScoreDetails) Seq($"_rankingScoreDetails") else Nil)
     ordered.orderBy(sortCols: _*).limit(k).select(cols: _*)
   }
 
@@ -632,8 +626,9 @@ final class MeiliRank(engine: SearchEngine,
 
     // exactness: whole-attribute exact (len == n and phrase at pos 0),
     // starts-with, other
+    // (withPos is live-only already: no tombstone join on doclen)
     val phraseStart = withPos
-      .join(engine.doclen, Seq("docId"))
+      .join(engine.doclenAll, Seq("docId"))
       .withColumn("startsWithQuery",
         $"wordsRank" === n && $"exactWords" === n && $"firstSlotPos" === 0 &&
           $"proxCost" <= (n - 1)) // all pairs adjacent

@@ -1,8 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{BM25, Tokenizer, VByte}
 import graft.index.IndexBuild
@@ -23,9 +23,10 @@ final case class Hit(docId: Int, score: Double)
   *
   * Two physical strategies, cross-checked in tests:
   *  - `searchDF`: fully declarative — posting scan (bucket-pruned, term
-  *    filter pushed to parquet) → decode flatMap → broadcast-joined
-  *    doclen/idf → groupBy(docId) → orderBy(score desc, docId).limit(k)
-  *    (Catalyst plans TakeOrderedAndProject; no global sort).
+  *    filter pushed to parquet) → decode flatMap (each posting carries
+  *    its term's idf) → broadcast-joined doclen → groupBy(docId) →
+  *    orderBy(score desc, docId).limit(k) (Catalyst plans
+  *    TakeOrderedAndProject; no global sort).
   *  - `searchWand`: per-shard block-max WAND inside `mapGroups` (partial
   *    top-k per shard, exact global merge) — skips whole blocks via
   *    (firstDoc, lastDoc, blockMaxScore) without decoding them.
@@ -42,8 +43,12 @@ final case class Hit(docId: Int, score: Double)
   * for free). A held instance keeps serving the pre-mutation view.
   *
   * INTERACTIVE DEPLOYMENT: warm query latency is Spark-job-dispatch
-  * bound (2-3 jobs/query after the table-reader cache), not data
-  * bound — the plans read only the query's pruned term buckets. For a
+  * bound, not data bound — the plans read only the query's pruned term
+  * buckets. Warm jobs per call with AQE off: `searchDF` 2 (the
+  * postings broadcast and the ranked collect), `searchWand` 1,
+  * `MeiliRank.search` and an `api.Index.search` page 3 (the cascade's
+  * doclen broadcast, its collect, the page's doc fetch), 4 with
+  * highlighting (the content fetch); JobBudgetSpec holds these. For a
   * latency-sensitive service, run the query session with
   * `spark.sql.adaptive.enabled=false`: these plans are pruned scans +
   * broadcast joins with nothing for AQE to re-plan, and each AQE
@@ -82,7 +87,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/stopwords")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      spark.read.parquet(s"$indexDir/stopwords").as[String].collect().toSet
+      spark.read.schema("term STRING").parquet(s"$indexDir/stopwords")
+        .as[String].collect().toSet
     else Set.empty
   }
 
@@ -115,17 +121,20 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
           Some(Tokenizer.TokSettings.isCjkLocale(loc))))
     }
 
-  /** fid → weight for multi-field indexes (IndexBuild.buildMultiField);
-    * empty for single-field. Lower weight = more important field
-    * (reference fieldids_weights_map). */
-  val fieldWeights: Map[Int, Int] = {
+  /** (fid, name, weight) of a multi-field index's searchable fields
+    * (IndexBuild.buildMultiField), in fid order; empty for single-field. */
+  private[graft] val fields: Seq[(Int, String, Int)] = {
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/fields")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      spark.read.parquet(s"$indexDir/fields").select($"fid", $"weight")
-        .as[(Int, Int)].collect().toMap
-    else Map.empty
+      spark.read.schema(IndexBuild.FieldsSchemaDdl).parquet(s"$indexDir/fields")
+        .as[(Int, String, Int)].collect().sortBy(_._1).toSeq
+    else Nil
   }
+
+  /** fid → weight for multi-field indexes; empty for single-field. Lower
+    * weight = more important field (reference fieldids_weights_map). */
+  val fieldWeights: Map[Int, Int] = fields.map(f => f._1 -> f._3).toMap
 
   /** Small-mode convenience view (tests, tooling). Throws above the
     * TermDict threshold by design — engine paths use `td`. */
@@ -142,16 +151,20 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/deleted")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      Some(spark.read.parquet(s"$indexDir/deleted").select($"docId"))
+      Some(spark.read.schema("docId INT").parquet(s"$indexDir/deleted")
+        .select($"docId"))
     else None
   }
+  /** One job: a single task reads every tombstone batch, and the limit
+    * stops the read one row past the cap. */
   private lazy val deletedSet: Set[Int] = deletedDf match {
     case None => Set.empty
     case Some(d) =>
-      val n = d.count()
+      val ids = d.as[Int].coalesce(1).limit(SearchEngine.TombstoneCap.toInt + 1).collect()
+      val n = ids.length
       require(n <= SearchEngine.TombstoneCap,
         s"$n tombstones exceed the broadcastable cap (${SearchEngine.TombstoneCap}): run IndexBuild.compact")
-      d.as[Int].collect().toSet
+      ids.toSet
   }
   /** Restrict a (docId, …) DataFrame to live docs. */
   private def liveOnly(df: DataFrame): DataFrame =
@@ -162,15 +175,32 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * call — a 1-task Spark job per invocation that showed up as 1-3
     * extra jobs on EVERY query (QueryJobs dev tool). The engine is a
     * snapshot of the index (documented at the class header), so the
-    * cached listing is exactly as stale as every other loaded table. */
+    * cached listing is exactly as stale as every other loaded table.
+    * Block and positions tables are read with the writers' fixed
+    * schemas (no schema-inference job); a facet table's `value` type
+    * is the faceted column's, so it is inferred. */
   private val tableDFs =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   private def tableDF(table: String): DataFrame =
-    tableDFs.getOrElseUpdate(table, spark.read.parquet(s"$indexDir/$table"))
+    tableDFs.getOrElseUpdate(table, {
+      val schema = table match {
+        case "postings" | "prefixes" => Some(IndexBuild.BlocksSchemaDdl)
+        case "positions" | "prefix_positions" => Some(IndexBuild.PositionsSchemaDdl)
+        case _ => None
+      }
+      schema.fold(spark.read)(spark.read.schema).parquet(s"$indexDir/$table")
+    })
+
+  /** The doc store as written, tombstoned rows included: the source for
+    * fetching known-live docIds ([[docRows]]), which needs no tombstone
+    * join. */
+  private lazy val docsAll: DataFrame =
+    spark.read.schema(IndexBuild.docsSchema(fields.map(_._2)))
+      .parquet(s"$indexDir/docs")
 
   /** Doc store WITHOUT the derived `len` column — the cheap view for
     * paths that don't need the BM25 norm. */
-  lazy val docsRaw: DataFrame = liveOnly(spark.read.parquet(s"$indexDir/docs"))
+  lazy val docsRaw: DataFrame = liveOnly(docsAll)
 
   /** True iff this index persisted a positions table (phrase /
     * proximity / attribute rules and any fid-restricted read need it;
@@ -181,14 +211,20 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** (docId, len) as written, tombstoned rows included: the lookup side
+    * for joins whose other side is already live-only (decoded postings,
+    * positions, [[docsRaw]]), where a tombstone anti-join would cost a
+    * broadcast job and remove nothing. */
+  private[graft] lazy val doclenAll: DataFrame = IndexBuild.readDoclen(spark, indexDir)
+
   /** Narrow (docId, len) table — the BM25-norm lookup side, read from
     * the doclen/ table the build's single tokenize pass wrote. */
-  lazy val doclen: DataFrame = liveOnly(IndexBuild.readDoclen(spark, indexDir))
+  lazy val doclen: DataFrame = liveOnly(doclenAll)
 
-  /** Full doc view including `len` (joined from [[doclen]]) — the
+  /** Full doc view including `len` (joined from [[doclenAll]]) — the
     * surface for filters, facets and field distribution; hot paths use
     * [[doclen]]/[[docsRaw]] directly. */
-  lazy val docs: DataFrame = docsRaw.join(doclen, Seq("docId"))
+  lazy val docs: DataFrame = docsRaw.join(doclenAll, Seq("docId"))
 
   /** Dictionary-resolved QueryTerms for already-tokenized terms. */
   def termsOf(ts: Seq[String]): Seq[QueryTerm] = {
@@ -253,17 +289,35 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * the predicate is pushed to the parquet block scan, so capped
     * shards are never read, let alone decoded. */
   def decoded(terms: Seq[QueryTerm], shardCap: Option[Int] = None,
-              table: String = "postings"): Dataset[Posting] = {
+              table: String = "postings"): Dataset[Posting] =
+    decodedWith(terms, terms.map(t => t.term -> Seq(t)).toMap, shardCap, table)(
+      (d, tf, t) => Posting(d, t.term, tf))
+
+  /** [[decoded]] with driver-held per-term constants: every live posting
+    * (docId, tf) of term t becomes one `row(docId, tf, c)` per c in
+    * `consts(t)` — the rows an inner join against a (term, c) table
+    * would give, repeated terms fanning out alike, but with no such
+    * table in the plan. A query-local table joined in as a broadcast
+    * relation costs its own Spark job; here the constants travel in
+    * the closure, looked up once per block in a hash map. */
+  def decodedWith[C, T: Encoder](terms: Seq[QueryTerm], consts: Map[String, Seq[C]],
+                                 shardCap: Option[Int] = None,
+                                 table: String = "postings")
+                                (row: (Int, Int, C) => T): Dataset[T] = {
     val del = deletedSet
     val blocks = shardCap.fold(blocksFor(terms, table))(c =>
       blocksFor(terms, table).filter($"shard" < c))
     blocks.select($"term", $"docBytes", $"tfBytes")
       .as[(String, Array[Byte], Array[Byte])]
       .flatMap { case (term, db, tb) =>
-        val ids = VByte.decodeDeltas(db); val tfs = VByte.decode(tb)
-        val it = ids.iterator.zip(tfs.iterator)
-          .map { case (d, tf) => Posting(d, term, tf) }
-        if (del.isEmpty) it else it.filter(p => !del.contains(p.docId))
+        val cs = consts.getOrElse(term, Nil)
+        if (cs.isEmpty) Iterator.empty
+        else {
+          val ids = VByte.decodeDeltas(db); val tfs = VByte.decode(tb)
+          Iterator.range(0, ids.length)
+            .filter(i => del.isEmpty || !del.contains(ids(i)))
+            .flatMap(i => cs.iterator.map(c => row(ids(i), tfs(i), c)))
+        }
       }
   }
 
@@ -277,8 +331,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     val pq = parseQuery(q)
     val terms = termsOf(pq.positiveTerms)
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val idfDf = terms.map(t => (t.term, t.idf)).toDF("term", "idf")
-    val base = decoded(terms, shardCap).toDF()
+    val base = decodedWith(terms, terms.map(t => t.term -> Seq(t)).toMap, shardCap)(
+      (d, tf, t) => (d, t.term, tf, t.idf)).toDF("docId", "term", "tf", "idf")
     val afterCand = candidates match {
       case Some(c) => base.join(broadcast(c.select($"docId")), Seq("docId"), "left_semi")
       case None => base
@@ -296,11 +350,11 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     // stop-word term's postings are O(corpus) — broadcasting them OOMs
     // the executors at scale, so above the Σdf cap the join shuffles
     // (and high-df queries should prefer searchWand, which never
-    // materializes per-doc posting rows at all).
-    val joined = universe.join(broadcast(idfDf), Seq("term"))
+    // materializes per-doc posting rows at all). The postings are
+    // live-only already, so the doclen side needs no tombstone join.
     val postingRows = terms.map(_.df).sum
-    val withLen = doclen
-      .join(if (postingRows <= broadcastDfCap) broadcast(joined) else joined,
+    val withLen = doclenAll
+      .join(if (postingRows <= broadcastDfCap) broadcast(universe) else universe,
         Seq("docId"))
       .withColumn("tscore", $"idf" * $"tf" * lit(BM25.K1 + 1.0) /
         ($"tf" + lit(BM25.K1) * (lit(1.0 - BM25.B) + lit(BM25.B) * $"len" / lit(avgdl))))
@@ -445,10 +499,34 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   /** Positions rows for the given terms (bucket-pruned scan of the
     * positions table), live docs only. `table` selects the store
     * ("positions", or "prefix_positions" for merged prefix rows). */
-  def positionsFor(terms: Seq[String], table: String = "positions"): DataFrame = {
+  def positionsFor(terms: Seq[String], table: String = "positions"): DataFrame =
+    liveOnly(positionScan(terms, table))
+
+  /** The bucket-pruned, term-pushed positions scan, tombstones included. */
+  private def positionScan(terms: Seq[String], table: String): DataFrame = {
     val buckets = terms.map(IndexBuild.bucketOf(_, termBuckets)).distinct
-    liveOnly(tableDF(table)
-      .filter($"bucket".isin(buckets: _*) && $"term".isin(terms: _*)))
+    tableDF(table).filter($"bucket".isin(buckets: _*) && $"term".isin(terms: _*))
+  }
+
+  /** [[positionRows]] with driver-held per-term constants, the
+    * positions counterpart of [[decodedWith]]: every position of term t
+    * in a live doc (fid-restricted like positionRows) becomes one
+    * `row(docId, pos, c)` per c in `consts(t)`, with no (term, c) table
+    * in the plan. Tombstones drop in the closure, like in decodedWith. */
+  def positionsWith[C, T: Encoder](consts: Map[String, Seq[C]],
+                                   fids: Option[Set[Int]] = None,
+                                   table: String = "positions")
+                                  (row: (Int, Int, C) => T): Dataset[T] = {
+    val del = deletedSet
+    positionScan(consts.keys.toSeq, table)
+      .select($"term", $"docId", $"positions")
+      .as[(String, Int, Array[Int])]
+      .flatMap { case (t, d, ps) =>
+        val cs = consts.getOrElse(t, Nil)
+        if (cs.isEmpty || del.contains(d)) Iterator.empty
+        else ps.iterator.filter(p => fids.forall(_.contains(p >> 16)))
+          .flatMap(p => cs.iterator.map(c => row(d, p, c)))
+      }
   }
 
   /** Exploded (docId, pos) rows for the given terms, optionally
@@ -613,12 +691,10 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * query analysis). */
   def adjacencyCounts(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
     if (pairs.isEmpty) return Map.empty
-    val words = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-    val pos = positionsFor(words)
-      .select($"term", $"docId", explode($"positions").as("p"))
-    val pdf = broadcast(pairs.toDF("l", "r"))
-    pdf.join(pos.toDF("l", "docId", "p1"), Seq("l"))
-      .join(pos.toDF("r", "docId", "p2"), Seq("r", "docId"))
+    val left = positionsWith(pairs.groupBy(_._1))((d, p, lr) => (lr._1, lr._2, d, p))
+      .toDF("l", "r", "docId", "p1")
+    left.join(positionRows(pairs.map(_._2).distinct).toDF("r", "docId", "p2"),
+        Seq("r", "docId"))
       .where($"p2" === $"p1" + 1)
       .select($"l", $"r", $"docId").distinct()
       .groupBy($"l", $"r").count()
@@ -724,24 +800,42 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   }
 
   /** Top-k + document materialization (reference make_hits). The k
-    * scored rows are cut FIRST (one job), then metadata is fetched with
-    * a docId IN predicate the parquet scan prunes on — the doc store is
-    * never joined wholesale (same shape as MeiliRank.search's
-    * materialization). */
+    * scored rows are cut FIRST, then metadata is fetched with a docId
+    * IN predicate the parquet scan prunes on — the doc store is never
+    * joined wholesale (same shape as MeiliRank.search's
+    * materialization). Returns local rows in rank order. */
   def searchHits(q: String, k: Int, filter: Option[String] = None,
                  conjunctive: Boolean = true): DataFrame = {
     val cand = filter.map(f => docs.filter(graft.query.FilterParser.parse(f)))
     val top = searchDF(q, k, conjunctive, cand)
-    val rows = top.collect() // ≤ k rows (page-sized)
-    val ids = rows.map(_.getInt(0)).toSeq
-    val topDf = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), top.schema)
-    // broadcast the ≤ k-row LOCAL side (no broadcast-build job; see
-    // MeiliRank.search's materialization note)
-    broadcast(topDf).join(docsRaw.filter($"docId".isin(ids: _*)), Seq("docId"))
-      .select($"docId", $"score", $"repo", $"path", $"commit", $"lang")
-      .orderBy($"score".desc, $"docId".asc)
+    withDocCols(top.collect(), top.schema, Seq("repo", "path", "commit", "lang"))
   }
+
+  /** Doc-store rows (`docId +: cols`) by docId, for ids a live-only plan
+    * produced: one pruned IN scan of [[docsAll]] (one job, no tombstone
+    * join). */
+  private[graft] def docRows(ids: Seq[Int], cols: Seq[String]): Map[Int, Row] =
+    if (ids.isEmpty) Map.empty
+    else docsAll.filter($"docId".isin(ids: _*)).select(("docId" +: cols).map(col): _*)
+      .collect().map(r => r.getInt(0) -> r).toMap
+
+  /** Page-sized `rows` (in final order, with `schema`) plus the doc-store
+    * columns `cols`, merged on the driver: one metadata job ([[docRows]]),
+    * inner-join semantics (a row without a stored doc drops). The
+    * result is a local relation in the same order. */
+  private[graft] def withDocCols(rows: Array[Row], schema: StructType,
+                                 cols: Seq[String]): DataFrame = {
+    val idIdx = schema.fieldIndex("docId")
+    val meta = docRows(rows.map(_.getInt(idIdx)).toSeq, cols)
+    localDF(rows.toSeq.flatMap(r => meta.get(r.getInt(idIdx))
+        .map(m => Row.fromSeq(r.toSeq ++ m.toSeq.tail))),
+      StructType(schema.fields ++ cols.map(docsAll.schema(_))))
+  }
+
+  /** Driver rows as a local relation: collecting it (or a projection of
+    * it) runs no Spark job, and it keeps the rows' order. */
+  private[graft] def localDF(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 }
 
 object SearchEngine {

@@ -269,8 +269,9 @@ class MeiliRankSpec extends AnyFunSuite {
     }
     // and the cascade's hot stage carries no ScalaUDF anymore (typed
     // flatMap adaptors print as UDFAdaptors$...; a ScalaUDF prints
-    // as `UDF(...)`)
-    val plan = new MeiliRank(engine).search("quick brown", 5)
+    // as `UDF(...)`). search() returns materialized local rows, so the
+    // cascade is checked on the scored universe it ranks.
+    val plan = new MeiliRank(engine).scoredUniverse("quick brown")._1
       .queryExecution.optimizedPlan.toString
     assert(!plan.contains("UDF("), "cascade plan must be ScalaUDF-free")
   }
@@ -292,15 +293,37 @@ class MeiliRankSpec extends AnyFunSuite {
   test("hit materialization never joins the full doc store: top-k cut first, docId-pushed metadata lookup") {
     // at corpus scale a wholesale scored-universe ⋈ docs join shuffles
     // the doc store; search() instead cuts to k rows, then fetches
-    // metadata with an IN predicate the parquet scan prunes on
-    val df = mr.search("quick brown", 5)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("LocalTableScan") || plan.contains("ResultQueryStage"),
-      s"top rows should be a localized table:\n$plan")
-    val docsScan = plan.split('\n').filter(l =>
-      l.contains("FileScan") && l.contains("/docs"))
-    assert(docsScan.forall(_.contains("docId")),
-      s"docs scan must carry the pushed docId predicate:\n${docsScan.mkString("\n")}")
+    // metadata with an IN predicate the parquet scan prunes on. The
+    // fetch runs inside search(), so its plan is captured as it runs.
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = ran.add(qe.executedPlan.toString): Unit
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val df =
+      try mr.search("quick brown", 5)
+      finally {
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    def docsScans(plan: String) = plan.split('\n').filter(l =>
+      l.contains("FileScan") && l.contains("/docs")).toSeq
+    val fetches = ran.toArray.map(_.toString).filter(docsScans(_).nonEmpty).toSeq
+    assert(ran.size == 2 && fetches.size == 1,
+      s"expected the cascade run and one doc fetch:\n${ran.toArray.mkString("\n\n")}")
+    val fetch = fetches.head
+    assert(docsScans(fetch).forall(l => l.contains("PushedFilters") && l.contains("In(docId")),
+      s"docs scan must carry the pushed docId predicate:\n$fetch")
+    assert(!fetch.contains("/positions") && !fetch.contains("/postings"),
+      s"the doc fetch must not join the scored universe:\n$fetch")
+    // the returned page is the merged local rows: collecting it runs
+    // no further query
+    assert(df.queryExecution.executedPlan.toString.contains("LocalTableScan"),
+      s"returned page should be local rows:\n${df.queryExecution.executedPlan}")
     // and the results are identical to the pre-cut join shape
     val viaJoin = mr.scoredUniverse("quick brown")._1
       .join(engine.docsRaw.drop("len"), Seq("docId"))

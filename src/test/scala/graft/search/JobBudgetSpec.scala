@@ -1,0 +1,145 @@
+package graft.search
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.SparkTestBase
+import graft.api.{Index, SearchRequest}
+import graft.corpus.SourceFile
+import graft.index.{IndexBuild, IndexConfig}
+import graft.rank.MeiliRank
+
+/** Spark jobs per read-path call, counted under a job group with the
+  * listener bus drained before the count is read. Query-local constants
+  * (idf, term → slot tables, the top-k rows) must never enter a plan
+  * as a broadcast relation — each such relation costs its own job —
+  * and a materialized page is a local relation whose collect runs no
+  * job. Counted with AQE off, the query-session setting the
+  * SearchEngine scaladoc prescribes (with AQE on, every exchange adds a
+  * job). */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark = SparkTestBase.spark
+  import spark.implicits._
+
+  private val cfg = IndexConfig(docsPerShard = 8, termBuckets = 2,
+    blockSize = 4, numPartitions = 2, positions = true)
+
+  private def corpus = (0 until 40).map { i =>
+    SourceFile(f"r$i%02d", f"p$i%02d.scala", f"c$i%04d", "scala",
+      Seq("alpha", if (i % 3 == 0) "merge buffer" else "stream",
+        f"word$i%02d", if (i % 4 == 0) "quick brown fox" else "lazy dog")
+        .mkString(" "))
+  }.toDS()
+
+  private lazy val dir: String = {
+    val d = Files.createTempDirectory("jobbudget").toString
+    IndexBuild.build(spark, corpus, d, cfg)
+    d
+  }
+  private lazy val tombstoned: String = {
+    val d = Files.createTempDirectory("jobbudget-del").toString
+    IndexBuild.build(spark, corpus, d, cfg)
+    IndexBuild.delete(spark, d, Seq(0, 3, 12), "b1")
+    d
+  }
+
+  private val groups = new AtomicLong
+
+  /** Jobs started by `body` on this thread (and the broadcast threads
+    * it spawns, which inherit the job group). */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobbudget-${groups.incrementAndGet()}"
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet(): Unit
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      TestBus.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  /** `body` run 5 times back to back: every run must cost the same. */
+  private def steadyJobs(body: => Any): Int = {
+    val counts = (1 to 5).map(_ => jobsOf(body))
+    assert(counts.distinct.size == 1, s"job counts vary across repeats: $counts")
+    counts.head
+  }
+
+  private def withoutAqe[T](body: => T): T = {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("warm engine: searchDF <= 2 jobs, searchWand = 1, MeiliRank.search <= 3") {
+    withoutAqe {
+      val e = new SearchEngine(spark, dir)
+      val mr = new MeiliRank(e)
+      e.searchDF("merge buffer", 10).collect() // loads the dictionary
+      val df = steadyJobs(e.searchDF("merge buffer", 10).collect())
+      val or = steadyJobs(e.searchDF("quick stream", 10, conjunctive = false).collect())
+      val wand = steadyJobs(e.searchWand("merge buffer", 10).collect())
+      val rank = steadyJobs(mr.search("quick brown fox", 5).collect())
+      assert(df <= 2 && or <= 2, s"searchDF: $df (AND), $or (OR)")
+      assert(wand == 1, s"searchWand: $wand")
+      assert(rank <= 3, s"MeiliRank.search: $rank")
+    }
+  }
+
+  test("api.Index.search: plain and offset pages <= 3 jobs, highlight <= 4; searchHits <= 3") {
+    withoutAqe {
+      val e = new SearchEngine(spark, dir)
+      val idx = new Index(e)
+      e.searchDF("alpha", 1).collect()
+      val plain = steadyJobs(idx.search(SearchRequest(q = "quick brown", limit = 5)).collect())
+      val offset = steadyJobs(
+        idx.search(SearchRequest(q = "quick brown", limit = 3, offset = 2)).collect())
+      val hl = steadyJobs(idx.search(
+        SearchRequest(q = "quick brown", limit = 5, highlight = true)).collect())
+      val hits = steadyJobs(e.searchHits("merge buffer", 5).collect())
+      // highlighting reads the page's stored content: one more job
+      assert(plain <= 3 && offset <= 3 && hl <= 4,
+        s"Index.search: plain $plain, offset $offset, highlight $hl")
+      assert(hits <= 3, s"searchHits: $hits")
+    }
+  }
+
+  test("fresh engine over a tombstoned index: open + first search within budget") {
+    withoutAqe {
+      tombstoned
+      val first = (1 to 5).map(_ => jobsOf {
+        val e = new SearchEngine(spark, tombstoned)
+        val got = e.searchDF("merge buffer", 20).collect().map(_.getInt(0)).toSet
+        assert(got.nonEmpty && !got.exists(Set(0, 3, 12)), s"tombstoned ids returned: $got")
+      })
+      assert(first.distinct.size == 1, s"job counts vary across repeats: $first")
+      info(s"fresh engine first search: ${first.head} jobs")
+      assert(first.head <= FreshTombstonedBudget, s"fresh first search: ${first.head}")
+      // warm: the tombstone set is loaded; no anti-join job on doclen
+      val e = new SearchEngine(spark, tombstoned)
+      e.searchDF("merge buffer", 20).collect()
+      val warm = steadyJobs(e.searchDF("merge buffer", 20).collect())
+      val rank = steadyJobs(new MeiliRank(e).search("quick brown fox", 5).collect())
+      assert(warm <= 2, s"searchDF on a tombstoned index: $warm")
+      assert(rank <= 3, s"MeiliRank.search on a tombstoned index: $rank")
+    }
+  }
+
+  /** stats, dictionary size + collect, tombstone set, then searchDF's
+    * two jobs; schema inference would add one job per table read. */
+  private val FreshTombstonedBudget = 6
+}
