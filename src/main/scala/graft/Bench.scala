@@ -94,9 +94,7 @@ object Bench {
     // semantic — id assignment is a zero-shuffle narrow pass instead of
     // re-sorting the whole corpus through an exchange (BENCH.md)
     val cfg = IndexConfig(docsPerShard = 1 << 14, termBuckets = 4,
-      blockSize = 128, numPartitions = cores * 2, storageOrderIds = true,
-      // SPARK_GRAFT_CHUNKED=0: row-shuffle A/B arm (default: chunked)
-      chunkedShuffle = !sys.env.get("SPARK_GRAFT_CHUNKED").contains("0"))
+      blockSize = 128, numPartitions = cores * 2, storageOrderIds = true)
     val dir = s"/dev/shm/graft-bench-idx/${cores}c-${System.nanoTime()}"
     val corpus = spark.read.parquet(corpusDir)
       .select($"repo", $"path", $"commit", $"lang", $"content")

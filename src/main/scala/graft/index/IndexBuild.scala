@@ -21,19 +21,15 @@ import graft.functions.{BM25, Tokenizer, VByte}
   *   partitions): at query time `bucket = hash(term)` prunes the scan
   *   to the buckets holding the query's terms.
   * @param blockSize docids per posting block (FIXTURES.md: 128).
-  * @param bucketWaves build/commit each posting bucket as its own wave
-  *   with its own lineage (segment-granular resume, more jobs) instead
-  *   of one dynamic-partition write (fewer jobs, stage-granular resume).
   * @param positions also build the word-position table (phrase /
   *   proximity / attribute rules; reference word_position_docids,
   *   index.rs:137-138).
-  */
-/** @param stopWords terms excluded from postings/positions/dictionary.
+  * @param stopWords terms excluded from postings/positions/dictionary.
   *   Positions of surrounding words are preserved (the stop word still
   *   advances the position counter) and doc `len` still counts it —
   *   reference semantics: stop words keep positions but are not indexed
-  *   as terms (parse_query.rs:311-318, settings stop_words). */
-/** @param storageOrderIds assign docids in CORPUS STORAGE ORDER (input
+  *   as terms (parse_query.rs:311-318, settings stop_words).
+  * @param storageOrderIds assign docids in CORPUS STORAGE ORDER (input
   *   file path asc, then row order within the file) instead of globally
   *   sorting by (repo, path, commit). This is the reference's own
   *   semantic — Meilisearch numbers documents by arrival order, not by
@@ -43,31 +39,21 @@ import graft.functions.{BM25, Tokenizer, VByte}
   *   instead of a full re-sort of the corpus through one exchange
   *   (3 passes of every content byte over the wire). Requires a
   *   file-backed corpus (parquet/json scan); falls back to the sorted
-  *   path otherwise. Ids remain deterministic: same files, same ids. */
-/** @param chunkedShuffle map-side posting-chunk combine: before the
-  *   posting exchange, each map task packs its per-(term, shard)
-  *   postings into delta+VByte chunk rows, so the shuffle ships the
-  *   term string once per chunk and ~3-5 bytes per posting instead of
-  *   one ~32-byte (term, key) row each. This is the Spark re-expression
-  *   of the reference's per-thread partial caches merged post-exchange
-  *   (crates/milli/src/update/new/extract/cache.rs:281 BalancedCaches;
-  *   grenad sort-merge in the old pipeline) — shuffle bytes are the
-  *   build's dominant bandwidth draw, and bandwidth is what multi-core
-  *   contention starves first, so fewer bytes is a direct
-  *   scaling-efficiency lever. Decoded back to the exact same sorted
-  *   (term, key) stream on the reduce side; output blocks are
-  *   byte-identical to the row shuffle. */
+  *   path otherwise. Ids remain deterministic: same files, same ids.
+  *   The sorted assignment stays beside it: [[IndexBuild.compact]]
+  *   reads the doc store minus its tombstones (an anti-join once
+  *   anything was deleted, the case compaction exists for — not a bare
+  *   file scan), and [[Dump.importDump]] promises ids by (repo, path)
+  *   rank, which callers map results back through (SparkEntry q_dump). */
 final case class IndexConfig(
     docsPerShard: Int = 1 << 14,
     termBuckets: Int = 8,
     blockSize: Int = 128,
     numPartitions: Int = 32,
-    bucketWaves: Boolean = false,
     positions: Boolean = false,
     stopWords: Set[String] = Set.empty,
     tokenizer: Tokenizer.TokSettings = Tokenizer.TokSettings.Default,
-    storageOrderIds: Boolean = false,
-    chunkedShuffle: Boolean = true)
+    storageOrderIds: Boolean = false)
 
 /** Inverted-index builder: the Spark-first re-expression of the
   * reference's document-indexing pipeline (reference:
@@ -80,7 +66,7 @@ final case class IndexConfig(
   * serial driver overhead is what breaks Amdahl at 4x cores):
   *   1 sample+sort shuffle and 1 count for docid assignment, 1 write for
   *   docs(+sha), 1 stats agg, 1 shuffle+write for all posting
-  *   buckets (unless bucketWaves), 1 column-pruned metadata scan each
+  *   buckets, 1 column-pruned metadata scan each
   *   for dict and lineage. The tokenize passes re-read the committed
   *   docs parquet (column-pruned) instead of caching contents in the
   *   block manager — at 10^12 files caching would thrash; parquet
@@ -155,37 +141,39 @@ object IndexBuild {
     shiftleft(docId.cast("long"), 32).bitwiseOR(tf.cast("long"))
 
   /** The standard posting-block encode pipeline over (term, key) rows:
-    * (optional map-side chunk combine →) salted repartition on
-    * (term, derived shard) → in-partition sort → streaming block
-    * encoder. One definition of the shuffle shape for build / append /
-    * prefix / multi-field. With `cfg.chunkedShuffle` the exchange ships
-    * pre-packed chunk rows (see [[chunkPartition]]) that the reduce
-    * side flattens back to the identical sorted (term, key) stream —
-    * same blocks out, a fraction of the shuffle bytes. */
+    * map-side chunk combine → salted repartition on (term, derived
+    * shard) → in-partition sort → streaming block encoder. One
+    * definition of the shuffle shape for build / append / prefix /
+    * multi-field.
+    *
+    * The map-side combine ([[chunkPartition]]) packs each map task's
+    * per-(term, shard) postings into delta+VByte chunk rows, so the
+    * exchange ships the term string once per chunk and ~3-5 bytes per
+    * posting instead of one ~32-byte (term, key) row each. This is the
+    * Spark re-expression of the reference's per-thread partial caches
+    * merged post-exchange (crates/milli/src/update/new/extract/
+    * cache.rs:281 BalancedCaches; grenad sort-merge in the old
+    * pipeline): shuffle bytes are the build's dominant bandwidth draw,
+    * and bandwidth is what multi-core contention starves first, so
+    * fewer bytes is a direct scaling-efficiency lever (BENCH.md r5: 79%
+    * fewer shuffle bytes than shipping one row per posting). The reduce
+    * side flattens the chunks back to the exact sorted (term, key)
+    * stream ([[flattenChunks]]), so the blocks are those a per-posting
+    * row shuffle would encode. */
   def encodeBlocks(df: DataFrame, cfg: IndexConfig): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val shardWidth = cfg.docsPerShard.toLong << 32
-    if (cfg.chunkedShuffle) {
-      df.select(col("term"), col("key")).as[(String, Long)]
-        .mapPartitions(rows => chunkPartition(rows, cfg.docsPerShard))
-        .toDF("term", "firstKey", "docBytes", "tfBytes")
-        .repartition(cfg.numPartitions, col("term"),
-          expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
-        .sortWithinPartitions(col("term"), col("firstKey"))
-        .as[(String, Long, Array[Byte], Array[Byte])]
-        .mapPartitions(rows => encodePartition(flattenChunks(rows),
-          cfg.blockSize, cfg.termBuckets, cfg.docsPerShard))
-        .toDF(EncodedCols: _*)
-    } else {
-      df.repartition(cfg.numPartitions, col("term"),
-          expr(s"key div CAST($shardWidth AS BIGINT)"))
-        .sortWithinPartitions(col("term"), col("key"))
-        .as[(String, Long)]
-        .mapPartitions(rows =>
-          encodePartition(rows, cfg.blockSize, cfg.termBuckets, cfg.docsPerShard))
-        .toDF(EncodedCols: _*)
-    }
+    df.select(col("term"), col("key")).as[(String, Long)]
+      .mapPartitions(rows => chunkPartition(rows, cfg.docsPerShard))
+      .toDF("term", "firstKey", "docBytes", "tfBytes")
+      .repartition(cfg.numPartitions, col("term"),
+        expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
+      .sortWithinPartitions(col("term"), col("firstKey"))
+      .as[(String, Long, Array[Byte], Array[Byte])]
+      .mapPartitions(rows => encodePartition(flattenChunks(rows),
+        cfg.blockSize, cfg.termBuckets, cfg.docsPerShard))
+      .toDF(EncodedCols: _*)
   }
 
   /** Entries buffered per map task before a full chunk flush: 2M packed
@@ -404,33 +392,26 @@ object IndexBuild {
     }
 
   /** The ONE positions-table write: shard-salted exchange (sentinel
-    * skew — see the positions stage note) + in-partition (term, docId)
-    * sort + partitionBy(bucket). With `cfg.chunkedShuffle` the exchange
-    * ships packed chunks ([[chunkPositionRows]]) and unpacks to the
-    * identical sorted rows before the write. */
+    * skew — see [[buildFromDocs]]) of packed position chunks
+    * ([[chunkPositionRows]], the [[encodeBlocks]] transport for
+    * positions), unpacked to the sorted (term, docId) rows before the
+    * partitionBy(bucket) write. */
   def writePositions(ds: Dataset[(String, Int, Array[Int], Int, Int)],
                      outDir: String, cfg: IndexConfig,
                      numPartitions: Int): Unit = {
     val spark = ds.sparkSession
     import spark.implicits._
     val shardWidth = cfg.docsPerShard.toLong << 32
-    if (cfg.chunkedShuffle)
-      ds.map(r => (r._1, r._2, r._3, r._4))
-        .mapPartitions(rows => chunkPositionRows(rows, cfg.docsPerShard))
-        .toDF("term", "firstKey", "docBytes", "tfBytes", "posBytes")
-        .repartition(numPartitions, col("term"),
-          expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
-        .sortWithinPartitions(col("term"), col("firstKey"))
-        .as[(String, Long, Array[Byte], Array[Byte], Array[Byte])]
-        .mapPartitions(rows => flattenPositionChunks(rows, cfg.termBuckets))
-        .toDF(PositionsCols: _*)
-        .write.mode("overwrite").partitionBy("bucket").parquet(outDir)
-    else
-      ds.toDF(PositionsCols: _*)
-        .repartition(numPartitions, col("term"),
-          expr(s"docId div ${cfg.docsPerShard}"))
-        .sortWithinPartitions(col("term"), col("docId"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(outDir)
+    ds.map(r => (r._1, r._2, r._3, r._4))
+      .mapPartitions(rows => chunkPositionRows(rows, cfg.docsPerShard))
+      .toDF("term", "firstKey", "docBytes", "tfBytes", "posBytes")
+      .repartition(numPartitions, col("term"),
+        expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
+      .sortWithinPartitions(col("term"), col("firstKey"))
+      .as[(String, Long, Array[Byte], Array[Byte], Array[Byte])]
+      .mapPartitions(rows => flattenPositionChunks(rows, cfg.termBuckets))
+      .toDF(PositionsCols: _*)
+      .write.mode("overwrite").partitionBy("bucket").parquet(outDir)
   }
 
   /** Reduce-side inverse of [[chunkPartition]]: chunk rows sorted by
@@ -494,38 +475,26 @@ object IndexBuild {
     else docs0
   }
 
-  /** One document's posting keys from ONE tokenize call: a
-    * (term, packKey(docId, tf)) row per distinct non-stop term, then the
-    * [[LenTerm]] sentinel whose tf is the full token count (the BM25
-    * `len`, stop words included). */
-  private def termKeysOf(docId: Int, content: String, stop: Set[String],
+  /** One document's posting keys from ONE tokenize call per field: a
+    * (term, packKey(docId, tf)) row per distinct non-stop term (tf
+    * summed across fields), then the [[LenTerm]] sentinel whose tf is
+    * the full token count (the BM25 `len`, stop words included). Fields
+    * tokenize in fid order with their own locale hint, as in
+    * [[positionRowsOf]]. */
+  private def termKeysOf(docId: Int, fields: Seq[String], stop: Set[String],
                          tok: Tokenizer.TokSettings): Iterator[(String, Long)] = {
-    val toks = Tokenizer.tokenize(content, tok)
     val m = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    toks.foreach { t =>
-      if (stop.isEmpty || !stop.contains(t.term))
-        m.update(t.term, m.getOrElse(t.term, 0) + 1)
-    }
-    m.iterator.map { case (term, tf) => (term, packKey(docId, tf)) } ++
-      Iterator.single((LenTerm, packKey(docId, toks.length)))
-  }
-
-  /** Per-doc tokenize + aggregate: one TermDoc row per distinct term.
-    * Stop words are skipped but still advanced positions (tokenize
-    * already assigned them). */
-  def termDocsOf(docId: Int, content: String,
-                 stop: Set[String] = Set.empty,
-                 tok: Tokenizer.TokSettings = Tokenizer.TokSettings.Default)
-      : Iterator[TermDoc] = {
-    val toks = Tokenizer.tokenize(content, tok)
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Int)]
-    toks.foreach { t =>
-      if (stop.isEmpty || !stop.contains(t.term)) {
-        val cur = m.getOrElse(t.term, (0, Int.MaxValue))
-        m.update(t.term, (cur._1 + 1, math.min(cur._2, t.pos)))
+    var total = 0
+    fields.iterator.zipWithIndex.foreach { case (f, fid) =>
+      val toks = Tokenizer.tokenize(f, tok.forFid(fid))
+      total += toks.length
+      toks.foreach { t =>
+        if (stop.isEmpty || !stop.contains(t.term))
+          m.update(t.term, m.getOrElse(t.term, 0) + 1)
       }
     }
-    m.iterator.map { case (term, (tf, minPos)) => TermDoc(term, docId, tf, minPos, 0) }
+    m.iterator.map { case (term, tf) => (term, packKey(docId, tf)) } ++
+      Iterator.single((LenTerm, packKey(docId, total)))
   }
 
   def build(spark: SparkSession, corpus: Dataset[SourceFile], indexDir: String,
@@ -535,84 +504,81 @@ object IndexBuild {
       val storageRows =
         if (cfg.storageOrderIds) docsStorageOrder(spark, corpus, indexDir)
         else None
-      storageRows.getOrElse(docsSortedOrder(spark, corpus, indexDir, cfg))
+      storageRows.getOrElse(
+        rankDocs(spark, corpus, 0L, s"$indexDir/docs", cfg.numPartitions,
+          "docs")((p, off, c) => s"docs:$p:$off:$c"))
     }
     buildFromDocs(spark, indexDir, cfg)
   }
 
-  /** Dense docids by global (repo, path, commit) rank: range-shuffle +
-    * per-partition counts + offset broadcast (a global Window would
-    * serialize on one partition; this is the scalable 2-pass rank). */
-  private def docsSortedOrder(spark: SparkSession, corpus: Dataset[SourceFile],
-                              indexDir: String, cfg: IndexConfig): Seq[LineageRow] = {
+  /** THE sorted docid ranker ([[build]] from 0, [[append]] from the
+    * index's next free id): dense docids by global (repo, path, commit)
+    * rank starting at `base` — range-shuffle + per-partition counts +
+    * offset broadcast (a global Window would serialize on one
+    * partition; this is the scalable 2-pass rank). Writes the doc rows
+    * to `outDir` and returns one `stage` lineage row per non-empty range
+    * partition, its sha from `sha(partition, firstId, count)`. */
+  private def rankDocs(spark: SparkSession, corpus: Dataset[SourceFile],
+                       base: Long, outDir: String, numPartitions: Int,
+                       stage: String)(sha: (Int, Long, Int) => String)
+      : Seq[LineageRow] = {
     import spark.implicits._
-      // InternalRow RDD here on purpose: two jobs over the SAME sorted
-      // RDD reuse its shuffle map outputs (the count pass materializes
-      // them, the write pass skips the exchange), and counting
-      // UnsafeRows never decodes the content strings — a Dataset
-      // .persist would instead build a columnar in-memory cache,
-      // measured as the dominant build cost (CompressibleColumnBuilder
-      // burning 30+ cpu-sec on the content strings at local[32]).
-      val sortedDf = corpus.toDF()
-        .repartitionByRange(cfg.numPartitions, $"repo", $"path", $"commit")
-        .sortWithinPartitions($"repo", $"path", $"commit")
-      val schema = sortedDf.schema
-      val (iRepo, iPath, iCommit, iLang, iContent) = (
-        schema.fieldIndex("repo"), schema.fieldIndex("path"),
-        schema.fieldIndex("commit"), schema.fieldIndex("lang"),
-        schema.fieldIndex("content"))
-      val sortedRdd = sortedDf.queryExecution.toRdd
-      val counts = sortedRdd
-        .mapPartitionsWithIndex((pid, it) => Iterator.single((pid, it.size)))
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = counts.scanLeft(0L)(_ + _)
-      val bOffsets = spark.sparkContext.broadcast(offsets)
-      spark.createDataFrame(
-        sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-          var id = bOffsets.value(pid)
-          it.map { r =>
-            // per-index cap: docids are Int (2.1B docs / index); beyond
-            // that, shard into multiple indexes and merge results via
-            // search.Federation (the multi-index sharding story). Fail
-            // fast instead of wrapping negative (VByte deltas require
-            // strictly increasing ids).
-            require(id <= Int.MaxValue,
-              s"docId $id exceeds the per-index Int cap; shard into a new " +
-                "index and merge via search.Federation")
-            // metadata columns tolerate nulls (pass through like the
-            // typed path always did); content cannot — there is nothing
-            // to index or checksum — so fail with the contract, not an
-            // NPE inside Sha
-            def str(i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
-            require(!r.isNullAt(iContent),
-              "SourceFile.content must be non-null (row " + id + ")")
-            val content = r.getString(iContent)
-            val row = org.apache.spark.sql.Row(id.toInt, str(iRepo),
-              str(iPath), str(iCommit), str(iLang),
-              content, Sha.hex(content))
-            id += 1
-            row
-          }
-        },
-        StructType.fromDDL(DocsSchemaDdl))
-        .write.mode("overwrite").parquet(s"$indexDir/docs")
-      // per-partition lineage from the offsets themselves — no read-back
-      val rows = counts.zipWithIndex.collect { case (c, p) if c > 0 =>
-        LineageRow("docs", p, offsets(p).toInt, (offsets(p) + c - 1).toInt,
-          c.toLong, 0L, Sha.hex(s"docs:$p:${offsets(p)}:$c"),
-          java.time.Instant.now.toString)
-      }
-      rows.toIndexedSeq
+    // InternalRow RDD here on purpose: two jobs over the SAME sorted
+    // RDD reuse its shuffle map outputs (the count pass materializes
+    // them, the write pass skips the exchange), and counting
+    // UnsafeRows never decodes the content strings — a Dataset
+    // .persist would instead build a columnar in-memory cache,
+    // measured as the dominant build cost (CompressibleColumnBuilder
+    // burning 30+ cpu-sec on the content strings at local[32]).
+    val sortedDf = corpus.toDF()
+      .repartitionByRange(numPartitions, $"repo", $"path", $"commit")
+      .sortWithinPartitions($"repo", $"path", $"commit")
+    val schema = sortedDf.schema
+    val (iRepo, iPath, iCommit, iLang, iContent) = (
+      schema.fieldIndex("repo"), schema.fieldIndex("path"),
+      schema.fieldIndex("commit"), schema.fieldIndex("lang"),
+      schema.fieldIndex("content"))
+    val sortedRdd = sortedDf.queryExecution.toRdd
+    val counts = sortedRdd
+      .mapPartitionsWithIndex((pid, it) => Iterator.single((pid, it.size)))
+      .collect().sortBy(_._1).map(_._2)
+    val offsets = counts.scanLeft(base)(_ + _)
+    val bOffsets = spark.sparkContext.broadcast(offsets)
+    spark.createDataFrame(
+      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
+        var id = bOffsets.value(pid)
+        it.map { r =>
+          // per-index cap: docids are Int (2.1B docs / index); beyond
+          // that, shard into multiple indexes and merge results via
+          // search.Federation (the multi-index sharding story). Fail
+          // fast instead of wrapping negative (VByte deltas require
+          // strictly increasing ids).
+          require(id <= Int.MaxValue,
+            s"docId $id exceeds the per-index Int cap; shard into a new " +
+              "index and merge via search.Federation")
+          // metadata columns may be null and pass through; content
+          // cannot — there is nothing to index or checksum — so fail
+          // with the contract, not an NPE inside Sha
+          def str(i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
+          require(!r.isNullAt(iContent),
+            "SourceFile.content must be non-null (row " + id + ")")
+          val content = r.getString(iContent)
+          val row = org.apache.spark.sql.Row(id.toInt, str(iRepo),
+            str(iPath), str(iCommit), str(iLang),
+            content, Sha.hex(content))
+          id += 1
+          row
+        }
+      },
+      StructType.fromDDL(DocsSchemaDdl))
+      .write.mode("overwrite").parquet(outDir)
+    // per-partition lineage from the offsets themselves — no read-back
+    counts.zipWithIndex.collect { case (c, p) if c > 0 =>
+      LineageRow(stage, p, offsets(p).toInt, (offsets(p) + c - 1).toInt,
+        c.toLong, 0L, sha(p, offsets(p), c), java.time.Instant.now.toString)
+    }.toIndexedSeq
   }
 
-  /** Storage-order docid assignment (cfg.storageOrderIds): ids follow
-    * (input file path asc, row index within file) — the reference's
-    * arrival-order DocumentId semantic — via the `_metadata` hidden
-    * columns of file-backed sources. ZERO corpus shuffle: one metadata-
-    * only job counts rows per file (no content column is read), then
-    * the doc write is a narrow codegen'd projection joined with the
-    * broadcast per-file offset table. Returns None when the corpus is
-    * not a direct file scan (caller falls back to the sorted path). */
   /** True iff `df` is a BARE file scan — only column-pruning nodes
     * (Project/alias) above the source relation. A Filter, limit, join,
     * or typed map between the files and the rows would break the
@@ -632,6 +598,14 @@ object IndexBuild {
     walk(df.queryExecution.analyzed)
   }
 
+  /** Storage-order docid assignment (cfg.storageOrderIds): ids follow
+    * (input file path asc, row index within file) — the reference's
+    * arrival-order DocumentId semantic — via the `_metadata` hidden
+    * columns of file-backed sources. ZERO corpus shuffle: one metadata-
+    * only job counts rows per file (no content column is read), then
+    * the doc write is a narrow codegen'd projection joined with the
+    * broadcast per-file offset table. Returns None when the corpus is
+    * not a direct file scan (caller falls back to [[rankDocs]]). */
   private def docsStorageOrder(spark: SparkSession, corpus: Dataset[SourceFile],
                                indexDir: String): Option[Seq[LineageRow]] = {
     import spark.implicits._
@@ -678,18 +652,31 @@ object IndexBuild {
     }.toIndexedSeq)
   }
 
+  /** Each doc's tokenizer input: `(docId, field values in fid order)`
+    * (a null field tokenizes as empty). The one projection every
+    * tokenize pass reads ([[buildFromDocs]], [[append]]). */
+  private def fieldTexts(docs: DataFrame, fieldCols: Seq[String]): Dataset[(Int, Seq[String])] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select($"docId", array(fieldCols.map(col): _*)).as[(Int, Seq[String])]
+  }
+
   /** Post-docs build stages (the ONE tokenize pass → postings/positions
-    * + doclen → dict → stats); shared by [[build]] and
-    * [[buildFromTable]]. The corpus content is tokenized exactly once:
-    * the token stream flows into EITHER the positions table (when
-    * enabled; postings then derive from a narrow (term, docId, tf) scan
-    * of it) OR straight into the posting shuffle. Per-doc token counts
-    * ride along as [[LenTerm]] sentinel rows and land in doclen/. */
+    * + doclen → dict → stats); shared by every builder ([[build]],
+    * [[buildFromTable]], [[buildMultiField]], and through them
+    * [[compact]] and [[Dump.importDump]]). `fieldCols` are the docs/
+    * columns tokenized per document, in fid order. The corpus is
+    * tokenized exactly once: the token stream flows into EITHER the
+    * positions table (when enabled; postings then derive from a narrow
+    * (term, docId, tf) scan of it) OR straight into the posting
+    * shuffle. Per-doc token counts ride along as [[LenTerm]] sentinel
+    * rows and land in doclen/. */
   private def buildFromDocs(spark: SparkSession, indexDir: String,
-                            cfg: IndexConfig): Unit = {
+                            cfg: IndexConfig,
+                            fieldCols: Seq[String] = Seq("content")): Unit = {
     import spark.implicits._
     val tok = cfg.tokenizer
-    val docsDf = spark.read.parquet(s"$indexDir/docs")
+    val texts = fieldTexts(spark.read.parquet(s"$indexDir/docs"), fieldCols)
     val tb = cfg.termBuckets
     val stop = cfg.stopWords
 
@@ -703,82 +690,43 @@ object IndexBuild {
       // a hard skew wall at the 10^12-doc design target.
       Lineage.stage(spark, indexDir, "positions") {
         writePositions(
-          docsDf.select($"docId", $"content").as[(Int, String)]
-            .flatMap { case (id, c) => positionRowsOf(id, Seq(c), stop, tok, tb) },
+          texts.flatMap { case (id, fs) => positionRowsOf(id, fs, stop, tok, tb) },
           s"$indexDir/positions", cfg, cfg.numPartitions)
         Nil
       }
       doclenStage(spark, indexDir, cfg)
       // postings derive from a narrow column-pruned (term, docId, tf)
       // scan of the committed positions — never a second tokenize
-      def termKeys(b: Option[Int]): DataFrame = {
-        val base = spark.read.parquet(s"$indexDir/positions")
-        b.fold(base.filter($"bucket" =!= tb))(bb => base.filter($"bucket" === bb))
-          .select($"term", packKeyCol($"docId", $"tf").as("key"))
-      }
-      if (cfg.bucketWaves) {
-        (0 until tb).foreach { b =>
-          Lineage.stage(spark, indexDir, s"postings_bucket_$b") {
-            encodeBlocks(termKeys(Some(b)), cfg).drop("bucket")
-              .write.mode("overwrite").parquet(s"$indexDir/postings/bucket=$b")
-            postingLineage(spark, s"$indexDir/postings/bucket=$b", s"postings_bucket_$b")
-          }
-        }
-      } else {
-        Lineage.stage(spark, indexDir, "postings") {
-          encodeBlocks(termKeys(None), cfg)
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$indexDir/postings")
-          postingLineage(spark, s"$indexDir/postings", "postings")
-        }
+      Lineage.stage(spark, indexDir, "postings") {
+        encodeBlocks(
+          spark.read.parquet(s"$indexDir/positions").filter($"bucket" =!= tb)
+            .select($"term", packKeyCol($"docId", $"tf").as("key")),
+          cfg)
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$indexDir/postings")
+        postingLineage(spark, s"$indexDir/postings", "postings")
       }
     } else {
       // no positions: the tokenize pass feeds the posting shuffle
-      // directly; sentinel len rows ride the same shuffle. forFid(0):
-      // a single-field index's content is field 0, so its locale hint
-      // applies identically with or without positions
-      val tok0 = tok.forFid(0)
-      def termDocKeys: Dataset[(String, Long)] = docsDf.select($"docId", $"content")
-        .as[(Int, String)]
-        .flatMap { case (id, c) => termKeysOf(id, c, stop, tok0) }
-      def encoded(ds: Dataset[(String, Long)]): DataFrame =
-        encodeBlocks(ds.toDF("term", "key"), cfg)
-
-      if (cfg.bucketWaves) {
-        (0 until tb).foreach { b =>
-          Lineage.stage(spark, indexDir, s"postings_bucket_$b") {
-            encoded(termDocKeys.filter(t => bucketOfIndexed(t._1, tb) == b)).drop("bucket")
-              .write.mode("overwrite").parquet(s"$indexDir/postings/bucket=$b")
-            postingLineage(spark, s"$indexDir/postings/bucket=$b", s"postings_bucket_$b")
-          }
-        }
-        // wave path: doclen straight from the sentinel keys (the waves
-        // re-tokenize per bucket by design, so one more pass for the
-        // tiny doclen table is the simpler trade than encode+decode)
-        Lineage.stage(spark, indexDir, "doclen") {
-          termDocKeys.filter(_._1 == LenTerm)
-            .map(t => (keyDoc(t._2), keyTf(t._2)))
-            .toDF("docId", "tf")
+      // directly; sentinel len rows ride the same shuffle
+      Lineage.stage(spark, indexDir, "postings") {
+        encodeBlocks(
+          texts.flatMap { case (id, fs) => termKeysOf(id, fs, stop, tok) }
+            .toDF("term", "key"),
+          cfg)
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$indexDir/postings")
+        // doclen extraction FUSED into this stage: a kill anywhere in
+        // here re-runs the whole stage from a clean overwrite
+        val sentinel = s"$indexDir/postings/bucket=$tb"
+        if (exists(spark, sentinel)) {
+          // no repartition: the decoded rows inherit the shard-salted,
+          // docId-sorted layout of the sentinel blocks
+          sentinelDoclen(spark, sentinel)
             .write.mode("overwrite").parquet(s"$indexDir/doclen")
-          Nil
-        }
-      } else {
-        Lineage.stage(spark, indexDir, "postings") {
-          encoded(termDocKeys)
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$indexDir/postings")
-          // doclen extraction FUSED into this stage: a kill anywhere in
-          // here re-runs the whole stage from a clean overwrite
-          val sentinel = s"$indexDir/postings/bucket=${cfg.termBuckets}"
-          if (exists(spark, sentinel)) {
-            // no repartition: the decoded rows inherit the shard-salted,
-            // docId-sorted layout of the sentinel blocks
-            sentinelDoclen(spark, sentinel)
-              .write.mode("overwrite").parquet(s"$indexDir/doclen")
-            deleteDir(spark, sentinel)
-          } else emptyDoclen(spark, indexDir) // empty corpus
-          postingLineage(spark, s"$indexDir/postings", "postings")
-        }
+          deleteDir(spark, sentinel)
+        } else emptyDoclen(spark, indexDir) // empty corpus
+        postingLineage(spark, s"$indexDir/postings", "postings")
       }
     }
 
@@ -963,39 +911,13 @@ object IndexBuild {
       // kill between the two stages can't shift the batch's docid range
       val base = docsDf
         .agg(coalesce(max($"docId"), lit(-1))).collect()(0).getInt(0) + 1
-      val sortedRdd = delta
-        .repartitionByRange(cfg.numPartitions, $"repo", $"path", $"commit")
-        .sortWithinPartitions($"repo", $"path", $"commit")
-        .as[SourceFile].rdd
-      val counts = sortedRdd
-        .mapPartitionsWithIndex((pid, it) => Iterator.single((pid, it.size)))
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = counts.scanLeft(base.toLong)(_ + _)
-      val bOffsets = spark.sparkContext.broadcast(offsets)
       // staged write (overwrite = idempotent) + tagged publish into docs/:
       // a kill during either step re-runs the stage and converges
       val staging = s"$indexDir/_stage_docs_$batchId"
-      spark.createDataFrame(
-        sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-          var id = bOffsets.value(pid)
-          it.map { f =>
-            require(id <= Int.MaxValue,
-              s"docId $id exceeds the per-index Int cap; shard into a new " +
-                "index and merge via search.Federation")
-            val r = org.apache.spark.sql.Row(id.toInt, f.repo, f.path,
-              f.commit, f.lang, f.content, Sha.hex(f.content))
-            id += 1
-            r
-          }
-        },
-        StructType.fromDDL(DocsSchemaDdl))
-        .write.mode("overwrite").parquet(staging)
+      val rows = rankDocs(spark, delta, base.toLong, staging, cfg.numPartitions,
+        s"docs_delta_$batchId")((p, _, c) => s"docs_delta_$batchId:$p:$c")
       Lineage.publishAppend(spark, staging, s"$indexDir/docs", s"b$batchId")
-      counts.zipWithIndex.collect { case (c, p) if c > 0 =>
-        LineageRow(s"docs_delta_$batchId", p, offsets(p).toInt,
-          (offsets(p) + c - 1).toInt, c.toLong, 0L,
-          Sha.hex(s"docs_delta_$batchId:$p:$c"), java.time.Instant.now.toString)
-      }.toIndexedSeq
+      rows
     }
 
     Lineage.stage(spark, indexDir, s"postings_delta_$batchId") {
@@ -1009,8 +931,7 @@ object IndexBuild {
       if (!range.isNullAt(0)) {
         val (lo, hi) = (range.getInt(0), range.getInt(1))
         val tb = cfg.termBuckets
-        val deltaDocs = docsDf.filter($"docId".between(lo, hi))
-          .select($"docId", $"content").as[(Int, String)]
+        val deltaDocs = fieldTexts(docsDf.filter($"docId".between(lo, hi)), Seq("content"))
         val stop = cfg.stopWords
         // ONE tokenize pass over the delta: position rows (when enabled)
         // or term keys, with sentinel len rows riding the same shuffle;
@@ -1019,7 +940,7 @@ object IndexBuild {
         if (cfg.positions) {
           val pstaging = s"$indexDir/_stage_positions_$batchId"
           writePositions(
-            deltaDocs.flatMap { case (id, c) => positionRowsOf(id, Seq(c), stop, tok, tb) },
+            deltaDocs.flatMap { case (id, fs) => positionRowsOf(id, fs, stop, tok, tb) },
             pstaging, cfg, math.max(1, cfg.numPartitions / 2))
           // postings delta from the STAGED positions (narrow scan, no
           // second tokenize)
@@ -1033,8 +954,7 @@ object IndexBuild {
           Lineage.publishAppend(spark, staging, s"$indexDir/postings", s"b$batchId")
           Lineage.publishAppend(spark, pstaging, s"$indexDir/positions", s"b$batchId")
         } else {
-          val tok0 = tok.forFid(0) // single-field content = field 0
-          deltaDocs.flatMap { case (id, c) => termKeysOf(id, c, stop, tok0) }
+          deltaDocs.flatMap { case (id, fs) => termKeysOf(id, fs, stop, tok) }
             .toDF("term", "key")
             .transform(encodeBlocks(_, cfg))
             .write.mode("overwrite").partitionBy("bucket").parquet(staging)
@@ -1359,27 +1279,8 @@ object IndexBuild {
                      docIdCol: String, contentCol: String, langCol: String,
                      sourceCol: String, indexDir: String,
                      cfg: IndexConfig): Unit = {
-    import spark.implicits._
-    // reuse the main pipeline with the PK forced to the existing id:
-    // sorting by (repo="", path=zero-padded id) reproduces id order,
-    // but simpler and exact: write docs directly, then run the shared
-    // post-docs stages. To keep one code path we pre-commit the docs
-    // stage here.
-    Lineage.stage(spark, indexDir, "docs") {
-      // pure-column projection (sha2 is codegen'd and equals Sha.hex:
-      // both are lowercase-hex SHA-256 of the UTF-8 bytes); no tokenize
-      // here — the shared post-docs stages do the single tokenize pass
-      df.select(
-          col(docIdCol).cast("int").as("docId"),
-          col(sourceCol).cast("string").as("repo"),
-          col(docIdCol).cast("string").as("path"),
-          lit("").as("commit"),
-          col(langCol).cast("string").as("lang"),
-          col(contentCol).cast("string").as("content"))
-        .withColumn("content_sha256", sha2($"content", 256))
-        .write.mode("overwrite").parquet(s"$indexDir/docs")
-      lineageOf(spark, s"$indexDir/docs", "docId")
-    }
+    tableDocsStage(spark, df, docIdCol, col(contentCol), Nil, langCol,
+      sourceCol, indexDir)
     buildFromDocs(spark, indexDir, cfg)
   }
 
@@ -1394,7 +1295,8 @@ object IndexBuild {
     *   sha); `len` = total tokens across fields (BM25 norm). tf sums
     *   across fields; positions carry the fid in the high 16 bits, so
     *   phrase/proximity joins stay within a field by construction
-    *   (cross-field distances clamp past the 7/8 caps).
+    *   (cross-field distances clamp past the 7/8 caps). Positions are
+    *   always built: the fid rule reads them.
     */
   def buildMultiField(spark: SparkSession, df: DataFrame, docIdCol: String,
                       fields: Seq[(String, Int)], langCol: String,
@@ -1410,66 +1312,38 @@ object IndexBuild {
         .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/fields")
       Nil
     }
+    tableDocsStage(spark, df, docIdCol, concat_ws("\n\n", fieldCols.map(col): _*),
+      fieldCols, langCol, sourceCol, indexDir)
+    buildFromDocs(spark, indexDir, cfg.copy(positions = true), fieldCols)
+  }
 
+  /** The docs stage of a table build ([[buildFromTable]],
+    * [[buildMultiField]]): the row's own id, `path` = the id as text,
+    * `content`, then the field columns. A pure-column projection (sha2
+    * is codegen'd and equals Sha.hex: both are lowercase-hex SHA-256 of
+    * the UTF-8 bytes); no tokenize here — [[buildFromDocs]] does the
+    * single tokenize pass. */
+  private def tableDocsStage(spark: SparkSession, df: DataFrame,
+                             docIdCol: String, content: org.apache.spark.sql.Column,
+                             fieldCols: Seq[String], langCol: String,
+                             sourceCol: String, indexDir: String): Unit =
     Lineage.stage(spark, indexDir, "docs") {
-      val concat = concat_ws("\n\n", fieldCols.map(col): _*)
-      df.select(
-          col(docIdCol).cast("int").as("docId") +:
-            col(sourceCol).cast("string").as("repo") +:
-            col(docIdCol).cast("string").as("path") +:
-            lit("").as("commit") +:
-            col(langCol).cast("string").as("lang") +:
-            concat.as("content") +:
-            fieldCols.map(c => col(c).cast("string").as(c)): _*)
-        .withColumn("content_sha256", sha2($"content", 256))
+      df.select(Seq(
+          col(docIdCol).cast("int").as("docId"),
+          col(sourceCol).cast("string").as("repo"),
+          col(docIdCol).cast("string").as("path"),
+          lit("").as("commit"),
+          col(langCol).cast("string").as("lang"),
+          content.cast("string").as("content")) ++
+          fieldCols.map(c => col(c).cast("string").as(c)): _*)
+        .withColumn("content_sha256", sha2(col("content"), 256))
         .write.mode("overwrite").parquet(s"$indexDir/docs")
       lineageOf(spark, s"$indexDir/docs", "docId")
-    }
-    val docsDf = spark.read.parquet(s"$indexDir/docs")
-    val tb = cfg.termBuckets
-    val stop = cfg.stopWords
-    val tok = cfg.tokenizer
-
-    // ---- the ONE tokenize pass: every field of every doc exactly once.
-    // Per-doc grouping is doc-local (no groupBy shuffle); positions carry
-    // fid<<16; the sentinel len row counts tokens across ALL fields
-    // (including stop words — the BM25 norm). Postings then derive from
-    // a narrow (term, docId, tf) scan of the committed positions.
-    Lineage.stage(spark, indexDir, "positions") {
-      writePositions(
-        docsDf
-          .select($"docId",
-            array(fieldCols.map(c => coalesce(col(c), lit(""))): _*).as("fs"))
-          .as[(Int, Seq[String])]
-          .flatMap { case (id, fs) => positionRowsOf(id, fs, stop, tok, tb) },
-        s"$indexDir/positions", cfg, cfg.numPartitions)
-      Nil
-    }
-    doclenStage(spark, indexDir, cfg)
-
-    Lineage.stage(spark, indexDir, "postings") {
-      encodeBlocks(
-        spark.read.parquet(s"$indexDir/positions")
-          .filter($"bucket" =!= tb)
-          .select($"term", packKeyCol($"docId", $"tf").as("key")),
-        cfg)
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/postings")
-      postingLineage(spark, s"$indexDir/postings", "postings")
-    }
-
-    Lineage.stage(spark, indexDir, "dict") {
-      writeDict(spark, indexDir)
-      Nil
-    }
-    Lineage.stage(spark, indexDir, "stats") {
-      writeStats(spark, indexDir, cfg)
-      Nil
-    }
-  }
+    }: Unit
 
   /** Streaming block encoder: input (term, packKey(docId, tf)) sorted by
     * (term, key) within the partition — equivalently (term, shard,
-    * docId); emits one PostingBlock row (plus bucket) per `blockSize`
+    * docId); emits one [[EncodedCols]] block row per `blockSize`
     * docids of each (term, shard) run. The single sanctioned imperative
     * spot (SURVEY §4.4). */
   def encodePartition(rows: Iterator[(String, Long)],

@@ -11,10 +11,10 @@ import graft.functions.Tokenizer
   *
   * Model (mirrors the reference's task/batch commit semantics,
   * crates/index-scheduler — a batch is visible iff its txn committed):
-  *  - every build stage (or posting bucket wave) writes its data dir,
-  *    then its lineage rows under `lineage/<stage>/`, then an empty
-  *    `_COMMITTED` marker. A stage is visible/resumable iff the marker
-  *    exists; a killed job re-runs only uncommitted stages.
+  *  - every build stage writes its data dir, then its lineage rows
+  *    under `lineage/<stage>/`, then an empty `_COMMITTED` marker. A
+  *    stage is visible/resumable iff the marker exists; a killed job
+  *    re-runs only uncommitted stages.
   *  - lineage rows carry (partitionId, docidMin, docidMax, postingCount,
   *    bytes, sha256) computed from the *written* files, so they describe
   *    exactly what was committed.
@@ -183,13 +183,7 @@ object Lineage {
     checkOrStamp(spark, indexDir)
     if (isCommitted(spark, indexDir, stage)) false
     else {
-      val t0 = System.nanoTime()
-      val rows = body
-      val tBody = (System.nanoTime() - t0) / 1e9
-      commit(spark, indexDir, stage, rows)
-      val tAll = (System.nanoTime() - t0) / 1e9
-      if (sys.props.get("graft.build.verbose").contains("true"))
-        System.err.println(f"[build] stage $stage%-22s ${tBody}%6.2fs (+commit ${tAll - tBody}%5.2fs)")
+      commit(spark, indexDir, stage, body)
       true
     }
   }

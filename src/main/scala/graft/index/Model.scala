@@ -1,52 +1,8 @@
 package graft.index
 
-/** A corpus document after docid assignment. `len` = token count of the
-  * content field (BM25 norm); `contentSha256` is the per-row invariant
-  * (BASELINE.json input_hint). */
-final case class Doc(
-    docId: Int,
-    repo: String,
-    path: String,
-    commit: String,
-    lang: String,
-    contentSha256: String,
-    len: Int)
-
-/** Per-(document, term) statistics emitted by the tokenize pass. One row
-  * per distinct term per doc — the unit that flows into posting lists. */
-final case class TermDoc(
-    term: String,
-    docId: Int,
-    tf: Int,
-    minPos: Int,
-    minFid: Int)
-
-/** Token occurrence with position (for proximity / attribute tables). */
-final case class TermPos(term: String, docId: Int, pos: Int)
-
-/** One encoded posting block (FIXTURES.md §2 `postings` schema).
-  * docids are delta+VByte (`docBytes`), term frequencies VByte
-  * (`tfBytes`); `blockMaxTf` / `blockMaxScore` drive block-max WAND. */
-final case class PostingBlock(
-    term: String,
-    shard: Int,
-    blockId: Int,
-    firstDoc: Int,
-    lastDoc: Int,
-    count: Int,
-    docBytes: Array[Byte],
-    tfBytes: Array[Byte],
-    blockMaxTf: Int,
-    /** encoded size (docBytes + tfBytes): lets lineage/metrics scans
-      * prune the blob columns entirely */
-    encBytes: Int)
-
-/** Dictionary row (broadcast at query time). */
-final case class DictEntry(term: String, termId: Long, df: Long, cf: Long)
-
 /** Lineage row — one per written partition per stage (north rule:
-  * partition id, doc range, posting count, bytes, sha256). A stage/bucket
-  * is visible iff its lineage commit marker exists; resume skips it. */
+  * partition id, doc range, posting count, bytes, sha256). A stage is
+  * visible iff its lineage commit marker exists; resume skips it. */
 final case class LineageRow(
     stage: String,
     partitionId: Int,

@@ -2,14 +2,15 @@ package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
+import org.apache.spark.TestBus
 
 import graft.SparkTestBase
 import graft.corpus.SourceFile
 
 /** The chunked posting shuffle (map-side delta+VByte chunk combine)
-  * must be a pure transport optimization: same blocks, same queries,
-  * fewer shuffle bytes. */
+  * must be a pure transport optimization: the chunk kernels round-trip
+  * to the exact sorted stream, and a build ships fewer shuffle bytes
+  * than a per-posting row shuffle. Same blocks out: BuildPinSpec. */
 class ChunkShuffleSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -21,34 +22,6 @@ class ChunkShuffleSpec extends AnyFunSuite {
     SourceFile(s"r${i % 5}", s"p$i.scala", f"c$i%04d", "scala",
       (0 until 20).map(j => words((i * 13 + j * 7) % words.length)).mkString(" "))
   }.toDS()
-
-  private def postingsOf(dir: String) =
-    spark.read.parquet(s"$dir/postings")
-      .select("term", "shard", "blockId", "firstDoc", "lastDoc", "count",
-        "docBytes", "tfBytes", "blockMaxTf", "tfSum", "bucket")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
-        (r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(8), r.getLong(9),
-          r.getInt(10)),
-        r.getAs[Array[Byte]](6).toSeq, r.getAs[Array[Byte]](7).toSeq))
-      .sortBy(t => (t._1, t._2, t._3))
-
-  test("chunked and row shuffles produce byte-identical posting blocks") {
-    // docsPerShard small so terms span shards; numPartitions > 1 so
-    // chunks from different map tasks meet on the reduce side
-    def build(chunked: Boolean): String = {
-      val dir = Files.createTempDirectory(s"chunk$chunked").toString
-      IndexBuild.build(spark, corpus(300), dir,
-        IndexConfig(docsPerShard = 32, termBuckets = 3, blockSize = 8,
-          numPartitions = 4, chunkedShuffle = chunked))
-      dir
-    }
-    val a = postingsOf(build(chunked = true))
-    val b = postingsOf(build(chunked = false))
-    assert(a.length == b.length && a.sameElements(b),
-      s"chunked=${a.length} rows, row=${b.length} rows; first diff: " +
-        a.zip(b).find { case (x, y) => x != y })
-  }
 
   test("chunk round-trip: flattenChunks(chunkPartition(s)) == sorted s, including shard splits and budget flushes") {
     val dps = 16
@@ -79,39 +52,6 @@ class ChunkShuffleSpec extends AnyFunSuite {
     }
   }
 
-  test("chunked and row POSITION transports produce identical positions tables") {
-    def build(chunked: Boolean): String = {
-      val dir = Files.createTempDirectory(s"poschunk$chunked").toString
-      IndexBuild.build(spark, corpus(250), dir,
-        IndexConfig(docsPerShard = 32, termBuckets = 3, blockSize = 8,
-          numPartitions = 4, positions = true, chunkedShuffle = chunked,
-          stopWords = Set("return")))
-      dir
-    }
-    def table(dir: String) = spark.read.parquet(s"$dir/positions")
-      .select("term", "docId", "positions", "tf", "bucket").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getSeq[Int](2).toSeq,
-        r.getInt(3), r.getInt(4)))
-      .sortBy(t => (t._1, t._2))
-    val (da, db) = (build(chunked = true), build(chunked = false))
-    val (a, b) = (table(da), table(db))
-    assert(a.length == b.length && a.sameElements(b),
-      s"chunked=${a.length} rows vs row=${b.length}; first diff: " +
-        a.zip(b).find { case (x, y) => x != y })
-    // doclen (renamed sentinel) identical too
-    val la = IndexBuild.readDoclen(spark, da).collect()
-      .map(r => (r.getInt(0), r.getInt(1))).sortBy(_._1).toSeq
-    val lb = IndexBuild.readDoclen(spark, db).collect()
-      .map(r => (r.getInt(0), r.getInt(1))).sortBy(_._1).toSeq
-    assert(la == lb && la.nonEmpty)
-    // cascade results identical (phrase/proximity read positions)
-    val ra = new graft.rank.MeiliRank(new graft.search.SearchEngine(spark, da))
-      .search("spark merge", 20).collect().map(_.toSeq).toSeq
-    val rb = new graft.rank.MeiliRank(new graft.search.SearchEngine(spark, db))
-      .search("spark merge", 20).collect().map(_.toSeq).toSeq
-    assert(ra == rb)
-  }
-
   test("position chunk round-trip: flatten(chunk(s)) == sorted s with fid<<16 positions and budget flushes") {
     val dps = 16
     val rows: Seq[(String, Int, Array[Int], Int)] =
@@ -135,31 +75,34 @@ class ChunkShuffleSpec extends AnyFunSuite {
     }
   }
 
+  /** Shuffle bytes the whole build below wrote when postings and doc
+    * rows crossed the exchange as one row per posting (the row-shuffle
+    * transport this chunked one replaced), measured on this exact
+    * corpus and config before that transport was deleted. */
+  private val RowShuffleBytes = 88574L
+
   test("chunked shuffle writes fewer shuffle bytes than the row shuffle") {
-    def shuffleBytes(chunked: Boolean): Long = {
-      val dir = Files.createTempDirectory(s"sb$chunked").toString
-      val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          bytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
-      }
-      spark.sparkContext.addSparkListener(l)
-      try IndexBuild.build(spark, corpus(600), dir,
-        IndexConfig(docsPerShard = 64, termBuckets = 3, blockSize = 8,
-          numPartitions = 4, chunkedShuffle = chunked))
-      finally {
-        // listener events are posted asynchronously; a short drain
-        // window before detaching keeps the byte counts complete
-        Thread.sleep(500)
-        spark.sparkContext.removeSparkListener(l)
-      }
-      bytes.get
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("sb").toString
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        bytes.addAndGet(
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
     }
-    val chunkedB = shuffleBytes(chunked = true)
-    val rowB = shuffleBytes(chunked = false)
-    assert(chunkedB < rowB,
-      s"chunked shuffle must ship fewer bytes: $chunkedB vs $rowB")
+    // drained on both sides: earlier work's events stay out, and this
+    // build's last stage events are in before the count is read
+    TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try IndexBuild.build(spark, corpus(600), dir,
+      IndexConfig(docsPerShard = 64, termBuckets = 3, blockSize = 8,
+        numPartitions = 4))
+    finally {
+      TestBus.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    assert(bytes.get < RowShuffleBytes,
+      s"chunked shuffle must ship fewer bytes: ${bytes.get} vs $RowShuffleBytes")
   }
 }

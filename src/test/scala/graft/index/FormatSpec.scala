@@ -123,11 +123,9 @@ class FormatSpec extends AnyFunSuite {
     val base = corpus.take(8).toDS()
     val delta = corpus.drop(8).toDS()
     val writers: Seq[(String, String => Unit)] =
-      (for (pos <- Seq(false, true); waves <- Seq(false, true))
-        yield s"build positions=$pos bucketWaves=$waves" -> { (d: String) =>
-          IndexBuild.build(spark, corpus.toDS(), d,
-            cfg.copy(positions = pos, bucketWaves = waves))
-        }) ++ Seq(
+      Seq(false, true).map(pos => s"build positions=$pos" -> { (d: String) =>
+        IndexBuild.build(spark, corpus.toDS(), d, cfg.copy(positions = pos))
+      }) ++ Seq(
         "buildFromTable" -> { (d: String) =>
           IndexBuild.buildFromTable(spark, plainTable, "doc_id", "text",
             "lang", "source", d, cfg)

@@ -90,14 +90,19 @@ class StorageOrderSpec extends AnyFunSuite {
     assert(docs.forall(!_.isNullAt(4 - 4)), "docIds assigned") // docId col 0
     val e = new SearchEngine(spark, dir)
     assert(e.searchDF("alpha", 5).count() == 1)
-    // null content: a clear contract error, not an NPE inside Sha
+    // null content: a clear contract error, not an NPE inside Sha —
+    // from a fresh build and from an append alike
     val bad = Seq(SourceFile("r", "p", "c", "l", null)).toDS()
     val dir2 = Files.createTempDirectory("nullContent").toString
-    val ex = intercept[Throwable](IndexBuild.build(spark, bad, dir2, cfg))
-    val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
-      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
-    assert(msgs.contains("content must be non-null"),
-      s"want the content contract in: $msgs")
+    for ((what, op) <- Seq[(String, () => Unit)](
+        "build" -> (() => IndexBuild.build(spark, bad, dir2, cfg)),
+        "append" -> (() => IndexBuild.append(spark, bad, dir, cfg, "b1")))) {
+      val ex = intercept[Throwable](op())
+      val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(msgs.contains("content must be non-null"),
+        s"$what: want the content contract in: $msgs")
+    }
   }
 
   test("storage-order falls back to sorted ids for non-file corpora") {

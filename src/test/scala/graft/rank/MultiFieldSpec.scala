@@ -22,7 +22,7 @@ class MultiFieldSpec extends AnyFunSuite {
     (2L, "pasta", "pasta"),
     (3L, "unrelated title", "more cooking here with pasta later on"))
 
-  lazy val engine: SearchEngine = {
+  private def multiField(stopWords: Set[String] = Set.empty): SearchEngine = {
     val dir = Files.createTempDirectory("multifield").toString
     val df = docs.toDF("doc_id", "title", "body")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
@@ -31,10 +31,23 @@ class MultiFieldSpec extends AnyFunSuite {
       fields = Seq(("title", 0), ("body", 1)),
       langCol = "lang", sourceCol = "source", indexDir = dir,
       cfg = IndexConfig(docsPerShard = 4, termBuckets = 2, blockSize = 4,
-        numPartitions = 2))
+        numPartitions = 2, stopWords = stopWords))
     new SearchEngine(spark, dir)
   }
+  lazy val engine: SearchEngine = multiField()
   lazy val mr = new MeiliRank(engine)
+
+  test("stop words persist: the query side drops what the index dropped") {
+    // doc 1's body holds 'the'; the index drops it, so a query side
+    // that kept it would match and rank by a term no posting list has
+    val e = multiField(stopWords = Set("the"))
+    assert(e.stopWords == Set("the"))
+    assert(!e.dict.contains("the"))
+    val m = new MeiliRank(e)
+    def rows(q: String) = m.search(q, 10).collect().map(_.toSeq).toSeq
+    assert(rows("pasta").nonEmpty)
+    assert(rows("the pasta") == rows("pasta"))
+  }
 
   test("index shape: tf sums across fields, len counts all fields") {
     assert(engine.fieldWeights == Map(0 -> 0, 1 -> 1))

@@ -23,7 +23,7 @@ class IndexSearchSpec extends AnyFunSuite {
     val corpus = CorpusGen.generate(spark, nDocs).as[graft.corpus.SourceFile]
     IndexBuild.build(spark, corpus, dir,
       IndexConfig(docsPerShard = 64, termBuckets = 4, blockSize = 16,
-        numPartitions = 4, bucketWaves = true))
+        numPartitions = 4))
     dir
   }
   lazy val engine = new SearchEngine(spark, indexDir)
@@ -106,7 +106,7 @@ class IndexSearchSpec extends AnyFunSuite {
     val lin = Lineage.read(spark, indexDir)
     val stages = lin.select("stage").distinct().as[String].collect().toSet
     assert(stages.contains("docs"))
-    assert((0 until 4).forall(b => Lineage.isCommitted(spark, indexDir, s"postings_bucket_$b")))
+    assert(Lineage.isCommitted(spark, indexDir, "postings"))
     // posting counts in lineage == total (doc,term) pairs
     val linPostings = lin.filter($"stage".startsWith("postings"))
       .agg(org.apache.spark.sql.functions.sum("postingCount")).as[Long].head()
@@ -118,7 +118,7 @@ class IndexSearchSpec extends AnyFunSuite {
     val corpus = CorpusGen.generate(spark, nDocs).as[graft.corpus.SourceFile]
     IndexBuild.build(spark, corpus, indexDir,
       IndexConfig(docsPerShard = 64, termBuckets = 4, blockSize = 16,
-        numPartitions = 4, bucketWaves = true))
+        numPartitions = 4))
     val after = new SearchEngine(spark, indexDir)
       .searchDF("merge buffer", 5).as[(Int, Double)].collect().toSeq
     assert(before == after)
