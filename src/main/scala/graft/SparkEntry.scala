@@ -32,9 +32,10 @@ object SparkEntry {
 
   /** Construction-time SearchEngine cache for the /tmp side indexes
     * (index METADATA and table readers only — never query results; every
-    * query still computes from the index parquet). An engine eagerly
-    * collects stats/dict/settings at construction — ~6 driver-collect
-    * jobs — and each side index here is immutable once its lineage-
+    * query still computes from the index parquet). A fresh engine
+    * collects its settings at construction and its dictionary on the
+    * first search — driver-collect jobs — and each side index here is
+    * immutable once its lineage-
     * committed build finishes, so re-reading that metadata on every
     * call is pure job-dispatch overhead. Same pattern as
     * [[DocIndex.engine]], which has always cached the main index's

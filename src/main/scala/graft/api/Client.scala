@@ -109,38 +109,21 @@ final class Client(spark: SparkSession, rootDir: String) {
     val dir = indexDir(uid)
     val base = new Path(s"$dir/lineage")
     if (!fs.exists(base)) return Nil
+    val committed = graft.index.Lineage.rows(spark, dir).groupBy(_.stage)
     val infos = fs.listStatus(base).filter(_.isDirectory).map(_.getPath).map { p =>
       val stage = p.getName
       if (!fs.exists(new Path(p, "_COMMITTED")))
         TaskInfo(0L, uid, stage, "processing", 0, None, None, 0L, 0L, None)
       else {
-        // lineage rows are driver-written JSON lines (Lineage.commit);
-        // read them back the same way — a Spark job per stage would
-        // make task listing O(stages) jobs
-        val rowsFile = new Path(p, "rows/rows.json")
-        val rows: Seq[Map[String, String]] =
-          if (!fs.exists(rowsFile)) Nil
-          else {
-            val in = fs.open(rowsFile)
-            val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-            val Field = """"([A-Za-z]+)":("(?:[^"\\]|\\.)*"|-?\d+)""".r
-            text.linesIterator.filter(_.nonEmpty).map { line =>
-              Field.findAllMatchIn(line).map(m => m.group(1) ->
-                m.group(2).stripPrefix("\"").stripSuffix("\"")).toMap
-            }.toSeq
-          }
-        def longs(k: String): Seq[Long] =
-          rows.flatMap(_.get(k)).flatMap(_.toLongOption)
+        val rows = committed.getOrElse(stage, Nil)
         // rowless stages (fields/dict/stats commit Nil) still finish:
         // fall back to the _COMMITTED marker's mtime
         val markerTime = java.time.Instant.ofEpochMilli(
           fs.getFileStatus(new Path(p, "_COMMITTED")).getModificationTime).toString
         TaskInfo(0L, uid, stage, "succeeded", rows.size,
-          longs("docidMin").minOption.map(_.toInt),
-          longs("docidMax").maxOption.map(_.toInt),
-          longs("postingCount").sum, longs("bytes").sum,
-          Some(rows.flatMap(_.get("committedAt")).maxOption.getOrElse(markerTime)))
+          rows.map(_.docidMin).minOption, rows.map(_.docidMax).maxOption,
+          rows.map(_.postingCount).sum, rows.map(_.bytes).sum,
+          Some(rows.map(_.committedAt).maxOption.getOrElse(markerTime)))
       }
     }
     infos.sortBy(t => (t.finishedAt.getOrElse("~"), t.stage)).toSeq

@@ -55,8 +55,7 @@ object Dump {
       .select($"repo", $"path", $"commit", $"lang", $"content")
       .write.mode("overwrite").json(s"$dumpDir/documents")
 
-    val stats = spark.read.parquet(s"$indexDir/stats")
-      .as[(String, Double)].collect().toMap
+    val stats = IndexBuild.readStats(spark, indexDir)
     val stop: Seq[String] =
       if (fs.exists(new Path(s"$indexDir/stopwords")))
         spark.read.parquet(s"$indexDir/stopwords").as[String].collect().toSeq.sorted

@@ -65,12 +65,12 @@ final case class IndexConfig(
   * Job economy (matters for build throughput AND scaling efficiency:
   * serial driver overhead is what breaks Amdahl at 4x cores):
   *   1 sample+sort shuffle and 1 count for docid assignment, 1 write for
-  *   docs(+sha), 1 stats agg, 1 shuffle+write for all posting
-  *   buckets, 1 column-pruned metadata scan each
-  *   for dict and lineage. The tokenize passes re-read the committed
-  *   docs parquet (column-pruned) instead of caching contents in the
-  *   block manager — at 10^12 files caching would thrash; parquet
-  *   re-scan is a narrow, spillless pass.
+  *   docs(+sha), 1 shuffle+write for all posting buckets, 1
+  *   column-pruned metadata scan each for dict and lineage, 1
+  *   per-partition count/sum pass over doclen for stats. The tokenize
+  *   passes re-read the committed docs parquet (column-pruned) instead
+  *   of caching contents in the block manager — at 10^12 files caching
+  *   would thrash; parquet re-scan is a narrow, spillless pass.
   *
   * Deployment note: the posting exchange is the build's dominant
   * bandwidth draw. On clusters where shuffle lands on RAM-backed or
@@ -82,7 +82,7 @@ final case class IndexConfig(
   * Layout under `indexDir`:
   *   docs/      docId, repo, path, commit, lang, content, content_sha256
   *   dict/      term, termId, df, cf
-  *   stats/     key, value  (N, avgdl, k1, b, docsPerShard, termBuckets, blockSize)
+  *   stats/     base, delta-<batchId>: `key=value` text files (see [[readStats]])
   *   postings/bucket=B/  term, shard, blockId, firstDoc, lastDoc, count,
   *                       docBytes, tfBytes, blockMaxTf, tfSum, encBytes
   *   positions/bucket=B/ term, docId, positions (optional)
@@ -96,7 +96,7 @@ object IndexBuild {
     * version (Lineage.FormatStamp); a directory written under another
     * format is refused with a rebuild error, never read through a
     * fallback. */
-  final val FormatVersion = 9
+  final val FormatVersion = 10
 
   /** Deterministic term -> bucket (also computed query-side in plain
     * Scala; String.hashCode is specified by the JLS so it is stable
@@ -676,7 +676,10 @@ object IndexBuild {
                             fieldCols: Seq[String] = Seq("content")): Unit = {
     import spark.implicits._
     val tok = cfg.tokenizer
-    val texts = fieldTexts(spark.read.parquet(s"$indexDir/docs"), fieldCols)
+    // fixed read schema (no inference job); a single-field index's one
+    // text column is docs/' own `content`
+    val texts = fieldTexts(spark.read.schema(docsSchema(fieldCols.filterNot(_ == "content")))
+      .parquet(s"$indexDir/docs"), fieldCols)
     val tb = cfg.termBuckets
     val stop = cfg.stopWords
 
@@ -698,10 +701,7 @@ object IndexBuild {
       // postings derive from a narrow column-pruned (term, docId, tf)
       // scan of the committed positions — never a second tokenize
       Lineage.stage(spark, indexDir, "postings") {
-        encodeBlocks(
-          spark.read.parquet(s"$indexDir/positions").filter($"bucket" =!= tb)
-            .select($"term", packKeyCol($"docId", $"tf").as("key")),
-          cfg)
+        encodeBlocks(positionKeys(spark, s"$indexDir/positions", tb), cfg)
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$indexDir/postings")
         postingLineage(spark, s"$indexDir/postings", "postings")
@@ -741,9 +741,17 @@ object IndexBuild {
 
     // ---- stage: stats — N and Σlen from the (narrow) doclen table ------
     Lineage.stage(spark, indexDir, "stats") {
-      writeStats(spark, indexDir, cfg)
-      // persist the stop-word setting so the query side agrees with the
-      // index by construction
+      val (n, tokens) = doclenTotals(spark, s"$indexDir/doclen")
+      writeStats(spark, indexDir, "base", n, tokens, Seq("k1" -> BM25.K1,
+        "b" -> BM25.B, "docsPerShard" -> cfg.docsPerShard,
+        "termBuckets" -> cfg.termBuckets, "blockSize" -> cfg.blockSize))
+      // persist the tokenizer settings and the stop-word setting: the
+      // query side loads them from the index, so both ends segment and
+      // filter identically by construction
+      if (!cfg.tokenizer.isDefault)
+        Seq(tokSettingsRow(cfg.tokenizer))
+          .toDF(StructType.fromDDL(TokSchemaDdl).fieldNames.toIndexedSeq: _*)
+          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/tokenizer")
       if (cfg.stopWords.nonEmpty)
         cfg.stopWords.toSeq.sorted.toDF("term").coalesce(1)
           .write.mode("overwrite").parquet(s"$indexDir/stopwords")
@@ -833,7 +841,7 @@ object IndexBuild {
   }
 
   /** An empty corpus has no sentinel rows: commit an empty doclen/ so
-    * stats and readers work. */
+    * the stats stage and readers work. */
   private def emptyDoclen(spark: SparkSession, indexDir: String): Unit = {
     import spark.implicits._
     Seq.empty[(Int, Int)].toDF("docId", "tf")
@@ -864,10 +872,36 @@ object IndexBuild {
 
   /** The narrow (docId, len) doc-length view: one fixed-schema read of
     * doclen/ (no schema-inference job). The single definition for every
-    * reader (stats, docs views, SearchEngine). */
+    * reader (docs views, facets, SearchEngine). */
   def readDoclen(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.schema(DoclenSchemaDdl).parquet(s"$indexDir/doclen")
       .select(col("docId"), col("tf").as("len"))
+
+  /** (N, Σlen) of the doclen rows under `dir` in ONE job: a count and a
+    * sum per partition, added up on the driver — no aggregate exchange.
+    * avgdl comes from here, NOT from dict cf sums: with stop words the
+    * dictionary undercounts tokens while `len` (the BM25 norm) counts
+    * them all. */
+  private def doclenTotals(spark: SparkSession, dir: String): (Long, Long) = {
+    val parts = spark.read.schema(DoclenSchemaDdl).parquet(dir).select(col("tf"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        var n = 0L
+        var tokens = 0L
+        rows.foreach { r => n += 1; tokens += r.getInt(0) }
+        Iterator.single((n, tokens))
+      }.collect()
+    (parts.map(_._1).sum, parts.map(_._2).sum)
+  }
+
+  /** (term, key) posting rows from the narrow (term, docId, tf) columns
+    * of a positions table, its [[LenTerm]] sentinel partition excluded:
+    * postings derive from positions without a second tokenize. */
+  private def positionKeys(spark: SparkSession, dir: String,
+                           termBuckets: Int): DataFrame =
+    spark.read.schema("term STRING, docId INT, tf INT, bucket INT").parquet(dir)
+      .filter(col("bucket") =!= termBuckets)
+      .select(col("term"), packKeyCol(col("docId"), col("tf")).as("key"))
 
   /** dict/ from a column-pruned posting-metadata scan (shared by build
     * and append; the [[LenTerm]] filter is pure defense — the sentinel
@@ -892,9 +926,11 @@ object IndexBuild {
     * strictly above all committed blocks of the same (term, shard), so
     * readers (including the WAND cursors, which sort blocks by
     * firstDoc) see one coherent posting list with no rewrite of old
-    * segments. dict and stats are recomputed from the (cheap) posting
-    * metadata scan. Each batch commits its own lineage stage, so a
-    * killed append resumes like a build. */
+    * segments. The next docid and the batch's docid range come from the
+    * committed lineage, and the batch's N and Σlen land in its own
+    * `stats/delta-<batchId>` (no scan of docs/ or doclen/); the dict is
+    * still rewritten whole from the posting metadata. Each batch commits
+    * its own lineage stages, so a killed append resumes like a build. */
   def append(spark: SparkSession, delta: Dataset[SourceFile], indexDir: String,
              cfg: IndexConfig, batchId: String): Unit = {
     import spark.implicits._
@@ -904,34 +940,34 @@ object IndexBuild {
     require(!exists(spark, s"$indexDir/fields"),
       "append does not support multi-field indexes: the delta rows store " +
         "only the concatenated content column; rebuild with buildMultiField")
-    def docsDf = spark.read.schema(DocsSchemaDdl).parquet(s"$indexDir/docs")
 
     Lineage.stage(spark, indexDir, s"docs_delta_$batchId") {
-      // base read INSIDE the stage: on resume the stage is skipped, so a
-      // kill between the two stages can't shift the batch's docid range
-      val base = docsDf
-        .agg(coalesce(max($"docId"), lit(-1))).collect()(0).getInt(0) + 1
+      // next free docid = 1 + the highest COMMITTED docs docid, read
+      // INSIDE the stage (on resume the stage is skipped, so a kill
+      // between the two stages can't shift the batch's range). Files a
+      // killed attempt published without committing are not counted, so
+      // a resumed batch gets the ids a clean run would.
+      val base = Lineage.rows(spark, indexDir)
+        .filter(r => r.stage == "docs" || r.stage.startsWith("docs_delta_"))
+        .map(_.docidMax.toLong + 1).maxOption.getOrElse(0L)
       // staged write (overwrite = idempotent) + tagged publish into docs/:
       // a kill during either step re-runs the stage and converges
       val staging = s"$indexDir/_stage_docs_$batchId"
-      val rows = rankDocs(spark, delta, base.toLong, staging, cfg.numPartitions,
+      val rows = rankDocs(spark, delta, base, staging, cfg.numPartitions,
         s"docs_delta_$batchId")((p, _, c) => s"docs_delta_$batchId:$p:$c")
       Lineage.publishAppend(spark, staging, s"$indexDir/docs", s"b$batchId")
       rows
     }
 
     Lineage.stage(spark, indexDir, s"postings_delta_$batchId") {
-      // the batch's docid range comes from the COMMITTED docs_delta
-      // lineage — recomputing max(docId)+1 here would (after a kill
-      // between the stages) exclude the already-published delta docs,
-      // committing empty postings and leaving them unsearchable
-      val range = Lineage.read(spark, indexDir)
-        .filter($"stage" === s"docs_delta_$batchId")
-        .agg(min($"docidMin"), max($"docidMax")).collect()(0)
-      if (!range.isNullAt(0)) {
-        val (lo, hi) = (range.getInt(0), range.getInt(1))
+      // the batch's docid range comes from its COMMITTED docs_delta rows
+      val batch = Lineage.rows(spark, indexDir).filter(_.stage == s"docs_delta_$batchId")
+      if (batch.nonEmpty) {
+        val (lo, hi) = (batch.map(_.docidMin).min, batch.map(_.docidMax).max)
         val tb = cfg.termBuckets
-        val deltaDocs = fieldTexts(docsDf.filter($"docId".between(lo, hi)), Seq("content"))
+        val deltaDocs = fieldTexts(
+          spark.read.schema(DocsSchemaDdl).parquet(s"$indexDir/docs")
+            .filter($"docId".between(lo, hi)), Seq("content"))
         val stop = cfg.stopWords
         // ONE tokenize pass over the delta: position rows (when enabled)
         // or term keys, with sentinel len rows riding the same shuffle;
@@ -944,10 +980,9 @@ object IndexBuild {
             pstaging, cfg, math.max(1, cfg.numPartitions / 2))
           // postings delta from the STAGED positions (narrow scan, no
           // second tokenize)
-          spark.read.parquet(pstaging).filter($"bucket" =!= tb)
-            .select($"term", packKeyCol($"docId", $"tf").as("key"))
-            .transform(encodeBlocks(_, cfg))
+          encodeBlocks(positionKeys(spark, pstaging, tb), cfg)
             .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+          writeStatsDelta(spark, indexDir, batchId, s"$pstaging/bucket=$tb")
           // the staged sentinel files move into doclen/ as-is — zero jobs
           Lineage.publishAppend(spark, s"$pstaging/bucket=$tb",
             s"$indexDir/doclen", s"b$batchId")
@@ -959,9 +994,10 @@ object IndexBuild {
             .transform(encodeBlocks(_, cfg))
             .write.mode("overwrite").partitionBy("bucket").parquet(staging)
           val lstaging = s"$indexDir/_stage_doclen_$batchId"
-          sentinelDoclen(spark, s"$staging/bucket=$tb").repartition(1)
+          sentinelDoclen(spark, s"$staging/bucket=$tb").coalesce(1)
             .write.mode("overwrite").parquet(lstaging)
           deleteDir(spark, s"$staging/bucket=$tb")
+          writeStatsDelta(spark, indexDir, batchId, lstaging)
           Lineage.publishAppend(spark, lstaging, s"$indexDir/doclen", s"b$batchId")
           Lineage.publishAppend(spark, staging, s"$indexDir/postings", s"b$batchId")
         }
@@ -969,9 +1005,8 @@ object IndexBuild {
       Nil
     }
 
-    // dict + stats derive from committed data: recompute (overwrite)
+    // the dict derives from the committed postings: recompute (overwrite)
     writeDict(spark, indexDir)
-    writeStats(spark, indexDir, cfg)
   }
 
   /** Delete documents by docid: append a lineage-committed tombstone
@@ -1194,34 +1229,50 @@ object IndexBuild {
       .as[graft.corpus.SourceFile], outDir, cfg)
   }
 
-  /** stats table: one scan of the narrow doclen table. Tombstoned docs
-    * stay counted (Lucene semantics — see [[delete]]); [[compact]] is
-    * where statistics shrink to live. */
-  private def writeStats(spark: SparkSession, indexDir: String,
-                         cfg: IndexConfig): Unit = {
-    import spark.implicits._
-    // avgdl from the doclen table, NOT from dict cf sums: with stop
-    // words the dictionary undercounts tokens while `len` (the BM25
-    // norm) counts them all — avgdl must match len's definition or
-    // norms skew
-    val row = readDoclen(spark, indexDir)
-      .agg(count(lit(1)), coalesce(sum($"len"), lit(0L))).collect()(0)
-    val n = row.getLong(0)
-    val tokens = row.getLong(1)
-    val avgdl = if (n == 0) 0.0 else tokens.toDouble / n
-    Seq(("N", n.toDouble), ("avgdl", avgdl), ("k1", BM25.K1), ("b", BM25.B),
-      ("docsPerShard", cfg.docsPerShard.toDouble),
-      ("termBuckets", cfg.termBuckets.toDouble),
-      ("blockSize", cfg.blockSize.toDouble))
-      .toDF("key", "value")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/stats")
-    // persist the tokenizer settings (same contract as stop words: the
-    // query side loads them from the index, so both ends segment
-    // identically by construction)
-    if (!cfg.tokenizer.isDefault)
-      Seq(tokSettingsRow(cfg.tokenizer))
-        .toDF(StructType.fromDDL(TokSchemaDdl).fieldNames.toIndexedSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/tokenizer")
+  /** stats/ holds the BM25 corpus totals as small `key=value` text
+    * files, written and read through the FileSystem API like the
+    * lineage stamp (no Spark job): `base` from the build's stats stage
+    * (exact `N` and `tokens` = Σlen as longs, plus k1, b, docsPerShard,
+    * termBuckets, blockSize) and one `delta-<batchId>` per append (that
+    * batch's `N` and `tokens`). An overwrite, so a resumed stage
+    * rewrites the same file. Tombstoned docs stay counted (Lucene
+    * semantics — see [[delete]]); [[compact]] is where statistics
+    * shrink to live. */
+  private def writeStats(spark: SparkSession, indexDir: String, name: String,
+                         n: Long, tokens: Long, params: Seq[(String, Any)] = Nil): Unit =
+    Lineage.writeMarker(spark, s"$indexDir/stats/$name",
+      (Seq("N" -> n, "tokens" -> tokens) ++ params)
+        .map { case (k, v) => s"$k=$v\n" }.mkString)
+
+  /** An append batch's `stats/delta-<batchId>` from its staged doclen
+    * rows (one job over the batch only). */
+  private def writeStatsDelta(spark: SparkSession, indexDir: String,
+                              batchId: String, batchDoclen: String): Unit = {
+    val (n, tokens) = doclenTotals(spark, batchDoclen)
+    writeStats(spark, indexDir, s"delta-$batchId", n, tokens)
+  }
+
+  /** The index's BM25 statistics: `base` plus every append delta,
+    * summed on the driver. Keys: N, avgdl, k1, b, docsPerShard,
+    * termBuckets, blockSize. avgdl = tokens / N over the exact long
+    * totals, so an index built then appended has the bit-identical N
+    * and avgdl of a from-scratch build of the same docs. */
+  def readStats(spark: SparkSession, indexDir: String): Map[String, Double] = {
+    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/stats")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries(name: String): Map[String, String] =
+      Lineage.readMarker(spark, s"$dir/$name").getOrElse(
+        throw new IllegalStateException(s"index at $indexDir has no stats/$name: " +
+          "its build has not committed the stats stage"))
+        .linesIterator.filter(_.nonEmpty)
+        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
+    val base = entries("base")
+    val parts = base +: fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("delta-")).map(entries)
+    val n = parts.map(_("N").toLong).sum
+    val tokens = parts.map(_("tokens").toLong).sum
+    (base -- Seq("N", "tokens")).map { case (k, v) => k -> v.toDouble } ++
+      Map("N" -> n.toDouble, "avgdl" -> (if (n == 0) 0.0 else tokens.toDouble / n))
   }
 
   /** tokenizer/ schema, in [[tokSettingsRow]] order. */
@@ -1334,11 +1385,15 @@ object IndexBuild {
           col(docIdCol).cast("string").as("path"),
           lit("").as("commit"),
           col(langCol).cast("string").as("lang"),
-          content.cast("string").as("content")) ++
+          // the build/append content contract: nothing to index or checksum
+          when(content.isNull, raise_error(concat(
+            lit("SourceFile.content must be non-null (docId "),
+            col(docIdCol).cast("string"), lit(")"))))
+            .otherwise(content.cast("string")).as("content")) ++
           fieldCols.map(c => col(c).cast("string").as(c)): _*)
         .withColumn("content_sha256", sha2(col("content"), 256))
         .write.mode("overwrite").parquet(s"$indexDir/docs")
-      lineageOf(spark, s"$indexDir/docs", "docId")
+      docsLineage(spark, indexDir)
     }: Unit
 
   /** Streaming block encoder: input (term, packKey(docId, tf)) sorted by
@@ -1392,12 +1447,17 @@ object IndexBuild {
   /** Read schema of fields/ ([[buildMultiField]]). */
   final val FieldsSchemaDdl = "fid INT, name STRING, weight INT"
 
-  private def lineageOf(spark: SparkSession, dir: String,
-                        docIdCol: String): Seq[LineageRow] = {
-    val df = spark.read.parquet(dir)
-    val r = df.agg(min(col(docIdCol)), max(col(docIdCol)), count(lit(1))).collect()(0)
-    Seq(LineageRow(dir.split('/').last, 0, r.getInt(0), r.getInt(1), r.getLong(2),
-      0L, Sha.hex(s"$dir:${r.getLong(2)}"), java.time.Instant.now.toString))
+  /** The docs lineage row of a table build: docid range and count from
+    * one fixed-schema scan. An empty table commits no row, as
+    * [[rankDocs]] does for an empty partition. */
+  private def docsLineage(spark: SparkSession, indexDir: String): Seq[LineageRow] = {
+    val dir = s"$indexDir/docs"
+    val r = spark.read.schema("docId INT").parquet(dir)
+      .agg(min(col("docId")), max(col("docId")), count(lit(1))).collect()(0)
+    val n = r.getLong(2)
+    if (n == 0) Nil
+    else Seq(LineageRow("docs", 0, r.getInt(0), r.getInt(1), n,
+      0L, Sha.hex(s"$dir:$n"), java.time.Instant.now.toString))
   }
 
   /** Per-shard lineage from a column-pruned scan of the committed
@@ -1405,7 +1465,7 @@ object IndexBuild {
   private def postingLineage(spark: SparkSession, dir: String,
                              stage: String): Seq[LineageRow] = {
     import spark.implicits._
-    spark.read.parquet(dir)
+    spark.read.schema(BlocksSchemaDdl).parquet(dir)
       .filter($"term" =!= LenTerm) // lineage describes real postings only
       .select($"shard", $"term", $"firstDoc", $"lastDoc", $"count", $"encBytes")
       .groupBy($"shard").agg(

@@ -20,6 +20,10 @@ import graft.functions.Tokenizer
   *    exactly what was committed.
   *  - `lineage/_FORMAT` stamps the directory's on-disk format
   *    ([[FormatStamp]]); writers and readers refuse any other.
+  *  - [[rows]] is the one reader: it parses the committed stages' JSON
+  *    lines on the driver (no Spark job). The append path takes its next
+  *    docId and its batch's docId range from it; `api.Client.tasks` and
+  *    [[read]] are views over it.
   *
   * Uses the Hadoop FileSystem API so the same code runs on local FS in
   * tests and on HDFS/S3A on a cluster.
@@ -58,26 +62,49 @@ object Lineage {
     f.create(markerPath(indexDir, stage), true).close()
   }
 
-  /** All committed lineage rows of an index (for inspection/tests). */
-  def read(spark: SparkSession, indexDir: String): org.apache.spark.sql.DataFrame = {
+  /** Every row of the committed stages of an index, parsed from the
+    * JSON lines [[commit]] writes: driver-side, no Spark job. A stage
+    * dir without its `_COMMITTED` marker (in flight, or orphaned by a
+    * kill) contributes nothing. */
+  def rows(spark: SparkSession, indexDir: String): Seq[LineageRow] = {
     val f = fs(spark, indexDir)
     val base = new Path(s"$indexDir/lineage")
-    if (!f.exists(base)) return spark.emptyDataFrame
-    val stages = f.listStatus(base).filter(_.isDirectory).map(_.getPath)
+    if (!f.exists(base)) return Nil
+    f.listStatus(base).filter(_.isDirectory).map(_.getPath)
       .filter(p => f.exists(new Path(p, "_COMMITTED")))
-      .map(p => new Path(p, "rows").toString)
-    if (stages.isEmpty) spark.emptyDataFrame
-    else {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("stage", StringType), StructField("partitionId", IntegerType),
-        StructField("docidMin", IntegerType), StructField("docidMax", IntegerType),
-        StructField("postingCount", LongType), StructField("bytes", LongType),
-        StructField("sha256", StringType), StructField("committedAt", StringType)))
-      spark.read.schema(schema).json(stages.toIndexedSeq: _*)
-        .select("stage", "partitionId", "docidMin", "docidMax",
-          "postingCount", "bytes", "sha256", "committedAt")
-    }
+      .sortBy(_.getName).toIndexedSeq
+      .flatMap { p =>
+        val file = new Path(p, "rows/rows.json")
+        if (!f.exists(file)) Nil
+        else {
+          val in = f.open(file)
+          val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+          text.linesIterator.filter(_.nonEmpty).map(parseRow).toSeq
+        }
+      }
+  }
+
+  private val Field = """"([A-Za-z0-9]+)":("(?:[^"\\]|\\.)*"|-?\d+)""".r
+  private val Escape = """\\(.)""".r
+
+  /** One [[commit]] JSON line back to its row; string values undo the
+    * writer's two escapes (`\\` and `\"`). */
+  private def parseRow(line: String): LineageRow = {
+    def unescape(s: String) =
+      Escape.replaceAllIn(s, e => scala.util.matching.Regex.quoteReplacement(e.group(1)))
+    val m = Field.findAllMatchIn(line).map { g =>
+      val v = g.group(2)
+      g.group(1) -> (if (v.startsWith("\"")) unescape(v.substring(1, v.length - 1)) else v)
+    }.toMap
+    LineageRow(m("stage"), m("partitionId").toInt, m("docidMin").toInt,
+      m("docidMax").toInt, m("postingCount").toLong, m("bytes").toLong,
+      m("sha256"), m("committedAt"))
+  }
+
+  /** [[rows]] as a local relation (inspection/tests): no Spark job. */
+  def read(spark: SparkSession, indexDir: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows(spark, indexDir).toDF()
   }
 
   /** Idempotent publish of a staged append: move every data file under

@@ -1,5 +1,8 @@
 package graft.index
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** Query-side dictionary access with a bounded driver footprint.
@@ -34,7 +37,20 @@ final class TermDict(spark: SparkSession, dictPath: String,
   @transient private lazy val dictDf =
     spark.read.schema(TermDict.SchemaDdl).parquet(dictPath)
 
-  lazy val size: Long = dictDf.count()
+  /** Term count without a Spark job: dict/ and prefix_dict/ hold one
+    * row per term, so it is the sum of the parquet footers' row counts,
+    * read on the driver. */
+  lazy val size: Long = {
+    val dir = new Path(dictPath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    dir.getFileSystem(conf).listStatus(dir).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map { s =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
 
   /** Small-mode full map (None above the threshold — callers must use
     * the bucketed APIs). */
@@ -49,7 +65,7 @@ final class TermDict(spark: SparkSession, dictPath: String,
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
         override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-          size() > cacheEntries
+          this.size() > cacheEntries
       })
 
   private val bandCache = lru[(Int, Int), (Array[String], Array[Long])]()

@@ -35,9 +35,13 @@ final case class Hit(docId: Int, score: Double)
   * bucket_sort.rs:343-364).
   *
   * LIFETIME: an engine is a SNAPSHOT of the index at construction —
-  * stats/dict/stop-words load eagerly, file listings and the prefix
-  * dictionary cache lazily. After `IndexBuild.append`/`delete`/
-  * `buildPrefixIndex` mutate the directory, construct a new engine
+  * stats (driver-side text files, no Spark job) and the stop-word,
+  * tokenizer and field settings (one job each, only when the index
+  * has them) load eagerly; the dictionary loads on the first search
+  * (one collect; its size comes from parquet footers without a job),
+  * the tombstone set and file listings lazily. After
+  * `IndexBuild.append`/`delete`/`buildPrefixIndex` mutate the
+  * directory, construct a new engine
   * (the reference's RoTxn snapshot semantics; `api.Client.index`
   * already returns a fresh engine per call, so facade users get this
   * for free). A held instance keeps serving the pre-mutation view.
@@ -48,8 +52,11 @@ final case class Hit(docId: Int, score: Double)
   * postings broadcast and the ranked collect), `searchWand` 1,
   * `MeiliRank.search` and an `api.Index.search` page 3 (the cascade's
   * doclen broadcast, its collect, the page's doc fetch), 4 with
-  * highlighting (the content fetch); JobBudgetSpec holds these. For a
-  * latency-sensitive service, run the query session with
+  * highlighting (the content fetch); JobBudgetSpec holds these. A
+  * fresh engine costs 0 jobs to open, and its first `searchDF` on a
+  * tombstoned index 4 (the dictionary collect, the tombstone set, and
+  * the two above). For a latency-sensitive service, run the query
+  * session with
   * `spark.sql.adaptive.enabled=false`: these plans are pruned scans +
   * broadcast joins with nothing for AQE to re-plan, and each AQE
   * exchange otherwise materializes as an extra driver round trip
@@ -66,9 +73,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   graft.index.Lineage.requireFormat(spark, indexDir)
 
   // ---- loaded-once index metadata (the FST/dictionary analogue) -------
-  val stats: Map[String, Double] =
-    spark.read.schema("key STRING, value DOUBLE").parquet(s"$indexDir/stats")
-      .as[(String, Double)].collect().toMap
+  val stats: Map[String, Double] = IndexBuild.readStats(spark, indexDir)
   val nDocs: Long = stats("N").toLong
   val avgdl: Double = stats("avgdl")
   val termBuckets: Int = stats("termBuckets").toInt

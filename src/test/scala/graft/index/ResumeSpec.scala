@@ -66,7 +66,59 @@ class ResumeSpec extends AnyFunSuite {
 
     val e = new SearchEngine(spark, dir)
     assert(e.dict("zulu") == 4, "delta term df counted exactly once")
+    assert(e.nDocs == 12, "the batch's stats delta counted exactly once")
     assert(e.searchDF("zulu", 10).collect().length == 4)
+  }
+
+  test("append resume after kill before both commits assigns the clean run's docIds") {
+    val base = (0 until 8).map(i => src(i, "alpha common words")).toDS()
+    val delta = (8 until 12).map(i => src(i, "zulu unique delta")).toDS()
+    def built(prefix: String): String = {
+      val dir = Files.createTempDirectory(prefix).toString
+      IndexBuild.build(spark, base, dir, cfg)
+      IndexBuild.append(spark, delta, dir, cfg, "b1")
+      dir
+    }
+    val clean = built("resumeClean")
+    val dir = built("resumeC")
+    // simulate a kill after docs/ got the batch's files but before
+    // either delta stage committed: both markers and the published
+    // postings/doclen files gone, the published docs files left behind
+    val f = fs(dir)
+    Seq("docs_delta_b1", "postings_delta_b1")
+      .foreach(s => f.delete(Lineage.markerPath(dir, s), false))
+    Seq("postings", "doclen").foreach { t =>
+      val it = f.listFiles(new Path(s"$dir/$t"), true)
+      val tagged = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.startsWith("bb1-")).toList
+      assert(tagged.nonEmpty, s"$t has published batch files")
+      tagged.foreach(p => f.delete(p, false))
+    }
+    IndexBuild.append(spark, delta, dir, cfg, "b1")
+
+    def docIds(d: String) = spark.read.parquet(s"$d/docs")
+      .select($"path", $"docId").as[(String, Int)].collect().sorted.toSeq
+    def doclen(d: String) = spark.read.schema("docId INT, tf INT").parquet(s"$d/doclen")
+      .as[(Int, Int)].collect().sorted.toSeq
+    assert(docIds(dir) == docIds(clean), "resumed docIds must equal a clean run's")
+    assert(docIds(dir).map(_._2).filter(_ >= 8) == (8 until 12))
+    assert(doclen(dir) == doclen(clean))
+    val e = new SearchEngine(spark, dir)
+    assert(e.nDocs == 12 && e.searchDF("zulu", 10).collect().length == 4)
+  }
+
+  test("an empty buildFromTable opens with no docs and a later append starts at docId 0") {
+    val dir = Files.createTempDirectory("emptyTable").toString
+    val empty = Seq.empty[(Long, String, String, String)]
+      .toDF("doc_id", "text", "lang", "source")
+    IndexBuild.buildFromTable(spark, empty, "doc_id", "text", "lang", "source", dir, cfg)
+    assert(new SearchEngine(spark, dir).nDocs == 0)
+    IndexBuild.append(spark, Seq(src(0, "zulu first"), src(1, "zulu second")).toDS(),
+      dir, cfg, "b1")
+    val e = new SearchEngine(spark, dir)
+    assert(e.nDocs == 2)
+    assert(e.docs.select($"docId").as[Int].collect().sorted.toSeq == Seq(0, 1))
+    assert(e.searchDF("zulu", 10).count() == 2)
   }
 
   test("WAND conjunctive returns empty for shards missing a query term") {

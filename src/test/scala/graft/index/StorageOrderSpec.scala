@@ -91,12 +91,18 @@ class StorageOrderSpec extends AnyFunSuite {
     val e = new SearchEngine(spark, dir)
     assert(e.searchDF("alpha", 5).count() == 1)
     // null content: a clear contract error, not an NPE inside Sha —
-    // from a fresh build and from an append alike
+    // from a fresh build, an append and a table build alike
     val bad = Seq(SourceFile("r", "p", "c", "l", null)).toDS()
     val dir2 = Files.createTempDirectory("nullContent").toString
+    val badTable = Seq((0L, "alpha beta"), (1L, null)).toDF("doc_id", "text")
+      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+      .withColumn("source", org.apache.spark.sql.functions.lit("s"))
+    val dir3 = Files.createTempDirectory("nullContentTable").toString
     for ((what, op) <- Seq[(String, () => Unit)](
         "build" -> (() => IndexBuild.build(spark, bad, dir2, cfg)),
-        "append" -> (() => IndexBuild.append(spark, bad, dir, cfg, "b1")))) {
+        "append" -> (() => IndexBuild.append(spark, bad, dir, cfg, "b1")),
+        "buildFromTable" -> (() => IndexBuild.buildFromTable(spark, badTable,
+          "doc_id", "text", "lang", "source", dir3, cfg)))) {
       val ex = intercept[Throwable](op())
       val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
         .map(t => String.valueOf(t.getMessage)).mkString(" | ")

@@ -20,7 +20,9 @@ import graft.rank.MeiliRank
   * and a materialized page is a local relation whose collect runs no
   * job. Counted with AQE off, the query-session setting the
   * SearchEngine scaladoc prescribes (with AQE on, every exchange adds a
-  * job). */
+  * job). Driver-sized index metadata (stats, dictionary size, lineage)
+  * is read without a job, so opening an engine costs none and an
+  * append's count does not grow with the index. */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -118,6 +120,14 @@ class JobBudgetSpec extends AnyFunSuite {
     }
   }
 
+  test("opening an engine runs no Spark job") {
+    withoutAqe {
+      dir
+      assert(steadyJobs(new SearchEngine(spark, dir)) == 0)
+      assert(steadyJobs(new SearchEngine(spark, dir).td.size) == 0, "dictionary size")
+    }
+  }
+
   test("fresh engine over a tombstoned index: open + first search within budget") {
     withoutAqe {
       tombstoned
@@ -139,7 +149,36 @@ class JobBudgetSpec extends AnyFunSuite {
     }
   }
 
-  /** stats, dictionary size + collect, tombstone set, then searchDF's
-    * two jobs; schema inference would add one job per table read. */
-  private val FreshTombstonedBudget = 6
+  /** the dictionary collect, the tombstone set, then searchDF's two
+    * jobs (stats and the dictionary size are read without a job);
+    * schema inference would add one job per table read. */
+  private val FreshTombstonedBudget = 4
+
+  test("append (no positions, AQE on): <= 10 jobs, steady, and the same on a base of N and 4N docs") {
+    // the build session's setting (perfbench builds with AQE on)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val c = cfg.copy(positions = false)
+    def batch(b: Int) = (0 until 6).map { i =>
+      SourceFile(f"z$b%02d", f"q$i%02d.scala", f"d$i%04d", "scala",
+        s"delta ${Seq("kilo", "lima", "mike")(b - 1)} alpha w$i")
+    }.toDS()
+    def appendJobs(baseDocs: Int): Seq[Int] = {
+      val d = Files.createTempDirectory("jobbudget-append").toString
+      IndexBuild.build(spark, (0 until baseDocs).map { i =>
+        SourceFile(f"r$i%04d", f"p$i%04d.scala", f"c$i%04d", "scala",
+          s"alpha w${i % 97} ${if (i % 3 == 0) "merge buffer" else "stream"}")
+      }.toDS(), d, c)
+      val jobs = (1 to 3).map(b => jobsOf(IndexBuild.append(spark, batch(b), d, c, s"b$b")))
+      val e = new SearchEngine(spark, d)
+      assert(e.nDocs == baseDocs + 18)
+      assert(e.searchDF("mike", 10).count() == 6)
+      jobs
+    }
+    val small = appendJobs(40)
+    val large = appendJobs(160)
+    info(s"append jobs: base 40 -> $small, base 160 -> $large")
+    assert(small.distinct.size == 1, s"append job counts vary across repeats: $small")
+    assert(large == small, s"append job count grows with the index: $small vs $large")
+    assert(small.head <= 10, s"append: ${small.head} jobs")
+  }
 }

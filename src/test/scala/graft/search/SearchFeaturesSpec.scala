@@ -56,6 +56,9 @@ class SearchFeaturesSpec extends AnyFunSuite {
     val eb = new SearchEngine(spark, dirB)
     assert(ea.docs.count() == eb.docs.count())
     assert(eb.dict == ea.dict, "dict df must match after append")
+    // base + delta stats sum to the rebuild's, bit for bit
+    assert(eb.nDocs == ea.nDocs && eb.avgdl == ea.avgdl,
+      s"stats after append (${eb.nDocs}, ${eb.avgdl}) vs rebuild (${ea.nDocs}, ${ea.avgdl})")
     Seq("merge buffer", "return import", "flush").foreach { q =>
       val a = ea.searchHits(q, 10).select("score", "repo", "path")
         .as[(Double, String, String)].collect().toSeq
