@@ -30,38 +30,6 @@ object SparkEntry {
     e.searchHits("batch stream", 10)
   }
 
-  /** Construction-time SearchEngine cache for the /tmp side indexes
-    * (index METADATA and table readers only — never query results; every
-    * query still computes from the index parquet). A fresh engine
-    * collects its settings at construction and its dictionary on the
-    * first search — driver-collect jobs — and each side index here is
-    * immutable once its lineage-
-    * committed build finishes, so re-reading that metadata on every
-    * call is pure job-dispatch overhead. Same pattern as
-    * [[DocIndex.engine]], which has always cached the main index's
-    * engine. Keyed by session (a fresh session must not see another
-    * session's plans); bounded LRU so long test runs with many
-    * sessions stay bounded. Callers must only cache an engine AFTER
-    * all mutating stages (build/delete) of the call path have run —
-    * every site below constructs the engine at that point already. */
-  private val engineLru = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String), graft.search.SearchEngine](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), graft.search.SearchEngine])
-          : Boolean = size() > 32
-    })
-  private def cachedEngine(s: SparkSession, dir: String): graft.search.SearchEngine = {
-    val k = (s, dir)
-    val hit = engineLru.get(k)
-    if (hit != null) hit
-    else {
-      val e = new graft.search.SearchEngine(s, dir)
-      engineLru.put(k, e)
-      e
-    }
-  }
-
   private def docsDf(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
   private def embDf(s: SparkSession, dir: String): DataFrame =
@@ -91,11 +59,12 @@ object SparkEntry {
 
   /** Persisted bucket-partitioned LSH index over the sf dir's
     * embeddings, built once (the ANN scale path: queries read only
-    * probed bucket partitions). Shared by q_knn_lsh and the hybrid
+    * probed bucket partitions): its parameter marker, written last,
+    * marks a complete build. Shared by q_knn_lsh and the hybrid
     * semantic-arm routing. */
   private def lshIndexDir(s: SparkSession, dir: String): String = {
     val idxDir = DocIndex.cacheDir("lshidx", dir)
-    if (!new java.io.File(s"$idxDir/meta/_SUCCESS").exists())
+    if (graft.index.Lineage.readProperties(s, Similarity.paramsPath(idxDir)).isEmpty)
       graft.ops.Similarity.buildLshIndex(s, embDf(s, dir), "vec_id", "embedding",
         idxDir, nPlanes = 4)
     idxDir
@@ -440,7 +409,7 @@ object SparkEntry {
           blockSize = 128, numPartitions = 8))
       graft.index.IndexBuild.delete(s, idxDir,
         (0 until 200 by 7).toSeq, "d1")
-      cachedEngine(s, idxDir)
+      DocIndex.open(s, idxDir)
         .searchDF("batch stream", 1000000, conjunctive = true)
         .select(col("docId").cast("long").as("doc_id"),
           round(col("score"), 6).as("score"))
@@ -478,7 +447,7 @@ object SparkEntry {
         cfg = graft.index.IndexConfig(docsPerShard = 64, termBuckets = 4,
           blockSize = 128, numPartitions = 8, positions = true,
           stopWords = Set("the", "a")))
-      val mr = new graft.rank.MeiliRank(cachedEngine(s, idxDir))
+      val mr = new graft.rank.MeiliRank(DocIndex.open(s, idxDir))
       meiliCols(mr.search("the spark merge", 50))
     }),
     // ---- unspaced-script (Thai) dictionary segmentation (X1): the
@@ -508,13 +477,13 @@ object SparkEntry {
     }),
     // ---- multi-field index + fid ranking rule (R4 fid sub-rule) ---------
     "q_multifield" -> ((s, dir) => {
-      val mr = new graft.rank.MeiliRank(cachedEngine(s, mfIndexDir(s, dir)))
+      val mr = new graft.rank.MeiliRank(DocIndex.open(s, mfIndexDir(s, dir)))
       meiliCols(mr.search("spark merge", 50), col("fidCost").cast("long").as("fid_cost"))
     }),
     // ---- ProximityPrecision::ByAttribute (proximity.rs:31-37): pair
     // distance collapses to same-field (1) vs different-field (8) ------
     "q_meili_prox_attr" -> ((s, dir) => {
-      val mr = new graft.rank.MeiliRank(cachedEngine(s, mfIndexDir(s, dir)),
+      val mr = new graft.rank.MeiliRank(DocIndex.open(s, mfIndexDir(s, dir)),
         proximityPrecision = graft.rank.ProximityPrecision.ByAttribute)
       meiliCols(mr.search("spark merge", 50), col("fidCost").cast("long").as("fid_cost"))
     }),
@@ -524,7 +493,7 @@ object SparkEntry {
     // field (fid 0) — docs whose only 'spark' is the synthetic title
     // lose the slot; exact 'merge' matches everywhere -----------------
     "q_meili_exact_attr" -> ((s, dir) => {
-      val mr = new graft.rank.MeiliRank(cachedEngine(s, mfIndexDir(s, dir)),
+      val mr = new graft.rank.MeiliRank(DocIndex.open(s, mfIndexDir(s, dir)),
         typo = graft.rank.TypoSettings(exactFids = Set(0)))
       meiliCols(mr.search("spork merge", 50), col("fidCost").cast("long").as("fid_cost"))
     }),
@@ -538,8 +507,8 @@ object SparkEntry {
         "doc_id", "text", "lang", "source", s"$base/a", cfg)
       graft.index.IndexBuild.buildFromTable(s, d.filter(col("doc_id") % 2 === 1),
         "doc_id", "text", "lang", "source", s"$base/b", cfg)
-      val eA = cachedEngine(s, s"$base/a")
-      val eB = cachedEngine(s, s"$base/b")
+      val eA = DocIndex.open(s, s"$base/a")
+      val eB = DocIndex.open(s, s"$base/b")
       graft.search.Federation.search(
           Seq(("a", eA, 1.0), ("b", eB, 0.5)), "batch stream", 1000000,
           conjunctive = true)
@@ -556,7 +525,7 @@ object SparkEntry {
       graft.index.Dump.exportDump(s, DocIndex.engine(s, dir).indexDir, dumpDir)
       graft.index.Dump.importDump(s, dumpDir, impDir,
         graft.index.IndexConfig(numPartitions = 8))
-      val e = cachedEngine(s, impDir)
+      val e = DocIndex.open(s, impDir)
       // import reassigns dense docids by (repo, path) rank; `path` holds
       // the original external id, so results map back exactly
       e.searchDF("spark merge", 1000000, conjunctive = true)

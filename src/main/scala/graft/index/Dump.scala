@@ -21,11 +21,15 @@ import graft.corpus.SourceFile
   *
   * Import rebuilds through the standard lineage-committed pipeline, so
   * an interrupted import resumes like any build.
+  *
+  * Re-export: `dumpDir/_FINGERPRINT` (source dir and its
+  * [[Lineage.generation]], written last) makes exporting an unchanged
+  * index a no-op; after an append, delete or killed export, the dump is
+  * rewritten with the current live corpus.
   */
 object Dump {
 
   def exportDump(spark: SparkSession, indexDir: String, dumpDir: String): Unit = {
-    import spark.implicits._
     import org.apache.hadoop.fs.Path
     Lineage.requireFormat(spark, indexDir)
     val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -36,13 +40,12 @@ object Dump {
     require(!fs.exists(new Path(s"$indexDir/fields")),
       "exportDump does not support multi-field indexes: the documents.jsonl " +
         "format stores only the concatenated content column")
-    // a dump dir is WRITE-ONCE, committed through the same lineage
-    // marker every build stage uses: a killed export re-runs (clean
-    // overwrite), a completed one is never re-exported — the reference's
-    // dump task is likewise a one-shot artifact (a new dump = a new
-    // dumpDir). Without the marker every call re-wrote the full corpus
-    // JSONL, the dominant cost of repeated export→import round trips.
-    Lineage.stage(spark, dumpDir, "export") { exportBody(spark, indexDir, dumpDir, fs); Nil }: Unit
+    val marker = s"$dumpDir/${IndexBuild.FprFile}"
+    val sig = s"$indexDir:${Lineage.generation(spark, indexDir)}"
+    if (!Lineage.readMarker(spark, marker).contains(sig)) {
+      exportBody(spark, indexDir, dumpDir, fs)
+      Lineage.writeMarker(spark, marker, sig)
+    }
   }
 
   private def exportBody(spark: SparkSession, indexDir: String, dumpDir: String,
@@ -58,7 +61,8 @@ object Dump {
     val stats = IndexBuild.readStats(spark, indexDir)
     val stop: Seq[String] =
       if (fs.exists(new Path(s"$indexDir/stopwords")))
-        spark.read.parquet(s"$indexDir/stopwords").as[String].collect().toSeq.sorted
+        spark.read.schema("term STRING").parquet(s"$indexDir/stopwords")
+          .as[String].collect().toSeq.sorted
       else Nil
     val positions = fs.exists(new Path(s"$indexDir/positions"))
     // facet indexes are derived tables: record their columns so import
@@ -86,7 +90,7 @@ object Dump {
         "stopWords", "facetColumns", "separatorTokens", "nonSeparatorTokens",
         "tokenizerDictionary", "localizedAttributes", "cjkUnigrams",
         "hasPrefixTables")
-      .repartition(1).write.mode("overwrite").json(s"$dumpDir/settings")
+      .coalesce(1).write.mode("overwrite").json(s"$dumpDir/settings")
   }
 
   /** Rebuild an index from a dump. Settings stored in the dump win;

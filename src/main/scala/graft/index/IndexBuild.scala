@@ -96,7 +96,7 @@ object IndexBuild {
     * version (Lineage.FormatStamp); a directory written under another
     * format is refused with a rebuild error, never read through a
     * fallback. */
-  final val FormatVersion = 10
+  final val FormatVersion = 11
 
   /** Deterministic term -> bucket (also computed query-side in plain
     * Scala; String.hashCode is specified by the JLS so it is stable
@@ -466,12 +466,18 @@ object IndexBuild {
   /** Live (non-tombstoned) documents of an index — the single
     * definition of the tombstone-exclusion join (used by facet builds,
     * compaction and dumps; the query side's SearchEngine.liveOnly is
-    * the per-engine cached equivalent). */
+    * the per-engine cached equivalent). Both tables are read with their
+    * writers' schemas (no inference job); a multi-field index's field
+    * columns come from its `fields` table. */
   def liveDocs(spark: SparkSession, indexDir: String): DataFrame = {
-    val docs0 = spark.read.parquet(s"$indexDir/docs")
+    val fieldCols =
+      if (!exists(spark, s"$indexDir/fields")) Nil
+      else spark.read.schema(FieldsSchemaDdl).parquet(s"$indexDir/fields")
+        .orderBy(col("fid")).select(col("name")).collect().map(_.getString(0)).toSeq
+    val docs0 = spark.read.schema(docsSchema(fieldCols)).parquet(s"$indexDir/docs")
     if (exists(spark, s"$indexDir/deleted"))
-      docs0.join(broadcast(spark.read.parquet(s"$indexDir/deleted")
-        .select(col("docId"))), Seq("docId"), "left_anti")
+      docs0.join(broadcast(spark.read.schema("docId INT").parquet(s"$indexDir/deleted")),
+        Seq("docId"), "left_anti")
     else docs0
   }
 
@@ -929,8 +935,10 @@ object IndexBuild {
     * segments. The next docid and the batch's docid range come from the
     * committed lineage, and the batch's N and Σlen land in its own
     * `stats/delta-<batchId>` (no scan of docs/ or doclen/); the dict is
-    * still rewritten whole from the posting metadata. Each batch commits
-    * its own lineage stages, so a killed append resumes like a build. */
+    * still rewritten whole from the posting metadata, in the batch's own
+    * `dict_<batchId>` stage. Each batch commits its own lineage stages,
+    * so a killed append resumes like a build, and a repeated call of a
+    * committed batch writes nothing. */
   def append(spark: SparkSession, delta: Dataset[SourceFile], indexDir: String,
              cfg: IndexConfig, batchId: String): Unit = {
     import spark.implicits._
@@ -1006,7 +1014,9 @@ object IndexBuild {
     }
 
     // the dict derives from the committed postings: recompute (overwrite)
-    writeDict(spark, indexDir)
+    // as a committed stage, so the generation moves again once dict/ is
+    // current and a cache keyed on it cannot keep the torn dictionary
+    Lineage.stage(spark, indexDir, s"dict_$batchId") { writeDict(spark, indexDir); Nil }: Unit
   }
 
   /** Delete documents by docid: append a lineage-committed tombstone
@@ -1038,27 +1048,19 @@ object IndexBuild {
     * distributions read O(matching values) rows and never touch the
     * doc store. The upper tree levels are exactly what parquet row-
     * group statistics provide for free over a value-sorted file.
-    * A STATISTICS TABLE over the LIVE documents at build time: every
-    * invocation rebuilds it (idempotent overwrite — one tiny
-    * aggregation), so call it again after append/delete batches;
-    * tombstoned docs are excluded, so facet counts agree with
-    * `SearchEngine.docs` exactly (N/avgdl keep Lucene tombstone
-    * semantics until compact; facet counts do not need to, and the
-    * skip-if-committed lineage pattern would silently freeze them at
-    * their first build). */
+    * A STATISTICS TABLE over the LIVE documents at build time, so call
+    * it again after append/delete batches; tombstoned docs are
+    * excluded, so facet counts agree with `SearchEngine.docs` exactly
+    * (N/avgdl keep Lucene tombstone semantics until compact; facet
+    * counts do not need to). Each column's `_FINGERPRINT` marker holds
+    * the [[Lineage.generation]] it was built from, written after the
+    * data: a call over an unchanged index runs no Spark job, and any
+    * committed mutation (or a killed rebuild) makes the column stale. */
   def buildFacetIndex(spark: SparkSession, indexDir: String,
                       cols: Seq[String], numPartitions: Int = 4): Unit = {
     import spark.implicits._
     Lineage.requireFormat(spark, indexDir)
-    // staleness = the SOURCE tables changed (docs/doclen/deleted): a
-    // driver-side file-listing fingerprint decides, costing zero Spark
-    // jobs — a repeated call over an unchanged index (every resumed
-    // import / cached-engine path) must not pay the full rebuild it
-    // exists to keep consistent. Fingerprint marker written AFTER the
-    // data (killed rebuild re-runs); append/delete change the listing,
-    // so the rebuild-on-change contract above is preserved exactly.
-    val sig = dirFingerprint(spark, Seq(s"$indexDir/docs",
-      s"$indexDir/doclen", s"$indexDir/deleted")) + s":$numPartitions"
+    val sig = s"${Lineage.generation(spark, indexDir)}:$numPartitions"
     val stale = cols.filterNot(c =>
       Lineage.readMarker(spark, s"$indexDir/facets/$c/$FprFile").contains(sig))
     if (stale.isEmpty) return
@@ -1077,31 +1079,10 @@ object IndexBuild {
     }
   }
 
-  /** Underscore-prefixed so parquet readers ignore it as metadata. */
-  private final val FprFile = "_FINGERPRINT"
-
-  /** Driver-side fingerprint of table directories — recursive (path,
-    * length, mtime) listing, hashed. No Spark job: a staleness check
-    * must cost less than the rebuild it avoids. */
-  private def dirFingerprint(spark: SparkSession, dirs: Seq[String]): String = {
-    val sb = new StringBuilder
-    dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        val it = fs.listFiles(p, true)
-        val entries = ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val f = it.next()
-          val name = f.getPath.toUri.getPath
-          if (!name.endsWith(FprFile))
-            entries += s"$name:${f.getLen}:${f.getModificationTime}"
-        }
-        entries.sorted.foreach(e => sb.append(e).append('\n'))
-      }
-    }
-    Sha.hex(sb.toString)
-  }
+  /** The derived-table marker: the source's [[Lineage.generation]] plus
+    * build parameters, written after the data. Underscore-prefixed so
+    * parquet readers ignore it as metadata. */
+  private[graft] final val FprFile = "_FINGERPRINT"
 
   /** Precomputed prefix posting tables (reference U3: the index
     * materializes `word_prefix_docids` for prefixes of length ≤ 4
@@ -1126,29 +1107,21 @@ object IndexBuild {
     * passing on Σdf but not on distinct docs merely materializes a
     * slightly-smaller-than-threshold list).
     *
-    * Staleness: NOT lineage-gated (that would freeze the tables at
-    * their first build — the trap buildFacetIndex documents). Instead a
-    * fingerprint of the posting metadata (Σcount, max lastDoc, #blocks
-    * — a column-pruned scan) is stored in prefix_meta/; a rerun after
-    * append/compact sees a changed fingerprint and rebuilds, while a
-    * rerun over unchanged postings is a cheap no-op. The meta is
-    * written LAST, so a killed rebuild re-runs (idempotent overwrite).
+    * Staleness: `prefix_meta/_FINGERPRINT` holds the
+    * [[Lineage.generation]] the tables were built from (and the
+    * thresholds); a rerun after any committed mutation rebuilds, a rerun
+    * over an unchanged index runs no Spark job. The marker is written
+    * LAST, so a killed rebuild re-runs (idempotent overwrite).
     * One decode pass over the posting blocks + one bounded shuffle per
     * table — never per query. */
   def buildPrefixIndex(spark: SparkSession, indexDir: String, cfg: IndexConfig,
                        maxLen: Int = PrefixMaxLen, minDf: Long = PrefixMinDf): Unit = {
     import spark.implicits._
     Lineage.requireFormat(spark, indexDir)
-    // staleness fingerprint from the postings FILE LISTING, not an
-    // aggregation over the block metadata: same trigger surface (any
-    // append/compact rewrites posting files), but the check is pure
-    // driver-side FS listing — the previous agg sig cost a Spark job +
-    // a prefix_meta read per call even when nothing changed
-    val sig = dirFingerprint(spark, Seq(s"$indexDir/postings")) +
-      s":$maxLen:$minDf"
+    val sig = s"${Lineage.generation(spark, indexDir)}:$maxLen:$minDf"
     if (Lineage.readMarker(spark, s"$indexDir/prefix_meta/$FprFile").contains(sig)) return
 
-    spark.read.parquet(s"$indexDir/dict")
+    spark.read.schema(TermDict.SchemaDdl).parquet(s"$indexDir/dict")
       .select($"term", $"df").as[(String, Long)]
       .flatMap { case (t, df) =>
         (1 to math.min(maxLen, t.length)).map(l => (t.substring(0, l), df))
@@ -1159,13 +1132,14 @@ object IndexBuild {
       .select($"term", $"df", length($"term").as("len"))
       .write.mode("overwrite").parquet(s"$indexDir/prefix_dict")
 
-    val sel = spark.read.parquet(s"$indexDir/prefix_dict").select($"term".as("prefix"))
+    val sel = spark.read.schema(TermDict.SchemaDdl).parquet(s"$indexDir/prefix_dict")
+      .select($"term".as("prefix"))
 
     // merged prefix postings: decode → explode member prefixes → keep
     // selected → re-encode through the standard (term, key) shuffle
     // (same salt, same block layout)
     encodeBlocks(
-      spark.read.parquet(s"$indexDir/postings")
+      spark.read.schema(BlocksSchemaDdl).parquet(s"$indexDir/postings")
         .select($"term", $"docBytes", $"tfBytes")
         .as[(String, Array[Byte], Array[Byte])]
         .flatMap { case (t, db, tfb) =>
@@ -1185,7 +1159,7 @@ object IndexBuild {
     // merged prefix positions (only when the index has positions)
     val tb = cfg.termBuckets
     if (exists(spark, s"$indexDir/positions")) {
-      spark.read.parquet(s"$indexDir/positions")
+      spark.read.schema(PositionsSchemaDdl).parquet(s"$indexDir/positions")
         .select($"term", $"docId", $"positions")
         .as[(String, Int, Array[Int])]
         .flatMap { case (t, d, ps) =>
@@ -1240,9 +1214,8 @@ object IndexBuild {
     * shrink to live. */
   private def writeStats(spark: SparkSession, indexDir: String, name: String,
                          n: Long, tokens: Long, params: Seq[(String, Any)] = Nil): Unit =
-    Lineage.writeMarker(spark, s"$indexDir/stats/$name",
-      (Seq("N" -> n, "tokens" -> tokens) ++ params)
-        .map { case (k, v) => s"$k=$v\n" }.mkString)
+    Lineage.writeProperties(spark, s"$indexDir/stats/$name",
+      Seq("N" -> n, "tokens" -> tokens) ++ params)
 
   /** An append batch's `stats/delta-<batchId>` from its staged doclen
     * rows (one job over the batch only). */
@@ -1261,11 +1234,9 @@ object IndexBuild {
     val dir = new org.apache.hadoop.fs.Path(s"$indexDir/stats")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def entries(name: String): Map[String, String] =
-      Lineage.readMarker(spark, s"$dir/$name").getOrElse(
+      Lineage.readProperties(spark, s"$dir/$name").getOrElse(
         throw new IllegalStateException(s"index at $indexDir has no stats/$name: " +
           "its build has not committed the stats stage"))
-        .linesIterator.filter(_.nonEmpty)
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
     val base = entries("base")
     val parts = base +: fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("delta-")).map(entries)

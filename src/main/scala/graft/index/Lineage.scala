@@ -24,6 +24,8 @@ import graft.functions.Tokenizer
   *    lines on the driver (no Spark job). The append path takes its next
   *    docId and its batch's docId range from it; `api.Client.tasks` and
   *    [[read]] are views over it.
+  *  - [[generation]] names the committed snapshot (the reference's LMDB
+  *    read transaction): every cache and derived artifact keys on it.
   *
   * Uses the Hadoop FileSystem API so the same code runs on local FS in
   * tests and on HDFS/S3A on a cluster.
@@ -46,43 +48,44 @@ object Lineage {
     * scaling efficiency on short builds. */
   def commit(spark: SparkSession, indexDir: String, stage: String,
              rows: Seq[LineageRow]): Unit = {
-    val f = fs(spark, indexDir)
-    val dir = new Path(s"$indexDir/lineage/$stage/rows")
-    f.mkdirs(dir)
-    val out = f.create(new Path(dir, "rows.json"), true)
     def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    rows.foreach { r =>
-      out.write((s"""{"stage":${js(r.stage)},"partitionId":${r.partitionId},""" +
+    writeMarker(spark, s"$indexDir/lineage/$stage/rows/rows.json", rows.map { r =>
+      s"""{"stage":${js(r.stage)},"partitionId":${r.partitionId},""" +
         s""""docidMin":${r.docidMin},"docidMax":${r.docidMax},""" +
         s""""postingCount":${r.postingCount},"bytes":${r.bytes},""" +
-        s""""sha256":${js(r.sha256)},"committedAt":${js(r.committedAt)}}""" + "\n")
-        .getBytes("UTF-8"))
-    }
-    out.close()
-    f.create(markerPath(indexDir, stage), true).close()
+        s""""sha256":${js(r.sha256)},"committedAt":${js(r.committedAt)}}""" + "\n"
+    }.mkString)
+    fs(spark, indexDir).create(markerPath(indexDir, stage), true).close()
   }
 
-  /** Every row of the committed stages of an index, parsed from the
-    * JSON lines [[commit]] writes: driver-side, no Spark job. A stage
-    * dir without its `_COMMITTED` marker (in flight, or orphaned by a
-    * kill) contributes nothing. */
-  def rows(spark: SparkSession, indexDir: String): Seq[LineageRow] = {
+  /** (stage dir, `_COMMITTED` mtime) of every committed stage (a stage
+    * dir without its marker is in flight or orphaned), by stage name. */
+  private def committed(spark: SparkSession, indexDir: String): Seq[(Path, Long)] = {
     val f = fs(spark, indexDir)
     val base = new Path(s"$indexDir/lineage")
     if (!f.exists(base)) return Nil
-    f.listStatus(base).filter(_.isDirectory).map(_.getPath)
-      .filter(p => f.exists(new Path(p, "_COMMITTED")))
-      .sortBy(_.getName).toIndexedSeq
-      .flatMap { p =>
-        val file = new Path(p, "rows/rows.json")
-        if (!f.exists(file)) Nil
-        else {
-          val in = f.open(file)
-          val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-          text.linesIterator.filter(_.nonEmpty).map(parseRow).toSeq
-        }
-      }
+    f.listStatus(base).filter(_.isDirectory).toIndexedSeq.flatMap { d =>
+      f.listStatus(d.getPath).find(_.getPath.getName == "_COMMITTED")
+        .map(m => d.getPath -> m.getModificationTime)
+    }.sortBy(_._1.getName)
   }
+
+  /** The index generation: a hash of the committed stages' (name,
+    * `_COMMITTED` mtime) pairs — O(stages) FileSystem calls, no Spark
+    * job. Every build, append and delete commits a uniquely named stage,
+    * so any mutation moves it with no counter to write. */
+  def generation(spark: SparkSession, indexDir: String): String =
+    Sha.hex(committed(spark, indexDir)
+      .map { case (p, t) => s"${p.getName}:$t\n" }.mkString)
+
+  /** Every row of the committed stages of an index, parsed from the
+    * JSON lines [[commit]] writes: driver-side, no Spark job. A stage
+    * dir without its `_COMMITTED` marker contributes nothing. */
+  def rows(spark: SparkSession, indexDir: String): Seq[LineageRow] =
+    committed(spark, indexDir).flatMap { case (p, _) =>
+      readMarker(spark, s"$p/rows/rows.json").toSeq
+        .flatMap(_.linesIterator.filter(_.nonEmpty).map(parseRow))
+    }
 
   private val Field = """"([A-Za-z0-9]+)":("(?:[^"\\]|\\.)*"|-?\d+)""".r
   private val Escape = """\\(.)""".r
@@ -174,21 +177,16 @@ object Lineage {
   /** The writer-side check, run by every [[stage]]: a stamped directory
     * must match; an unstamped one is stamped before its first stage body
     * runs, unless it already holds committed stages (an older format). */
-  private def checkOrStamp(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    val base = new Path(s"$dir/lineage")
-    def hasCommitted = f.exists(base) && f.listStatus(base).exists(s =>
-      s.isDirectory && f.exists(new Path(s.getPath, "_COMMITTED")))
+  private def checkOrStamp(spark: SparkSession, dir: String): Unit =
     readMarker(spark, formatPath(dir).toString) match {
       case Some(FormatStamp) => ()
-      case None if !hasCommitted => writeFormat(spark, dir)
+      case None if committed(spark, dir).isEmpty => writeFormat(spark, dir)
       case found => refuse(dir, found)
     }
-  }
 
-  /** Small marker files (format stamp, fingerprints): plain FileSystem
-    * reads and writes, like `_COMMITTED` — no Spark job. */
-  private[index] def readMarker(spark: SparkSession, path: String): Option[String] = {
+  /** Small marker files (format stamp, fingerprints, stats): plain
+    * FileSystem reads and writes, like `_COMMITTED` — no Spark job. */
+  private[graft] def readMarker(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
     val f = fs(spark, path)
     if (!f.exists(p)) None
@@ -198,10 +196,20 @@ object Lineage {
     }
   }
 
-  private[index] def writeMarker(spark: SparkSession, path: String, content: String): Unit = {
+  private[graft] def writeMarker(spark: SparkSession, path: String, content: String): Unit = {
     val out = fs(spark, path).create(new Path(path), true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
+
+  /** `key=value`-lines markers (stats files, LSH parameters). */
+  private[graft] def writeProperties(spark: SparkSession, path: String,
+                                     entries: Seq[(String, Any)]): Unit =
+    writeMarker(spark, path, entries.map { case (k, v) => s"$k=$v\n" }.mkString)
+
+  private[graft] def readProperties(spark: SparkSession, path: String)
+      : Option[Map[String, String]] =
+    readMarker(spark, path).map(_.linesIterator.filter(_.nonEmpty)
+      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap)
 
   /** Run `body` only if the stage is not yet committed; `body` must
     * return the lineage rows describing what it wrote. */

@@ -59,17 +59,8 @@ final class TermDict(spark: SparkSession, dictPath: String,
       Some(dictDf.select($"term", $"df").as[(String, Long)].collect().toMap)
     else None
 
-  /** Access-ordered LRU with a hard entry cap: per-engine caches must
-    * not grow monotonically in a long-lived serving process. */
-  private def lru[K, V](): java.util.Map[K, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-          this.size() > cacheEntries
-      })
-
-  private val bandCache = lru[(Int, Int), (Array[String], Array[Long])]()
-  private val prefixCache = lru[(String, Int), Array[(String, Long)]]()
+  private val bandCache = TermDict.lru[(Int, Int), (Array[String], Array[Long])](cacheEntries)
+  private val prefixCache = TermDict.lru[(String, Int), Array[(String, Long)]](cacheEntries)
 
   /** current cached-entry counts (specs assert the cap holds) */
   def cacheSizes: (Int, Int) = (bandCache.size(), prefixCache.size())
@@ -132,6 +123,15 @@ final class TermDict(spark: SparkSession, dictPath: String,
 }
 
 object TermDict {
+  /** Access-ordered, synchronized LRU with a hard entry cap: caches must
+    * not grow monotonically in a long-lived serving process. */
+  private[graft] def lru[K, V](cap: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+          this.size() > cap
+      })
+
   /** Above this many terms the dictionary is no longer collected whole;
     * ~2M terms ≈ tens of MB — comfortably a driver map, while real
     * web-scale vocabularies (10^8+) route to the bucketed path. */

@@ -129,11 +129,14 @@ object Similarity {
     * the embedding table writes (id, vec, nn, bucket) partitioned by
     * bucket, so a query reads only its probed bucket partitions
     * (partition pruning) instead of projecting the whole table per
-    * query. Meta row pins (nPlanes, dim, seed). */
+    * query. The [[paramsPath]] marker (nPlanes, dim, seed), written
+    * last, marks a complete index. */
   def buildLshIndex(spark: SparkSession, emb: DataFrame, idCol: String,
                     vecCol: String, dir: String,
                     nPlanes: Int = 4, dim: Int = 0, seed: Long = 42L): Unit = {
-    import spark.implicits._
+    // a killed rebuild in place must not leave the old marker behind
+    val params = new org.apache.hadoop.fs.Path(paramsPath(dir))
+    params.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(params, false)
     // dim=0: infer from the data (see cosineNearDupPairsLsh — a plane/
     // vector length mismatch nulls every plane dot and collapses all
     // buckets to 0)
@@ -157,26 +160,24 @@ object Similarity {
       .sortWithinPartitions(col("id"))
       .write.mode("overwrite").parquet(s"$dir/byid")
     graft.index.Lineage.writeFormat(spark, dir)
-    Seq((nPlanes, d, seed)).toDF("nPlanes", "dim", "seed")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta")
-    metaCache.remove(dir): Unit
+    graft.index.Lineage.writeProperties(spark, paramsPath(dir),
+      Seq("nPlanes" -> nPlanes, "dim" -> d, "seed" -> seed))
   }
+
+  /** The (nPlanes, dim, seed) marker of a persisted LSH index. */
+  def paramsPath(dir: String): String = s"$dir/lsh_params"
 
   /** byid/ schema (partition discovery of rows/ typed `bucket` INT). */
   private final val ByidSchemaDdl = "id BIGINT, bucket INT, vec ARRAY<FLOAT>, nn BIGINT"
 
-  /** Per-dir cache of the immutable meta row (nPlanes, dim, seed) —
-    * algorithm parameters written once by [[buildLshIndex]]; re-reading
-    * them is one Spark job per query. Invalidated on rebuild. The format
-    * stamp is checked on every call (a plain file read, no job). */
-  private val metaCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int, Long)]
+  /** (nPlanes, dim, seed) from [[paramsPath]] after the format check:
+    * file reads on every call, no Spark job, nothing cached. */
   private def lshMeta(spark: SparkSession, dir: String): (Int, Int, Long) = {
     graft.index.Lineage.requireFormat(spark, dir)
-    metaCache.getOrElseUpdate(dir, {
-      val m = spark.read.parquet(s"$dir/meta").collect()(0)
-      (m.getInt(0), m.getInt(1), m.getLong(2))
-    })
+    val m = graft.index.Lineage.readProperties(spark, paramsPath(dir)).getOrElse(
+      throw new IllegalArgumentException(
+        s"LSH index at $dir has no lsh_params: rebuild it with buildLshIndex"))
+    (m("nPlanes").toInt, m("dim").toInt, m("seed").toLong)
   }
 
   /** One hyperplane-LSH bucket as a self-contained Column (planes

@@ -39,12 +39,12 @@ final case class Hit(docId: Int, score: Double)
   * tokenizer and field settings (one job each, only when the index
   * has them) load eagerly; the dictionary loads on the first search
   * (one collect; its size comes from parquet footers without a job),
-  * the tombstone set and file listings lazily. After
-  * `IndexBuild.append`/`delete`/`buildPrefixIndex` mutate the
-  * directory, construct a new engine
-  * (the reference's RoTxn snapshot semantics; `api.Client.index`
-  * already returns a fresh engine per call, so facade users get this
-  * for free). A held instance keeps serving the pre-mutation view.
+  * the tombstone set and file listings lazily (`tableDFs`, TermDict's
+  * band caches: they live and die with this snapshot). After an
+  * append, delete or facet/prefix rebuild, open a new engine (the
+  * reference's RoTxn snapshot semantics): `DocIndex.open` does so when
+  * `Lineage.generation` or a derived marker moves, `api.Client.index`
+  * on every call. A held instance is never refreshed.
   *
   * INTERACTIVE DEPLOYMENT: warm query latency is Spark-job-dispatch
   * bound, not data bound — the plans read only the query's pruned term

@@ -82,6 +82,37 @@ class DumpSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.col("value") === "scala") == 9)
   }
 
+  /** file name -> mtime of every file under `dir`. */
+  private def mtimes(dir: String): Map[String, Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val b = Map.newBuilder[String, Long]
+    while (it.hasNext) { val f = it.next(); b += f.getPath.toString -> f.getModificationTime }
+    b.result()
+  }
+
+  test("re-export after append writes the appended docs; unchanged re-export rewrites nothing") {
+    val dir = Files.createTempDirectory("dumpRe").toString
+    val dumpDir = Files.createTempDirectory("dumpReOut").toString
+    val cfg = IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4,
+      numPartitions = 2)
+    IndexBuild.build(spark, (0 until 10).map(i => src(i, s"word$i shared")).toDS(), dir, cfg)
+    Dump.exportDump(spark, dir, dumpDir)
+    val first = mtimes(dumpDir)
+    Thread.sleep(20) // a rewrite must land on a later mtime
+    Dump.exportDump(spark, dir, dumpDir)
+    assert(mtimes(dumpDir) == first, "unchanged index: the dump must not be rewritten")
+
+    IndexBuild.append(spark, (10 until 14).map(i => src(i, s"word$i shared fresh")).toDS(),
+      dir, cfg, "b1")
+    Dump.exportDump(spark, dir, dumpDir)
+    val imported = Files.createTempDirectory("dumpReDst").toString
+    Dump.importDump(spark, dumpDir, imported, cfg)
+    val e = new SearchEngine(spark, imported)
+    assert(e.nDocs == 14, "the import must hold the appended docs")
+    assert(e.searchDF("fresh", 20).count() == 4)
+  }
+
   test("multi-field indexes fail fast on export (format cannot carry fields)") {
     val dir = Files.createTempDirectory("dumpMf").toString
     val df = Seq((0L, "t0", "b0"), (1L, "t1", "b1")).toDF("doc_id", "title", "body")

@@ -55,9 +55,9 @@ class FormatSpec extends AnyFunSuite {
 
   for ((variant, unstamp) <- Seq[(String, String => Unit)](
       "unstamped" -> (d => fs(d).delete(Lineage.formatPath(d), false)),
-      // the layout before stats/ became key=value text files
+      // the layout before the LSH parameters became a key=value marker
       "older-stamp" -> (d => writeStamp(d,
-        s"layout=9 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")))) {
+        s"layout=10 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")))) {
     test(s"$variant index: every entry point refuses with a rebuild error, touching nothing") {
       val dir = newDir(s"fmt-$variant")
       IndexBuild.build(spark, corpus.toDS(), dir, cfg)

@@ -113,6 +113,9 @@ class OpsSpec extends AnyFunSuite {
   test("persisted LSH index: multi-probe recall@10 >= 0.8 vs exact") {
     val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
     Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", dir, nPlanes = 4)
+    // the parameters are a key=value marker, read without a Spark job
+    assert(graft.index.Lineage.readProperties(spark, Similarity.paramsPath(dir)) ==
+      Some(Map("nPlanes" -> "4", "dim" -> "64", "seed" -> "42")))
     val got = Similarity.lshIndexTopK(spark, dir, 0L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(got.head._1 == 0L)

@@ -10,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkTestBase
 import graft.api.{Index, SearchRequest}
 import graft.corpus.SourceFile
-import graft.index.{IndexBuild, IndexConfig}
+import graft.index.{Dump, IndexBuild, IndexConfig}
+import graft.ops.Similarity
 import graft.rank.MeiliRank
 
 /** Spark jobs per read-path call, counted under a job group with the
@@ -180,5 +181,44 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(small.distinct.size == 1, s"append job counts vary across repeats: $small")
     assert(large == small, s"append job count grows with the index: $small vs $large")
     assert(small.head <= 10, s"append: ${small.head} jobs")
+  }
+
+  test("derived tables on a tombstoned index: exportDump and stale facet/prefix builds within budget; unchanged reruns run no job") {
+    tombstoned
+    val dump = Files.createTempDirectory("jobbudget-dump").toString
+    val exported = jobsOf(Dump.exportDump(spark, tombstoned, dump))
+    val facet = jobsOf(IndexBuild.buildFacetIndex(spark, tombstoned, Seq("lang")))
+    val prefix = jobsOf(IndexBuild.buildPrefixIndex(spark, tombstoned, cfg, minDf = 2))
+    info(s"exportDump $exported, buildFacetIndex $facet, buildPrefixIndex $prefix jobs")
+    assert(exported <= ExportBudget, s"exportDump: $exported")
+    assert(facet <= FacetBudget, s"stale buildFacetIndex: $facet")
+    assert(prefix <= PrefixBudget, s"stale buildPrefixIndex: $prefix")
+    // the index generation is unchanged: every marker matches
+    assert(steadyJobs(Dump.exportDump(spark, tombstoned, dump)) == 0)
+    assert(steadyJobs(IndexBuild.buildFacetIndex(spark, tombstoned, Seq("lang"))) == 0)
+    assert(steadyJobs(IndexBuild.buildPrefixIndex(spark, tombstoned, cfg, minDf = 2)) == 0)
+  }
+
+  /** Measured 3 (6 at the format-10 layout): docs/, deleted/ and
+    * stopwords/ are read with fixed schemas, so no inference job, and
+    * the one-row settings write coalesces instead of shuffling. */
+  private val ExportBudget = 3
+  /** Measured 5 (7 at the format-10 layout, whose live-docs read
+    * inferred the docs/ and deleted/ schemas). */
+  private val FacetBudget = 5
+  /** Measured 10 (14 at the format-10 layout, whose dict, prefix_dict,
+    * postings and positions reads inferred their schemas). */
+  private val PrefixBudget = 10
+
+  test("LSH: the first lshIndexTopK call on a fresh dir runs as many jobs as a warm call") {
+    val emb = (0 until 40).map(i =>
+      (i.toLong, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    val d = Files.createTempDirectory("jobbudget-lsh").toString
+    Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", d, nPlanes = 4)
+    val first = jobsOf(Similarity.lshIndexTopK(spark, d, 0L, 5).collect())
+    val warm = steadyJobs(Similarity.lshIndexTopK(spark, d, 0L, 5).collect())
+    info(s"lshIndexTopK: first $first, warm $warm jobs")
+    assert(first == warm, s"first call $first vs warm $warm")
   }
 }
