@@ -521,8 +521,10 @@ object SparkEntry {
     // ---- dump export -> import -> search roundtrip (S5) ----------------
     "q_dump" -> ((s, dir) => {
       val dumpDir = DocIndex.cacheDir("dump", dir)
-      val impDir = DocIndex.cacheDir("dumpidx", dir)
       graft.index.Dump.exportDump(s, DocIndex.engine(s, dir).indexDir, dumpDir)
+      // one import dir per dump signature: a rewritten dump imports fresh
+      val sig = graft.index.Sha.hex(graft.index.Dump.signature(s, dumpDir))
+      val impDir = DocIndex.cacheDir("dumpidx", s"$dir-${sig.take(16)}")
       graft.index.Dump.importDump(s, dumpDir, impDir,
         graft.index.IndexConfig(numPartitions = 8))
       val e = DocIndex.open(s, impDir)

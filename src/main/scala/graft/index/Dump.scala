@@ -1,7 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.corpus.SourceFile
 
@@ -15,19 +15,45 @@ import graft.corpus.SourceFile
   *   dumpDir/documents/   JSONL, one object per document (all external
   *                        fields + content — everything needed to
   *                        rebuild from scratch)
-  *   dumpDir/settings/    one-row JSON: index parameters that affect
-  *                        build semantics (termBuckets, blockSize,
-  *                        docsPerShard, positions) + stop words
+  *   dumpDir/settings/    one-row JSON ([[SettingsSchemaDdl]]): the
+  *                        writer's `layout` ([[IndexBuild.FormatVersion]]),
+  *                        index parameters that affect build semantics
+  *                        (termBuckets, blockSize, docsPerShard,
+  *                        positions), stop words, tokenizer settings and
+  *                        the derived tables to rebuild
   *
-  * Import rebuilds through the standard lineage-committed pipeline, so
-  * an interrupted import resumes like any build.
+  * Re-export: `dumpDir/_FINGERPRINT` (source dir, its
+  * [[Lineage.generation]] and a hash of [[SettingsSchemaDdl]], written
+  * last) is the dump's signature. It makes exporting an unchanged index
+  * a no-op; after an append, delete or killed export, or over a dump
+  * written with other settings fields, the dump is rewritten.
   *
-  * Re-export: `dumpDir/_FINGERPRINT` (source dir and its
-  * [[Lineage.generation]], written last) makes exporting an unchanged
-  * index a no-op; after an append, delete or killed export, the dump is
-  * rewritten with the current live corpus.
+  * Import rebuilds through the standard lineage-committed pipeline and
+  * records the dump's signature in `indexDir/_FINGERPRINT` before the
+  * first stage. Importing the same signature again resumes: an
+  * interrupted import finishes, a completed one writes nothing. A
+  * directory holding committed stages of anything else (another
+  * signature, or no import at all) is refused — a rewritten dump
+  * imports into a fresh directory.
   */
 object Dump {
+
+  /** The settings row's fixed schema: the export writes it and the
+    * import reads it (no inference job). A dump without `layout` was
+    * written by an older engine and is refused with "re-export". */
+  final val SettingsSchemaDdl =
+    "layout INT, docsPerShard INT, termBuckets INT, blockSize INT, " +
+      "positions BOOLEAN, stopWords ARRAY<STRING>, facetColumns ARRAY<STRING>, " +
+      "separatorTokens ARRAY<STRING>, nonSeparatorTokens ARRAY<STRING>, " +
+      "tokenizerDictionary ARRAY<STRING>, localizedAttributes ARRAY<STRING>, " +
+      "cjkUnigrams STRING, hasPrefixTables BOOLEAN"
+
+  /** The signature of the finished dump at `dumpDir` (its
+    * `_FINGERPRINT`, written last by [[exportDump]]). */
+  def signature(spark: SparkSession, dumpDir: String): String =
+    Lineage.readMarker(spark, s"$dumpDir/${IndexBuild.FprFile}").getOrElse(
+      throw new IllegalArgumentException(s"dump at $dumpDir has no " +
+        s"${IndexBuild.FprFile}: its export did not finish; re-export it"))
 
   def exportDump(spark: SparkSession, indexDir: String, dumpDir: String): Unit = {
     import org.apache.hadoop.fs.Path
@@ -41,8 +67,12 @@ object Dump {
       "exportDump does not support multi-field indexes: the documents.jsonl " +
         "format stores only the concatenated content column")
     val marker = s"$dumpDir/${IndexBuild.FprFile}"
-    val sig = s"$indexDir:${Lineage.generation(spark, indexDir)}"
+    val sig = s"$indexDir:${Lineage.generation(spark, indexDir)}:" +
+      Sha.hex(SettingsSchemaDdl).take(8)
     if (!Lineage.readMarker(spark, marker).contains(sig)) {
+      // an old signature must not vouch for a half-rewritten dump
+      new Path(marker).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new Path(marker), false)
       exportBody(spark, indexDir, dumpDir, fs)
       Lineage.writeMarker(spark, marker, sig)
     }
@@ -83,32 +113,44 @@ object Dump {
     // fallback vs one pseudo-term read), so record it and rebuild on
     // import, like facetColumns
     val hasPrefixTables = fs.exists(new Path(s"$indexDir/prefix_meta"))
-    Seq((stats("docsPerShard").toInt, stats("termBuckets").toInt,
+    spark.createDataFrame(java.util.List.of(Row(IndexBuild.FormatVersion,
+        stats("docsPerShard").toInt, stats("termBuckets").toInt,
         stats("blockSize").toInt, positions, stop, facetCols,
-        seps, nonSeps, tokDict, locales, cjk, hasPrefixTables))
-      .toDF("docsPerShard", "termBuckets", "blockSize", "positions",
-        "stopWords", "facetColumns", "separatorTokens", "nonSeparatorTokens",
-        "tokenizerDictionary", "localizedAttributes", "cjkUnigrams",
-        "hasPrefixTables")
+        seps, nonSeps, tokDict, locales, cjk, hasPrefixTables)),
+        StructType.fromDDL(SettingsSchemaDdl))
       .coalesce(1).write.mode("overwrite").json(s"$dumpDir/settings")
   }
 
-  /** Rebuild an index from a dump. Settings stored in the dump win;
-    * `numPartitions` is execution-level (cluster-size dependent), so it
-    * comes from the caller's cfg. */
+  /** Rebuild an index from a dump into `indexDir` (see the import
+    * contract above). Settings stored in the dump win; `numPartitions`
+    * is execution-level (cluster-size dependent), so it comes from the
+    * caller's cfg. Docids are assigned by (repo, path, commit) rank. */
   def importDump(spark: SparkSession, dumpDir: String, indexDir: String,
                  cfg: IndexConfig = IndexConfig()): Unit = {
     import spark.implicits._
-    val st = spark.read.json(s"$dumpDir/settings").collect()(0)
+    val sig = signature(spark, dumpDir)
+    val marker = s"$indexDir/${IndexBuild.FprFile}"
+    Lineage.readMarker(spark, marker) match {
+      case Some(`sig`) => ()
+      case found =>
+        require(found.isEmpty && !Lineage.hasCommits(spark, indexDir),
+          s"index at $indexDir already holds committed stages of " +
+            s"${found.fold("a non-import build")(f => s"dump $f")}, not of dump " +
+            s"$sig: import into a fresh directory")
+        Lineage.writeMarker(spark, marker, sig)
+    }
+    val st = spark.read.schema(SettingsSchemaDdl).json(s"$dumpDir/settings").collect()(0)
+    require(!st.isNullAt(st.fieldIndex("layout")), s"dump at $dumpDir has no " +
+      "settings layout: it was written by an older engine; re-export it")
     def strSeq(f: String): Seq[String] =
-      if (!st.schema.fieldNames.contains(f)) Nil
-      else Option(st.getAs[scala.collection.Seq[String]](f)).fold(Seq.empty[String])(_.toSeq)
+      Option(st.getAs[scala.collection.Seq[String]](f)).fold(Seq.empty[String])(_.toSeq)
     val restored = cfg.copy(
-      docsPerShard = st.getAs[Long]("docsPerShard").toInt,
-      termBuckets = st.getAs[Long]("termBuckets").toInt,
-      blockSize = st.getAs[Long]("blockSize").toInt,
+      docsPerShard = st.getAs[Int]("docsPerShard"),
+      termBuckets = st.getAs[Int]("termBuckets"),
+      blockSize = st.getAs[Int]("blockSize"),
       positions = st.getAs[Boolean]("positions"),
-      stopWords = st.getAs[scala.collection.Seq[String]]("stopWords").toSet,
+      stopWords = strSeq("stopWords").toSet,
+      storageOrderIds = false,
       tokenizer = {
         // a hand-edited settings file can hold empty or malformed
         // entries — reject with a clear message, not a charAt(0) crash
@@ -127,8 +169,7 @@ object Dump {
           localesByFid = locs
             .map(graft.functions.Tokenizer.TokSettings.parseFidLocale).toMap,
           cjkUnigrams = {
-            val v = if (st.schema.fieldNames.contains("cjkUnigrams"))
-              Option(st.getAs[String]("cjkUnigrams")).getOrElse("") else ""
+            val v = Option(st.getAs[String]("cjkUnigrams")).getOrElse("")
             require(v.isEmpty || v == "true" || v == "false",
               s"dump settings: cjkUnigrams must be ''/'true'/'false', got '$v'")
             if (v.isEmpty) None else Some(v.toBoolean)
@@ -138,24 +179,19 @@ object Dump {
     // and schema INFERENCE would scan every JSONL byte before the build
     // even starts — a full extra corpus pass per import call, paid even
     // when every build stage is already committed and resumes for free
-    val docsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    val docsSchema = StructType.fromDDL(
       "repo string, path string, commit string, lang string, content string")
     val docs = spark.read.schema(docsSchema).json(s"$dumpDir/documents")
       .select($"repo", $"path", $"commit", $"lang", $"content")
       .as[SourceFile]
     IndexBuild.build(spark, docs, indexDir, restored)
-    // rebuild derived facet indexes recorded in the dump settings
-    // (older dumps have no facetColumns field)
-    if (st.schema.fieldNames.contains("facetColumns")) {
-      val cols = st.getAs[scala.collection.Seq[String]]("facetColumns")
-      if (cols != null && cols.nonEmpty)
-        IndexBuild.buildFacetIndex(spark, indexDir, cols.toSeq)
-    }
+    // rebuild the derived facet indexes recorded in the dump settings
+    val facetCols = strSeq("facetColumns")
+    if (facetCols.nonEmpty) IndexBuild.buildFacetIndex(spark, indexDir, facetCols)
     // the source index served prefixes from precomputed tables: rebuild
     // them so the import doesn't silently downgrade to the capped
     // on-the-fly path for hot prefixes
-    if (st.schema.fieldNames.contains("hasPrefixTables") &&
-        st.getAs[Boolean]("hasPrefixTables"))
+    if (st.getAs[Boolean]("hasPrefixTables"))
       IndexBuild.buildPrefixIndex(spark, indexDir, restored)
   }
 }

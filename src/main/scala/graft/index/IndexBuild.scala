@@ -1,10 +1,8 @@
 package graft.index
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
 import graft.corpus.SourceFile
@@ -38,12 +36,13 @@ import graft.functions.{BM25, Tokenizer, VByte}
   *   shuffle narrow pass (ids = per-file offset + `_metadata.row_index`)
   *   instead of a full re-sort of the corpus through one exchange
   *   (3 passes of every content byte over the wire). Requires a
-  *   file-backed corpus (parquet/json scan); falls back to the sorted
-  *   path otherwise. Ids remain deterministic: same files, same ids.
-  *   The sorted assignment stays beside it: [[IndexBuild.compact]]
-  *   reads the doc store minus its tombstones (an anti-join once
-  *   anything was deleted, the case compaction exists for — not a bare
-  *   file scan), and [[Dump.importDump]] promises ids by (repo, path)
+  *   bare parquet scan (`_metadata.row_index`); any other corpus is
+  *   refused with an IllegalArgumentException before a job runs. Ids
+  *   remain deterministic: same files, same ids. The sorted assignment
+  *   stays beside it, and [[IndexBuild.compact]] and
+  *   [[Dump.importDump]] always use it: compaction reads the doc store
+  *   minus its tombstones (an anti-join once anything was deleted — not
+  *   a bare file scan), and an import promises ids by (repo, path)
   *   rank, which callers map results back through (SparkEntry q_dump). */
 final case class IndexConfig(
     docsPerShard: Int = 1 << 14,
@@ -59,8 +58,9 @@ final case class IndexConfig(
   * reference's document-indexing pipeline (reference:
   * crates/milli/src/update/new/indexer/mod.rs:45-240 — tokenize →
   * per-thread partial caches → merge → LMDB write; here: tokenize
-  * flatMap → salted repartition by (term, shard) → sortWithinPartitions
-  * → mapPartitions delta+VByte block encoder → parquet segments).
+  * flatMap → map-side chunk combine → salted repartition by
+  * (term, shard) → sortWithinPartitions → flatten + delta+VByte block
+  * encoder → parquet segments; [[chunkShuffle]]).
   *
   * Job economy (matters for build throughput AND scaling efficiency:
   * serial driver overhead is what breaks Amdahl at 4x cores):
@@ -81,12 +81,15 @@ final case class IndexConfig(
   *
   * Layout under `indexDir`:
   *   docs/      docId, repo, path, commit, lang, content, content_sha256
-  *   dict/      term, termId, df, cf
+  *   dict/      term, termId, df, cf, len
   *   stats/     base, delta-<batchId>: `key=value` text files (see [[readStats]])
   *   postings/bucket=B/  term, shard, blockId, firstDoc, lastDoc, count,
   *                       docBytes, tfBytes, blockMaxTf, tfSum, encBytes
-  *   positions/bucket=B/ term, docId, positions (optional)
+  *   positions/bucket=B/ term, docId, positions, tf (optional)
   *   doclen/    docId, tf  (tf = the doc's token count, the BM25 `len`)
+  *   prefix_dict/, prefixes/bucket=B/ (postings/ layout),
+  *   prefix_positions/bucket=B/ term, docId, positions, tf
+  *              ([[buildPrefixIndex]], optional)
   *   lineage/<stage>/rows + _COMMITTED, lineage/_FORMAT
   */
 object IndexBuild {
@@ -121,201 +124,170 @@ object IndexBuild {
   def bucketOfIndexed(term: String, buckets: Int): Int =
     if (term == LenTerm) buckets else bucketOf(term, buckets)
 
-  /** Pack one (docId, tf) posting entry into a single long — the
-    * posting shuffle ships (term, key) rows only: `shard` is derivable
-    * (docId / docsPerShard) and `bucket` is a function of the term, so
-    * carrying them through the exchange is pure DRAM traffic (the
-    * shuffle is the build's bandwidth bottleneck, and bandwidth is what
-    * degrades first when executors contend — fewer bytes per row is a
-    * direct scaling-efficiency lever). Sorting by (term, key) equals
-    * sorting by (term, shard, docId): shard is monotone in docId. */
+  /** Pack one (docId, tf) posting into a single long: the chunk buffers
+    * of [[chunkRows]] hold keys, and sorting by key equals sorting by
+    * (shard, docId) because shard is monotone in docId. */
   @inline def packKey(docId: Int, tf: Int): Long =
     (docId.toLong << 32) | (tf.toLong & 0xffffffffL)
   @inline def keyDoc(key: Long): Int = (key >>> 32).toInt
   @inline def keyTf(key: Long): Int = key.toInt
 
-  /** [[packKey]] as Column arithmetic — the ONE other encoding of the
-    * key layout (callers producing keys from DataFrame columns). */
-  def packKeyCol(docId: org.apache.spark.sql.Column,
-                 tf: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    shiftleft(docId.cast("long"), 32).bitwiseOR(tf.cast("long"))
+  /** One row of the token stream every posting and position write
+    * consumes: (term, docId, tf, positions). `positions` is null on a
+    * postings-only stream, which then buffers, ships and decodes no
+    * position payload. */
+  type TokenRow = (String, Int, Int, Array[Int])
 
-  /** The standard posting-block encode pipeline over (term, key) rows:
-    * map-side chunk combine → salted repartition on (term, derived
-    * shard) → in-partition sort → streaming block encoder. One
-    * definition of the shuffle shape for build / append / prefix /
-    * multi-field.
-    *
-    * The map-side combine ([[chunkPartition]]) packs each map task's
-    * per-(term, shard) postings into delta+VByte chunk rows, so the
-    * exchange ships the term string once per chunk and ~3-5 bytes per
-    * posting instead of one ~32-byte (term, key) row each. This is the
-    * Spark re-expression of the reference's per-thread partial caches
-    * merged post-exchange (crates/milli/src/update/new/extract/
-    * cache.rs:281 BalancedCaches; grenad sort-merge in the old
-    * pipeline): shuffle bytes are the build's dominant bandwidth draw,
-    * and bandwidth is what multi-core contention starves first, so
-    * fewer bytes is a direct scaling-efficiency lever (BENCH.md r5: 79%
-    * fewer shuffle bytes than shipping one row per posting). The reduce
-    * side flattens the chunks back to the exact sorted (term, key)
-    * stream ([[flattenChunks]]), so the blocks are those a per-posting
-    * row shuffle would encode. */
-  def encodeBlocks(df: DataFrame, cfg: IndexConfig): DataFrame = {
-    val spark = df.sparkSession
+  /** One map-side chunk of [[chunkRows]]: a (term, shard) run of one map
+    * task's token rows as (term, firstKey, docBytes, tfBytes, posBytes)
+    * — docids delta+VByte and tfs VByte, exactly the block codec;
+    * `posBytes` one VByte stream of `[nPos, pos...]` per doc in docid
+    * order, null on a postings-only stream. */
+  type Chunk = (String, Long, Array[Byte], Array[Byte], Array[Byte])
+
+  /** The posting-block write of postings/ and prefixes/ (and their
+    * append stagings): [[chunkShuffle]] of the (term, docId, tf) columns
+    * of `rows` (any positions column is not read) through the streaming
+    * block encoder ([[encodePartition]]). */
+  def encodeBlocks(rows: DataFrame, cfg: IndexConfig, outDir: String): Unit = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val shardWidth = cfg.docsPerShard.toLong << 32
-    df.select(col("term"), col("key")).as[(String, Long)]
-      .mapPartitions(rows => chunkPartition(rows, cfg.docsPerShard))
-      .toDF("term", "firstKey", "docBytes", "tfBytes")
-      .repartition(cfg.numPartitions, col("term"),
-        expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
-      .sortWithinPartitions(col("term"), col("firstKey"))
-      .as[(String, Long, Array[Byte], Array[Byte])]
-      .mapPartitions(rows => encodePartition(flattenChunks(rows),
-        cfg.blockSize, cfg.termBuckets, cfg.docsPerShard))
-      .toDF(EncodedCols: _*)
+    val postings = rows.select(col("term"), col("docId"), col("tf"),
+      lit(null).cast("array<int>").as("positions")).as[TokenRow]
+    chunkShuffle(postings, cfg, cfg.numPartitions, outDir, EncodedCols)(
+      encodePartition(_, cfg.blockSize, cfg.termBuckets, cfg.docsPerShard))
   }
 
-  /** Entries buffered per map task before a full chunk flush: 2M packed
-    * (docId, tf) longs ≈ 16 MB plus per-term buffer overhead — small
-    * against executor memory, large enough that hot terms amortize
-    * their string to nothing. */
+  /** The write of positions/ and prefix_positions/ (and the append
+    * staging): [[chunkShuffle]] of a token stream with positions, as
+    * sorted (term, docId) rows. The shard salt matters here: without it
+    * every [[LenTerm]] sentinel row (one per document) would hash to one
+    * reducer, a single task sorting and writing a row per document. */
+  def writePositions(rows: Dataset[TokenRow], outDir: String, cfg: IndexConfig,
+                     numPartitions: Int): Unit = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val tb = cfg.termBuckets
+    chunkShuffle(rows, cfg, numPartitions, outDir, PositionsCols)(_.map {
+      case (t, d, tf, ps) => (t, d, ps, tf, bucketOfIndexed(t, tb))
+    })
+  }
+
+  /** THE chunk shuffle of every posting and position write. The map-side
+    * combine ([[chunkRows]]) packs each map task's per-(term, shard)
+    * token rows into [[Chunk]] rows, so the exchange ships the term
+    * string once per chunk and ~3-5 bytes per posting (plus ~2-3 per
+    * position) instead of a row each. This is the Spark re-expression of
+    * the reference's per-thread partial caches merged post-exchange
+    * (crates/milli/src/update/new/extract/cache.rs:281 BalancedCaches):
+    * shuffle bytes are the build's dominant bandwidth draw (BENCH.md r5:
+    * 79% fewer than one row per posting). The exchange is salted by
+    * (term, firstKey div shardWidth), so a hot term spreads over the
+    * reducers of its shards; partitions sort by (term, firstKey) and
+    * [[flattenChunks]] hands `consume` the exact sorted token stream,
+    * whose rows are written as `cols` to `outDir`, partitioned by their
+    * `bucket`. A postings-only stream (`cols` without `positions`) keeps
+    * its always-null `posBytes` column out of the exchange. */
+  private def chunkShuffle[U: Encoder](rows: Dataset[TokenRow], cfg: IndexConfig,
+                                       numPartitions: Int, outDir: String,
+                                       cols: Seq[String])
+                                      (consume: Iterator[TokenRow] => Iterator[U]): Unit = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val shardWidth = cfg.docsPerShard.toLong << 32
+    val positions = cols.contains("positions")
+    val chunks = rows.mapPartitions(chunkRows(_, cfg.docsPerShard))
+      .toDF("term", "firstKey", "docBytes", "tfBytes", "posBytes")
+    (if (positions) chunks else chunks.drop("posBytes"))
+      .repartition(numPartitions, col("term"),
+        expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
+      .sortWithinPartitions(col("term"), col("firstKey"))
+      .withColumn("posBytes",
+        if (positions) col("posBytes") else lit(null).cast("binary"))
+      .as[Chunk]
+      .mapPartitions(cs => consume(flattenChunks(cs)))
+      .toDF(cols: _*)
+      .write.mode("overwrite").partitionBy("bucket").parquet(outDir)
+  }
+
+  /** Units buffered per map task before a full chunk flush: 2M ints (one
+    * per posting key, one more per position) ≈ 16 MB plus per-term
+    * buffer overhead — small against executor memory, large enough that
+    * hot terms amortize their string to nothing. */
   final val ChunkFlushEntries: Int = 1 << 21
 
-  /** Map-side combine for the posting shuffle: groups this partition's
-    * (term, key) stream into per-(term, shard) chunks — docids
-    * delta+VByte, tfs VByte, exactly the block codec — and emits one
-    * (term, firstKey, docBytes, tfBytes) row per chunk. A chunk never
-    * spans shards (the exchange salts by shard) and its keys are sorted
-    * at flush, so chunks of one (term, shard) ordered by firstKey
-    * nearly always concatenate into a sorted stream ([[flattenChunks]]
-    * merges the rare overlap). Memory is bounded by `flushEntries`:
-    * crossing it flushes every buffer, so skewed terms simply produce
-    * more chunks. */
-  def chunkPartition(rows: Iterator[(String, Long)], docsPerShard: Int,
-                     flushEntries: Int = ChunkFlushEntries)
-      : Iterator[(String, Long, Array[Byte], Array[Byte])] =
-    new Iterator[(String, Long, Array[Byte], Array[Byte])] {
-      private val bufs = new scala.collection.mutable.AnyRefMap[String, ArrayBuffer[Long]]
-      private var entries = 0
-      private var out: Iterator[(String, Long, Array[Byte], Array[Byte])] =
-        Iterator.empty
-
-      private def chunkOf(term: String, b: ArrayBuffer[Long])
-          : (String, Long, Array[Byte], Array[Byte]) = {
-        val ks = b.toArray
-        // file-packed scan partitions can interleave docid ranges —
-        // sort restores strict order (a no-op pass when already sorted)
-        java.util.Arrays.sort(ks)
-        val docs = new Array[Int](ks.length)
-        val tfs = new Array[Int](ks.length)
-        var i = 0
-        while (i < ks.length) { docs(i) = keyDoc(ks(i)); tfs(i) = keyTf(ks(i)); i += 1 }
-        (term, ks(0), VByte.encodeDeltas(docs), VByte.encode(tfs))
-      }
-
-      private def fill(): Unit =
-        while (!out.hasNext && rows.hasNext) {
-          val ready = ArrayBuffer.empty[(String, Long, Array[Byte], Array[Byte])]
-          while (rows.hasNext && entries < flushEntries) {
-            val (t, k) = rows.next()
-            val b = bufs.getOrElseUpdate(t, new ArrayBuffer[Long](4))
-            if (b.nonEmpty &&
-                keyDoc(b(b.length - 1)) / docsPerShard != keyDoc(k) / docsPerShard) {
-              // shard boundary: seal this term's chunk, start the next
-              ready += chunkOf(t, b)
-              entries -= b.length
-              b.clear()
-            }
-            b += k
-            entries += 1
-          }
-          if (!rows.hasNext || entries >= flushEntries) {
-            bufs.foreach { case (t, b) => if (b.nonEmpty) ready += chunkOf(t, b) }
-            bufs.clear()
-            entries = 0
-          }
-          out = ready.iterator
-        }
-
-      override def hasNext: Boolean = { fill(); out.hasNext }
-      override def next(): (String, Long, Array[Byte], Array[Byte]) = {
-        fill(); out.next()
-      }
-    }
-
-  /** [[chunkPartition]] for POSITION rows: packs this partition's
-    * (term, docId, positions, tf) stream into per-(term, shard) chunk
-    * rows (term, firstKey, docBytes, tfBytes, posBytes). The positions
-    * payload is one VByte stream per chunk — `[nPos, pos...]` per doc
-    * in docid order — so the exchange ships ~2-3 bytes per position
-    * instead of a boxed array element inside a ~64-byte row. Inverse:
-    * [[flattenPositionChunks]]; the written table is identical. */
-  def chunkPositionRows(rows: Iterator[(String, Int, Array[Int], Int)],
-                        docsPerShard: Int,
-                        flushEntries: Int = ChunkFlushEntries)
-      : Iterator[(String, Long, Array[Byte], Array[Byte], Array[Byte])] =
-    new Iterator[(String, Long, Array[Byte], Array[Byte], Array[Byte])] {
+  /** The map-side combiner of [[chunkShuffle]]: groups this partition's
+    * token rows into per-(term, shard) [[Chunk]]s. A chunk never spans
+    * shards (the exchange salts by shard) and its docs are sorted at
+    * flush, so chunks of one (term, shard) ordered by firstKey nearly
+    * always concatenate into a sorted stream ([[flattenChunks]] merges
+    * the rare overlap). Memory is bounded by `flushEntries`, charged one
+    * unit per posting and one per position: crossing it flushes every
+    * buffer, so skewed terms simply produce more chunks. */
+  def chunkRows(rows: Iterator[TokenRow], docsPerShard: Int,
+                flushEntries: Int = ChunkFlushEntries): Iterator[Chunk] =
+    new Iterator[Chunk] {
       private final class Buf {
         val keys = new ArrayBuffer[Long](4)
-        val pos = new ArrayBuffer[Array[Int]](4)
-        /** buffered ints this buffer holds (keys + position elements) —
-          * the unit the flush budget charges, so the stated ~16 MB
-          * bound covers the POSITION ARRAYS too (a position-heavy
-          * corpus would otherwise buffer `flushEntries` docs' worth of
-          * arrays, far past the documented envelope). */
+        /** the docs' positions in `keys` order; null on a postings-only stream */
+        var pos: ArrayBuffer[Array[Int]] = null
+        /** units charged: one per key plus its positions — with
+          * positions, exactly the length of the chunk's position stream */
         var units = 0
       }
       private val bufs = new scala.collection.mutable.AnyRefMap[String, Buf]
       private var entries = 0
-      private var out: Iterator[(String, Long, Array[Byte], Array[Byte], Array[Byte])] =
-        Iterator.empty
+      private var out: Iterator[Chunk] = Iterator.empty
 
-      private def chunkOf(term: String, b: Buf)
-          : (String, Long, Array[Byte], Array[Byte], Array[Byte]) = {
-        val n = b.keys.length
-        val order = (0 until n).sortBy(i => b.keys(i)).toArray
-        val docs = new Array[Int](n)
-        val tfs = new Array[Int](n)
-        var posInts = 0
+      private def chunkOf(term: String, b: Buf): Chunk = {
+        val ks = b.keys.toArray
+        var posBytes: Array[Byte] = null
+        // file-packed scan partitions can interleave docid ranges — the
+        // sort restores strict order (a no-op pass when already sorted)
+        if (b.pos == null) java.util.Arrays.sort(ks)
+        else {
+          val order = ks.indices.sortBy(ks(_))
+          val stream = new Array[Int](b.units)
+          var o = 0
+          order.iterator.zipWithIndex.foreach { case (j, i) =>
+            ks(i) = b.keys(j)
+            val ps = b.pos(j)
+            stream(o) = ps.length
+            System.arraycopy(ps, 0, stream, o + 1, ps.length)
+            o += ps.length + 1
+          }
+          posBytes = VByte.encode(stream)
+        }
+        val docs = new Array[Int](ks.length)
+        val tfs = new Array[Int](ks.length)
         var i = 0
-        while (i < n) {
-          val k = b.keys(order(i))
-          docs(i) = keyDoc(k); tfs(i) = keyTf(k)
-          posInts += b.pos(order(i)).length + 1
-          i += 1
-        }
-        val stream = new Array[Int](posInts)
-        var o = 0
-        i = 0
-        while (i < n) {
-          val ps = b.pos(order(i))
-          stream(o) = ps.length; o += 1
-          System.arraycopy(ps, 0, stream, o, ps.length); o += ps.length
-          i += 1
-        }
-        (term, b.keys(order(0)), VByte.encodeDeltas(docs), VByte.encode(tfs),
-          VByte.encode(stream))
+        while (i < ks.length) { docs(i) = keyDoc(ks(i)); tfs(i) = keyTf(ks(i)); i += 1 }
+        (term, ks(0), VByte.encodeDeltas(docs), VByte.encode(tfs), posBytes)
       }
 
       private def fill(): Unit =
         while (!out.hasNext && rows.hasNext) {
-          val ready =
-            ArrayBuffer.empty[(String, Long, Array[Byte], Array[Byte], Array[Byte])]
+          val ready = ArrayBuffer.empty[Chunk]
           while (rows.hasNext && entries < flushEntries) {
-            val (t, d, ps, tf) = rows.next()
+            val (t, d, tf, ps) = rows.next()
             val b = bufs.getOrElseUpdate(t, new Buf)
             if (b.keys.nonEmpty &&
                 keyDoc(b.keys(b.keys.length - 1)) / docsPerShard != d / docsPerShard) {
+              // shard boundary: seal this term's chunk, start the next
               ready += chunkOf(t, b)
               entries -= b.units
-              b.keys.clear(); b.pos.clear(); b.units = 0
+              b.keys.clear(); if (b.pos != null) b.pos.clear(); b.units = 0
             }
             b.keys += packKey(d, tf)
-            b.pos += ps
-            // charge keys AND position ints against the budget
-            b.units += ps.length + 1
-            entries += ps.length + 1
+            val units =
+              if (ps == null) 1
+              else {
+                if (b.pos == null) b.pos = new ArrayBuffer[Array[Int]](4)
+                b.pos += ps
+                ps.length + 1
+              }
+            b.units += units
+            entries += units
           }
           if (!rows.hasNext || entries >= flushEntries) {
             bufs.foreach { case (t, b) => if (b.keys.nonEmpty) ready += chunkOf(t, b) }
@@ -326,140 +298,67 @@ object IndexBuild {
         }
 
       override def hasNext: Boolean = { fill(); out.hasNext }
-      override def next(): (String, Long, Array[Byte], Array[Byte], Array[Byte]) = {
-        fill(); out.next()
-      }
+      override def next(): Chunk = { fill(); out.next() }
     }
 
-  /** Reduce-side inverse of [[chunkPositionRows]]: sorted chunk rows →
-    * the sorted (term, docId, positions, tf, bucket) row stream the
-    * positions table stores (bucket re-derived from the term). Same
-    * overlap-merge contract as [[flattenChunks]]. */
-  def flattenPositionChunks(
-      rows: Iterator[(String, Long, Array[Byte], Array[Byte], Array[Byte])],
-      termBuckets: Int): Iterator[(String, Int, Array[Int], Int, Int)] =
-    new Iterator[(String, Int, Array[Int], Int, Int)] {
+  /** The reduce-side inverse of [[chunkRows]]: chunk rows sorted by
+    * (term, firstKey) → the sorted token stream. Consecutive same-term
+    * chunks whose docid ranges overlap (possible only when a map task saw
+    * docids out of order) are decoded together and merge-sorted; the
+    * common disjoint case streams one chunk at a time. */
+  def flattenChunks(rows: Iterator[Chunk]): Iterator[TokenRow] =
+    new Iterator[TokenRow] {
       private val it = rows.buffered
       private var term: String = null
-      private var bucket = 0
       private var keys: Array[Long] = Array.emptyLongArray
-      private var poss: Array[Array[Int]] = Array.empty
-      private var pos = 0
+      private var poss: Array[Array[Int]] = null
+      private var i = 0
 
-      private def decode(c: (String, Long, Array[Byte], Array[Byte], Array[Byte]))
-          : (Array[Long], Array[Array[Int]]) = {
+      private def decode(c: Chunk): (Array[Long], Array[Array[Int]]) = {
         val docs = VByte.decodeDeltas(c._3)
         val tfs = VByte.decode(c._4)
-        val stream = VByte.decode(c._5)
         val ks = new Array[Long](docs.length)
-        val ps = new Array[Array[Int]](docs.length)
-        var i = 0
-        var o = 0
-        while (i < docs.length) {
-          ks(i) = packKey(docs(i), tfs(i))
-          val n = stream(o); o += 1
-          ps(i) = java.util.Arrays.copyOfRange(stream, o, o + n); o += n
-          i += 1
+        var j = 0
+        while (j < docs.length) { ks(j) = packKey(docs(j), tfs(j)); j += 1 }
+        if (c._5 == null) (ks, null)
+        else {
+          val stream = VByte.decode(c._5)
+          var o = 0
+          (ks, Array.fill(docs.length) {
+            val n = stream(o)
+            o += n + 1
+            java.util.Arrays.copyOfRange(stream, o - n, o)
+          })
         }
-        (ks, ps)
       }
 
       private def refill(): Unit = {
         val head = it.next()
         term = head._1
-        bucket = bucketOfIndexed(term, termBuckets)
         var (ks, ps) = decode(head)
         while (it.hasNext && it.head._1 == term &&
                keyDoc(it.head._2) <= keyDoc(ks(ks.length - 1))) {
           val (nk, np) = decode(it.next())
           val mk = ks ++ nk
-          val mp = ps ++ np
-          val order = mk.indices.sortBy(i => mk(i)).toArray
-          ks = order.map(i => mk(i))
-          ps = order.map(i => mp(i))
+          // docids are globally unique → strict order
+          if (ps == null) { java.util.Arrays.sort(mk); ks = mk }
+          else {
+            val mp = ps ++ np
+            val order = mk.indices.sortBy(mk(_))
+            ks = order.map(mk(_)).toArray
+            ps = order.map(mp(_)).toArray
+          }
         }
-        keys = ks; poss = ps; pos = 0
+        keys = ks; poss = ps; i = 0
       }
 
-      override def hasNext: Boolean = pos < keys.length || it.hasNext
-      override def next(): (String, Int, Array[Int], Int, Int) = {
-        if (pos >= keys.length) refill()
-        val k = keys(pos)
-        val p = poss(pos)
-        pos += 1
-        (term, keyDoc(k), p, keyTf(k), bucket)
-      }
-    }
-
-  /** The ONE positions-table write: shard-salted exchange (sentinel
-    * skew — see [[buildFromDocs]]) of packed position chunks
-    * ([[chunkPositionRows]], the [[encodeBlocks]] transport for
-    * positions), unpacked to the sorted (term, docId) rows before the
-    * partitionBy(bucket) write. */
-  def writePositions(ds: Dataset[(String, Int, Array[Int], Int, Int)],
-                     outDir: String, cfg: IndexConfig,
-                     numPartitions: Int): Unit = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val shardWidth = cfg.docsPerShard.toLong << 32
-    ds.map(r => (r._1, r._2, r._3, r._4))
-      .mapPartitions(rows => chunkPositionRows(rows, cfg.docsPerShard))
-      .toDF("term", "firstKey", "docBytes", "tfBytes", "posBytes")
-      .repartition(numPartitions, col("term"),
-        expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
-      .sortWithinPartitions(col("term"), col("firstKey"))
-      .as[(String, Long, Array[Byte], Array[Byte], Array[Byte])]
-      .mapPartitions(rows => flattenPositionChunks(rows, cfg.termBuckets))
-      .toDF(PositionsCols: _*)
-      .write.mode("overwrite").partitionBy("bucket").parquet(outDir)
-  }
-
-  /** Reduce-side inverse of [[chunkPartition]]: chunk rows sorted by
-    * (term, firstKey) → the sorted (term, key) stream
-    * [[encodePartition]] expects. Consecutive same-term chunks whose
-    * docid ranges overlap (possible only when a map task saw docids out
-    * of order) are decoded together and merge-sorted; the common
-    * disjoint case streams one chunk at a time. */
-  def flattenChunks(rows: Iterator[(String, Long, Array[Byte], Array[Byte])])
-      : Iterator[(String, Long)] =
-    new Iterator[(String, Long)] {
-      private val it = rows.buffered
-      private var term: String = null
-      private var keys: Array[Long] = Array.emptyLongArray
-      private var pos = 0
-
-      private def decode(c: (String, Long, Array[Byte], Array[Byte])): Array[Long] = {
-        val docs = VByte.decodeDeltas(c._3)
-        val tfs = VByte.decode(c._4)
-        val ks = new Array[Long](docs.length)
-        var i = 0
-        while (i < docs.length) { ks(i) = packKey(docs(i), tfs(i)); i += 1 }
-        ks
-      }
-
-      private def refill(): Unit = {
-        val head = it.next()
-        term = head._1
-        var cur = decode(head)
-        while (it.hasNext && it.head._1 == term &&
-               keyDoc(it.head._2) <= keyDoc(cur(cur.length - 1))) {
-          val nxt = decode(it.next())
-          val merged = new Array[Long](cur.length + nxt.length)
-          System.arraycopy(cur, 0, merged, 0, cur.length)
-          System.arraycopy(nxt, 0, merged, cur.length, nxt.length)
-          java.util.Arrays.sort(merged) // docids are globally unique → strict order
-          cur = merged
-        }
-        keys = cur
-        pos = 0
-      }
-
-      override def hasNext: Boolean = pos < keys.length || it.hasNext
-      override def next(): (String, Long) = {
-        if (pos >= keys.length) refill()
-        val k = keys(pos)
-        pos += 1
-        (term, k)
+      override def hasNext: Boolean = i < keys.length || it.hasNext
+      override def next(): TokenRow = {
+        if (i >= keys.length) refill()
+        val k = keys(i)
+        val ps = if (poss == null) null else poss(i)
+        i += 1
+        (term, keyDoc(k), keyTf(k), ps)
       }
     }
 
@@ -481,38 +380,13 @@ object IndexBuild {
     else docs0
   }
 
-  /** One document's posting keys from ONE tokenize call per field: a
-    * (term, packKey(docId, tf)) row per distinct non-stop term (tf
-    * summed across fields), then the [[LenTerm]] sentinel whose tf is
-    * the full token count (the BM25 `len`, stop words included). Fields
-    * tokenize in fid order with their own locale hint, as in
-    * [[positionRowsOf]]. */
-  private def termKeysOf(docId: Int, fields: Seq[String], stop: Set[String],
-                         tok: Tokenizer.TokSettings): Iterator[(String, Long)] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    var total = 0
-    fields.iterator.zipWithIndex.foreach { case (f, fid) =>
-      val toks = Tokenizer.tokenize(f, tok.forFid(fid))
-      total += toks.length
-      toks.foreach { t =>
-        if (stop.isEmpty || !stop.contains(t.term))
-          m.update(t.term, m.getOrElse(t.term, 0) + 1)
-      }
-    }
-    m.iterator.map { case (term, tf) => (term, packKey(docId, tf)) } ++
-      Iterator.single((LenTerm, packKey(docId, total)))
-  }
-
   def build(spark: SparkSession, corpus: Dataset[SourceFile], indexDir: String,
             cfg: IndexConfig = IndexConfig()): Unit = {
     // ---- stage: docs = docid assignment + doc store -------------------
     Lineage.stage(spark, indexDir, "docs") {
-      val storageRows =
-        if (cfg.storageOrderIds) docsStorageOrder(spark, corpus, indexDir)
-        else None
-      storageRows.getOrElse(
-        rankDocs(spark, corpus, 0L, s"$indexDir/docs", cfg.numPartitions,
-          "docs")((p, off, c) => s"docs:$p:$off:$c"))
+      if (cfg.storageOrderIds) docsStorageOrder(spark, corpus, indexDir)
+      else rankDocs(spark, corpus, 0L, s"$indexDir/docs", cfg.numPartitions,
+        "docs")((p, off, c) => s"docs:$p:$off:$c")
     }
     buildFromDocs(spark, indexDir, cfg)
   }
@@ -591,8 +465,7 @@ object IndexBuild {
     * storage-order id invariant silently: `_metadata.row_index` is the
     * PHYSICAL row index, so a corpus with rows filtered out would
     * produce per-file counts smaller than the surviving indices and
-    * docids would collide across files. Such plans must take the
-    * sorted fallback. */
+    * docids would collide across files. Such plans are refused. */
   private def isBareFileScan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     def walk(p: LogicalPlan): Boolean = p match {
@@ -610,33 +483,28 @@ object IndexBuild {
     * columns of file-backed sources. ZERO corpus shuffle: one metadata-
     * only job counts rows per file (no content column is read), then
     * the doc write is a narrow codegen'd projection joined with the
-    * broadcast per-file offset table. Returns None when the corpus is
-    * not a direct file scan (caller falls back to [[rankDocs]]). */
+    * broadcast per-file offset table. A corpus that is not a bare file
+    * scan with `_metadata.row_index` is refused before any job runs:
+    * the caller asked for storage-order ids, and sorted ids under the
+    * same option would be a different id assignment. */
   private def docsStorageOrder(spark: SparkSession, corpus: Dataset[SourceFile],
-                               indexDir: String): Option[Seq[LineageRow]] = {
+                               indexDir: String): Seq[LineageRow] = {
     import spark.implicits._
     val src = corpus.toDF()
-    def fallBack(reason: String): Option[Seq[LineageRow]] = {
-      System.err.println("[build] storageOrderIds requested but the " +
-        s"corpus is not a bare file scan ($reason) — falling back to " +
-        "sorted docid assignment")
-      None
-    }
+    def refuse(reason: String): Nothing =
+      throw new IllegalArgumentException(s"storageOrderIds: the corpus $reason; " +
+        "build from a bare parquet scan, or pass storageOrderIds = false for " +
+        "ids by (repo, path, commit) rank")
     if (!isBareFileScan(src))
-      return fallBack("plan has filter/limit/join/transform nodes")
-    val counts =
-      try {
-        // analysis of BOTH _metadata columns up front: a source without
-        // row_index support (e.g. a JSON scan) throws here, before any
-        // job runs, and takes the fallback
-        src.select(col("_metadata.file_path"), col("_metadata.row_index"))
-        src.select(col("_metadata.file_path").as("_file"))
-          .groupBy($"_file").count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          return fallBack("_metadata file_path/row_index unavailable")
-      }
+      refuse("is not a bare file scan (its plan has filter/limit/join/transform nodes)")
+    try src.select(col("_metadata.file_path"), col("_metadata.row_index"))
+    catch {
+      case _: org.apache.spark.sql.AnalysisException =>
+        refuse("source has no _metadata.row_index (not a parquet file scan)")
+    }
+    val counts = src.select(col("_metadata.file_path").as("_file"))
+      .groupBy($"_file").count()
+      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
     val offsets = counts.map(_._2).scanLeft(0L)(_ + _)
     require(offsets.last <= Int.MaxValue.toLong + 1,
       s"${offsets.last} docs exceed the per-index Int cap; shard into " +
@@ -651,20 +519,23 @@ object IndexBuild {
         $"repo", $"path", $"commit", $"lang", $"content",
         sha2($"content", 256).as("content_sha256"))
       .write.mode("overwrite").parquet(s"$indexDir/docs")
-    Some(counts.zip(offsets).zipWithIndex.collect {
+    counts.zip(offsets).zipWithIndex.collect {
       case (((f, c), off), p) if c > 0 =>
         LineageRow("docs", p, off.toInt, (off + c - 1).toInt, c, 0L,
           Sha.hex(s"docs:$f:$off:$c"), java.time.Instant.now.toString)
-    }.toIndexedSeq)
+    }.toIndexedSeq
   }
 
-  /** Each doc's tokenizer input: `(docId, field values in fid order)`
-    * (a null field tokenizes as empty). The one projection every
-    * tokenize pass reads ([[buildFromDocs]], [[append]]). */
-  private def fieldTexts(docs: DataFrame, fieldCols: Seq[String]): Dataset[(Int, Seq[String])] = {
+  /** The one tokenize pass of [[buildFromDocs]] and [[append]]: each
+    * doc's `(docId, field values in fid order)` (a null field tokenizes
+    * as empty) through [[positionRowsOf]]. */
+  private def tokenRows(docs: DataFrame, fieldCols: Seq[String],
+                        cfg: IndexConfig): Dataset[TokenRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val (stop, tok, pos) = (cfg.stopWords, cfg.tokenizer, cfg.positions)
     docs.select($"docId", array(fieldCols.map(col): _*)).as[(Int, Seq[String])]
+      .flatMap { case (id, fs) => positionRowsOf(id, fs, stop, tok, pos) }
   }
 
   /** Post-docs build stages (the ONE tokenize pass → postings/positions
@@ -681,47 +552,32 @@ object IndexBuild {
                             cfg: IndexConfig,
                             fieldCols: Seq[String] = Seq("content")): Unit = {
     import spark.implicits._
-    val tok = cfg.tokenizer
     // fixed read schema (no inference job); a single-field index's one
     // text column is docs/' own `content`
-    val texts = fieldTexts(spark.read.schema(docsSchema(fieldCols.filterNot(_ == "content")))
-      .parquet(s"$indexDir/docs"), fieldCols)
+    val rows = tokenRows(spark.read.schema(docsSchema(fieldCols.filterNot(_ == "content")))
+      .parquet(s"$indexDir/docs"), fieldCols, cfg)
     val tb = cfg.termBuckets
-    val stop = cfg.stopWords
 
     if (cfg.positions) {
       // positions FIRST (single tokenize; per-doc grouping is doc-local,
-      // so the only shuffle is the by-term repartition for the write).
-      // The repartition is salted by derived shard: partitionBy(bucket)
-      // already controls on-disk placement, and without the salt every
-      // [[LenTerm]] sentinel row (one per document) hashes to ONE
-      // reducer — a single task sorting and writing a row per document,
-      // a hard skew wall at the 10^12-doc design target.
+      // so the only shuffle is the chunk shuffle of the write)
       Lineage.stage(spark, indexDir, "positions") {
-        writePositions(
-          texts.flatMap { case (id, fs) => positionRowsOf(id, fs, stop, tok, tb) },
-          s"$indexDir/positions", cfg, cfg.numPartitions)
+        writePositions(rows, s"$indexDir/positions", cfg, cfg.numPartitions)
         Nil
       }
       doclenStage(spark, indexDir, cfg)
       // postings derive from a narrow column-pruned (term, docId, tf)
       // scan of the committed positions — never a second tokenize
       Lineage.stage(spark, indexDir, "postings") {
-        encodeBlocks(positionKeys(spark, s"$indexDir/positions", tb), cfg)
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$indexDir/postings")
+        encodeBlocks(positionKeys(spark, s"$indexDir/positions", tb), cfg,
+          s"$indexDir/postings")
         postingLineage(spark, s"$indexDir/postings", "postings")
       }
     } else {
       // no positions: the tokenize pass feeds the posting shuffle
       // directly; sentinel len rows ride the same shuffle
       Lineage.stage(spark, indexDir, "postings") {
-        encodeBlocks(
-          texts.flatMap { case (id, fs) => termKeysOf(id, fs, stop, tok) }
-            .toDF("term", "key"),
-          cfg)
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$indexDir/postings")
+        encodeBlocks(rows.toDF(TokenCols: _*), cfg, s"$indexDir/postings")
         // doclen extraction FUSED into this stage: a kill anywhere in
         // here re-runs the whole stage from a clean overwrite
         val sentinel = s"$indexDir/postings/bucket=$tb"
@@ -780,42 +636,51 @@ object IndexBuild {
       fieldCols.map(StructField(_, StringType)) :+ base.fields.last)
   }
 
+  /** [[TokenRow]]'s column names. */
+  final val TokenCols: Seq[String] = Seq("term", "docId", "tf", "positions")
+
+  /** Columns of positions/ and prefix_positions/ as [[writePositions]]
+    * writes them. */
   final val PositionsCols: Seq[String] =
     Seq("term", "docId", "positions", "tf", "bucket")
 
-  /** Read schema of positions/ and prefix_positions/ (the latter has no
-    * `tf`; no reader needs it, so it is pruned from both). */
+  /** Read schema of positions/ and prefix_positions/: both hold `tf` as
+    * well, which no reader needs, so it is pruned. */
   final val PositionsSchemaDdl =
     "term STRING, docId INT, positions ARRAY<INT>, bucket INT"
 
-  /** One document's position-table rows from ONE tokenize call: per-term
-    * occurrence positions (stop words excluded, positions clamped to
-    * 0xffff, `tf` = occurrence count so postings derive without reading
-    * the arrays) followed by the [[LenTerm]] sentinel whose tf is the
-    * FULL token count including stop words (the BM25 `len` norm).
-    * `fields` are tokenized in fid order; positions carry fid<<16 for
-    * multi-field (reference lib.rs:201-208). */
+  /** One document's token rows from ONE tokenize call per field: a row
+    * per distinct non-stop term (tf summed across fields), then the
+    * [[LenTerm]] sentinel whose tf is the FULL token count including
+    * stop words (the BM25 `len` norm). With `positions`, each row also
+    * carries the term's occurrence positions (clamped to 0xffff, fid<<16
+    * for multi-field — reference lib.rs:201-208; tf = their count, so
+    * postings derive without reading the arrays) and the sentinel
+    * carries `[len]`; without, no position is buffered. Fields tokenize
+    * in fid order, each with its own locale hint. */
   def positionRowsOf(docId: Int, fields: Seq[String], stop: Set[String],
-                     tok: Tokenizer.TokSettings, termBuckets: Int)
-      : Iterator[(String, Int, Array[Int], Int, Int)] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, ArrayBuffer[Int]]
+                     tok: Tokenizer.TokSettings, positions: Boolean): Iterator[TokenRow] = {
+    val tfs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val pos = scala.collection.mutable.LinkedHashMap.empty[String, ArrayBuffer[Int]]
     var total = 0
-    var fid = 0
-    fields.foreach { f =>
+    fields.iterator.zipWithIndex.foreach { case (f, fid) =>
       // per-field locale hints resolve the CJK unigram mode for THIS
       // fid (Tokenizer.TokSettings.forFid; no-op without localesByFid)
       val toks = Tokenizer.tokenize(f, tok.forFid(fid))
       total += toks.length
       toks.foreach { t =>
-        if (stop.isEmpty || !stop.contains(t.term))
-          m.getOrElseUpdate(t.term, new ArrayBuffer[Int]) +=
-            ((fid << 16) | math.min(t.pos, 0xffff))
+        if (stop.isEmpty || !stop.contains(t.term)) {
+          if (positions)
+            pos.getOrElseUpdate(t.term, new ArrayBuffer[Int]) +=
+              ((fid << 16) | math.min(t.pos, 0xffff))
+          else tfs.update(t.term, tfs.getOrElse(t.term, 0) + 1)
+        }
       }
-      fid += 1
     }
-    m.iterator.map { case (term, ps) =>
-      (term, docId, ps.toArray, ps.length, bucketOfIndexed(term, termBuckets))
-    } ++ Iterator.single((LenTerm, docId, Array(total), total, termBuckets))
+    val rows: Iterator[TokenRow] =
+      if (positions) pos.iterator.map { case (t, ps) => (t, docId, ps.length, ps.toArray) }
+      else tfs.iterator.map { case (t, tf) => (t, docId, tf, null) }
+    rows ++ Iterator.single((LenTerm, docId, total, if (positions) Array(total) else null))
   }
 
   /** The one doclen/ schema every writer produces: one row per document,
@@ -900,14 +765,13 @@ object IndexBuild {
     (parts.map(_._1).sum, parts.map(_._2).sum)
   }
 
-  /** (term, key) posting rows from the narrow (term, docId, tf) columns
-    * of a positions table, its [[LenTerm]] sentinel partition excluded:
-    * postings derive from positions without a second tokenize. */
+  /** The narrow (term, docId, tf) columns of a positions table, its
+    * [[LenTerm]] sentinel partition excluded: postings derive from
+    * positions without a second tokenize. */
   private def positionKeys(spark: SparkSession, dir: String,
                            termBuckets: Int): DataFrame =
     spark.read.schema("term STRING, docId INT, tf INT, bucket INT").parquet(dir)
       .filter(col("bucket") =!= termBuckets)
-      .select(col("term"), packKeyCol(col("docId"), col("tf")).as("key"))
 
   /** dict/ from a column-pruned posting-metadata scan (shared by build
     * and append; the [[LenTerm]] filter is pure defense — the sentinel
@@ -942,7 +806,6 @@ object IndexBuild {
   def append(spark: SparkSession, delta: Dataset[SourceFile], indexDir: String,
              cfg: IndexConfig, batchId: String): Unit = {
     import spark.implicits._
-    val tok = cfg.tokenizer
     // multi-field docs/ rows also carry every field column, which the
     // single-content delta rows below cannot supply — fail fast
     require(!exists(spark, s"$indexDir/fields"),
@@ -973,42 +836,33 @@ object IndexBuild {
       if (batch.nonEmpty) {
         val (lo, hi) = (batch.map(_.docidMin).min, batch.map(_.docidMax).max)
         val tb = cfg.termBuckets
-        val deltaDocs = fieldTexts(
-          spark.read.schema(DocsSchemaDdl).parquet(s"$indexDir/docs")
-            .filter($"docId".between(lo, hi)), Seq("content"))
-        val stop = cfg.stopWords
-        // ONE tokenize pass over the delta: position rows (when enabled)
-        // or term keys, with sentinel len rows riding the same shuffle;
-        // the sentinel partition becomes the batch's doclen/ delta
+        // ONE tokenize pass over the delta, with sentinel len rows riding
+        // the same shuffle; the sentinel partition becomes the batch's
+        // doclen/ delta
+        val rows = tokenRows(spark.read.schema(DocsSchemaDdl).parquet(s"$indexDir/docs")
+          .filter($"docId".between(lo, hi)), Seq("content"), cfg)
         val staging = s"$indexDir/_stage_postings_$batchId"
         if (cfg.positions) {
           val pstaging = s"$indexDir/_stage_positions_$batchId"
-          writePositions(
-            deltaDocs.flatMap { case (id, fs) => positionRowsOf(id, fs, stop, tok, tb) },
-            pstaging, cfg, math.max(1, cfg.numPartitions / 2))
+          writePositions(rows, pstaging, cfg, math.max(1, cfg.numPartitions / 2))
           // postings delta from the STAGED positions (narrow scan, no
           // second tokenize)
-          encodeBlocks(positionKeys(spark, pstaging, tb), cfg)
-            .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+          encodeBlocks(positionKeys(spark, pstaging, tb), cfg, staging)
           writeStatsDelta(spark, indexDir, batchId, s"$pstaging/bucket=$tb")
           // the staged sentinel files move into doclen/ as-is — zero jobs
           Lineage.publishAppend(spark, s"$pstaging/bucket=$tb",
             s"$indexDir/doclen", s"b$batchId")
-          Lineage.publishAppend(spark, staging, s"$indexDir/postings", s"b$batchId")
           Lineage.publishAppend(spark, pstaging, s"$indexDir/positions", s"b$batchId")
         } else {
-          deltaDocs.flatMap { case (id, fs) => termKeysOf(id, fs, stop, tok) }
-            .toDF("term", "key")
-            .transform(encodeBlocks(_, cfg))
-            .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+          encodeBlocks(rows.toDF(TokenCols: _*), cfg, staging)
           val lstaging = s"$indexDir/_stage_doclen_$batchId"
           sentinelDoclen(spark, s"$staging/bucket=$tb").coalesce(1)
             .write.mode("overwrite").parquet(lstaging)
           deleteDir(spark, s"$staging/bucket=$tb")
           writeStatsDelta(spark, indexDir, batchId, lstaging)
           Lineage.publishAppend(spark, lstaging, s"$indexDir/doclen", s"b$batchId")
-          Lineage.publishAppend(spark, staging, s"$indexDir/postings", s"b$batchId")
         }
+        Lineage.publishAppend(spark, staging, s"$indexDir/postings", s"b$batchId")
       }
       Nil
     }
@@ -1097,8 +951,9 @@ object IndexBuild {
     *   prefixes/bucket=B/ merged posting blocks keyed by the prefix
     *                      (same EncodedCols layout as postings/, so the
     *                      query-side decode path is shared verbatim)
-    *   prefix_positions/bucket=B/  merged position arrays per
-    *                      (prefix, docId) — the reference's
+    *   prefix_positions/bucket=B/  merged position arrays (and Σ member
+    *                      tf) per (prefix, docId), written like
+    *                      positions/ — the reference's
     *                      word_prefix_position_docids analogue, feeding
     *                      proximity/attribute ranks for prefix slots
     *
@@ -1112,8 +967,9 @@ object IndexBuild {
     * thresholds); a rerun after any committed mutation rebuilds, a rerun
     * over an unchanged index runs no Spark job. The marker is written
     * LAST, so a killed rebuild re-runs (idempotent overwrite).
-    * One decode pass over the posting blocks + one bounded shuffle per
-    * table — never per query. */
+    * Per table, one decode pass and one merge shuffle, then the chunk
+    * shuffle of [[encodeBlocks]] or [[writePositions]] — never per
+    * query. */
   def buildPrefixIndex(spark: SparkSession, indexDir: String, cfg: IndexConfig,
                        maxLen: Int = PrefixMaxLen, minDf: Long = PrefixMinDf): Unit = {
     import spark.implicits._
@@ -1136,8 +992,8 @@ object IndexBuild {
       .select($"term".as("prefix"))
 
     // merged prefix postings: decode → explode member prefixes → keep
-    // selected → re-encode through the standard (term, key) shuffle
-    // (same salt, same block layout)
+    // selected → re-encode through the standard chunk shuffle (same
+    // salt, same block layout)
     encodeBlocks(
       spark.read.schema(BlocksSchemaDdl).parquet(s"$indexDir/postings")
         .select($"term", $"docBytes", $"tfBytes")
@@ -1152,32 +1008,27 @@ object IndexBuild {
         .toDF("prefix", "docId", "tf")
         .join(sel, Seq("prefix"), "left_semi")
         .groupBy($"prefix", $"docId").agg(sum($"tf").cast("int").as("tf"))
-        .select($"prefix".as("term"), packKeyCol($"docId", $"tf").as("key")),
-      cfg)
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/prefixes")
+        .select($"prefix".as("term"), $"docId", $"tf"),
+      cfg, s"$indexDir/prefixes")
 
     // merged prefix positions (only when the index has positions)
-    val tb = cfg.termBuckets
     if (exists(spark, s"$indexDir/positions")) {
-      spark.read.schema(PositionsSchemaDdl).parquet(s"$indexDir/positions")
-        .select($"term", $"docId", $"positions")
-        .as[(String, Int, Array[Int])]
-        .flatMap { case (t, d, ps) =>
-          (1 to math.min(maxLen, t.length)).map(l => (t.substring(0, l), d, ps))
-        }
-        .toDF("prefix", "docId", "positions")
-        .join(sel, Seq("prefix"), "left_semi")
-        .groupBy($"prefix", $"docId")
-        .agg(sort_array(array_distinct(flatten(collect_list($"positions"))))
-          .as("positions"))
-        .select($"prefix".as("term"), $"docId", $"positions")
-        .as[(String, Int, Array[Int])]
-        .map { case (t, d, ps) => (t, d, ps, bucketOf(t, tb)) }
-        .toDF("term", "docId", "positions", "bucket")
-        .repartition(math.max(1, cfg.numPartitions / 2), $"term")
-        .sortWithinPartitions($"term", $"docId")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$indexDir/prefix_positions")
+      writePositions(
+        spark.read.schema("term STRING, docId INT, tf INT, positions ARRAY<INT>")
+          .parquet(s"$indexDir/positions")
+          .select(TokenCols.map(col): _*).as[TokenRow]
+          .flatMap { case (t, d, tf, ps) =>
+            (1 to math.min(maxLen, t.length)).map(l => (t.substring(0, l), d, tf, ps))
+          }
+          .toDF("prefix", "docId", "tf", "positions")
+          .join(sel, Seq("prefix"), "left_semi")
+          .groupBy($"prefix", $"docId")
+          .agg(sum($"tf").cast("int").as("tf"),
+            sort_array(array_distinct(flatten(collect_list($"positions"))))
+              .as("positions"))
+          .select($"prefix".as("term"), $"docId", $"tf", $"positions")
+          .as[TokenRow],
+        s"$indexDir/prefix_positions", cfg, math.max(1, cfg.numPartitions / 2))
     }
     // marker LAST (killed rebuild re-runs); plain file, no Spark job
     Lineage.writeMarker(spark, s"$indexDir/prefix_meta/$FprFile", sig)
@@ -1194,13 +1045,15 @@ object IndexBuild {
     * tombstone fraction justifies reclaiming scan/skip efficiency).
     * Reads only docs/ and deleted/ of `indexDir`, so its format stamp is
     * not checked: compacting into a fresh directory is also the way to
-    * carry an index written by an older format forward. */
+    * carry an index written by an older format forward. Ids are always
+    * assigned by (repo, path, commit) rank: the live docs are no bare
+    * file scan once anything was deleted. */
   def compact(spark: SparkSession, indexDir: String, outDir: String,
               cfg: IndexConfig): Unit = {
     import spark.implicits._
     val live = liveDocs(spark, indexDir)
     build(spark, live.select($"repo", $"path", $"commit", $"lang", $"content")
-      .as[graft.corpus.SourceFile], outDir, cfg)
+      .as[graft.corpus.SourceFile], outDir, cfg.copy(storageOrderIds = false))
   }
 
   /** stats/ holds the BM25 corpus totals as small `key=value` text
@@ -1367,12 +1220,12 @@ object IndexBuild {
       docsLineage(spark, indexDir)
     }: Unit
 
-  /** Streaming block encoder: input (term, packKey(docId, tf)) sorted by
-    * (term, key) within the partition — equivalently (term, shard,
-    * docId); emits one [[EncodedCols]] block row per `blockSize`
-    * docids of each (term, shard) run. The single sanctioned imperative
-    * spot (SURVEY §4.4). */
-  def encodePartition(rows: Iterator[(String, Long)],
+  /** Streaming block encoder: input token rows sorted by (term, docId)
+    * within the partition — equivalently (term, shard, docId); emits one
+    * [[EncodedCols]] block row per `blockSize` docids of each
+    * (term, shard) run. The single sanctioned imperative spot (SURVEY
+    * §4.4). */
+  def encodePartition(rows: Iterator[TokenRow],
                       blockSize: Int, termBuckets: Int, docsPerShard: Int)
       : Iterator[(String, Int, Int, Int, Int, Int, Array[Byte], Array[Byte], Int, Long, Int, Int)] = {
     new Iterator[(String, Int, Int, Int, Int, Int, Array[Byte], Array[Byte], Int, Long, Int, Int)] {
@@ -1383,12 +1236,11 @@ object IndexBuild {
       override def next() = {
         if (!out.hasNext) {
           val term = it.head._1
-          val shard = keyDoc(it.head._2) / docsPerShard
+          val shard = it.head._2 / docsPerShard
           val docIds = new ArrayBuffer[Int](blockSize)
           val tfs = new ArrayBuffer[Int](blockSize)
-          while (it.hasNext && it.head._1 == term &&
-                 keyDoc(it.head._2) / docsPerShard == shard) {
-            val k = it.next()._2; docIds += keyDoc(k); tfs += keyTf(k)
+          while (it.hasNext && it.head._1 == term && it.head._2 / docsPerShard == shard) {
+            val r = it.next(); docIds += r._2; tfs += r._3
           }
           val bucket = bucketOfIndexed(term, termBuckets)
           out = docIds.grouped(blockSize).zip(tfs.grouped(blockSize))

@@ -70,6 +70,10 @@ object Lineage {
     }.sortBy(_._1.getName)
   }
 
+  /** True iff `indexDir` holds at least one committed stage. */
+  def hasCommits(spark: SparkSession, indexDir: String): Boolean =
+    committed(spark, indexDir).nonEmpty
+
   /** The index generation: a hash of the committed stages' (name,
     * `_COMMITTED` mtime) pairs — O(stages) FileSystem calls, no Spark
     * job. Every build, append and delete commits a uniquely named stage,
@@ -180,7 +184,7 @@ object Lineage {
   private def checkOrStamp(spark: SparkSession, dir: String): Unit =
     readMarker(spark, formatPath(dir).toString) match {
       case Some(FormatStamp) => ()
-      case None if committed(spark, dir).isEmpty => writeFormat(spark, dir)
+      case None if !hasCommits(spark, dir) => writeFormat(spark, dir)
       case found => refuse(dir, found)
     }
 

@@ -122,7 +122,7 @@ class TokSettingsSpec extends AnyFunSuite {
       Seq("abc", "北", "京", "def"))
     // index side: positionRowsOf applies the hint per fid
     val rows = IndexBuild.positionRowsOf(0, Seq("北京", "北京"), Set.empty,
-      lat, termBuckets = 2).toSeq
+      lat, positions = true).toSeq
     val terms = rows.map(_._1).toSet
     assert(terms.contains("北京") && terms.contains("北") && terms.contains("京"),
       s"fid 0 whole (locale en), fid 1 unigrams (locale cmn): $terms")

@@ -9,8 +9,10 @@ import graft.corpus.SourceFile
 /** Output pins for every index builder: a sha256 over the sorted rows
   * of postings/, positions/, doclen/ and docs/, taken from the
   * pipeline as it stood before the row-shuffle and bucket-wave build
-  * arms were deleted. Rows only — part-file names (which carry write
-  * UUIDs and batch tags) never enter a digest. A build refactor that
+  * arms were deleted, and of prefixes/ and prefix_positions/, taken
+  * before prefix_positions/ moved onto the shared positions write.
+  * Rows only — part-file names (which carry write UUIDs and batch
+  * tags) never enter a digest. A build refactor that
   * changes a single posting block, position array, doc length or doc
   * row fails here. */
 class BuildPinSpec extends AnyFunSuite {
@@ -35,26 +37,32 @@ class BuildPinSpec extends AnyFunSuite {
 
   private def tables = Seq("postings", "positions", "doclen", "docs")
 
+  /** Columns left out of a table's digest: prefix_positions/ gained
+    * `tf` when it moved onto the positions write; every column it held
+    * before stays pinned. */
+  private val Unpinned = Map("prefix_positions" -> Set("tf"))
+
   /** table -> sha256 over its sorted rendered rows (columns in name
     * order; binaries as hex, arrays as lists), for the tables present. */
-  private def digests(dir: String): Map[String, String] = {
+  private def digests(dir: String, names: Seq[String]): Map[String, String] = {
     def render(v: Any): String = v match {
       case null                     => "null"
       case b: Array[Byte]           => b.map(x => f"$x%02x").mkString
       case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
       case o                        => o.toString
     }
-    tables.filter(t => new java.io.File(s"$dir/$t").exists).map { t =>
+    names.filter(t => new java.io.File(s"$dir/$t").exists).map { t =>
       val df = spark.read.parquet(s"$dir/$t")
-      val rows = df.select(df.columns.sorted.map(df.col).toIndexedSeq: _*)
+      val cols = df.columns.filterNot(Unpinned.getOrElse(t, Set.empty[String])).sorted
+      val rows = df.select(cols.map(df.col).toIndexedSeq: _*)
         .collect().map(_.toSeq.map(render).mkString("|")).sorted
       t -> Sha.hex(rows.mkString("\n"))
     }.toMap
   }
 
-  private def assertPinned(name: String, dir: String,
-                           want: Map[String, String]): Unit = {
-    val got = digests(dir)
+  private def assertPinned(name: String, dir: String, want: Map[String, String],
+                           names: Seq[String] = tables): Unit = {
+    val got = digests(dir, names)
     assert(got == want, s"$name: output drifted from the pinned build; got $got")
   }
 
@@ -107,6 +115,15 @@ class BuildPinSpec extends AnyFunSuite {
     assertPinned("buildMultiField", dir, Pins("multifield"))
   }
 
+  test("buildPrefixIndex matches its pinned output") {
+    val dir = newDir("pin-prefix")
+    val c = cfg.copy(positions = true)
+    IndexBuild.build(spark, corpus.toDS(), dir, c)
+    IndexBuild.buildPrefixIndex(spark, dir, c, minDf = 20)
+    assertPinned("buildPrefixIndex", dir, Pins("prefix"),
+      Seq("prefixes", "prefix_positions"))
+  }
+
   private val Pins: Map[String, Map[String, String]] = Map(
     "build-false" -> Map(
       "postings" -> "f2e084a7e0aca4e86d1450a771fb98125c82683bb944a54cfddf8cef7d080887",
@@ -130,6 +147,9 @@ class BuildPinSpec extends AnyFunSuite {
       "postings" -> "5eb29d99f5ba980bcc6d1e48bd8ae0faf7063fe5b1a70d72f4216542f0a15564",
       "doclen" -> "4e8db6ee62e5c9241ced8c998e67944dfd048afc01de5a35ac6d0ae832fb75ec",
       "docs" -> "6f19f42400e776e94fe0185f00c66d8728bc9d676424ec38b7fe17288000a394"),
+    "prefix" -> Map(
+      "prefixes" -> "4bbd66fda6bc024da23a010f2b300fa987419349889acdee6d12a00927810d72",
+      "prefix_positions" -> "dfae43930549f4b367e2762292843ca39005e342264db9253b221f403636d125"),
     "multifield" -> Map(
       "postings" -> "7c0e454112d2c13694f7f8c059e94eefb5843bedb3c0e07382d39d6cf928a7c9",
       "positions" -> "edb223de589234d647a2f1f0befbab25ecdee407d9684bf9dee583aef1dc8c36",

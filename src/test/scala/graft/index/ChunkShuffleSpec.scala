@@ -7,10 +7,11 @@ import org.apache.spark.TestBus
 import graft.SparkTestBase
 import graft.corpus.SourceFile
 
-/** The chunked posting shuffle (map-side delta+VByte chunk combine)
-  * must be a pure transport optimization: the chunk kernels round-trip
-  * to the exact sorted stream, and a build ships fewer shuffle bytes
-  * than a per-posting row shuffle. Same blocks out: BuildPinSpec. */
+/** The chunk shuffle of every posting and position write (map-side
+  * delta+VByte chunk combine) must be a pure transport optimization: the
+  * one chunk codec round-trips to the exact sorted token stream, with
+  * and without positions, and a build ships fewer shuffle bytes than a
+  * per-posting row shuffle. Same blocks out: BuildPinSpec. */
 class ChunkShuffleSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -23,56 +24,51 @@ class ChunkShuffleSpec extends AnyFunSuite {
       (0 until 20).map(j => words((i * 13 + j * 7) % words.length)).mkString(" "))
   }.toDS()
 
-  test("chunk round-trip: flattenChunks(chunkPartition(s)) == sorted s, including shard splits and budget flushes") {
+  /** Checks the one chunk codec on `rows` (interleaved docids, a hot
+    * term, a flush budget of 16): flattenChunks(chunkRows(shuffled))
+    * restores every (term, shard) run sorted, no chunk spans shards, a
+    * postings-only stream ships no position payload, and some run has
+    * overlapping chunks, so the reduce-side merge is exercised. */
+  private def assertRoundTrip(rows: Seq[IndexBuild.TokenRow], seed: Int): Unit = {
     val dps = 16
+    val shuffled = new scala.util.Random(seed).shuffle(rows)
+    // tiny flush budget forces many partial flushes
+    val chunks = IndexBuild.chunkRows(shuffled.iterator, dps, 16).toSeq
+    def view(r: IndexBuild.TokenRow) = (r._1, r._2, r._3, Option(r._4).map(_.toSeq))
+    // simulate the exchange: group by (term, shard), order by firstKey
+    val runs = chunks.groupBy(c => (c._1, IndexBuild.keyDoc(c._2) / dps))
+    runs.foreach { case ((term, shard), cs) =>
+      val got = IndexBuild.flattenChunks(cs.sortBy(_._2).iterator).map(view).toSeq
+      val want = rows.filter(r => r._1 == term && r._2 / dps == shard)
+        .sortBy(_._2).map(view)
+      assert(got == want, s"($term, $shard)")
+      cs.foreach { c =>
+        val docs = graft.functions.VByte.decodeDeltas(c._3)
+        assert(docs.forall(_ / dps == shard), s"chunk spans shards: $term")
+        assert((c._5 == null) == (rows.head._4 == null), s"position payload: $term")
+      }
+    }
+    assert(runs.values.exists { cs =>
+      val spans = cs.map(c => graft.functions.VByte.decodeDeltas(c._3)).sortBy(_.head)
+      spans.zip(spans.drop(1)).exists { case (a, b) => b.head <= a.last }
+    }, "no overlapping chunks: the merge path went untested")
+  }
+
+  test("chunk round-trip: flattenChunks(chunkPartition(s)) == sorted s, including shard splits and budget flushes") {
     // interleaved docids (two 'files' out of order) + a hot term, so
     // shard-boundary seals, out-of-order appends, and overlapping
-    // chunks across map partitions all occur
-    val rows: Seq[(String, Long)] =
-      (0 until 200).flatMap { d =>
-        Seq(("hot", IndexBuild.packKey(d, 1 + d % 3)),
-          (s"t${d % 7}", IndexBuild.packKey(d, 1)))
-      }
-    val shuffled = new scala.util.Random(7).shuffle(rows)
-    // tiny flush budget forces many partial flushes
-    val chunks = IndexBuild.chunkPartition(shuffled.iterator, dps, 16).toSeq
-    // simulate the exchange: group by (term, shard), order by firstKey
-    chunks.groupBy(c => (c._1, IndexBuild.keyDoc(c._2) / dps)).foreach {
-      case ((term, shard), cs) =>
-        val got = IndexBuild.flattenChunks(
-          cs.sortBy(_._2).iterator).toSeq
-        val want = rows.filter(r =>
-          r._1 == term && IndexBuild.keyDoc(r._2) / dps == shard).sortBy(_._2)
-        assert(got == want, s"($term, $shard)")
-        // every chunk stays within one shard
-        cs.foreach { c =>
-          val docs = graft.functions.VByte.decodeDeltas(c._3)
-          assert(docs.forall(_ / dps == shard), s"chunk spans shards: $term")
-        }
-    }
+    // chunks across map partitions all occur; no positions
+    assertRoundTrip((0 until 200).flatMap { d =>
+      Seq[IndexBuild.TokenRow](("hot", d, 1 + d % 3, null), (s"t${d % 7}", d, 1, null))
+    }, seed = 7)
   }
 
   test("position chunk round-trip: flatten(chunk(s)) == sorted s with fid<<16 positions and budget flushes") {
-    val dps = 16
-    val rows: Seq[(String, Int, Array[Int], Int)] =
-      (0 until 120).flatMap { d =>
-        Seq(("hot", Array((1 << 16) | d % 7, (1 << 16) | (d % 7 + 3)), 2),
-          (s"t${d % 5}", Array(d % 11), 1))
-          .map { case (t, ps, tf) => (t, d, ps, tf) }
-      }
-    val shuffled = new scala.util.Random(11).shuffle(rows)
-    val chunks = IndexBuild.chunkPositionRows(shuffled.iterator, dps, 16).toSeq
-    chunks.groupBy(c => (c._1, IndexBuild.keyDoc(c._2) / dps)).foreach {
-      case ((term, shard), cs) =>
-        val got = IndexBuild.flattenPositionChunks(cs.sortBy(_._2).iterator, 3)
-          .map(r => (r._1, r._2, r._3.toSeq, r._4, r._5)).toSeq
-        val want = rows
-          .filter(r => r._1 == term && r._2 / dps == shard)
-          .sortBy(_._2)
-          .map(r => (r._1, r._2, r._3.toSeq, r._4,
-            IndexBuild.bucketOfIndexed(r._1, 3)))
-        assert(got == want, s"($term, $shard)")
-    }
+    assertRoundTrip((0 until 120).flatMap { d =>
+      Seq[IndexBuild.TokenRow](
+        ("hot", d, 2, Array((1 << 16) | d % 7, (1 << 16) | (d % 7 + 3))),
+        (s"t${d % 5}", d, 1, Array(d % 11)))
+    }, seed = 11)
   }
 
   /** Shuffle bytes the whole build below wrote when postings and doc

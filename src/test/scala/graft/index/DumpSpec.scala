@@ -113,6 +113,53 @@ class DumpSpec extends AnyFunSuite {
     assert(e.searchDF("fresh", 20).count() == 4)
   }
 
+  test("re-import of a rewritten dump into the same directory fails fast; a fresh directory holds the new dump") {
+    val dir = Files.createTempDirectory("dumpReImp").toString
+    val dumpDir = Files.createTempDirectory("dumpReImpOut").toString
+    val imported = Files.createTempDirectory("dumpReImpDst").toString
+    val cfg = IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4,
+      numPartitions = 2)
+    IndexBuild.build(spark, (0 until 10).map(i => src(i, s"word$i shared")).toDS(), dir, cfg)
+    Dump.exportDump(spark, dir, dumpDir)
+    Dump.importDump(spark, dumpDir, imported, cfg)
+    assert(new SearchEngine(spark, imported).nDocs == 10)
+    val first = mtimes(imported)
+    Thread.sleep(20) // a rewrite must land on a later mtime
+    Dump.importDump(spark, dumpDir, imported, cfg)
+    assert(mtimes(imported) == first, "same dump: the import must write nothing")
+
+    IndexBuild.append(spark, (10 until 14).map(i => src(i, s"word$i shared fresh")).toDS(),
+      dir, cfg, "b1")
+    val oldSig = Dump.signature(spark, dumpDir)
+    Dump.exportDump(spark, dir, dumpDir)
+    val newSig = Dump.signature(spark, dumpDir)
+    assert(newSig != oldSig)
+    val ex = intercept[IllegalArgumentException](
+      Dump.importDump(spark, dumpDir, imported, cfg))
+    assert(ex.getMessage.contains(oldSig) && ex.getMessage.contains(newSig) &&
+      ex.getMessage.contains("fresh directory"), ex.getMessage)
+    val fresh = Files.createTempDirectory("dumpReImpFresh").toString
+    Dump.importDump(spark, dumpDir, fresh, cfg)
+    assert(new SearchEngine(spark, fresh).nDocs == 14)
+  }
+
+  test("a dump without a settings layout is refused with re-export") {
+    val dir = Files.createTempDirectory("dumpNoLayout").toString
+    val dumpDir = Files.createTempDirectory("dumpNoLayoutOut").toString
+    IndexBuild.build(spark, (0 until 4).map(i => src(i, s"word$i")).toDS(), dir,
+      IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4, numPartitions = 2))
+    Dump.exportDump(spark, dir, dumpDir)
+    // the settings row as an engine without the layout field wrote it
+    val part = new java.io.File(s"$dumpDir/settings").listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    Files.writeString(part.toPath,
+      Files.readString(part.toPath).replaceFirst("\"layout\":\\d+,", ""))
+    new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+    val ex = intercept[IllegalArgumentException](Dump.importDump(spark, dumpDir,
+      Files.createTempDirectory("dumpNoLayoutDst").toString, IndexConfig(numPartitions = 2)))
+    assert(ex.getMessage.contains("re-export"), ex.getMessage)
+  }
+
   test("multi-field indexes fail fast on export (format cannot carry fields)") {
     val dir = Files.createTempDirectory("dumpMf").toString
     val df = Seq((0L, "t0", "b0"), (1L, "t1", "b1")).toDF("doc_id", "title", "body")

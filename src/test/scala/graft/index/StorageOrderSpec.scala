@@ -9,7 +9,8 @@ import graft.search.SearchEngine
 
 /** Storage-order docid assignment (IndexConfig.storageOrderIds): ids
   * follow (file path, row index) with ZERO corpus shuffle; retrieval is
-  * id-permutation-equivalent to the sorted build. */
+  * id-permutation-equivalent to the sorted build. A corpus that is not
+  * a bare parquet scan is refused, never silently given sorted ids. */
 class StorageOrderSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -111,33 +112,35 @@ class StorageOrderSpec extends AnyFunSuite {
     }
   }
 
-  test("storage-order falls back to sorted ids for non-file corpora") {
-    val dir = Files.createTempDirectory("soFall").toString
-    IndexBuild.build(spark, corpus(12).toDS(), dir, cfg.copy(storageOrderIds = true))
+  /** Builds `corpus` with storageOrderIds and expects the refusal
+    * naming `reason`, then builds it with storageOrderIds = false:
+    * dense ids by (repo, path, commit) rank. */
+  private def assertRefusedThenSorted(corpus: org.apache.spark.sql.Dataset[SourceFile],
+                                      n: Int, reason: String): Unit = {
+    val ex = intercept[IllegalArgumentException](IndexBuild.build(spark, corpus,
+      Files.createTempDirectory("soRefused").toString, cfg.copy(storageOrderIds = true)))
+    assert(ex.getMessage.contains(reason) &&
+      ex.getMessage.contains("storageOrderIds = false"), ex.getMessage)
+    val dir = Files.createTempDirectory("soSorted").toString
+    IndexBuild.build(spark, corpus, dir, cfg)
     val e = new SearchEngine(spark, dir)
-    // sorted-path semantics: ids follow (repo, path, commit) rank
     val byKey = e.docs.select($"repo", $"path", $"commit", $"docId")
       .as[(String, String, String, Int)].collect().sortBy(r => (r._1, r._2, r._3))
-    assert(byKey.map(_._4).toSeq == (0 until 12))
+    assert(byKey.map(_._4).toSeq == (0 until n))
   }
 
-  test("storage-order falls back for a FILTERED file corpus (row_index " +
-      "is physical — filtered counts would collide docids)") {
+  test("storage-order build of a non-file corpus fails fast") {
+    // a local relation passes the plan check but has no file metadata
+    assertRefusedThenSorted(corpus(12).toDS(), 12, "_metadata.row_index")
+  }
+
+  test("storage-order build of a FILTERED file corpus fails fast") {
+    // row_index is physical: per-file counts of a filtered scan would
+    // collide docids across files, so the plan is refused
     val cdir = Files.createTempDirectory("soFiltCorpus").toString
     corpus(40).toDS().repartition(3).write.mode("overwrite").parquet(cdir)
-    // a filter that drops low physical row indices: on the broken path
-    // file B's offset would overlap file A's surviving row_index range
     val filtered = spark.read.parquet(cdir).as[SourceFile]
       .filter(f => f.path.drop(1).dropRight(6).toInt % 2 == 1)
-    val dir = Files.createTempDirectory("soFiltIdx").toString
-    IndexBuild.build(spark, filtered, dir, cfg.copy(storageOrderIds = true))
-    val e = new SearchEngine(spark, dir)
-    val ids = e.docs.select($"docId").as[Int].collect().sorted.toSeq
-    // dense, unique, 0..n-1 — the collision bug would duplicate ids
-    assert(ids == (0 until 20), s"expected dense unique ids, got $ids")
-    // and the sorted fallback's semantics hold
-    val byKey = e.docs.select($"repo", $"path", $"commit", $"docId")
-      .as[(String, String, String, Int)].collect().sortBy(r => (r._1, r._2, r._3))
-    assert(byKey.map(_._4).toSeq == (0 until 20))
+    assertRefusedThenSorted(filtered, 20, "not a bare file scan")
   }
 }
