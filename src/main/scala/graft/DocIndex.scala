@@ -24,10 +24,23 @@ object DocIndex {
 
   /** /tmp home of the cached index `name` over `sfDir`, versioned by
     * [[IndexBuild.FormatVersion]]: a format bump moves every cached
-    * index to a fresh directory instead of tripping the format stamp. */
-  def cacheDir(name: String, sfDir: String): String =
-    s"/tmp/graft-$name-v${IndexBuild.FormatVersion}/" +
+    * index to a fresh directory instead of tripping the format stamp,
+    * and the lookup deletes the `graft-<name>-v<M>` siblings of every
+    * older version M, so superseded copies do not pile up. */
+  def cacheDir(name: String, sfDir: String): String = {
+    val Superseded = s"graft-${java.util.regex.Pattern.quote(name)}-v(\\d{1,9})".r
+    Option(new java.io.File(CacheRoot).listFiles()).toSeq.flatten.foreach { f =>
+      f.getName match {
+        case Superseded(v) if v.toInt < IndexBuild.FormatVersion =>
+          org.apache.hadoop.fs.FileUtil.fullyDelete(f): Unit
+        case _ =>
+      }
+    }
+    s"$CacheRoot/graft-$name-v${IndexBuild.FormatVersion}/" +
       sfDir.replaceAll("[^a-zA-Z0-9.]+", "_")
+  }
+
+  private final val CacheRoot = "/tmp"
 
   def indexDir(sfDir: String): String = cacheDir("docindex", sfDir)
 

@@ -379,8 +379,7 @@ final class Index(val engine: SearchEngine,
       else mr.matchedDocs(r.q, strategyOf(r.matchingStrategy),
         fidsOf(r.attributesToSearchOn), r.lastWordIsPrefix)
     r.filter.fold(uni0)(f =>
-      uni0.join(engine.docs.filter(graft.query.FilterParser.parse(f))
-        .select(col("docId")), Seq("docId"), "left_semi"))
+      uni0.join(engine.filteredDocs(f).select(col("docId")), Seq("docId"), "left_semi"))
   }
 
   /** Facet distributions for the request's candidate set (reference
@@ -437,8 +436,7 @@ final class Index(val engine: SearchEngine,
       .select(col(vecCol).cast("array<float>")).collect()
     require(qRow.nonEmpty, s"unknown document id $id in the embedding table")
     val qvec = qRow(0).getSeq[Float](0).toArray
-    val universe = filter.map(f => engine.docs
-      .filter(graft.query.FilterParser.parse(f)).select(col("docId")))
+    val universe = filter.map(f => engine.filteredDocs(f).select(col("docId")))
     val pool = offset + limit + 1 // +1: the target may occupy one slot
     def estRows: BigInt =
       emb.queryExecution.optimizedPlan.stats.sizeInBytes / 512

@@ -13,6 +13,13 @@ object BM25 extends Serializable {
   def idf(df: Long, n: Long): Double =
     math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
+  /** A posting's BM25 contribution from its term's idf, its tf and its
+    * doc's length — the one expression every ranked plan evaluates
+    * (searchDF in the posting decode, WAND per scored doc), so their
+    * scores agree bit for bit. */
+  def score(idf: Double, tf: Int, len: Int, avgdl: Double): Double =
+    idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * len / avgdl))
+
   /** Per-term contribution for one document. */
   def termScore(tf: Int, docLen: Int, avgdl: Double, df: Long, n: Long): Double = {
     val norm = K1 * (1.0 - B + B * docLen / avgdl)

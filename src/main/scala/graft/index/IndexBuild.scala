@@ -84,11 +84,16 @@ final case class IndexConfig(
   *   dict/      term, termId, df, cf, len
   *   stats/     base, delta-<batchId>: `key=value` text files (see [[readStats]])
   *   postings/bucket=B/  term, shard, blockId, firstDoc, lastDoc, count,
-  *                       docBytes, tfBytes, blockMaxTf, tfSum, encBytes
-  *   positions/bucket=B/ term, docId, positions, tf (optional)
-  *   doclen/    docId, tf  (tf = the doc's token count, the BM25 `len`)
+  *                       docBytes, tfBytes, lenBytes, blockMaxTf, tfSum,
+  *                       encBytes (= |docBytes| + |tfBytes|). `lenBytes`
+  *                       is the VByte stream of each posting's doc
+  *                       length (the BM25 `len`) in docid order, so a
+  *                       ranked search scores from the blocks alone
+  *   positions/bucket=B/ term, docId, positions, tf, len (optional)
+  *   doclen/    docId, tf  (tf = the doc's token count, the BM25 `len`;
+  *              stats, facets on `len` and `SearchEngine.docs` read it)
   *   prefix_dict/, prefixes/bucket=B/ (postings/ layout),
-  *   prefix_positions/bucket=B/ term, docId, positions, tf
+  *   prefix_positions/bucket=B/ term, docId, positions, tf, len
   *              ([[buildPrefixIndex]], optional)
   *   lineage/<stage>/rows + _COMMITTED, lineage/_FORMAT
   */
@@ -99,7 +104,7 @@ object IndexBuild {
     * version (Lineage.FormatStamp); a directory written under another
     * format is refused with a rebuild error, never read through a
     * fallback. */
-  final val FormatVersion = 11
+  final val FormatVersion = 12
 
   /** Deterministic term -> bucket (also computed query-side in plain
     * Scala; String.hashCode is specified by the JLS so it is stable
@@ -133,26 +138,26 @@ object IndexBuild {
   @inline def keyTf(key: Long): Int = key.toInt
 
   /** One row of the token stream every posting and position write
-    * consumes: (term, docId, tf, positions). `positions` is null on a
-    * postings-only stream, which then buffers, ships and decodes no
-    * position payload. */
-  type TokenRow = (String, Int, Int, Array[Int])
+    * consumes: (term, docId, tf, len, positions), `len` the doc's token
+    * count (the BM25 norm). `positions` is null on a postings-only
+    * stream, which then buffers, ships and decodes no position payload. */
+  type TokenRow = (String, Int, Int, Int, Array[Int])
 
   /** One map-side chunk of [[chunkRows]]: a (term, shard) run of one map
-    * task's token rows as (term, firstKey, docBytes, tfBytes, posBytes)
-    * — docids delta+VByte and tfs VByte, exactly the block codec;
-    * `posBytes` one VByte stream of `[nPos, pos...]` per doc in docid
-    * order, null on a postings-only stream. */
-  type Chunk = (String, Long, Array[Byte], Array[Byte], Array[Byte])
+    * task's token rows as (term, firstKey, docBytes, tfBytes, lenBytes,
+    * posBytes) — docids delta+VByte, tfs and lens VByte, exactly the
+    * block codec; `posBytes` one VByte stream of `[nPos, pos...]` per doc
+    * in docid order, null on a postings-only stream. */
+  type Chunk = (String, Long, Array[Byte], Array[Byte], Array[Byte], Array[Byte])
 
   /** The posting-block write of postings/ and prefixes/ (and their
-    * append stagings): [[chunkShuffle]] of the (term, docId, tf) columns
-    * of `rows` (any positions column is not read) through the streaming
-    * block encoder ([[encodePartition]]). */
+    * append stagings): [[chunkShuffle]] of the (term, docId, tf, len)
+    * columns of `rows` (any positions column is not read) through the
+    * streaming block encoder ([[encodePartition]]). */
   def encodeBlocks(rows: DataFrame, cfg: IndexConfig, outDir: String): Unit = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val postings = rows.select(col("term"), col("docId"), col("tf"),
+    val postings = rows.select(col("term"), col("docId"), col("tf"), col("len"),
       lit(null).cast("array<int>").as("positions")).as[TokenRow]
     chunkShuffle(postings, cfg, cfg.numPartitions, outDir, EncodedCols)(
       encodePartition(_, cfg.blockSize, cfg.termBuckets, cfg.docsPerShard))
@@ -169,15 +174,15 @@ object IndexBuild {
     import spark.implicits._
     val tb = cfg.termBuckets
     chunkShuffle(rows, cfg, numPartitions, outDir, PositionsCols)(_.map {
-      case (t, d, tf, ps) => (t, d, ps, tf, bucketOfIndexed(t, tb))
+      case (t, d, tf, len, ps) => (t, d, ps, tf, len, bucketOfIndexed(t, tb))
     })
   }
 
   /** THE chunk shuffle of every posting and position write. The map-side
     * combine ([[chunkRows]]) packs each map task's per-(term, shard)
     * token rows into [[Chunk]] rows, so the exchange ships the term
-    * string once per chunk and ~3-5 bytes per posting (plus ~2-3 per
-    * position) instead of a row each. This is the Spark re-expression of
+    * string once per chunk and a VByte docid delta, tf and doc length
+    * per posting (plus ~2-3 bytes per position) instead of a row each. This is the Spark re-expression of
     * the reference's per-thread partial caches merged post-exchange
     * (crates/milli/src/update/new/extract/cache.rs:281 BalancedCaches):
     * shuffle bytes are the build's dominant bandwidth draw (BENCH.md r5:
@@ -197,7 +202,7 @@ object IndexBuild {
     val shardWidth = cfg.docsPerShard.toLong << 32
     val positions = cols.contains("positions")
     val chunks = rows.mapPartitions(chunkRows(_, cfg.docsPerShard))
-      .toDF("term", "firstKey", "docBytes", "tfBytes", "posBytes")
+      .toDF("term", "firstKey", "docBytes", "tfBytes", "lenBytes", "posBytes")
     (if (positions) chunks else chunks.drop("posBytes"))
       .repartition(numPartitions, col("term"),
         expr(s"firstKey div CAST($shardWidth AS BIGINT)"))
@@ -229,6 +234,8 @@ object IndexBuild {
     new Iterator[Chunk] {
       private final class Buf {
         val keys = new ArrayBuffer[Long](4)
+        /** the docs' lengths in `keys` order */
+        val lens = new ArrayBuffer[Int](4)
         /** the docs' positions in `keys` order; null on a postings-only stream */
         var pos: ArrayBuffer[Array[Int]] = null
         /** units charged: one per key plus its positions — with
@@ -240,45 +247,51 @@ object IndexBuild {
       private var out: Iterator[Chunk] = Iterator.empty
 
       private def chunkOf(term: String, b: Buf): Chunk = {
-        val ks = b.keys.toArray
-        var posBytes: Array[Byte] = null
         // file-packed scan partitions can interleave docid ranges — the
-        // sort restores strict order (a no-op pass when already sorted)
-        if (b.pos == null) java.util.Arrays.sort(ks)
-        else {
-          val order = ks.indices.sortBy(ks(_))
-          val stream = new Array[Int](b.units)
-          var o = 0
-          order.iterator.zipWithIndex.foreach { case (j, i) =>
-            ks(i) = b.keys(j)
-            val ps = b.pos(j)
-            stream(o) = ps.length
-            System.arraycopy(ps, 0, stream, o + 1, ps.length)
-            o += ps.length + 1
-          }
-          posBytes = VByte.encode(stream)
-        }
-        val docs = new Array[Int](ks.length)
-        val tfs = new Array[Int](ks.length)
+        // order restores strict docid order (the identity when sorted)
+        val order = docOrder(b.keys.length, b.keys(_))
+        val n = order.length
+        val docs = new Array[Int](n)
+        val tfs = new Array[Int](n)
+        val lens = new Array[Int](n)
         var i = 0
-        while (i < ks.length) { docs(i) = keyDoc(ks(i)); tfs(i) = keyTf(ks(i)); i += 1 }
-        (term, ks(0), VByte.encodeDeltas(docs), VByte.encode(tfs), posBytes)
+        while (i < n) {
+          val j = order(i)
+          docs(i) = keyDoc(b.keys(j)); tfs(i) = keyTf(b.keys(j)); lens(i) = b.lens(j)
+          i += 1
+        }
+        val posBytes =
+          if (b.pos == null) null
+          else {
+            val stream = new Array[Int](b.units)
+            var o = 0
+            order.foreach { j =>
+              val ps = b.pos(j)
+              stream(o) = ps.length
+              System.arraycopy(ps, 0, stream, o + 1, ps.length)
+              o += ps.length + 1
+            }
+            VByte.encode(stream)
+          }
+        (term, packKey(docs(0), tfs(0)), VByte.encodeDeltas(docs), VByte.encode(tfs),
+          VByte.encode(lens), posBytes)
       }
 
       private def fill(): Unit =
         while (!out.hasNext && rows.hasNext) {
           val ready = ArrayBuffer.empty[Chunk]
           while (rows.hasNext && entries < flushEntries) {
-            val (t, d, tf, ps) = rows.next()
+            val (t, d, tf, len, ps) = rows.next()
             val b = bufs.getOrElseUpdate(t, new Buf)
             if (b.keys.nonEmpty &&
                 keyDoc(b.keys(b.keys.length - 1)) / docsPerShard != d / docsPerShard) {
               // shard boundary: seal this term's chunk, start the next
               ready += chunkOf(t, b)
               entries -= b.units
-              b.keys.clear(); if (b.pos != null) b.pos.clear(); b.units = 0
+              b.keys.clear(); b.lens.clear(); if (b.pos != null) b.pos.clear(); b.units = 0
             }
             b.keys += packKey(d, tf)
+            b.lens += len
             val units =
               if (ps == null) 1
               else {
@@ -301,6 +314,15 @@ object IndexBuild {
       override def next(): Chunk = { fill(); out.next() }
     }
 
+  /** The permutation that orders `n` packed keys by docid: a primitive
+    * sort of (docId, index) pairs (docids are unique within a term's
+    * rows). */
+  private def docOrder(n: Int, key: Int => Long): Array[Int] = {
+    val tagged = Array.tabulate(n)(i => (key(i) & 0xffffffff00000000L) | i)
+    java.util.Arrays.sort(tagged)
+    tagged.map(_.toInt)
+  }
+
   /** The reduce-side inverse of [[chunkRows]]: chunk rows sorted by
     * (term, firstKey) → the sorted token stream. Consecutive same-term
     * chunks whose docid ranges overlap (possible only when a map task saw
@@ -311,45 +333,44 @@ object IndexBuild {
       private val it = rows.buffered
       private var term: String = null
       private var keys: Array[Long] = Array.emptyLongArray
+      private var lens: Array[Int] = Array.emptyIntArray
       private var poss: Array[Array[Int]] = null
       private var i = 0
 
-      private def decode(c: Chunk): (Array[Long], Array[Array[Int]]) = {
+      private def decode(c: Chunk): (Array[Long], Array[Int], Array[Array[Int]]) = {
         val docs = VByte.decodeDeltas(c._3)
         val tfs = VByte.decode(c._4)
         val ks = new Array[Long](docs.length)
         var j = 0
         while (j < docs.length) { ks(j) = packKey(docs(j), tfs(j)); j += 1 }
-        if (c._5 == null) (ks, null)
-        else {
-          val stream = VByte.decode(c._5)
-          var o = 0
-          (ks, Array.fill(docs.length) {
-            val n = stream(o)
-            o += n + 1
-            java.util.Arrays.copyOfRange(stream, o - n, o)
-          })
-        }
+        val ps =
+          if (c._6 == null) null
+          else {
+            val stream = VByte.decode(c._6)
+            var o = 0
+            Array.fill(docs.length) {
+              val n = stream(o)
+              o += n + 1
+              java.util.Arrays.copyOfRange(stream, o - n, o)
+            }
+          }
+        (ks, VByte.decode(c._5), ps)
       }
 
       private def refill(): Unit = {
         val head = it.next()
         term = head._1
-        var (ks, ps) = decode(head)
+        var (ks, ls, ps) = decode(head)
         while (it.hasNext && it.head._1 == term &&
                keyDoc(it.head._2) <= keyDoc(ks(ks.length - 1))) {
-          val (nk, np) = decode(it.next())
-          val mk = ks ++ nk
+          val (nk, nl, np) = decode(it.next())
+          val (mk, ml) = (ks ++ nk, ls ++ nl)
           // docids are globally unique → strict order
-          if (ps == null) { java.util.Arrays.sort(mk); ks = mk }
-          else {
-            val mp = ps ++ np
-            val order = mk.indices.sortBy(mk(_))
-            ks = order.map(mk(_)).toArray
-            ps = order.map(mp(_)).toArray
-          }
+          val order = docOrder(mk.length, mk(_))
+          ks = order.map(mk(_)); ls = order.map(ml(_))
+          if (ps != null) { val mp = ps ++ np; ps = order.map(mp(_)) }
         }
-        keys = ks; poss = ps; i = 0
+        keys = ks; lens = ls; poss = ps; i = 0
       }
 
       override def hasNext: Boolean = i < keys.length || it.hasNext
@@ -357,8 +378,9 @@ object IndexBuild {
         if (i >= keys.length) refill()
         val k = keys(i)
         val ps = if (poss == null) null else poss(i)
+        val row = (term, keyDoc(k), keyTf(k), lens(i), ps)
         i += 1
-        (term, keyDoc(k), keyTf(k), ps)
+        row
       }
     }
 
@@ -545,9 +567,10 @@ object IndexBuild {
     * columns tokenized per document, in fid order. The corpus is
     * tokenized exactly once: the token stream flows into EITHER the
     * positions table (when enabled; postings then derive from a narrow
-    * (term, docId, tf) scan of it) OR straight into the posting
+    * (term, docId, tf, len) scan of it) OR straight into the posting
     * shuffle. Per-doc token counts ride along as [[LenTerm]] sentinel
-    * rows and land in doclen/. */
+    * rows, which land in doclen/, and as every row's `len`, which lands
+    * in the posting blocks and positions rows. */
   private def buildFromDocs(spark: SparkSession, indexDir: String,
                             cfg: IndexConfig,
                             fieldCols: Seq[String] = Seq("content")): Unit = {
@@ -566,8 +589,8 @@ object IndexBuild {
         Nil
       }
       doclenStage(spark, indexDir, cfg)
-      // postings derive from a narrow column-pruned (term, docId, tf)
-      // scan of the committed positions — never a second tokenize
+      // postings derive from a narrow column-pruned (term, docId, tf,
+      // len) scan of the committed positions — never a second tokenize
       Lineage.stage(spark, indexDir, "postings") {
         encodeBlocks(positionKeys(spark, s"$indexDir/positions", tb), cfg,
           s"$indexDir/postings")
@@ -637,27 +660,29 @@ object IndexBuild {
   }
 
   /** [[TokenRow]]'s column names. */
-  final val TokenCols: Seq[String] = Seq("term", "docId", "tf", "positions")
+  final val TokenCols: Seq[String] = Seq("term", "docId", "tf", "len", "positions")
 
   /** Columns of positions/ and prefix_positions/ as [[writePositions]]
     * writes them. */
   final val PositionsCols: Seq[String] =
-    Seq("term", "docId", "positions", "tf", "bucket")
+    Seq("term", "docId", "positions", "tf", "len", "bucket")
 
   /** Read schema of positions/ and prefix_positions/: both hold `tf` as
     * well, which no reader needs, so it is pruned. */
   final val PositionsSchemaDdl =
-    "term STRING, docId INT, positions ARRAY<INT>, bucket INT"
+    "term STRING, docId INT, positions ARRAY<INT>, len INT, bucket INT"
 
   /** One document's token rows from ONE tokenize call per field: a row
     * per distinct non-stop term (tf summed across fields), then the
     * [[LenTerm]] sentinel whose tf is the FULL token count including
-    * stop words (the BM25 `len` norm). With `positions`, each row also
-    * carries the term's occurrence positions (clamped to 0xffff, fid<<16
-    * for multi-field — reference lib.rs:201-208; tf = their count, so
-    * postings derive without reading the arrays) and the sentinel
-    * carries `[len]`; without, no position is buffered. Fields tokenize
-    * in fid order, each with its own locale hint. */
+    * stop words (the BM25 `len` norm). Every row carries that count as
+    * its `len`, so each posting block stores its docs' lengths. With
+    * `positions`, each row also carries the term's occurrence positions
+    * (clamped to 0xffff, fid<<16 for multi-field — reference
+    * lib.rs:201-208; tf = their count, so postings derive without
+    * reading the arrays) and the sentinel carries `[len]`; without, no
+    * position is buffered. Fields tokenize in fid order, each with its
+    * own locale hint. */
   def positionRowsOf(docId: Int, fields: Seq[String], stop: Set[String],
                      tok: Tokenizer.TokSettings, positions: Boolean): Iterator[TokenRow] = {
     val tfs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
@@ -678,9 +703,9 @@ object IndexBuild {
       }
     }
     val rows: Iterator[TokenRow] =
-      if (positions) pos.iterator.map { case (t, ps) => (t, docId, ps.length, ps.toArray) }
-      else tfs.iterator.map { case (t, tf) => (t, docId, tf, null) }
-    rows ++ Iterator.single((LenTerm, docId, total, if (positions) Array(total) else null))
+      if (positions) pos.iterator.map { case (t, ps) => (t, docId, ps.length, total, ps.toArray) }
+      else tfs.iterator.map { case (t, tf) => (t, docId, tf, total, null) }
+    rows ++ Iterator.single((LenTerm, docId, total, total, if (positions) Array(total) else null))
   }
 
   /** The one doclen/ schema every writer produces: one row per document,
@@ -765,12 +790,12 @@ object IndexBuild {
     (parts.map(_._1).sum, parts.map(_._2).sum)
   }
 
-  /** The narrow (term, docId, tf) columns of a positions table, its
+  /** The narrow (term, docId, tf, len) columns of a positions table, its
     * [[LenTerm]] sentinel partition excluded: postings derive from
     * positions without a second tokenize. */
   private def positionKeys(spark: SparkSession, dir: String,
                            termBuckets: Int): DataFrame =
-    spark.read.schema("term STRING, docId INT, tf INT, bucket INT").parquet(dir)
+    spark.read.schema("term STRING, docId INT, tf INT, len INT, bucket INT").parquet(dir)
       .filter(col("bucket") =!= termBuckets)
 
   /** dict/ from a column-pruned posting-metadata scan (shared by build
@@ -823,7 +848,7 @@ object IndexBuild {
         .map(_.docidMax.toLong + 1).maxOption.getOrElse(0L)
       // staged write (overwrite = idempotent) + tagged publish into docs/:
       // a kill during either step re-runs the stage and converges
-      val staging = s"$indexDir/_stage_docs_$batchId"
+      val staging = stagingDir(indexDir, "docs", batchId)
       val rows = rankDocs(spark, delta, base, staging, cfg.numPartitions,
         s"docs_delta_$batchId")((p, _, c) => s"docs_delta_$batchId:$p:$c")
       Lineage.publishAppend(spark, staging, s"$indexDir/docs", s"b$batchId")
@@ -841,9 +866,9 @@ object IndexBuild {
         // doclen/ delta
         val rows = tokenRows(spark.read.schema(DocsSchemaDdl).parquet(s"$indexDir/docs")
           .filter($"docId".between(lo, hi)), Seq("content"), cfg)
-        val staging = s"$indexDir/_stage_postings_$batchId"
+        val staging = stagingDir(indexDir, "postings", batchId)
         if (cfg.positions) {
-          val pstaging = s"$indexDir/_stage_positions_$batchId"
+          val pstaging = stagingDir(indexDir, "positions", batchId)
           writePositions(rows, pstaging, cfg, math.max(1, cfg.numPartitions / 2))
           // postings delta from the STAGED positions (narrow scan, no
           // second tokenize)
@@ -855,7 +880,7 @@ object IndexBuild {
           Lineage.publishAppend(spark, pstaging, s"$indexDir/positions", s"b$batchId")
         } else {
           encodeBlocks(rows.toDF(TokenCols: _*), cfg, staging)
-          val lstaging = s"$indexDir/_stage_doclen_$batchId"
+          val lstaging = stagingDir(indexDir, "doclen", batchId)
           sentinelDoclen(spark, s"$staging/bucket=$tb").coalesce(1)
             .write.mode("overwrite").parquet(lstaging)
           deleteDir(spark, s"$staging/bucket=$tb")
@@ -872,6 +897,13 @@ object IndexBuild {
     // current and a cache keyed on it cannot keep the torn dictionary
     Lineage.stage(spark, indexDir, s"dict_$batchId") { writeDict(spark, indexDir); Nil }: Unit
   }
+
+  /** An append batch's staging directory for `table`. No path component
+    * starts with `_` or `.`: Spark's file listing treats such a root as
+    * hidden, and the stats delta and postings derivation read these
+    * directories back. */
+  private def stagingDir(indexDir: String, table: String, batchId: String): String =
+    s"$indexDir/staging/$table-$batchId"
 
   /** Delete documents by docid: append a lineage-committed tombstone
     * batch (reference DELETE /documents; the on-disk model is
@@ -996,37 +1028,40 @@ object IndexBuild {
     // salt, same block layout)
     encodeBlocks(
       spark.read.schema(BlocksSchemaDdl).parquet(s"$indexDir/postings")
-        .select($"term", $"docBytes", $"tfBytes")
-        .as[(String, Array[Byte], Array[Byte])]
-        .flatMap { case (t, db, tfb) =>
+        .select($"term", $"docBytes", $"tfBytes", $"lenBytes")
+        .as[(String, Array[Byte], Array[Byte], Array[Byte])]
+        .flatMap { case (t, db, tfb, lb) =>
           val ids = VByte.decodeDeltas(db); val tfs = VByte.decode(tfb)
+          val lens = VByte.decode(lb)
           (1 to math.min(maxLen, t.length)).iterator.flatMap { l =>
             val p = t.substring(0, l)
-            ids.iterator.zip(tfs.iterator).map { case (d, tf) => (p, d, tf) }
+            ids.indices.iterator.map(i => (p, ids(i), tfs(i), lens(i)))
           }
         }
-        .toDF("prefix", "docId", "tf")
+        .toDF("prefix", "docId", "tf", "len")
         .join(sel, Seq("prefix"), "left_semi")
-        .groupBy($"prefix", $"docId").agg(sum($"tf").cast("int").as("tf"))
-        .select($"prefix".as("term"), $"docId", $"tf"),
+        // len is the doc's: every member row of a (prefix, docId) holds it
+        .groupBy($"prefix", $"docId")
+        .agg(sum($"tf").cast("int").as("tf"), max($"len").as("len"))
+        .select($"prefix".as("term"), $"docId", $"tf", $"len"),
       cfg, s"$indexDir/prefixes")
 
     // merged prefix positions (only when the index has positions)
     if (exists(spark, s"$indexDir/positions")) {
       writePositions(
-        spark.read.schema("term STRING, docId INT, tf INT, positions ARRAY<INT>")
+        spark.read.schema("term STRING, docId INT, tf INT, len INT, positions ARRAY<INT>")
           .parquet(s"$indexDir/positions")
           .select(TokenCols.map(col): _*).as[TokenRow]
-          .flatMap { case (t, d, tf, ps) =>
-            (1 to math.min(maxLen, t.length)).map(l => (t.substring(0, l), d, tf, ps))
+          .flatMap { case (t, d, tf, len, ps) =>
+            (1 to math.min(maxLen, t.length)).map(l => (t.substring(0, l), d, tf, len, ps))
           }
-          .toDF("prefix", "docId", "tf", "positions")
+          .toDF("prefix", "docId", "tf", "len", "positions")
           .join(sel, Seq("prefix"), "left_semi")
           .groupBy($"prefix", $"docId")
-          .agg(sum($"tf").cast("int").as("tf"),
+          .agg(sum($"tf").cast("int").as("tf"), max($"len").as("len"),
             sort_array(array_distinct(flatten(collect_list($"positions"))))
               .as("positions"))
-          .select($"prefix".as("term"), $"docId", $"tf", $"positions")
+          .select($"prefix".as("term"), $"docId", $"tf", $"len", $"positions")
           .as[TokenRow],
         s"$indexDir/prefix_positions", cfg, math.max(1, cfg.numPartitions / 2))
     }
@@ -1220,6 +1255,10 @@ object IndexBuild {
       docsLineage(spark, indexDir)
     }: Unit
 
+  /** One postings/ block row, [[EncodedCols]] in order. */
+  type EncodedBlock = (String, Int, Int, Int, Int, Int, Array[Byte], Array[Byte],
+    Array[Byte], Int, Long, Int, Int)
+
   /** Streaming block encoder: input token rows sorted by (term, docId)
     * within the partition — equivalently (term, shard, docId); emits one
     * [[EncodedCols]] block row per `blockSize` docids of each
@@ -1227,11 +1266,10 @@ object IndexBuild {
     * §4.4). */
   def encodePartition(rows: Iterator[TokenRow],
                       blockSize: Int, termBuckets: Int, docsPerShard: Int)
-      : Iterator[(String, Int, Int, Int, Int, Int, Array[Byte], Array[Byte], Int, Long, Int, Int)] = {
-    new Iterator[(String, Int, Int, Int, Int, Int, Array[Byte], Array[Byte], Int, Long, Int, Int)] {
+      : Iterator[EncodedBlock] = {
+    new Iterator[EncodedBlock] {
       private val it = rows.buffered
-      private var out: Iterator[(String, Int, Int, Int, Int, Int, Array[Byte], Array[Byte], Int, Long, Int, Int)] =
-        Iterator.empty
+      private var out: Iterator[EncodedBlock] = Iterator.empty
       override def hasNext: Boolean = out.hasNext || it.hasNext
       override def next() = {
         if (!out.hasNext) {
@@ -1239,17 +1277,20 @@ object IndexBuild {
           val shard = it.head._2 / docsPerShard
           val docIds = new ArrayBuffer[Int](blockSize)
           val tfs = new ArrayBuffer[Int](blockSize)
+          val lens = new ArrayBuffer[Int](blockSize)
           while (it.hasNext && it.head._1 == term && it.head._2 / docsPerShard == shard) {
-            val r = it.next(); docIds += r._2; tfs += r._3
+            val r = it.next(); docIds += r._2; tfs += r._3; lens += r._4
           }
           val bucket = bucketOfIndexed(term, termBuckets)
-          out = docIds.grouped(blockSize).zip(tfs.grouped(blockSize))
-            .zipWithIndex.map { case ((ds, ts), bid) =>
-              val da = ds.toArray; val ta = ts.toArray
-              val db = VByte.encodeDeltas(da); val tb = VByte.encode(ta)
-              (term, shard, bid, da.head, da.last, da.length, db, tb,
-                ta.max, ta.map(_.toLong).sum, db.length + tb.length, bucket)
-            }
+          out = Iterator.range(0, docIds.length, blockSize).zipWithIndex.map { case (from, bid) =>
+            val until = math.min(from + blockSize, docIds.length)
+            val da = docIds.slice(from, until).toArray
+            val ta = tfs.slice(from, until).toArray
+            val db = VByte.encodeDeltas(da); val tb = VByte.encode(ta)
+            (term, shard, bid, da.head, da.last, da.length, db, tb,
+              VByte.encode(lens.slice(from, until).toArray),
+              ta.max, ta.map(_.toLong).sum, db.length + tb.length, bucket)
+          }
         }
         out.next()
       }
@@ -1257,15 +1298,15 @@ object IndexBuild {
   }
 
   val EncodedCols: Seq[String] = Seq("term", "shard", "blockId", "firstDoc",
-    "lastDoc", "count", "docBytes", "tfBytes", "blockMaxTf", "tfSum",
+    "lastDoc", "count", "docBytes", "tfBytes", "lenBytes", "blockMaxTf", "tfSum",
     "encBytes", "bucket")
 
   /** Read schema of postings/ and prefixes/ ([[EncodedCols]] as
     * [[encodePartition]] types them). */
   final val BlocksSchemaDdl =
     "term STRING, shard INT, blockId INT, firstDoc INT, lastDoc INT, " +
-      "count INT, docBytes BINARY, tfBytes BINARY, blockMaxTf INT, " +
-      "tfSum BIGINT, encBytes INT, bucket INT"
+      "count INT, docBytes BINARY, tfBytes BINARY, lenBytes BINARY, " +
+      "blockMaxTf INT, tfSum BIGINT, encBytes INT, bucket INT"
 
   /** Read schema of fields/ ([[buildMultiField]]). */
   final val FieldsSchemaDdl = "fid INT, name STRING, weight INT"

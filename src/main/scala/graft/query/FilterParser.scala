@@ -21,11 +21,19 @@ import org.apache.spark.sql.functions._
 object FilterParser {
   final val MaxDepth = 2000 // reference milli/src/search/facet/filter.rs:27
 
-  def parse(input: String): Column = new P(input).parseAll()
+  def parse(input: String): Column = parseWithFields(input)._1
+
+  /** The predicate and the document fields its conditions name (geo
+    * filters name their own columns through [[graft.functions.Geo]]). */
+  def parseWithFields(input: String): (Column, Set[String]) = {
+    val p = new P(input)
+    (p.parseAll(), p.fields.toSet)
+  }
 
   private final class P(s: String) {
     private var i = 0
     private var depth = 0
+    val fields = scala.collection.mutable.Set.empty[String]
 
     def parseAll(): Column = {
       val c = parseOr()
@@ -90,6 +98,7 @@ object FilterParser {
 
     private def parseCondition(): Column = {
       val field = parseValue()
+      fields += field
       skipWs()
       val c = col(field)
       if (peekKeyword("EXISTS")) { eatKeyword("EXISTS"); return c.isNotNull }

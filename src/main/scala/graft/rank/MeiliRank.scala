@@ -258,8 +258,11 @@ final class MeiliRank(engine: SearchEngine,
       Some(all -- typo.exactFids)
     }
 
-  /** UN-AGGREGATED (docId, slot, cost, exact) match rows — one row per
-    * (derivation, doc) occurrence, possibly several per (doc, slot).
+  /** UN-AGGREGATED (docId, slot, cost, exact, len) match rows — one row
+    * per (derivation, doc) occurrence, possibly several per (doc, slot).
+    * `len` is the doc's length as stored beside the posting or position
+    * row, null on phrase- and prefix-derivation rows; every exact row
+    * (`exact` = 1) comes from postings/ or positions/ and carries it.
     * The per-slot min-cost/max-exact reduction happens inside the ONE
     * per-doc aggregation of [[matchedInternal]] (array expressions over
     * the collected rows), so the cascade pays a single exchange instead
@@ -294,14 +297,14 @@ final class MeiliRank(engine: SearchEngine,
             // NO distinct: one row per position occurrence is fine —
             // the per-doc min/max aggregation dedups per slot anyway,
             // and the distinct was a whole extra exchange
-            engine.positionsWith(consts, f)((d, _, c) => (d, c._1, c._2, c._3))
+            engine.positionsWith(consts, f)((d, _, len, c) => (d, c._1, c._2, c._3, len))
           case None =>
             // df=0: only term+bucket feed the pruned posting scan
             val qts = consts.keys.toSeq.map(t => graft.search.QueryTerm(t, 0L, 0.0,
               IndexBuild.bucketOf(t, engine.termBuckets)))
-            engine.decodedWith(qts, consts)((d, _, c) => (d, c._1, c._2, c._3))
+            engine.decodedWith(qts, consts)((d, _, len, c) => (d, c._1, c._2, c._3, len))
         }
-        occurrences.toDF("docId", "slot", "cost", "exact")
+        occurrences.toDF("docId", "slot", "cost", "exact", "len")
       }
     // phrase derivations (split words, multi-word synonyms): the slot
     // matches where the words occur adjacently; never exact. Splits
@@ -310,7 +313,7 @@ final class MeiliRank(engine: SearchEngine,
     val phraseDfs = slots.flatMap(s => s.phraseDerivs.map { case (ws, cost) =>
       engine.phrase(ws, if (cost > 0) typoFids(fids) else fids)
         .select($"docId", lit(s.idx).as("slot"),
-          lit(cost).as("cost"), lit(0).as("exact"))
+          lit(cost).as("cost"), lit(0).as("exact"), MeiliRank.NoLen)
     })
     // precomputed-prefix derivations: merged docids via one pseudo-term
     // read (cost 0, never exact — the exact form, if a dictionary word,
@@ -322,11 +325,11 @@ final class MeiliRank(engine: SearchEngine,
         case None => engine.prefixDocs(p).select($"docId")
       }
       docs.select($"docId", lit(s.idx).as("slot"),
-        lit(0).as("cost"), lit(0).as("exact"))
+        lit(0).as("cost"), lit(0).as("exact"), MeiliRank.NoLen)
     })
     val empty = spark.range(0)
       .select($"id".cast("int").as("docId"), lit(0).as("slot"),
-        lit(0).as("cost"), lit(0).as("exact"))
+        lit(0).as("cost"), lit(0).as("exact"), MeiliRank.NoLen)
     (occurrencesOf(plainRows, fids) ++ occurrencesOf(typoRows, typoFids(fids)) ++
       phraseDfs ++ prefixDfs)
       .reduceOption(_ unionByName _).getOrElse(empty)
@@ -347,7 +350,7 @@ final class MeiliRank(engine: SearchEngine,
     def posOf(rows: Seq[(String, Int, Int)], f: Option[Set[Int]]): Option[DataFrame] =
       if (rows.isEmpty) None else Some {
         val slotsOf = rows.groupBy(_._1).map { case (t, rs) => t -> rs.map(_._2) }
-        engine.positionsWith(slotsOf, f)((d, p, slot) => (d, slot, p))
+        engine.positionsWith(slotsOf, f)((d, p, _, slot) => (d, slot, p))
           .toDF("docId", "slot", "pos")
       }
     val direct = (posOf(plainRows, fids) ++ posOf(typoRows, typoFids(fids)))
@@ -361,8 +364,8 @@ final class MeiliRank(engine: SearchEngine,
   }
 
   /** The words-rule matched universe: (slots, keep-order permutation,
-    * perDoc rows `docId, wordsRank, typoCost, exactWords` — plus `sp`,
-    * the per-doc (slot, pos) array, when `withPositions`) — the
+    * perDoc rows `docId, len, wordsRank, typoCost, exactWords` — plus
+    * `sp`, the per-doc (slot, pos) array, when `withPositions`) — the
     * candidate set the cascade ranks. Slots empty / derivation-free →
     * empty perDoc.
     *
@@ -408,7 +411,7 @@ final class MeiliRank(engine: SearchEngine,
       else mRows.unionByName(
         slotPositions(slots, searchOnFids)
           .select($"docId", $"slot", lit(null).cast("int").as("cost"),
-            lit(null).cast("int").as("exact"), $"pos"))
+            lit(null).cast("int").as("exact"), MeiliRank.NoLen, $"pos"))
     // quoted phrases / negatives restrict the universe (docId level),
     // under the SAME field restriction as slot matching
     val (phraseDocs, negDocs) = engine.syntaxDocs(pq, searchOnFids)
@@ -418,10 +421,12 @@ final class MeiliRank(engine: SearchEngine,
       rows1.join(nd, Seq("docId"), "left_anti"))
 
     // collect_list skips null entries, so the two row families split
-    // back apart inside the single aggregation
+    // back apart inside the single aggregation; `len` is the doc's own
+    // on every row that carries one (max skips the nulls)
     val aggCols =
       collect_list(when($"pos".isNull,
         struct($"kpos", $"cost", $"exact"))).as("m") +:
+      max($"len").as("len") +:
       (if (withPositions)
         Seq(collect_list(when($"pos".isNotNull,
           struct($"slot", $"pos"))).as("sp"))
@@ -496,7 +501,6 @@ final class MeiliRank(engine: SearchEngine,
     if (n == 0)
       return engine.docsRaw.limit(0)
         .select($"docId", lit(0).as("rankingScore"))
-    val metaSrc = engine.docsRaw
     val rankCols = Seq("docId", "wordsRank", "typoCost", "proxCost",
       "fidCost", "posCost", "exactAttr", "exactWords", "rankingScore")
     val metaCols = Seq("repo", "path", "lang")
@@ -507,6 +511,8 @@ final class MeiliRank(engine: SearchEngine,
     // only exists after the metadata join.
     val docSortCols: Seq[String] = sortBy.map(_._1).toSeq ++
       rankingRules.collect { case MeiliRank.CustomRule(f, _) => f }
+    // the doc store view the lazy shapes join
+    val metaSrc = engine.docsFor(docSortCols ++ distinct)
     val universeCols = filtered.columns.toSet
     val ordered = distinct match {
       case Some(dcol) =>
@@ -625,10 +631,11 @@ final class MeiliRank(engine: SearchEngine,
       .drop("sp")
 
     // exactness: whole-attribute exact (len == n and phrase at pos 0),
-    // starts-with, other
-    // (withPos is live-only already: no tombstone join on doclen)
+    // starts-with, other. startsWithQuery needs every slot matched in
+    // its exact form, so the doc has exact rows and `len` is the length
+    // they carried; it is null only where startsWithQuery is false, and
+    // goes after this rule (a doc-length sort joins doclen/ instead)
     val phraseStart = withPos
-      .join(engine.doclenAll, Seq("docId"))
       .withColumn("startsWithQuery",
         $"wordsRank" === n && $"exactWords" === n && $"firstSlotPos" === 0 &&
           $"proxCost" <= (n - 1)) // all pairs adjacent
@@ -636,6 +643,7 @@ final class MeiliRank(engine: SearchEngine,
         when($"startsWithQuery" && $"len" === n, 3)
           .when($"startsWithQuery", 2)
           .otherwise(1))
+      .drop("len")
 
     // ---- rank columns -> mixed-radix global score ----------------------
     // Rule order is a SETTING (reference Criterion list,
@@ -735,12 +743,8 @@ final class MeiliRank(engine: SearchEngine,
       scored0.filter($"rankingScore" >= t))
 
     // request filter restricts the universe
-    val filtered = filterExpr match {
-      case Some(f) => scored.join(
-        engine.docs.filter(graft.query.FilterParser.parse(f)).select($"docId"),
-        Seq("docId"), "left_semi")
-      case None => scored
-    }
+    val filtered = filterExpr.fold(scored)(f =>
+      scored.join(engine.filteredDocs(f).select($"docId"), Seq("docId"), "left_semi"))
     // lexicographic sort in configured rule order (default: user sort —
     // the "sort" rule — slots between attribute and exactness,
     // criterion.rs), docid-asc tie-break last
@@ -749,6 +753,10 @@ final class MeiliRank(engine: SearchEngine,
 }
 
 object MeiliRank {
+  /** The `len` of a match row that carries no doc length (phrase and
+    * precomputed-prefix derivations, position rows). */
+  private val NoLen: Column = lit(null).cast("int").as("len")
+
   /** Default rule order (reference criterion.rs:12-40 / default_criteria). */
   val DefaultRules: Seq[String] =
     Seq("words", "typo", "proximity", "attribute", "sort", "exactness")

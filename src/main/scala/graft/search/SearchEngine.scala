@@ -23,13 +23,17 @@ final case class Hit(docId: Int, score: Double)
   *
   * Two physical strategies, cross-checked in tests:
   *  - `searchDF`: fully declarative — posting scan (bucket-pruned, term
-  *    filter pushed to parquet) → decode flatMap (each posting carries
-  *    its term's idf) → broadcast-joined doclen → groupBy(docId) →
-  *    orderBy(score desc, docId).limit(k) (Catalyst plans
-  *    TakeOrderedAndProject; no global sort).
-  *  - `searchWand`: per-shard block-max WAND inside `mapGroups` (partial
-  *    top-k per shard, exact global merge) — skips whole blocks via
-  *    (firstDoc, lastDoc, blockMaxScore) without decoding them.
+  *    filter pushed to parquet) → decode flatMap (each posting is scored
+  *    from its tf, the doc length stored beside it in the block and its
+  *    term's idf) → groupBy(docId) → orderBy(score desc, docId).limit(k)
+  *    (Catalyst plans TakeOrderedAndProject; no global sort).
+  *  - `searchWand`: per-shard block-max WAND inside `flatMapGroups`
+  *    (partial top-k per shard, exact global merge) — skips whole blocks
+  *    via (firstDoc, lastDoc, blockMaxScore) without decoding them.
+  *
+  * Neither reads doclen/: the posting blocks carry every doc length a
+  * ranked search needs (SURVEY §3.1 — the reference scores from what its
+  * posting lists return).
   *
   * Tie-break invariant: equal scores → ascending docId (reference
   * bucket_sort.rs:343-364).
@@ -48,14 +52,15 @@ final case class Hit(docId: Int, score: Double)
   *
   * INTERACTIVE DEPLOYMENT: warm query latency is Spark-job-dispatch
   * bound, not data bound — the plans read only the query's pruned term
-  * buckets. Warm jobs per call with AQE off: `searchDF` 2 (the
-  * postings broadcast and the ranked collect), `searchWand` 1,
-  * `MeiliRank.search` and an `api.Index.search` page 3 (the cascade's
-  * doclen broadcast, its collect, the page's doc fetch), 4 with
-  * highlighting (the content fetch); JobBudgetSpec holds these. A
-  * fresh engine costs 0 jobs to open, and its first `searchDF` on a
-  * tombstoned index 4 (the dictionary collect, the tombstone set, and
-  * the two above). For a latency-sensitive service, run the query
+  * buckets. Warm jobs per call with AQE off: `searchDF` 1 (the ranked
+  * collect), `searchWand` 1, `MeiliRank.search` and an
+  * `api.Index.search` page 2 (the cascade's collect and the page's doc
+  * fetch), 3 with highlighting (the content fetch), `searchHits` 2;
+  * JobBudgetSpec holds these. A fresh engine costs 0 jobs to open, and
+  * its first `searchDF` on a tombstoned index 3 (the dictionary
+  * collect, the tombstone set, and the collect). A request filter adds
+  * its own broadcast; only a filter naming `len` joins doclen/
+  * ([[filteredDocs]]). For a latency-sensitive service, run the query
   * session with
   * `spark.sql.adaptive.enabled=false`: these plans are pruned scans +
   * broadcast joins with nothing for AQE to re-plan, and each AQE
@@ -217,19 +222,28 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   }
 
   /** (docId, len) as written, tombstoned rows included: the lookup side
-    * for joins whose other side is already live-only (decoded postings,
-    * positions, [[docsRaw]]), where a tombstone anti-join would cost a
-    * broadcast job and remove nothing. */
+    * for joins whose other side is already live-only ([[docsRaw]]),
+    * where a tombstone anti-join would cost a broadcast job and remove
+    * nothing. */
   private[graft] lazy val doclenAll: DataFrame = IndexBuild.readDoclen(spark, indexDir)
 
-  /** Narrow (docId, len) table — the BM25-norm lookup side, read from
-    * the doclen/ table the build's single tokenize pass wrote. */
+  /** Narrow live (docId, len) table, read from the doclen/ table the
+    * build's single tokenize pass wrote (ranked search reads the lens
+    * stored in the posting blocks instead). */
   lazy val doclen: DataFrame = liveOnly(doclenAll)
 
   /** Full doc view including `len` (joined from [[doclenAll]]) — the
-    * surface for filters, facets and field distribution; hot paths use
-    * [[doclen]]/[[docsRaw]] directly. */
+    * surface for filters, facets and field distribution on `len`; every
+    * other path uses [[docsRaw]]. */
   lazy val docs: DataFrame = docsRaw.join(doclenAll, Seq("docId"))
+
+  /** Live docs matching the filter expression `f` (FilterParser
+    * syntax), from the narrowest view that holds every field it names
+    * ([[docsFor]]): only a filter on `len` pays the doclen join. */
+  def filteredDocs(f: String): DataFrame = {
+    val (pred, fields) = graft.query.FilterParser.parseWithFields(f)
+    docsFor(fields).filter(pred)
+  }
 
   /** Dictionary-resolved QueryTerms for already-tokenized terms. */
   def termsOf(ts: Seq[String]): Seq[QueryTerm] = {
@@ -296,32 +310,34 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   def decoded(terms: Seq[QueryTerm], shardCap: Option[Int] = None,
               table: String = "postings"): Dataset[Posting] =
     decodedWith(terms, terms.map(t => t.term -> Seq(t)).toMap, shardCap, table)(
-      (d, tf, t) => Posting(d, t.term, tf))
+      (d, tf, _, t) => Posting(d, t.term, tf))
 
   /** [[decoded]] with driver-held per-term constants: every live posting
-    * (docId, tf) of term t becomes one `row(docId, tf, c)` per c in
-    * `consts(t)` — the rows an inner join against a (term, c) table
+    * (docId, tf, len) of term t becomes one `row(docId, tf, len, c)` per
+    * c in `consts(t)` — the rows an inner join against a (term, c) table
     * would give, repeated terms fanning out alike, but with no such
     * table in the plan. A query-local table joined in as a broadcast
     * relation costs its own Spark job; here the constants travel in
-    * the closure, looked up once per block in a hash map. */
+    * the closure, looked up once per block in a hash map. `len` is the
+    * doc's length from the block's own len stream. */
   def decodedWith[C, T: Encoder](terms: Seq[QueryTerm], consts: Map[String, Seq[C]],
                                  shardCap: Option[Int] = None,
                                  table: String = "postings")
-                                (row: (Int, Int, C) => T): Dataset[T] = {
+                                (row: (Int, Int, Int, C) => T): Dataset[T] = {
     val del = deletedSet
     val blocks = shardCap.fold(blocksFor(terms, table))(c =>
       blocksFor(terms, table).filter($"shard" < c))
-    blocks.select($"term", $"docBytes", $"tfBytes")
-      .as[(String, Array[Byte], Array[Byte])]
-      .flatMap { case (term, db, tb) =>
+    blocks.select($"term", $"docBytes", $"tfBytes", $"lenBytes")
+      .as[(String, Array[Byte], Array[Byte], Array[Byte])]
+      .flatMap { case (term, db, tb, lb) =>
         val cs = consts.getOrElse(term, Nil)
         if (cs.isEmpty) Iterator.empty
         else {
           val ids = VByte.decodeDeltas(db); val tfs = VByte.decode(tb)
+          val lens = VByte.decode(lb)
           Iterator.range(0, ids.length)
             .filter(i => del.isEmpty || !del.contains(ids(i)))
-            .flatMap(i => cs.iterator.map(c => row(ids(i), tfs(i), c)))
+            .flatMap(i => cs.iterator.map(c => row(ids(i), tfs(i), lens(i), c)))
         }
       }
   }
@@ -336,8 +352,12 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     val pq = parseQuery(q)
     val terms = termsOf(pq.positiveTerms)
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
+    // each posting scores in the decode, from the doc length its block
+    // stores: no doclen read, no join
+    val dl = avgdl
     val base = decodedWith(terms, terms.map(t => t.term -> Seq(t)).toMap, shardCap)(
-      (d, tf, t) => (d, t.term, tf, t.idf)).toDF("docId", "term", "tf", "idf")
+      (d, tf, len, t) => (d, t.term, BM25.score(t.idf, tf, len, dl)))
+      .toDF("docId", "term", "tscore")
     val afterCand = candidates match {
       case Some(c) => base.join(broadcast(c.select($"docId")), Seq("docId"), "left_semi")
       case None => base
@@ -349,24 +369,10 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
       afterCand.join(p.select($"docId"), Seq("docId"), "left_semi"))
     val universe = negDocs.fold(afterPhrase)(nd =>
       afterPhrase.join(nd, Seq("docId"), "left_anti"))
-    // cost-gated join strategy: typical-query postings are small →
-    // broadcast THEM into the doclen lookup join (docs table on the
-    // probe side; the 10^12-row docs table is never shuffled). But a
-    // stop-word term's postings are O(corpus) — broadcasting them OOMs
-    // the executors at scale, so above the Σdf cap the join shuffles
-    // (and high-df queries should prefer searchWand, which never
-    // materializes per-doc posting rows at all). The postings are
-    // live-only already, so the doclen side needs no tombstone join.
-    val postingRows = terms.map(_.df).sum
-    val withLen = doclenAll
-      .join(if (postingRows <= broadcastDfCap) broadcast(universe) else universe,
-        Seq("docId"))
-      .withColumn("tscore", $"idf" * $"tf" * lit(BM25.K1 + 1.0) /
-        ($"tf" + lit(BM25.K1) * (lit(1.0 - BM25.B) + lit(BM25.B) * $"len" / lit(avgdl))))
     // deterministic f64 evaluation order: sum per-term scores in
     // ascending term order (SURVEY §7(e)) so ranks are bit-stable
     // across parallelism levels and across the WAND plan
-    val agg = withLen.groupBy($"docId")
+    val agg = universe.groupBy($"docId")
       .agg(count(lit(1)).as("nMatched"),
         aggregate(array_sort(collect_list(struct($"term", $"tscore"))),
           lit(0.0), (acc, x) => acc + x.getField("tscore")).as("score"))
@@ -398,7 +404,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   }
 
   /** Cost-routed search (the recommended entry point): plain queries
-    * whose Σdf exceeds the broadcast cap go to block-max WAND — it
+    * whose Σdf exceeds `broadcastDfCap` go to block-max WAND — it
     * skips undecoded blocks and never materializes per-doc posting rows,
     * the right physical plan for stop-word-heavy queries at scale;
     * everything else takes the declarative plan. Both plans are
@@ -410,11 +416,14 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     else searchDF(q, k, conjunctive)
   }
 
-  /** Block-max WAND search: per-shard top-k inside mapGroups (the only
-    * imperative operator on the read path), exact global merge. Queries
-    * carrying phrase/negative syntax delegate to the declarative plan
-    * (per-shard pruning cannot see cross-shard universe restrictions
-    * without losing top-k exactness). */
+  /** Block-max WAND search: per-shard top-k inside flatMapGroups (the
+    * only imperative operator on the read path), exact global merge.
+    * Each shard's doc lengths come from the len streams of its own
+    * blocks, tombstones dropped: no doclen/ side, so the one exchange
+    * ships only the query's blocks. Queries carrying phrase/negative
+    * syntax delegate to the declarative plan (per-shard pruning cannot
+    * see cross-shard universe restrictions without losing top-k
+    * exactness). */
   def searchWand(q: String, k: Int, conjunctive: Boolean = true): DataFrame = {
     val pq = parseQuery(q)
     if (!pq.isPlain) return searchDF(q, k, conjunctive)
@@ -425,18 +434,23 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     val bAvgdl = avgdl
     val conj = conjunctive
     val kk = k
+    val del = deletedSet
     val blocks = blocksFor(terms)
-      .select($"term", $"shard", $"firstDoc", $"lastDoc", $"count",
-        $"docBytes", $"tfBytes", $"blockMaxTf")
-      .as[Wand.Block]
-    val dps = docsPerShard
-    val lens = doclen.select(($"docId" / dps).cast("int").as("shard"),
-      $"docId", $"len").as[(Int, Int, Int)]
-    val hits = blocks.groupByKey(_.shard).cogroup(lens.groupByKey(_._1)) {
-      (shard, bs, ls) =>
-        val lenMap = new scala.collection.mutable.HashMap[Int, Int]
-        ls.foreach(l => lenMap.update(l._2, l._3))
-        Wand.topKShard(bs.toArray, lenMap, bTermStats.value, bAvgdl, kk, conj)
+      .select(struct($"term", $"shard", $"firstDoc", $"lastDoc", $"count",
+        $"docBytes", $"tfBytes", $"blockMaxTf").as("_1"), $"lenBytes".as("_2"))
+      .as[(Wand.Block, Array[Byte])]
+    val hits = blocks.groupByKey(_._1.shard).flatMapGroups { (_, rows) =>
+      val bs = rows.toArray
+      val lens = new scala.collection.mutable.HashMap[Int, Int]
+      bs.foreach { case (b, lb) =>
+        val ids = VByte.decodeDeltas(b.docBytes); val ls = VByte.decode(lb)
+        var i = 0
+        while (i < ids.length) {
+          if (del.isEmpty || !del.contains(ids(i))) lens.update(ids(i), ls(i))
+          i += 1
+        }
+      }
+      Wand.topKShard(bs.map(_._1), lens, bTermStats.value, bAvgdl, kk, conj)
     }
     hits.toDF("docId", "score")
       .orderBy($"score".desc, $"docId".asc).limit(k)
@@ -478,7 +492,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   def facetCountsOver(universe: DataFrame, facetCol: String,
                       maxValues: Int = 100,
                       sortBy: String = "count"): DataFrame = {
-    val counts = docsFor(facetCol)
+    val counts = docsFor(Seq(facetCol))
       .join(universe.select($"docId"), Seq("docId"), "left_semi")
       .groupBy(col(facetCol)).agg(count(lit(1)).as("n"))
     (sortBy match {
@@ -489,10 +503,10 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     }).limit(maxValues)
   }
 
-  /** Narrowest doc view that can serve column `c` (only `len` needs the
-    * doclen join). */
-  private def docsFor(c: String): DataFrame =
-    if (c == "len") docs else docsRaw
+  /** Narrowest live doc view that holds every column of `cols`: only
+    * `len` needs the doclen join. */
+  private[graft] def docsFor(cols: Iterable[String]): DataFrame =
+    if (cols.exists(_ == "len")) docs else docsRaw
 
   /** Facet stats: numeric min/max over candidates (reference
     * facet_distribution.rs facet_stats). */
@@ -516,21 +530,22 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   /** [[positionRows]] with driver-held per-term constants, the
     * positions counterpart of [[decodedWith]]: every position of term t
     * in a live doc (fid-restricted like positionRows) becomes one
-    * `row(docId, pos, c)` per c in `consts(t)`, with no (term, c) table
-    * in the plan. Tombstones drop in the closure, like in decodedWith. */
+    * `row(docId, pos, len, c)` per c in `consts(t)`, with no (term, c)
+    * table in the plan; `len` is the doc's length stored on its row.
+    * Tombstones drop in the closure, like in decodedWith. */
   def positionsWith[C, T: Encoder](consts: Map[String, Seq[C]],
                                    fids: Option[Set[Int]] = None,
                                    table: String = "positions")
-                                  (row: (Int, Int, C) => T): Dataset[T] = {
+                                  (row: (Int, Int, Int, C) => T): Dataset[T] = {
     val del = deletedSet
     positionScan(consts.keys.toSeq, table)
-      .select($"term", $"docId", $"positions")
-      .as[(String, Int, Array[Int])]
-      .flatMap { case (t, d, ps) =>
+      .select($"term", $"docId", $"positions", $"len")
+      .as[(String, Int, Array[Int], Int)]
+      .flatMap { case (t, d, ps, len) =>
         val cs = consts.getOrElse(t, Nil)
         if (cs.isEmpty || del.contains(d)) Iterator.empty
         else ps.iterator.filter(p => fids.forall(_.contains(p >> 16)))
-          .flatMap(p => cs.iterator.map(c => row(d, p, c)))
+          .flatMap(p => cs.iterator.map(c => row(d, p, len, c)))
       }
   }
 
@@ -696,7 +711,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * query analysis). */
   def adjacencyCounts(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
     if (pairs.isEmpty) return Map.empty
-    val left = positionsWith(pairs.groupBy(_._1))((d, p, lr) => (lr._1, lr._2, d, p))
+    val left = positionsWith(pairs.groupBy(_._1))((d, p, _, lr) => (lr._1, lr._2, d, p))
       .toDF("l", "r", "docId", "p1")
     left.join(positionRows(pairs.map(_._2).distinct).toDF("r", "docId", "p2"),
         Seq("r", "docId"))
@@ -721,12 +736,9 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   def totalHits(q: String, conjunctive: Boolean = true,
                 filter: Option[String] = None): Long = {
     val base = candidates(q, conjunctive)
-    (filter match {
-      case Some(f) => base.join(
-        docs.filter(graft.query.FilterParser.parse(f)).select($"docId"),
-        Seq("docId"), "left_semi")
-      case None => base
-    }).count()
+    filter.fold(base)(f =>
+      base.join(filteredDocs(f).select($"docId"), Seq("docId"), "left_semi"))
+      .count()
   }
 
   /** Paginated search (reference page/hitsPerPage vs offset/limit,
@@ -736,7 +748,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   def searchPage(q: String, offset: Int, limit: Int,
                  conjunctive: Boolean = true,
                  filter: Option[String] = None): (Array[Hit], Long) = {
-    val cand = filter.map(f => docs.filter(graft.query.FilterParser.parse(f)))
+    val cand = filter.map(filteredDocs)
     val top = searchDF(q, offset + limit, conjunctive, cand)
       .as[Hit].collect().drop(offset)
     (top, totalHits(q, conjunctive, filter))
@@ -778,7 +790,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     // its own normalized query ('cafe'). UDF runs post-agg on ≤ distinct
     // facet values, not per doc.
     val normUdf = udf((s: String) => if (s == null) null else Tokenizer.normalize(s.trim))
-    val grouped = docsFor(facetCol).join(broadcast(candidates(q)), Seq("docId"), "left_semi")
+    val grouped = docsFor(Seq(facetCol)).join(broadcast(candidates(q)), Seq("docId"), "left_semi")
       .groupBy(col(facetCol).as("value"))
       .agg(count(lit(1)).as("n"))
       .withColumn("nv", normUdf(col("value")))
@@ -811,7 +823,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * materialization). Returns local rows in rank order. */
   def searchHits(q: String, k: Int, filter: Option[String] = None,
                  conjunctive: Boolean = true): DataFrame = {
-    val cand = filter.map(f => docs.filter(graft.query.FilterParser.parse(f)))
+    val cand = filter.map(filteredDocs)
     val top = searchDF(q, k, conjunctive, cand)
     withDocCols(top.collect(), top.schema, Seq("repo", "path", "commit", "lang"))
   }
@@ -844,10 +856,11 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
 }
 
 object SearchEngine {
-  /** Σdf above which per-query postings stop being broadcast into the
-    * doclen join: ~4M posting rows ≈ tens of MB serialized, a safe
-    * executor broadcast; a skewed stop-word term (df ≈ 40% of corpus)
-    * exceeds it immediately and routes to the shuffle join instead. */
+  /** Σdf above which [[SearchEngine.search]] routes a plain query to
+    * block-max WAND: below it, the declarative plan's ~4M decoded posting
+    * rows are cheap to aggregate; a skewed stop-word term (df ≈ 40% of
+    * corpus) exceeds it immediately, and WAND skips its blocks instead
+    * of materializing a row per posting. */
   final val BroadcastDfCap: Long = 4L << 20
 
   /** Max tombstones held as a task-local set (4M Ints ≈ 16 MB);

@@ -23,7 +23,14 @@ object Wand {
   /** One encoded posting block as read from the postings table. The
     * block-level score upper bound is derived from blockMaxTf + the
     * term's idf (doclen lower-bounded by 0, see BM25.maxScore) — stored
-    * maxTf keeps the index layout independent of the scoring constants. */
+    * maxTf keeps the index layout independent of the scoring constants.
+    *
+    * The block's `lenBytes` stream is not a field: the caller decodes it
+    * into the `lens` map [[topKShard]] takes (SearchEngine.searchWand
+    * does so per shard). The shape stays as it is because the benchmark
+    * harness's kernel probe builds these eight fields and that map
+    * itself; a tighter bound over the block's real (tf, len) maximum
+    * needs a new field and waits for a change of that probe. */
   final case class Block(term: String, shard: Int, firstDoc: Int,
       lastDoc: Int, count: Int, docBytes: Array[Byte],
       tfBytes: Array[Byte], blockMaxTf: Int)
@@ -91,11 +98,7 @@ object Wand {
       else (bms(blocks(b)), blocks(b).lastDoc)
     }
 
-    def score(len: Int, avgdl: Double): Double = {
-      val tf = curTf
-      idf * tf * (BM25.K1 + 1.0) /
-        (tf + BM25.K1 * (1.0 - BM25.B + BM25.B * len / avgdl))
-    }
+    def score(len: Int, avgdl: Double): Double = BM25.score(idf, curTf, len, avgdl)
   }
 
   /** Bounded top-k heap ordered by (score desc, docId asc); the head is

@@ -43,6 +43,21 @@ class IndexApiSpec extends AnyFunSuite {
     assert(rows.last.getInt(1) == 1, "doc 4 matches only the first word")
   }
 
+  test("a len filter or len sort pages exactly as the doc lengths in doclen/ order it") {
+    val lens = idx.engine.doclen.as[(Int, Int)].collect().toMap
+    val all = idx.search(SearchRequest(q = "spark merge", limit = 10)).collect().toSeq
+    val cut = all.map(r => lens(r.getInt(0))).sorted.apply(all.size / 2)
+    // the filter restricts the universe after scoring: the rows of the
+    // unfiltered page whose doc is long enough, every column unchanged
+    val filtered = idx.search(SearchRequest(q = "spark merge", limit = 10,
+      filter = Some(s"len >= $cut"))).collect().toSeq
+    assert(filtered.nonEmpty && filtered.size < all.size, s"cut $cut: $filtered")
+    assert(filtered == all.filter(r => lens(r.getInt(0)) >= cut))
+    val byLen = idx.search(SearchRequest(q = "spark merge", limit = 10,
+      sort = Seq("len:desc"), rankingRules = Seq("sort"))).collect().map(_.getInt(0)).toSeq
+    assert(byLen == all.map(_.getInt(0)).sortBy(d => (-lens(d), d)), s"$byLen")
+  }
+
   test("filter + matchingStrategy=all compose") {
     val ids = idx.search(SearchRequest(q = "spark merge batch",
       filter = Some("lang = en"), matchingStrategy = "all"))

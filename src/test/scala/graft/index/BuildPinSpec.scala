@@ -38,9 +38,16 @@ class BuildPinSpec extends AnyFunSuite {
   private def tables = Seq("postings", "positions", "doclen", "docs")
 
   /** Columns left out of a table's digest: prefix_positions/ gained
-    * `tf` when it moved onto the positions write; every column it held
-    * before stays pinned. */
-  private val Unpinned = Map("prefix_positions" -> Set("tf"))
+    * `tf` when it moved onto the positions write, and the posting and
+    * position tables gained the doc-length stream (`lenBytes`) and
+    * column (`len`; doclen/ of a positions build is the positions
+    * table's sentinel partition, so it holds `len` too); every column a
+    * table held before stays pinned. The lens are checked against
+    * doclen/ instead ("decoded lens equal doclen/"). */
+  private val Unpinned = Map(
+    "postings" -> Set("lenBytes"), "prefixes" -> Set("lenBytes"),
+    "positions" -> Set("len"), "prefix_positions" -> Set("tf", "len"),
+    "doclen" -> Set("len"))
 
   /** table -> sha256 over its sorted rendered rows (columns in name
     * order; binaries as hex, arrays as lists), for the tables present. */
@@ -122,6 +129,49 @@ class BuildPinSpec extends AnyFunSuite {
     IndexBuild.buildPrefixIndex(spark, dir, c, minDf = 20)
     assertPinned("buildPrefixIndex", dir, Pins("prefix"),
       Seq("prefixes", "prefix_positions"))
+  }
+
+  /** Every (term, docId) of postings/, prefixes/ and positions/ carries
+    * its doc's doclen/ length (on a positions build the prefix tables
+    * too); returns the number of rows checked. */
+  private def assertLens(name: String, dir: String): Long = {
+    val want = spark.read.schema("docId INT, tf INT").parquet(s"$dir/doclen")
+      .as[(Int, Int)].collect().toMap
+    def check(table: String, rows: Seq[(String, Int, Int)]): Long = {
+      assert(rows.nonEmpty, s"$name: $table has rows")
+      val bad = rows.filter { case (_, d, len) => !want.get(d).contains(len) }
+      assert(bad.isEmpty, s"$name: $table lens differ from doclen/: ${bad.take(5)}")
+      rows.size.toLong
+    }
+    def blocks(table: String) = spark.read.parquet(s"$dir/$table")
+      .select($"term", $"docBytes", $"lenBytes").as[(String, Array[Byte], Array[Byte])]
+      .collect().toSeq.flatMap { case (t, db, lb) =>
+        val ids = graft.functions.VByte.decodeDeltas(db)
+        val lens = graft.functions.VByte.decode(lb)
+        assert(ids.length == lens.length, s"$name: $table block of $t")
+        ids.indices.map(i => (t, ids(i), lens(i)))
+      }
+    def rows(table: String) = spark.read.parquet(s"$dir/$table")
+      .select($"term", $"docId", $"len").as[(String, Int, Int)].collect().toSeq
+    Seq("postings" -> blocks _, "prefixes" -> blocks _,
+        "positions" -> rows _, "prefix_positions" -> rows _)
+      .filter { case (t, _) => new java.io.File(s"$dir/$t").exists }
+      .map { case (t, read) => check(t, read(t)) }.sum
+  }
+
+  test("decoded lens equal doclen/ for every (term, docId) of postings, prefixes and positions") {
+    for (pos <- Seq(false, true)) {
+      val c = cfg.copy(positions = pos)
+      val built = newDir(s"pin-lens-build-$pos")
+      IndexBuild.build(spark, corpus.toDS(), built, c)
+      IndexBuild.buildPrefixIndex(spark, built, c, minDf = 20)
+      val appended = newDir(s"pin-lens-append-$pos")
+      IndexBuild.build(spark, corpus.take(200).toDS(), appended, c)
+      IndexBuild.append(spark, corpus.drop(200).toDS(), appended, c, "b1")
+      Seq("built" -> built, "appended" -> appended).foreach { case (what, d) =>
+        info(s"positions=$pos $what: ${assertLens(s"positions=$pos $what", d)} rows")
+      }
+    }
   }
 
   private val Pins: Map[String, Map[String, String]] = Map(

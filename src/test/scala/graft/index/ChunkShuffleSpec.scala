@@ -9,8 +9,8 @@ import graft.corpus.SourceFile
 
 /** The chunk shuffle of every posting and position write (map-side
   * delta+VByte chunk combine) must be a pure transport optimization: the
-  * one chunk codec round-trips to the exact sorted token stream, with
-  * and without positions, and a build ships fewer shuffle bytes than a
+  * one chunk codec round-trips to the exact sorted token stream, doc
+  * lengths included, with and without positions, and a build ships fewer shuffle bytes than a
   * per-posting row shuffle. Same blocks out: BuildPinSpec. */
 class ChunkShuffleSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -34,7 +34,7 @@ class ChunkShuffleSpec extends AnyFunSuite {
     val shuffled = new scala.util.Random(seed).shuffle(rows)
     // tiny flush budget forces many partial flushes
     val chunks = IndexBuild.chunkRows(shuffled.iterator, dps, 16).toSeq
-    def view(r: IndexBuild.TokenRow) = (r._1, r._2, r._3, Option(r._4).map(_.toSeq))
+    def view(r: IndexBuild.TokenRow) = (r._1, r._2, r._3, r._4, Option(r._5).map(_.toSeq))
     // simulate the exchange: group by (term, shard), order by firstKey
     val runs = chunks.groupBy(c => (c._1, IndexBuild.keyDoc(c._2) / dps))
     runs.foreach { case ((term, shard), cs) =>
@@ -45,7 +45,7 @@ class ChunkShuffleSpec extends AnyFunSuite {
       cs.foreach { c =>
         val docs = graft.functions.VByte.decodeDeltas(c._3)
         assert(docs.forall(_ / dps == shard), s"chunk spans shards: $term")
-        assert((c._5 == null) == (rows.head._4 == null), s"position payload: $term")
+        assert((c._6 == null) == (rows.head._5 == null), s"position payload: $term")
       }
     }
     assert(runs.values.exists { cs =>
@@ -59,15 +59,16 @@ class ChunkShuffleSpec extends AnyFunSuite {
     // shard-boundary seals, out-of-order appends, and overlapping
     // chunks across map partitions all occur; no positions
     assertRoundTrip((0 until 200).flatMap { d =>
-      Seq[IndexBuild.TokenRow](("hot", d, 1 + d % 3, null), (s"t${d % 7}", d, 1, null))
+      Seq[IndexBuild.TokenRow](("hot", d, 1 + d % 3, 5 + d % 11, null),
+        (s"t${d % 7}", d, 1, 5 + d % 11, null))
     }, seed = 7)
   }
 
   test("position chunk round-trip: flatten(chunk(s)) == sorted s with fid<<16 positions and budget flushes") {
     assertRoundTrip((0 until 120).flatMap { d =>
       Seq[IndexBuild.TokenRow](
-        ("hot", d, 2, Array((1 << 16) | d % 7, (1 << 16) | (d % 7 + 3))),
-        (s"t${d % 5}", d, 1, Array(d % 11)))
+        ("hot", d, 2, 300 + d, Array((1 << 16) | d % 7, (1 << 16) | (d % 7 + 3))),
+        (s"t${d % 5}", d, 1, 300 + d, Array(d % 11)))
     }, seed = 11)
   }
 

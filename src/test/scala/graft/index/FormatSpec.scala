@@ -57,7 +57,11 @@ class FormatSpec extends AnyFunSuite {
       "unstamped" -> (d => fs(d).delete(Lineage.formatPath(d), false)),
       // the layout before the LSH parameters became a key=value marker
       "older-stamp" -> (d => writeStamp(d,
-        s"layout=10 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")))) {
+        s"layout=10 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")),
+      // the layout whose posting blocks had no doc-length stream: ranked
+      // search would find no lens to score with
+      "v11-stamp" -> (d => writeStamp(d,
+        s"layout=11 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")))) {
     test(s"$variant index: every entry point refuses with a rebuild error, touching nothing") {
       val dir = newDir(s"fmt-$variant")
       IndexBuild.build(spark, corpus.toDS(), dir, cfg)

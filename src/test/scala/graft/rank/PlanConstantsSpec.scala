@@ -122,10 +122,15 @@ class PlanConstantsSpec extends AnyFunSuite {
   test("slot match rows fan out per slot exactly like the term-table broadcast join") {
     for ((what, slots) <- cases; fids <- Seq(None, Some(Set(0)))) {
       assert(slots.forall(s => s.phraseDerivs.isEmpty && s.prefixDerivs.isEmpty))
-      val got = sorted4(mr.slotMatchRows(slots, fids))
+      val rows = mr.slotMatchRows(slots, fids)
+      val got = sorted4(rows.drop("len"))
       assert(got.nonEmpty, what)
       assert(got == oldMatchRows(slots, fids), s"$what, fids=$fids")
       assert(!got.exists(r => deleted.contains(r._1)), what)
+      // each row carries its doc's length as stored beside the posting
+      val lens = engine.doclen.as[(Int, Int)].collect().toMap
+      assert(rows.select($"docId", $"len").as[(Int, Int)].collect()
+        .forall { case (d, len) => lens.get(d).contains(len) }, s"$what: len")
     }
   }
 
