@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.rank.TypoSettings
-import graft.search.SearchEngine
 
 /** Index-level statistics (reference GET /indexes/{uid}/stats:
   * numberOfDocuments, isIndexing, fieldDistribution). `isIndexing` =
@@ -49,11 +48,13 @@ final class Client(spark: SparkSession, rootDir: String) {
 
   def indexExists(uid: String): Boolean = fs.exists(dirOf(uid))
 
-  /** Open an index for searching. */
+  /** Open an index for searching, through the one engine cache
+    * ([[graft.DocIndex.open]]): the engine is reused until the index's
+    * generation moves. */
   def index(uid: String, synonyms: Map[String, Seq[String]] = Map.empty,
             typo: TypoSettings = TypoSettings()): Index = {
     require(indexExists(uid), s"index '$uid' does not exist")
-    new Index(new SearchEngine(spark, indexDir(uid)), synonyms, typo)
+    new Index(graft.DocIndex.open(spark, indexDir(uid)), synonyms, typo)
   }
 
   /** All valid index uids under the root, sorted. `.swap-*` recovery
@@ -78,7 +79,7 @@ final class Client(spark: SparkSession, rootDir: String) {
 
   def stats(uid: String): IndexStats = {
     require(indexExists(uid), s"index '$uid' does not exist")
-    val e = new SearchEngine(spark, indexDir(uid))
+    val e = graft.DocIndex.open(spark, indexDir(uid))
     IndexStats(e.nDocs, e.fieldDistribution(), isIndexing(uid))
   }
 

@@ -89,11 +89,7 @@ object Dump {
       .write.mode("overwrite").json(s"$dumpDir/documents")
 
     val stats = IndexBuild.readStats(spark, indexDir)
-    val stop: Seq[String] =
-      if (fs.exists(new Path(s"$indexDir/stopwords")))
-        spark.read.schema("term STRING").parquet(s"$indexDir/stopwords")
-          .as[String].collect().toSeq.sorted
-      else Nil
+    val stop: Seq[String] = IndexBuild.readStopWords(spark, indexDir).toSeq.sorted
     val positions = fs.exists(new Path(s"$indexDir/positions"))
     // facet indexes are derived tables: record their columns so import
     // rebuilds them (the reference dump's settings capture filterable

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.collection.mutable.ArrayBuffer
@@ -391,10 +391,7 @@ object IndexBuild {
     * writers' schemas (no inference job); a multi-field index's field
     * columns come from its `fields` table. */
   def liveDocs(spark: SparkSession, indexDir: String): DataFrame = {
-    val fieldCols =
-      if (!exists(spark, s"$indexDir/fields")) Nil
-      else spark.read.schema(FieldsSchemaDdl).parquet(s"$indexDir/fields")
-        .orderBy(col("fid")).select(col("name")).collect().map(_.getString(0)).toSeq
+    val fieldCols = readFields(spark, indexDir).map(_._2)
     val docs0 = spark.read.schema(docsSchema(fieldCols)).parquet(s"$indexDir/docs")
     if (exists(spark, s"$indexDir/deleted"))
       docs0.join(broadcast(spark.read.schema("docId INT").parquet(s"$indexDir/deleted")),
@@ -1156,22 +1153,40 @@ object IndexBuild {
 
   /** Index-time tokenizer settings persisted by the build (Default when
     * none were set): the query side and dumps segment with exactly
-    * these, so both ends agree by construction. */
+    * these, so both ends agree by construction. Read on the driver, no
+    * Spark job. */
   def readTokSettings(spark: SparkSession, indexDir: String): Tokenizer.TokSettings =
-    if (!exists(spark, s"$indexDir/tokenizer")) Tokenizer.TokSettings.Default
-    else {
-      val r = spark.read.schema(TokSchemaDdl)
-        .parquet(s"$indexDir/tokenizer").collect()(0)
-      def strs(i: Int): Seq[String] = r.getSeq[String](i)
-      val seps = strs(0).filter(_.nonEmpty)
-      Tokenizer.TokSettings(
-        seps.filter(_.length == 1).map(_.charAt(0)).toSet,
-        strs(1).filter(_.nonEmpty).map(_.charAt(0)).toSet,
-        strs(2).toSet,
-        separatorStrings = seps.filter(_.length > 1).toSet,
-        localesByFid = strs(3).map(Tokenizer.TokSettings.parseFidLocale).toMap,
-        cjkUnigrams = Some(r.getString(4)).filter(_.nonEmpty).map(_.toBoolean))
+    readSmall(spark, indexDir, "tokenizer", TokSchemaDdl).headOption match {
+      case None => Tokenizer.TokSettings.Default
+      case Some(r) =>
+        def strs(i: Int): Seq[String] = r.getSeq[String](i)
+        val seps = strs(0).filter(_.nonEmpty)
+        Tokenizer.TokSettings(
+          seps.filter(_.length == 1).map(_.charAt(0)).toSet,
+          strs(1).filter(_.nonEmpty).map(_.charAt(0)).toSet,
+          strs(2).toSet,
+          separatorStrings = seps.filter(_.length > 1).toSet,
+          localesByFid = strs(3).map(Tokenizer.TokSettings.parseFidLocale).toMap,
+          cjkUnigrams = Some(r.getString(4)).filter(_.nonEmpty).map(_.toBoolean))
     }
+
+  /** Index-time stop words (empty when unset), read on the driver. */
+  def readStopWords(spark: SparkSession, indexDir: String): Set[String] =
+    readSmall(spark, indexDir, "stopwords", "term STRING").map(_.getString(0)).toSet
+
+  /** (fid, name, weight) of a multi-field index's searchable fields
+    * ([[buildMultiField]]) in fid order, read on the driver; empty for
+    * a single-field index. */
+  def readFields(spark: SparkSession, indexDir: String): Seq[(Int, String, Int)] =
+    readSmall(spark, indexDir, "fields", FieldsSchemaDdl)
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).sortBy(_._1)
+
+  /** Every row of the settings-sized table `indexDir/table` (none when
+    * it is absent). */
+  private def readSmall(spark: SparkSession, indexDir: String, table: String,
+                        ddl: String): Seq[Row] =
+    LocalParquet.readAll(spark.sparkContext.hadoopConfiguration, s"$indexDir/$table",
+      StructType.fromDDL(ddl))
 
   /** Update-merge ingest (reference S1 replace vs update semantics,
     * document_operation.rs): keep the latest version per primary key

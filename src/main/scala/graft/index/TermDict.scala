@@ -1,9 +1,7 @@
 package graft.index
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** Query-side dictionary access with a bounded driver footprint.
   *
@@ -13,9 +11,10 @@ import org.apache.spark.sql.SparkSession
   * collect the dictionary to the driver: at web scale the vocabulary is
   * 10^8-10^9 terms. This class:
   *
-  *  - small dictionaries (≤ `collectThreshold` terms): one collect, all
-  *    lookups served from an in-memory map/array — interactive-query
-  *    fast, and exactly what a 60k-doc index wants;
+  *  - small dictionaries (≤ `collectThreshold` terms): one driver-side
+  *    read (no Spark job), all lookups served from an in-memory
+  *    map/array — interactive-query fast, and exactly what a 60k-doc
+  *    index wants;
   *  - large dictionaries: per-query *bucketed* loads with predicate
   *    pushdown on the dict parquet — exact-term lookups push an `IN`
   *    filter, typo expansion loads only the query word's length band
@@ -40,23 +39,15 @@ final class TermDict(spark: SparkSession, dictPath: String,
   /** Term count without a Spark job: dict/ and prefix_dict/ hold one
     * row per term, so it is the sum of the parquet footers' row counts,
     * read on the driver. */
-  lazy val size: Long = {
-    val dir = new Path(dictPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    dir.getFileSystem(conf).listStatus(dir).iterator
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map { s =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-  }
+  lazy val size: Long = LocalParquet.rowCount(spark.sparkContext.hadoopConfiguration, dictPath)
 
   /** Small-mode full map (None above the threshold — callers must use
-    * the bucketed APIs). */
+    * the bucketed APIs), read on the driver without a Spark job. */
   lazy val fullMap: Option[Map[String, Long]] =
     if (size <= collectThreshold)
-      Some(dictDf.select($"term", $"df").as[(String, Long)].collect().toMap)
+      Some(LocalParquet.readAll(spark.sparkContext.hadoopConfiguration, dictPath,
+        StructType.fromDDL("term STRING, df BIGINT")).iterator
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
     else None
 
   private val bandCache = TermDict.lru[(Int, Int), (Array[String], Array[Long])](cacheEntries)

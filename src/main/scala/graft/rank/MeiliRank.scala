@@ -478,10 +478,11 @@ final class MeiliRank(engine: SearchEngine,
     *
     * EAGER like the reference's search: the top-k cut materializes
     * driver-side (k is a page size — the facade caps it at
-    * maxTotalHits) so document metadata can be fetched with a
-    * docId-pushed pruned scan instead of joining the whole doc store;
-    * the page comes back as local rows in rank order, so collecting it
-    * runs no further job.
+    * maxTotalHits) so document metadata can be read by docId on the
+    * driver (SearchEngine.docRows) instead of joining the whole doc
+    * store: the page costs one Spark job, the cascade's top-k collect,
+    * and comes back as local rows in rank order, so collecting it runs
+    * no further job.
     * Callers needing a deep lazy ordering without metadata should use
     * [[scoredUniverse]] (as Hybrid's keyword arm does). */
   def search(q: String, k: Int,
@@ -524,11 +525,11 @@ final class MeiliRank(engine: SearchEngine,
       case None if docSortCols.forall(universeCols.contains) &&
           k <= MeiliRank.MaxEagerTopK =>
         // Every sort key lives in the scored universe → take the top-k
-        // FIRST (the cascade runs once, k is page-sized), then fetch
-        // metadata for exactly those docids with an IN predicate the
-        // parquet scan prunes on — the doc store is never joined
-        // wholesale. The merge happens on the driver, in rank order, so
-        // the returned local rows cost the caller's collect no job.
+        // FIRST (the cascade runs once, k is page-sized), then read
+        // metadata for exactly those docids on the driver — the doc
+        // store is never joined wholesale. The merge happens on the
+        // driver, in rank order, so the returned local rows cost the
+        // caller's collect no job.
         val top = filtered.orderBy(sortCols: _*).limit(k)
           .select((rankCols ++ detailCols).map(col): _*)
         return engine.withDocCols(top.collect(), top.schema, metaCols)

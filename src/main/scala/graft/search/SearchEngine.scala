@@ -39,27 +39,28 @@ final case class Hit(docId: Int, score: Double)
   * bucket_sort.rs:343-364).
   *
   * LIFETIME: an engine is a SNAPSHOT of the index at construction —
-  * stats (driver-side text files, no Spark job) and the stop-word,
-  * tokenizer and field settings (one job each, only when the index
-  * has them) load eagerly; the dictionary loads on the first search
-  * (one collect; its size comes from parquet footers without a job),
-  * the tombstone set and file listings lazily (`tableDFs`, TermDict's
-  * band caches: they live and die with this snapshot). After an
-  * append, delete or facet/prefix rebuild, open a new engine (the
-  * reference's RoTxn snapshot semantics): `DocIndex.open` does so when
-  * `Lineage.generation` or a derived marker moves, `api.Client.index`
-  * on every call. A held instance is never refreshed.
+  * stats (driver-side text files) and the stop-word, tokenizer and
+  * field settings (parquet read on the driver, [[graft.index.LocalParquet]])
+  * load eagerly with no Spark job; the dictionary (read on the driver
+  * below TermDict's threshold; its size comes from parquet footers) and
+  * the tombstone set load on the first search, and table listings and
+  * the doc store's footer index lazily (`tableDFs`, `docStore`,
+  * TermDict's band caches: they live and die with this snapshot). After
+  * an append, delete or facet/prefix rebuild, open a new engine (the
+  * reference's RoTxn snapshot semantics): `DocIndex.open`, which
+  * `api.Client` goes through, does so when `Lineage.generation` or a
+  * derived marker moves. A held instance is never refreshed.
   *
   * INTERACTIVE DEPLOYMENT: warm query latency is Spark-job-dispatch
   * bound, not data bound — the plans read only the query's pruned term
   * buckets. Warm jobs per call with AQE off: `searchDF` 1 (the ranked
-  * collect), `searchWand` 1, `MeiliRank.search` and an
-  * `api.Index.search` page 2 (the cascade's collect and the page's doc
-  * fetch), 3 with highlighting (the content fetch), `searchHits` 2;
-  * JobBudgetSpec holds these. A fresh engine costs 0 jobs to open, and
-  * its first `searchDF` on a tombstoned index 3 (the dictionary
-  * collect, the tombstone set, and the collect). A request filter adds
-  * its own broadcast; only a filter naming `len` joins doclen/
+  * collect), `searchWand` 1, `MeiliRank.search`, `searchHits` and an
+  * `api.Index.search` page 1 with or without highlighting (the page's
+  * documents are read on the driver, [[docRows]]); JobBudgetSpec holds
+  * these. A fresh engine costs 0 jobs to open, and its first `searchDF`
+  * on a tombstoned index 1 (the dictionary and the tombstone set are
+  * read on the driver). A request filter adds its own broadcast; only
+  * a filter naming `len` joins doclen/
   * ([[filteredDocs]]). For a latency-sensitive service, run the query
   * session with
   * `spark.sql.adaptive.enabled=false`: these plans are pruned scans +
@@ -77,6 +78,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   // folds) fails fast with the remedy instead of answering wrong
   graft.index.Lineage.requireFormat(spark, indexDir)
 
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
+
   // ---- loaded-once index metadata (the FST/dictionary analogue) -------
   val stats: Map[String, Double] = IndexBuild.readStats(spark, indexDir)
   val nDocs: Long = stats("N").toLong
@@ -93,14 +96,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * absent from the dictionary, so bag-of-words paths ignore them
     * naturally — the set is for analyzers that must drop them before
     * slot construction (MeiliRank). */
-  val stopWords: Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/stopwords")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema("term STRING").parquet(s"$indexDir/stopwords")
-        .as[String].collect().toSet
-    else Set.empty
-  }
+  val stopWords: Set[String] = IndexBuild.readStopWords(spark, indexDir)
 
   /** Index-time tokenizer settings (IndexConfig.tokenizer, persisted by
     * the build): the query side MUST segment with the same settings or
@@ -133,14 +129,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
 
   /** (fid, name, weight) of a multi-field index's searchable fields
     * (IndexBuild.buildMultiField), in fid order; empty for single-field. */
-  private[graft] val fields: Seq[(Int, String, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/fields")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(IndexBuild.FieldsSchemaDdl).parquet(s"$indexDir/fields")
-        .as[(Int, String, Int)].collect().sortBy(_._1).toSeq
-    else Nil
-  }
+  private[graft] val fields: Seq[(Int, String, Int)] = IndexBuild.readFields(spark, indexDir)
 
   /** fid → weight for multi-field indexes; empty for single-field. Lower
     * weight = more important field (reference fieldids_weights_map). */
@@ -165,16 +154,15 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
         .select($"docId"))
     else None
   }
-  /** One job: a single task reads every tombstone batch, and the limit
-    * stops the read one row past the cap. */
-  private lazy val deletedSet: Set[Int] = deletedDf match {
-    case None => Set.empty
-    case Some(d) =>
-      val ids = d.as[Int].coalesce(1).limit(SearchEngine.TombstoneCap.toInt + 1).collect()
-      val n = ids.length
-      require(n <= SearchEngine.TombstoneCap,
-        s"$n tombstones exceed the broadcastable cap (${SearchEngine.TombstoneCap}): run IndexBuild.compact")
-      ids.toSet
+  /** Read on the driver (no Spark job); the cap is checked on the
+    * footers' row counts before a row is read. */
+  private lazy val deletedSet: Set[Int] = {
+    val dir = s"$indexDir/deleted"
+    val n = graft.index.LocalParquet.rowCount(hadoopConf, dir)
+    require(n <= SearchEngine.TombstoneCap,
+      s"$n tombstones exceed the broadcastable cap (${SearchEngine.TombstoneCap}): run IndexBuild.compact")
+    graft.index.LocalParquet.readAll(hadoopConf, dir, StructType.fromDDL("docId INT"))
+      .map(_.getInt(0)).toSet
   }
   /** Restrict a (docId, …) DataFrame to live docs. */
   private def liveOnly(df: DataFrame): DataFrame =
@@ -201,16 +189,18 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
       schema.fold(spark.read)(spark.read.schema).parquet(s"$indexDir/$table")
     })
 
-  /** The doc store as written, tombstoned rows included: the source for
-    * fetching known-live docIds ([[docRows]]), which needs no tombstone
-    * join. */
-  private lazy val docsAll: DataFrame =
-    spark.read.schema(IndexBuild.docsSchema(fields.map(_._2)))
-      .parquet(s"$indexDir/docs")
+  /** docs/ as its writer laid it out (the multi-field columns included). */
+  private lazy val docSchema: StructType = IndexBuild.docsSchema(fields.map(_._2))
 
-  /** Doc store WITHOUT the derived `len` column — the cheap view for
-    * paths that don't need the BM25 norm. */
-  lazy val docsRaw: DataFrame = liveOnly(docsAll)
+  /** docs/ keyed by docId for [[docRows]]: its footer index is read on
+    * the first fetch and lives as long as this snapshot. */
+  @transient private lazy val docStore =
+    new graft.index.LocalParquet.KeyIndex(hadoopConf, s"$indexDir/docs", "docId")
+
+  /** Live doc store WITHOUT the derived `len` column — the cheap view
+    * for paths that don't need the BM25 norm. */
+  lazy val docsRaw: DataFrame =
+    liveOnly(spark.read.schema(docSchema).parquet(s"$indexDir/docs"))
 
   /** True iff this index persisted a positions table (phrase /
     * proximity / attribute rules and any fid-restricted read need it;
@@ -615,6 +605,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * doc (callers skip the restriction — see syntaxDocs). */
   def phrase(words: Seq[String], fids: Option[Set[Int]] = None): DataFrame = {
     require(words.nonEmpty)
+    require(hasPositions, "quoted and negative phrases need a positions-enabled " +
+      "index (IndexConfig.positions = true)")
     val ws = words.map(Tokenizer.normalize)
     val active = ws.zipWithIndex.filterNot { case (w, _) => stopWords.contains(w) }
     if (active.isEmpty) return docsRaw.select($"docId")
@@ -817,10 +809,10 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   }
 
   /** Top-k + document materialization (reference make_hits). The k
-    * scored rows are cut FIRST, then metadata is fetched with a docId
-    * IN predicate the parquet scan prunes on — the doc store is never
-    * joined wholesale (same shape as MeiliRank.search's
-    * materialization). Returns local rows in rank order. */
+    * scored rows are cut FIRST, then their metadata is read on the
+    * driver ([[docRows]]) — the doc store is never joined wholesale
+    * (same shape as MeiliRank.search's materialization). Returns local
+    * rows in rank order: one job, the top-k collect. */
   def searchHits(q: String, k: Int, filter: Option[String] = None,
                  conjunctive: Boolean = true): DataFrame = {
     val cand = filter.map(filteredDocs)
@@ -829,15 +821,17 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   }
 
   /** Doc-store rows (`docId +: cols`) by docId, for ids a live-only plan
-    * produced: one pruned IN scan of [[docsAll]] (one job, no tombstone
-    * join). */
+    * produced (no tombstone check): point lookups in docs/ on the driver,
+    * no Spark job (the reference's documents-store reads by internal
+    * docid, index.rs:175-176). Only the files whose row groups' docId
+    * ranges hold a requested id are opened, and their row groups, pages
+    * and records are pruned on `docId IN ids`; an id without a stored
+    * doc has no entry. */
   private[graft] def docRows(ids: Seq[Int], cols: Seq[String]): Map[Int, Row] =
-    if (ids.isEmpty) Map.empty
-    else docsAll.filter($"docId".isin(ids: _*)).select(("docId" +: cols).map(col): _*)
-      .collect().map(r => r.getInt(0) -> r).toMap
+    docStore.rows(ids, StructType(("docId" +: cols).map(docSchema(_))))
 
   /** Page-sized `rows` (in final order, with `schema`) plus the doc-store
-    * columns `cols`, merged on the driver: one metadata job ([[docRows]]),
+    * columns `cols`, merged on the driver ([[docRows]], no job),
     * inner-join semantics (a row without a stored doc drops). The
     * result is a local relation in the same order. */
   private[graft] def withDocCols(rows: Array[Row], schema: StructType,
@@ -846,7 +840,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     val meta = docRows(rows.map(_.getInt(idIdx)).toSeq, cols)
     localDF(rows.toSeq.flatMap(r => meta.get(r.getInt(idIdx))
         .map(m => Row.fromSeq(r.toSeq ++ m.toSeq.tail))),
-      StructType(schema.fields ++ cols.map(docsAll.schema(_))))
+      StructType(schema.fields ++ cols.map(docSchema(_))))
   }
 
   /** Driver rows as a local relation: collecting it (or a projection of

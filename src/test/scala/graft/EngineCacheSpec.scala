@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import org.apache.spark.sql.functions.col
 
@@ -12,7 +11,7 @@ import graft.search.SearchEngine
 /** The one engine cache ([[DocIndex.open]]): keyed by (session, dir),
   * reused only while the dir's snapshot (lineage generation plus
   * derived-table markers) is unchanged, single-flight on a miss. */
-class EngineCacheSpec extends AnyFunSuite {
+class EngineCacheSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -24,7 +23,7 @@ class EngineCacheSpec extends AnyFunSuite {
 
   /** A fresh 20-doc index: ten `scala` and ten `java` docs. */
   private def built(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
+    val d = tempDir(prefix)
     IndexBuild.build(spark, (0 until 20).map(i =>
       src(i, if (i % 2 == 0) "scala" else "java", s"alpha word$i")).toDS(), d, cfg)
     d

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuild, IndexConfig}
@@ -12,12 +11,12 @@ import graft.search.SearchEngine
   * — here generated by the independent BruteForce reference via
   * FixtureGen and committed under src/test/resources/fixtures/). The
   * engine must be rank- AND score-identical to the committed files. */
-class FixtureSpec extends AnyFunSuite {
+class FixtureSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   lazy val engine: SearchEngine = {
-    val dir = Files.createTempDirectory("fixidx").toString
+    val dir = tempDir("fixidx")
     IndexBuild.build(spark,
       CorpusGen.generate(spark, FixtureGen.NDocs, FixtureGen.Seed)
         .as[graft.corpus.SourceFile],

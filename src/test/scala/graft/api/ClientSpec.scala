@@ -1,13 +1,12 @@
 package graft.api
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.index.{IndexBuild, IndexConfig}
 
 /** Multi-index management: create-by-build, list, stats, swap, delete. */
-class ClientSpec extends AnyFunSuite {
+class ClientSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -21,7 +20,7 @@ class ClientSpec extends AnyFunSuite {
   }
 
   test("build-by-uid, list, stats, swap, delete") {
-    val root = Files.createTempDirectory("graft-client").toString
+    val root = tempDir("graft-client")
     val c = new Client(spark, root)
     assert(c.listIndexes().isEmpty && !c.indexExists("movies"))
 
@@ -58,7 +57,7 @@ class ClientSpec extends AnyFunSuite {
   }
 
   test("tasks lists one row per lineage stage with status, docid range and timestamps") {
-    val root = Files.createTempDirectory("graft-client-tasks").toString
+    val root = tempDir("graft-client-tasks")
     val c = new Client(spark, root)
     buildInto(c, "movies", Seq((0L, "alpha beta"), (1L, "beta gamma"),
       (2L, "gamma delta")))
@@ -88,7 +87,7 @@ class ClientSpec extends AnyFunSuite {
   }
 
   test("multiSearch answers N independent requests as N result lists") {
-    val root = Files.createTempDirectory("graft-msearch").toString
+    val root = tempDir("graft-msearch")
     val c = new Client(spark, root)
     buildInto(c, "books", Seq((0L, "alpha beta"), (1L, "beta gamma")))
     buildInto(c, "films", Seq((0L, "delta beta"), (1L, "epsilon")))

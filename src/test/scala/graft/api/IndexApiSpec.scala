@@ -1,7 +1,6 @@
 package graft.api
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.index.{IndexBuild, IndexConfig}
@@ -10,7 +9,7 @@ import graft.search.SearchEngine
 /** The reference-shaped search API facade: one SearchRequest drives
   * filter, sort, paging, matching strategy, attributesToSearchOn, and
   * ranking-rule configuration together. */
-class IndexApiSpec extends AnyFunSuite {
+class IndexApiSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -22,7 +21,7 @@ class IndexApiSpec extends AnyFunSuite {
     (4L, "spark title", "no match here", "en"))
 
   lazy val idx: Index = {
-    val dir = Files.createTempDirectory("apiidx").toString
+    val dir = tempDir("apiidx")
     val df = docs.toDF("doc_id", "title", "body", "lang")
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))
     IndexBuild.buildMultiField(spark, df, "doc_id",

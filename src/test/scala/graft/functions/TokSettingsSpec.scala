@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.index.{Dump, IndexBuild, IndexConfig}
@@ -12,7 +11,7 @@ import graft.search.SearchEngine
   * tokenize_document.rs:163-180): index-time segmentation overrides,
   * persisted with the index so the query side agrees by construction,
   * and carried through dumps. */
-class TokSettingsSpec extends AnyFunSuite {
+class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -41,7 +40,7 @@ class TokSettingsSpec extends AnyFunSuite {
   }
 
   test("end-to-end: index-time settings drive both sides; dump carries them") {
-    val dir = Files.createTempDirectory("toksettings").toString
+    val dir = tempDir("toksettings")
     val docs = Seq(
       (0L, "foo-bar baz"), (1L, "foo bar"), (2L, "fooxbar here"),
       (3L, "ActionScript rules"), (4L, "action script split"))
@@ -67,8 +66,8 @@ class TokSettingsSpec extends AnyFunSuite {
     val as = e.searchDF("ActionScript", 10).collect().map(_.getInt(0)).toSet
     assert(as == Set(3), s"$as")
     // dump roundtrip: settings survive, rebuilt index answers identically
-    val dumpDir = Files.createTempDirectory("tokdump").toString
-    val dir2 = Files.createTempDirectory("tokdump2").toString
+    val dumpDir = tempDir("tokdump")
+    val dir2 = tempDir("tokdump2")
     Dump.exportDump(spark, dir, dumpDir)
     Dump.importDump(spark, dumpDir, dir2, IndexConfig(numPartitions = 2))
     val e2 = new SearchEngine(spark, dir2)
@@ -131,7 +130,7 @@ class TokSettingsSpec extends AnyFunSuite {
   test("multi-char separators and locales survive persistence and dumps") {
     val st = Tokenizer.TokSettings(separatorStrings = Set("xx"),
       localesByFid = Map(0 -> "en"))
-    val dir = Files.createTempDirectory("toksep").toString
+    val dir = tempDir("toksep")
     val docs = Seq((0L, "fooxxbar 北京"), (1L, "foo bar"), (2L, "fooxbar"))
       .toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
@@ -147,8 +146,8 @@ class TokSettingsSpec extends AnyFunSuite {
     val hits = e.searchDF("foo", 10).collect().map(_.getInt(0)).toSet
     assert(hits == Set(0, 1), s"$hits")
     // dump roundtrip carries both new settings
-    val dumpDir = Files.createTempDirectory("tokdumpsep").toString
-    val dir2 = Files.createTempDirectory("tokdumpsep2").toString
+    val dumpDir = tempDir("tokdumpsep")
+    val dir2 = tempDir("tokdumpsep2")
     Dump.exportDump(spark, dir, dumpDir)
     Dump.importDump(spark, dumpDir, dir2, IndexConfig(numPartitions = 2))
     val e2 = new SearchEngine(spark, dir2)
@@ -162,7 +161,7 @@ class TokSettingsSpec extends AnyFunSuite {
     // (else nothing is persisted and the query side diverges)
     val off = Tokenizer.TokSettings(cjkUnigrams = Some(false))
     assert(!off.isDefault)
-    val dir = Files.createTempDirectory("tokcjk").toString
+    val dir = tempDir("tokcjk")
     val docs = Seq((0L, "foo 北京"), (1L, "bar")).toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))
@@ -180,7 +179,7 @@ class TokSettingsSpec extends AnyFunSuite {
     assert(e.searchDF("北京", 10).collect().map(_.getInt(0)).toSet == Set(0))
 
     // explicit index-level override roundtrips through persistence
-    val dir2 = Files.createTempDirectory("tokcjk2").toString
+    val dir2 = tempDir("tokcjk2")
     IndexBuild.buildFromTable(spark, docs, "doc_id", "text", "lang", "source",
       dir2, IndexConfig(docsPerShard = 4, termBuckets = 2, blockSize = 4,
         numPartitions = 2, positions = false, tokenizer = off))
@@ -188,8 +187,8 @@ class TokSettingsSpec extends AnyFunSuite {
     assert(e2.tokSettings == off, s"${e2.tokSettings}")
     assert(e2.dict.contains("北京") && !e2.dict.contains("北"))
     // and through a dump
-    val dumpDir = Files.createTempDirectory("tokcjkdump").toString
-    val dir3 = Files.createTempDirectory("tokcjk3").toString
+    val dumpDir = tempDir("tokcjkdump")
+    val dir3 = tempDir("tokcjk3")
     Dump.exportDump(spark, dir2, dumpDir)
     Dump.importDump(spark, dumpDir, dir3, IndexConfig(numPartitions = 2))
     assert(new SearchEngine(spark, dir3).tokSettings == off)
@@ -198,7 +197,7 @@ class TokSettingsSpec extends AnyFunSuite {
   test("query-side locales param controls query segmentation on a " +
       "multi-field index (reference SearchQuery.locales)") {
     import graft.api.{Index, SearchRequest}
-    val dir = Files.createTempDirectory("tokqloc").toString
+    val dir = tempDir("tokqloc")
     val df = Seq((0L, "北京 news", "alpha beta"), (1L, "plain title", "gamma"))
       .toDF("doc_id", "title", "body")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
@@ -268,7 +267,7 @@ class TokSettingsSpec extends AnyFunSuite {
 
   test("arabic/hebrew variants retrieve each other end-to-end (index one form, query the other)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("arhe").toString
+    val dir = tempDir("arhe")
     val df = Seq(
       (0L, "ٱلمكتبة الكبيرة"), // alef wasla + teh marbuta forms
       (1L, "שלום וברכה"),       // final mem
@@ -334,7 +333,7 @@ class TokSettingsSpec extends AnyFunSuite {
 
   test("thai dictionary segmentation end-to-end: index and query agree; dump carries the dictionary") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("thaidict").toString
+    val dir = tempDir("thaidict")
     val cfg = graft.index.IndexConfig(docsPerShard = 4, termBuckets = 2,
       blockSize = 4, numPartitions = 2,
       tokenizer = Tokenizer.TokSettings(
@@ -355,8 +354,8 @@ class TokSettingsSpec extends AnyFunSuite {
     assert(e.searchDF("แมว", 5).collect().map(_.getInt(0)).toSet == Set(0, 1))
     assert(e.searchDF("แมวกินปลา", 5).collect().map(_.getInt(0)).head == 0)
     // dump round-trip keeps the segmentation dictionary
-    val dumpDir = java.nio.file.Files.createTempDirectory("thdump").toString
-    val restored = java.nio.file.Files.createTempDirectory("threst").toString
+    val dumpDir = tempDir("thdump")
+    val restored = tempDir("threst")
     graft.index.Dump.exportDump(spark, dir, dumpDir)
     graft.index.Dump.importDump(spark, dumpDir, restored,
       graft.index.IndexConfig(docsPerShard = 4, termBuckets = 2,

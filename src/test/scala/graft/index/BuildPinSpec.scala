@@ -1,7 +1,6 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.corpus.SourceFile
@@ -15,7 +14,7 @@ import graft.corpus.SourceFile
   * tags) never enter a digest. A build refactor that
   * changes a single posting block, position array, doc length or doc
   * row fails here. */
-class BuildPinSpec extends AnyFunSuite {
+class BuildPinSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -73,7 +72,6 @@ class BuildPinSpec extends AnyFunSuite {
     assert(got == want, s"$name: output drifted from the pinned build; got $got")
   }
 
-  private def newDir(p: String) = Files.createTempDirectory(p).toString
 
   private def table = corpus.zipWithIndex
     .map { case (f, i) => (i.toLong, f.content) }
@@ -83,12 +81,12 @@ class BuildPinSpec extends AnyFunSuite {
 
   for (pos <- Seq(false, true)) {
     test(s"build positions=$pos matches its pinned output") {
-      val dir = newDir(s"pin-build-$pos")
+      val dir = tempDir(s"pin-build-$pos")
       IndexBuild.build(spark, corpus.toDS(), dir, cfg.copy(positions = pos))
       assertPinned(s"build positions=$pos", dir, Pins(s"build-$pos"))
     }
     test(s"append positions=$pos matches its pinned output") {
-      val dir = newDir(s"pin-append-$pos")
+      val dir = tempDir(s"pin-append-$pos")
       val c = cfg.copy(positions = pos)
       IndexBuild.build(spark, corpus.take(200).toDS(), dir, c)
       IndexBuild.append(spark, corpus.drop(200).toDS(), dir, c, "b1")
@@ -97,7 +95,7 @@ class BuildPinSpec extends AnyFunSuite {
   }
 
   test("buildFromTable matches its pinned output") {
-    val dir = newDir("pin-table")
+    val dir = tempDir("pin-table")
     IndexBuild.buildFromTable(spark, table, "doc_id", "text", "lang",
       "source", dir, cfg)
     assertPinned("buildFromTable", dir, Pins("table"))
@@ -105,7 +103,7 @@ class BuildPinSpec extends AnyFunSuite {
 
   test("buildMultiField matches its pinned output") {
     // the MultiFieldSpec fixture and config
-    val dir = newDir("pin-mf")
+    val dir = tempDir("pin-mf")
     val df = Seq(
         (0L, "cooking pasta", "a long story about gardens and tools"),
         (1L, "garden tools", "cooking pasta recipes for the family"),
@@ -123,7 +121,7 @@ class BuildPinSpec extends AnyFunSuite {
   }
 
   test("buildPrefixIndex matches its pinned output") {
-    val dir = newDir("pin-prefix")
+    val dir = tempDir("pin-prefix")
     val c = cfg.copy(positions = true)
     IndexBuild.build(spark, corpus.toDS(), dir, c)
     IndexBuild.buildPrefixIndex(spark, dir, c, minDf = 20)
@@ -162,10 +160,10 @@ class BuildPinSpec extends AnyFunSuite {
   test("decoded lens equal doclen/ for every (term, docId) of postings, prefixes and positions") {
     for (pos <- Seq(false, true)) {
       val c = cfg.copy(positions = pos)
-      val built = newDir(s"pin-lens-build-$pos")
+      val built = tempDir(s"pin-lens-build-$pos")
       IndexBuild.build(spark, corpus.toDS(), built, c)
       IndexBuild.buildPrefixIndex(spark, built, c, minDf = 20)
-      val appended = newDir(s"pin-lens-append-$pos")
+      val appended = tempDir(s"pin-lens-append-$pos")
       IndexBuild.build(spark, corpus.take(200).toDS(), appended, c)
       IndexBuild.append(spark, corpus.drop(200).toDS(), appended, c, "b1")
       Seq("built" -> built, "appended" -> appended).foreach { case (what, d) =>

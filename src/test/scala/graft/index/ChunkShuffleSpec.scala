@@ -1,7 +1,6 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import org.apache.spark.TestBus
 
 import graft.SparkTestBase
@@ -12,7 +11,7 @@ import graft.corpus.SourceFile
   * one chunk codec round-trips to the exact sorted token stream, doc
   * lengths included, with and without positions, and a build ships fewer shuffle bytes than a
   * per-posting row shuffle. Same blocks out: BuildPinSpec. */
-class ChunkShuffleSpec extends AnyFunSuite {
+class ChunkShuffleSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -80,7 +79,7 @@ class ChunkShuffleSpec extends AnyFunSuite {
 
   test("chunked shuffle writes fewer shuffle bytes than the row shuffle") {
     val sc = spark.sparkContext
-    val dir = Files.createTempDirectory("sb").toString
+    val dir = tempDir("sb")
     val bytes = new java.util.concurrent.atomic.AtomicLong(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(

@@ -1,7 +1,6 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.corpus.SourceFile
@@ -12,7 +11,7 @@ import graft.search.SearchEngine
   * facets), corpus statistics keep counting tombstones until compact()
   * (Lucene live-docs semantics → surviving scores are bit-identical
   * across a delete), compact() rewrites a tombstone-free index. */
-class DeleteSpec extends AnyFunSuite {
+class DeleteSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -24,7 +23,7 @@ class DeleteSpec extends AnyFunSuite {
     SourceFile(f"r$i%02d", f"p$i%02d.scala", f"c$i%04d", "scala", content)
 
   private def freshIndex(): String = {
-    val dir = Files.createTempDirectory("del").toString
+    val dir = tempDir("del")
     val corpus = (0 until 12).map { i =>
       src(i, if (i % 3 == 0) "alpha merge buffer stream" else "alpha merge only")
     }.toDS()
@@ -94,7 +93,7 @@ class DeleteSpec extends AnyFunSuite {
   test("compact rewrites a tombstone-free index with live statistics") {
     val dir = freshIndex()
     IndexBuild.delete(spark, dir, Seq(0, 6, 1), "1")
-    val out = Files.createTempDirectory("delc").toString
+    val out = tempDir("delc")
     IndexBuild.compact(spark, dir, out, cfg)
 
     val a = new SearchEngine(spark, dir)

@@ -11,7 +11,7 @@ import graft.search.SearchEngine
   * query-identical to the original, and the dump must carry the
   * settings that affect build semantics (stop words, positions, layout
   * params). */
-class DumpSpec extends AnyFunSuite {
+class DumpSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -19,9 +19,9 @@ class DumpSpec extends AnyFunSuite {
     SourceFile(s"r${i % 3}", s"p$i.scala", f"c$i%04d", "scala", content)
 
   test("dump roundtrip: rebuilt index is query-identical, settings survive") {
-    val dir = Files.createTempDirectory("dumpSrc").toString
-    val dumpDir = Files.createTempDirectory("dump").toString
-    val dir2 = Files.createTempDirectory("dumpDst").toString
+    val dir = tempDir("dumpSrc")
+    val dumpDir = tempDir("dump")
+    val dir2 = tempDir("dumpDst")
 
     val corpus = (0 until 24).map { i =>
       src(i, s"alpha merge the buffer stream ${if (i % 2 == 0) "batchWriter" else "pageCursor"} w$i")
@@ -58,9 +58,9 @@ class DumpSpec extends AnyFunSuite {
   }
 
   test("dump after delete excludes tombstoned docs; facet columns survive") {
-    val dir = Files.createTempDirectory("dumpDel").toString
-    val dumpDir = Files.createTempDirectory("dumpDel2").toString
-    val dir2 = Files.createTempDirectory("dumpDelDst").toString
+    val dir = tempDir("dumpDel")
+    val dumpDir = tempDir("dumpDel2")
+    val dir2 = tempDir("dumpDelDst")
     val corpus = (0 until 12).map(i => src(i, s"word$i shared merge")).toDS()
     val cfg = IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4,
       numPartitions = 2)
@@ -92,8 +92,8 @@ class DumpSpec extends AnyFunSuite {
   }
 
   test("re-export after append writes the appended docs; unchanged re-export rewrites nothing") {
-    val dir = Files.createTempDirectory("dumpRe").toString
-    val dumpDir = Files.createTempDirectory("dumpReOut").toString
+    val dir = tempDir("dumpRe")
+    val dumpDir = tempDir("dumpReOut")
     val cfg = IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4,
       numPartitions = 2)
     IndexBuild.build(spark, (0 until 10).map(i => src(i, s"word$i shared")).toDS(), dir, cfg)
@@ -106,7 +106,7 @@ class DumpSpec extends AnyFunSuite {
     IndexBuild.append(spark, (10 until 14).map(i => src(i, s"word$i shared fresh")).toDS(),
       dir, cfg, "b1")
     Dump.exportDump(spark, dir, dumpDir)
-    val imported = Files.createTempDirectory("dumpReDst").toString
+    val imported = tempDir("dumpReDst")
     Dump.importDump(spark, dumpDir, imported, cfg)
     val e = new SearchEngine(spark, imported)
     assert(e.nDocs == 14, "the import must hold the appended docs")
@@ -114,9 +114,9 @@ class DumpSpec extends AnyFunSuite {
   }
 
   test("re-import of a rewritten dump into the same directory fails fast; a fresh directory holds the new dump") {
-    val dir = Files.createTempDirectory("dumpReImp").toString
-    val dumpDir = Files.createTempDirectory("dumpReImpOut").toString
-    val imported = Files.createTempDirectory("dumpReImpDst").toString
+    val dir = tempDir("dumpReImp")
+    val dumpDir = tempDir("dumpReImpOut")
+    val imported = tempDir("dumpReImpDst")
     val cfg = IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4,
       numPartitions = 2)
     IndexBuild.build(spark, (0 until 10).map(i => src(i, s"word$i shared")).toDS(), dir, cfg)
@@ -138,14 +138,14 @@ class DumpSpec extends AnyFunSuite {
       Dump.importDump(spark, dumpDir, imported, cfg))
     assert(ex.getMessage.contains(oldSig) && ex.getMessage.contains(newSig) &&
       ex.getMessage.contains("fresh directory"), ex.getMessage)
-    val fresh = Files.createTempDirectory("dumpReImpFresh").toString
+    val fresh = tempDir("dumpReImpFresh")
     Dump.importDump(spark, dumpDir, fresh, cfg)
     assert(new SearchEngine(spark, fresh).nDocs == 14)
   }
 
   test("a dump without a settings layout is refused with re-export") {
-    val dir = Files.createTempDirectory("dumpNoLayout").toString
-    val dumpDir = Files.createTempDirectory("dumpNoLayoutOut").toString
+    val dir = tempDir("dumpNoLayout")
+    val dumpDir = tempDir("dumpNoLayoutOut")
     IndexBuild.build(spark, (0 until 4).map(i => src(i, s"word$i")).toDS(), dir,
       IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4, numPartitions = 2))
     Dump.exportDump(spark, dir, dumpDir)
@@ -156,12 +156,12 @@ class DumpSpec extends AnyFunSuite {
       Files.readString(part.toPath).replaceFirst("\"layout\":\\d+,", ""))
     new java.io.File(part.getParent, s".${part.getName}.crc").delete()
     val ex = intercept[IllegalArgumentException](Dump.importDump(spark, dumpDir,
-      Files.createTempDirectory("dumpNoLayoutDst").toString, IndexConfig(numPartitions = 2)))
+      tempDir("dumpNoLayoutDst"), IndexConfig(numPartitions = 2)))
     assert(ex.getMessage.contains("re-export"), ex.getMessage)
   }
 
   test("multi-field indexes fail fast on export (format cannot carry fields)") {
-    val dir = Files.createTempDirectory("dumpMf").toString
+    val dir = tempDir("dumpMf")
     val df = Seq((0L, "t0", "b0"), (1L, "t1", "b1")).toDF("doc_id", "title", "body")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))
@@ -171,7 +171,7 @@ class DumpSpec extends AnyFunSuite {
       cfg = IndexConfig(docsPerShard = 4, termBuckets = 2, blockSize = 4,
         numPartitions = 2))
     val ex = intercept[IllegalArgumentException] {
-      Dump.exportDump(spark, dir, Files.createTempDirectory("dumpMfOut").toString)
+      Dump.exportDump(spark, dir, tempDir("dumpMfOut"))
     }
     assert(ex.getMessage.contains("multi-field"))
   }

@@ -1,7 +1,6 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 
 import graft.SparkTestBase
@@ -11,7 +10,7 @@ import graft.search.SearchEngine
 /** One on-disk format: every writer stamps `lineage/_FORMAT` and emits
   * the one doclen schema; every entry point refuses a directory with a
   * missing or different stamp, without touching it. */
-class FormatSpec extends AnyFunSuite {
+class FormatSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -26,9 +25,6 @@ class FormatSpec extends AnyFunSuite {
 
   private def fs(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def newDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   /** Recursive listing of a directory: path -> file bytes. */
   private def snapshot(dir: String): Map[String, Seq[Byte]] = {
@@ -63,12 +59,12 @@ class FormatSpec extends AnyFunSuite {
       "v11-stamp" -> (d => writeStamp(d,
         s"layout=11 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")))) {
     test(s"$variant index: every entry point refuses with a rebuild error, touching nothing") {
-      val dir = newDir(s"fmt-$variant")
+      val dir = tempDir(s"fmt-$variant")
       IndexBuild.build(spark, corpus.toDS(), dir, cfg)
       new SearchEngine(spark, dir) // the stamped index opens
       unstamp(dir)
       val before = snapshot(dir)
-      val dumpDir = s"${newDir("fmt-dump")}/out"
+      val dumpDir = s"${tempDir("fmt-dump")}/out"
 
       assertRefused("SearchEngine")(new SearchEngine(spark, dir))
       assertRefused("append")(IndexBuild.append(spark,
@@ -84,7 +80,7 @@ class FormatSpec extends AnyFunSuite {
   }
 
   test("compact carries an unstamped index into a fresh, stamped directory") {
-    val dir = newDir("fmt-compact-src")
+    val dir = tempDir("fmt-compact-src")
     IndexBuild.build(spark, corpus.toDS(), dir, cfg)
     val queries = Seq("alpha", "zeta merge", "omega buffer w3")
     def rows(e: SearchEngine) =
@@ -92,14 +88,14 @@ class FormatSpec extends AnyFunSuite {
     val want = rows(new SearchEngine(spark, dir))
     fs(dir).delete(Lineage.formatPath(dir), false)
 
-    val out = newDir("fmt-compact-dst")
+    val out = tempDir("fmt-compact-dst")
     IndexBuild.compact(spark, dir, out, cfg)
     Lineage.requireFormat(spark, out)
     assert(rows(new SearchEngine(spark, out)) == want)
   }
 
   test("append onto a multi-field index fails fast, touching nothing") {
-    val dir = newDir("fmt-mf-append")
+    val dir = tempDir("fmt-mf-append")
     IndexBuild.buildMultiField(spark, mfTable, "doc_id",
       fields = Seq(("title", 0), ("body", 1)), langCol = "lang",
       sourceCol = "source", indexDir = dir, cfg = cfg)
@@ -145,20 +141,20 @@ class FormatSpec extends AnyFunSuite {
         IndexBuild.append(spark, delta, d, c, "b1")
       }) ++ Seq(
         "compact" -> { (d: String) =>
-          val from = newDir("fmt-w-compact-src")
+          val from = tempDir("fmt-w-compact-src")
           IndexBuild.build(spark, corpus.toDS(), from, cfg)
           IndexBuild.delete(spark, from, Seq(2, 5), "d1")
           IndexBuild.compact(spark, from, d, cfg)
         },
         "importDump" -> { (d: String) =>
-          val from = newDir("fmt-w-dump-src")
-          val dump = newDir("fmt-w-dump")
+          val from = tempDir("fmt-w-dump-src")
+          val dump = tempDir("fmt-w-dump")
           IndexBuild.build(spark, corpus.toDS(), from, cfg)
           Dump.exportDump(spark, from, dump)
           Dump.importDump(spark, dump, d, cfg)
         })
     writers.foreach { case (name, write) =>
-      val dir = newDir("fmt-writer")
+      val dir = tempDir("fmt-writer")
       write(dir)
       Lineage.requireFormat(spark, dir)
       val docIds = spark.read.parquet(s"$dir/docs").select($"docId")

@@ -1,7 +1,6 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 
 import graft.SparkTestBase
@@ -10,7 +9,7 @@ import graft.search.SearchEngine
 
 /** Regression specs for resume-safety of the incremental append path and
   * for WAND conjunctive semantics across shards (ADVICE round 1). */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -24,7 +23,7 @@ class ResumeSpec extends AnyFunSuite {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("append resume after kill between stages indexes the delta docs") {
-    val dir = Files.createTempDirectory("resumeA").toString
+    val dir = tempDir("resumeA")
     val base = (0 until 8).map(i => src(i, "alpha common words")).toDS()
     val delta = (8 until 12).map(i => src(i, "zulu unique delta")).toDS()
     IndexBuild.build(spark, base, dir, cfg)
@@ -53,7 +52,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("append resume after kill between publish and commit does not duplicate") {
-    val dir = Files.createTempDirectory("resumeB").toString
+    val dir = tempDir("resumeB")
     val base = (0 until 8).map(i => src(i, "alpha common words")).toDS()
     val delta = (8 until 12).map(i => src(i, "zulu unique delta")).toDS()
     IndexBuild.build(spark, base, dir, cfg)
@@ -74,7 +73,7 @@ class ResumeSpec extends AnyFunSuite {
     val base = (0 until 8).map(i => src(i, "alpha common words")).toDS()
     val delta = (8 until 12).map(i => src(i, "zulu unique delta")).toDS()
     def built(prefix: String): String = {
-      val dir = Files.createTempDirectory(prefix).toString
+      val dir = tempDir(prefix)
       IndexBuild.build(spark, base, dir, cfg)
       IndexBuild.append(spark, delta, dir, cfg, "b1")
       dir
@@ -108,7 +107,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("an empty buildFromTable opens with no docs and a later append starts at docId 0") {
-    val dir = Files.createTempDirectory("emptyTable").toString
+    val dir = tempDir("emptyTable")
     val empty = Seq.empty[(Long, String, String, String)]
       .toDF("doc_id", "text", "lang", "source")
     IndexBuild.buildFromTable(spark, empty, "doc_id", "text", "lang", "source", dir, cfg)
@@ -122,7 +121,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("WAND conjunctive returns empty for shards missing a query term") {
-    val dir = Files.createTempDirectory("wandShard").toString
+    val dir = tempDir("wandShard")
     // docsPerShard=4: shard 0 = docs 0-3 (has beta), shard 1 = docs 4-7
     // (alpha only) — pre-fix, shard 1 padded results with alpha-only docs
     val docs = ((0 until 1).map(i => src(i, "alpha beta")) ++

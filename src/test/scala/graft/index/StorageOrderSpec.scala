@@ -1,7 +1,6 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.corpus.SourceFile
@@ -11,7 +10,7 @@ import graft.search.SearchEngine
   * follow (file path, row index) with ZERO corpus shuffle; retrieval is
   * id-permutation-equivalent to the sorted build. A corpus that is not
   * a bare parquet scan is refused, never silently given sorted ids. */
-class StorageOrderSpec extends AnyFunSuite {
+class StorageOrderSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -23,13 +22,13 @@ class StorageOrderSpec extends AnyFunSuite {
       "scala", s"alpha beta w$i gamma ${if (i % 2 == 0) "even split" else "odd merge"}"))
 
   test("storage-order build: dense deterministic ids, no corpus shuffle, same retrieval") {
-    val cdir = Files.createTempDirectory("soCorpus").toString
+    val cdir = tempDir("soCorpus")
     corpus(40).toDS().repartition(3).write.mode("overwrite").parquet(cdir)
     val fileSrc = spark.read.parquet(cdir).as[SourceFile]
 
-    val dirA = Files.createTempDirectory("soIdxA").toString
+    val dirA = tempDir("soIdxA")
     IndexBuild.build(spark, fileSrc, dirA, cfg.copy(storageOrderIds = true))
-    val dirB = Files.createTempDirectory("soIdxB").toString
+    val dirB = tempDir("soIdxB")
     IndexBuild.build(spark, fileSrc, dirB, cfg) // sorted baseline
 
     val a = new SearchEngine(spark, dirA)
@@ -41,7 +40,7 @@ class StorageOrderSpec extends AnyFunSuite {
 
     // ids are deterministic: rebuilding from the same files reproduces
     // the exact (docId -> path) mapping
-    val dirA2 = Files.createTempDirectory("soIdxA2").toString
+    val dirA2 = tempDir("soIdxA2")
     IndexBuild.build(spark, fileSrc, dirA2, cfg.copy(storageOrderIds = true))
     val mapA = a.docs.select($"docId", $"path").as[(Int, String)].collect().toMap
     val mapA2 = new SearchEngine(spark, dirA2).docs
@@ -79,7 +78,7 @@ class StorageOrderSpec extends AnyFunSuite {
   }
 
   test("sorted-id build tolerates null metadata columns; null content fails with the contract") {
-    val dir = Files.createTempDirectory("nullMeta").toString
+    val dir = tempDir("nullMeta")
     val rows = Seq(
       SourceFile("r0", "p0.scala", null, null, "alpha beta"),
       SourceFile(null, "p1.scala", "c1", "scala", "gamma delta"))
@@ -94,11 +93,11 @@ class StorageOrderSpec extends AnyFunSuite {
     // null content: a clear contract error, not an NPE inside Sha —
     // from a fresh build, an append and a table build alike
     val bad = Seq(SourceFile("r", "p", "c", "l", null)).toDS()
-    val dir2 = Files.createTempDirectory("nullContent").toString
+    val dir2 = tempDir("nullContent")
     val badTable = Seq((0L, "alpha beta"), (1L, null)).toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))
-    val dir3 = Files.createTempDirectory("nullContentTable").toString
+    val dir3 = tempDir("nullContentTable")
     for ((what, op) <- Seq[(String, () => Unit)](
         "build" -> (() => IndexBuild.build(spark, bad, dir2, cfg)),
         "append" -> (() => IndexBuild.append(spark, bad, dir, cfg, "b1")),
@@ -118,10 +117,10 @@ class StorageOrderSpec extends AnyFunSuite {
   private def assertRefusedThenSorted(corpus: org.apache.spark.sql.Dataset[SourceFile],
                                       n: Int, reason: String): Unit = {
     val ex = intercept[IllegalArgumentException](IndexBuild.build(spark, corpus,
-      Files.createTempDirectory("soRefused").toString, cfg.copy(storageOrderIds = true)))
+      tempDir("soRefused"), cfg.copy(storageOrderIds = true)))
     assert(ex.getMessage.contains(reason) &&
       ex.getMessage.contains("storageOrderIds = false"), ex.getMessage)
-    val dir = Files.createTempDirectory("soSorted").toString
+    val dir = tempDir("soSorted")
     IndexBuild.build(spark, corpus, dir, cfg)
     val e = new SearchEngine(spark, dir)
     val byKey = e.docs.select($"repo", $"path", $"commit", $"docId")
@@ -137,7 +136,7 @@ class StorageOrderSpec extends AnyFunSuite {
   test("storage-order build of a FILTERED file corpus fails fast") {
     // row_index is physical: per-file counts of a filtered scan would
     // collide docids across files, so the plan is refused
-    val cdir = Files.createTempDirectory("soFiltCorpus").toString
+    val cdir = tempDir("soFiltCorpus")
     corpus(40).toDS().repartition(3).write.mode("overwrite").parquet(cdir)
     val filtered = spark.read.parquet(cdir).as[SourceFile]
       .filter(f => f.path.drop(1).dropRight(6).toInt % 2 == 1)

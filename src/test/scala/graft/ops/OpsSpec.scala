@@ -8,7 +8,7 @@ import graft.SparkTestBase
 /** Ops cross-checked against independent plain-Scala recomputation on
   * the driver testdata (the DuckDB oracle equivalents run driver-side;
   * these specs keep the invariants testable offline). */
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -111,7 +111,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("persisted LSH index: multi-probe recall@10 >= 0.8 vs exact") {
-    val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir = tempDir("lshidx")
     Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", dir, nPlanes = 4)
     // the parameters are a key=value marker, read without a Spark job
     assert(graft.index.Lineage.readProperties(spark, Similarity.paramsPath(dir)) ==
@@ -131,7 +131,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("external query vector: bucket from plane literals, same results as id lookup, no rows scan for the query row") {
-    val dir = java.nio.file.Files.createTempDirectory("lshvec").toString
+    val dir = tempDir("lshvec")
     Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", dir, nPlanes = 4)
     // every persisted bucket matches the driver-side recompute from the
     // plane literals — the contract the external-vector path rests on
@@ -224,7 +224,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("hybrid semantic arm cost-routes to the LSH index (pruned scan, recall >= 0.8, exact scores)") {
-    val dir = java.nio.file.Files.createTempDirectory("hyblsh").toString
+    val dir = tempDir("hyblsh")
     graft.ops.Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", dir, nPlanes = 4)
     val exact = graft.search.Hybrid
       .semanticTopK(emb, "vec_id", "embedding", 0L, 10)

@@ -1,7 +1,6 @@
 package graft.query
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.index.{IndexBuild, IndexConfig}
@@ -12,7 +11,7 @@ import graft.search.SearchEngine
   * strategies, multi-word synonyms, rankingScoreThreshold — mirroring
   * the reference suites parse_query.rs, ngram_split_words.rs,
   * words_tms.rs. */
-class QuerySyntaxSpec extends AnyFunSuite {
+class QuerySyntaxSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -42,7 +41,7 @@ class QuerySyntaxSpec extends AnyFunSuite {
     (6L, "quickbrownfox leaps"))
 
   lazy val engine: SearchEngine = {
-    val dir = Files.createTempDirectory("qsyntax").toString
+    val dir = tempDir("qsyntax")
     val df = docs.toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))
@@ -52,6 +51,27 @@ class QuerySyntaxSpec extends AnyFunSuite {
     new SearchEngine(spark, dir)
   }
   lazy val mr = new MeiliRank(engine)
+
+  test("a quoted or negative phrase on a positions-off index fails with the contract, from every entry point") {
+    val dir = tempDir("qsyntax-nopos")
+    IndexBuild.buildFromTable(spark, docs.toDF("doc_id", "text")
+        .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+        .withColumn("source", org.apache.spark.sql.functions.lit("s")),
+      "doc_id", "text", "lang", "source", dir,
+      IndexConfig(docsPerShard = 4, termBuckets = 2, blockSize = 4, numPartitions = 2))
+    val e = new SearchEngine(spark, dir)
+    assert(!e.hasPositions)
+    val calls: Seq[(String, String => Any)] = Seq(
+      "searchDF" -> (q => e.searchDF(q, 10).collect()),
+      "searchWand" -> (q => e.searchWand(q, 10).collect()),
+      "candidates" -> (q => e.candidates(q).collect()))
+    for ((name, call) <- calls; q <- Seq("\"quick brown\" fox", "fox -\"lazy dog\"")) {
+      val err = intercept[IllegalArgumentException](call(q))
+      assert(err.getMessage.contains("phrases need a positions-enabled index"), s"$name($q): $err")
+    }
+    // a bag-of-words query still answers
+    assert(e.searchDF("quick fox", 10).collect().map(_.getInt(0)).toSet == Set(0, 1, 2, 3))
+  }
 
   test("searchDF: quoted phrase restricts, negative subtracts") {
     // docs with quick AND dog: 0, 3; phrase "quick brown" keeps 0;
@@ -149,7 +169,7 @@ class QuerySyntaxSpec extends AnyFunSuite {
   }
 
   test("stop words: excluded from index terms, positions preserved") {
-    val dir = Files.createTempDirectory("stopw").toString
+    val dir = tempDir("stopw")
     val df = docs.toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))
@@ -217,7 +237,7 @@ class QuerySyntaxSpec extends AnyFunSuite {
       (1L, "南京长江大桥"),            // has 京 but not 北京
       (2L, "spark 北京 merge 数据"),  // mixed latin + CJK
       (3L, "天安门广场"))
-    val dir = Files.createTempDirectory("qcjk").toString
+    val dir = tempDir("qcjk")
     val df = zh.toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("zh"))
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))

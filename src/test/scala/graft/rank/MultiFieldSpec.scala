@@ -1,7 +1,6 @@
 package graft.rank
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.index.{IndexBuild, IndexConfig}
@@ -11,7 +10,7 @@ import graft.search.SearchEngine
   * fid<<16|pos, lib.rs:201-208; fid rule cost = field weight,
   * ranking_rule_graph/fid/mod.rs:50-110; lower weight = more important
   * field, searched-attributes order). */
-class MultiFieldSpec extends AnyFunSuite {
+class MultiFieldSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -23,7 +22,7 @@ class MultiFieldSpec extends AnyFunSuite {
     (3L, "unrelated title", "more cooking here with pasta later on"))
 
   private def multiField(stopWords: Set[String] = Set.empty): SearchEngine = {
-    val dir = Files.createTempDirectory("multifield").toString
+    val dir = tempDir("multifield")
     val df = docs.toDF("doc_id", "title", "body")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))

@@ -1,7 +1,6 @@
 package graft.rank
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -17,14 +16,14 @@ import graft.search.{QueryTerm, SearchEngine}
   * tables, and the eager top-k page is merged on the driver. Every
   * shape here is checked row for row against the broadcast-join shape
   * it replaced, built inline, on an index with tombstones. */
-class PlanConstantsSpec extends AnyFunSuite {
+class PlanConstantsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private val deleted = Seq(4, 9, 30)
 
   lazy val engine: SearchEngine = {
-    val dir = Files.createTempDirectory("planconst").toString
+    val dir = tempDir("planconst")
     // 150 "pre<xy>" terms for an on-the-fly prefix expansion; "quack"
     // is absent, so its typo derivation "quick" is shared with the
     // "quick" slot

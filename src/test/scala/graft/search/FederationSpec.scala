@@ -1,13 +1,12 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuild, IndexConfig}
 
-class FederationSpec extends AnyFunSuite {
+class FederationSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -15,7 +14,7 @@ class FederationSpec extends AnyFunSuite {
     val cfg = IndexConfig(docsPerShard = 64, termBuckets = 2, blockSize = 16,
       numPartitions = 2)
     val dirs = Seq("idxA" -> 200L, "idxB" -> 150L).map { case (uid, n) =>
-      val d = Files.createTempDirectory(uid).toString
+      val d = tempDir(uid)
       IndexBuild.build(spark,
         CorpusGen.generate(spark, n, seed = n).as[graft.corpus.SourceFile], d, cfg)
       uid -> new SearchEngine(spark, d)
@@ -60,8 +59,8 @@ class FederationSpec extends AnyFunSuite {
         SourceFile("rX", "zz_pinned.scala", "c0", "scala",
           "merge buffer exact pinned line")).toDS()
     }
-    val big = Files.createTempDirectory("fedBig").toString
-    val small = Files.createTempDirectory("fedSmall").toString
+    val big = tempDir("fedBig")
+    val small = tempDir("fedSmall")
     IndexBuild.build(spark, corpusWith(60, 1L), big, cfg)
     IndexBuild.build(spark, corpusWith(6, 2L), small, cfg)
     val eBig = new SearchEngine(spark, big)

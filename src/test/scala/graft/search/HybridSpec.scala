@@ -1,7 +1,6 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -11,7 +10,7 @@ import graft.rank.MeiliRank
 /** Hybrid merge pool semantics: the max-weighted merge's top-k is
   * contained in (top-k keyword) ∪ (top-k semantic), so the default
   * pool = k produces the same result as an effectively-unbounded pool. */
-class HybridSpec extends AnyFunSuite {
+class HybridSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -19,7 +18,7 @@ class HybridSpec extends AnyFunSuite {
     "table", "index", "shard", "cursor", "buffer")
 
   lazy val (engine, emb) = {
-    val dir = Files.createTempDirectory("hybrid").toString
+    val dir = tempDir("hybrid")
     val docs = (0 until 40).map { i =>
       (i.toLong, (0 until 6).map(j => words((i * 7 + j * 3) % words.length)).mkString(" "))
     }.toDF("doc_id", "text")

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.corpus.CorpusGen
@@ -13,13 +12,13 @@ import graft.index.{IndexBuild, IndexConfig, Lineage}
   * brute-force in-memory reference (the fixture-generation strategy of
   * FIXTURES.md §3: both sides derive from the same published BM25
   * semantics, computed by entirely different code paths). */
-class IndexSearchSpec extends AnyFunSuite {
+class IndexSearchSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   val nDocs = 400
   lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("graftidx").toString
+    val dir = tempDir("graftidx")
     val corpus = CorpusGen.generate(spark, nDocs).as[graft.corpus.SourceFile]
     IndexBuild.build(spark, corpus, dir,
       IndexConfig(docsPerShard = 64, termBuckets = 4, blockSize = 16,

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.TestBus
@@ -22,11 +21,14 @@ import graft.rank.MeiliRank
   * job. Counted with AQE off, the query-session setting the
   * SearchEngine scaladoc prescribes (with AQE on, every exchange adds a
   * job). Driver-sized index metadata (stats, dictionary size, lineage)
-  * is read without a job, so opening an engine costs none and an
-  * append's count does not grow with the index. Ranked search reads
-  * the doc lengths stored in the posting blocks, never doclen/: BM25
-  * is one job, the cascade two. */
-class JobBudgetSpec extends AnyFunSuite {
+  * is read without a job, and so are the settings tables, the
+  * dictionary and the tombstone set (parquet read on the driver): opening
+  * an engine costs none, a fresh engine's first search only its own
+  * job, and an append's count does not grow with the index. Ranked
+  * search reads the doc lengths stored in the posting blocks, never
+  * doclen/, and a page's documents are read on the driver: BM25 is one
+  * job, a cascade page one (highlighting included). */
+class JobBudgetSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -41,12 +43,12 @@ class JobBudgetSpec extends AnyFunSuite {
   }.toDS()
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("jobbudget").toString
+    val d = tempDir("jobbudget")
     IndexBuild.build(spark, corpus, d, cfg)
     d
   }
   private lazy val tombstoned: String = {
-    val d = Files.createTempDirectory("jobbudget-del").toString
+    val d = tempDir("jobbudget-del")
     IndexBuild.build(spark, corpus, d, cfg)
     IndexBuild.delete(spark, d, Seq(0, 3, 12), "b1")
     d
@@ -90,7 +92,7 @@ class JobBudgetSpec extends AnyFunSuite {
     try body finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("warm engine: searchDF <= 1 job (AND and OR), searchWand = 1, MeiliRank.search <= 2") {
+  test("warm engine: searchDF <= 1 job (AND and OR), searchWand = 1, MeiliRank.search <= 1") {
     withoutAqe {
       val e = new SearchEngine(spark, dir)
       val mr = new MeiliRank(e)
@@ -101,11 +103,11 @@ class JobBudgetSpec extends AnyFunSuite {
       val rank = steadyJobs(mr.search("quick brown fox", 5).collect())
       assert(df <= 1 && or <= 1, s"searchDF: $df (AND), $or (OR)")
       assert(wand == 1, s"searchWand: $wand")
-      assert(rank <= 2, s"MeiliRank.search: $rank")
+      assert(rank <= 1, s"MeiliRank.search: $rank")
     }
   }
 
-  test("api.Index.search: plain and offset pages <= 2 jobs, highlight <= 3, a lang-filtered page <= 3; searchHits <= 2") {
+  test("api.Index.search: plain and offset pages <= 1 job, highlight <= 1, a lang-filtered page <= 2; searchHits <= 1") {
     withoutAqe {
       val e = new SearchEngine(spark, dir)
       val idx = new Index(e)
@@ -120,26 +122,44 @@ class JobBudgetSpec extends AnyFunSuite {
       val hits = steadyJobs(e.searchHits("merge buffer", 5).collect())
       info(s"Index.search: plain $plain, offset $offset, highlight $hl, filtered $filtered; " +
         s"searchHits $hits")
-      // highlighting reads the page's stored content: one more job; a
-      // filter on a docs/ column broadcasts the matching docIds (no
-      // doclen/ join: the filter names no `len`)
-      assert(plain <= 2 && offset <= 2 && hl <= 3,
+      // the page's metadata and highlighted content are read on the
+      // driver; a filter on a docs/ column broadcasts the matching
+      // docIds (no doclen/ join: the filter names no `len`)
+      assert(plain <= 1 && offset <= 1 && hl <= 1,
         s"Index.search: plain $plain, offset $offset, highlight $hl")
       assert(filtered <= FilteredPageBudget, s"lang-filtered page: $filtered")
-      assert(hits <= 2, s"searchHits: $hits")
+      assert(hits <= 1, s"searchHits: $hits")
     }
   }
 
-  /** The cascade's collect, the filter's docId broadcast and the page's
-    * doc fetch (5 at the format-11 layout, where the cascade and the
-    * filter's doc view each joined doclen/). */
-  private val FilteredPageBudget = 3
+  /** The cascade's collect and the filter's docId broadcast (3 while the
+    * page's documents were fetched by a Spark scan; 5 at the format-11
+    * layout, where the cascade and the filter's doc view each joined
+    * doclen/). */
+  private val FilteredPageBudget = 2
+
+  /** An index with every settings table an engine loads at open: stop
+    * words, tokenizer settings and (multi-field) fields. */
+  private lazy val withSettings: String = {
+    val d = tempDir("jobbudget-settings")
+    val df = (0 until 20).map(i => (i, f"w$i%02d alpha", "lazy merge", "scala", "src"))
+      .toDF("doc_id", "title", "body", "lang", "source")
+    IndexBuild.buildMultiField(spark, df, "doc_id", Seq(("title", 0), ("body", 1)),
+      "lang", "source", d, cfg.copy(stopWords = Set("lazy"),
+        tokenizer = graft.functions.Tokenizer.TokSettings(nonSeparatorTokens = Set('#'))))
+    d
+  }
 
   test("opening an engine runs no Spark job") {
     withoutAqe {
       dir
       assert(steadyJobs(new SearchEngine(spark, dir)) == 0)
       assert(steadyJobs(new SearchEngine(spark, dir).td.size) == 0, "dictionary size")
+      withSettings
+      val e = new SearchEngine(spark, withSettings)
+      assert(e.stopWords == Set("lazy") && e.fields.map(_._2) == Seq("title", "body") &&
+        e.tokSettings.nonSeparatorTokens == Set('#'), "settings tables were not loaded")
+      assert(steadyJobs(new SearchEngine(spark, withSettings)) == 0, "settings index")
     }
   }
 
@@ -163,15 +183,15 @@ class JobBudgetSpec extends AnyFunSuite {
       val rank = steadyJobs(new MeiliRank(e).search("quick brown fox", 5).collect())
       assert(warm <= 1 && or <= 1, s"searchDF on a tombstoned index: $warm (AND), $or (OR)")
       assert(wand == 1, s"searchWand on a tombstoned index: $wand")
-      assert(rank <= 2, s"MeiliRank.search on a tombstoned index: $rank")
+      assert(rank <= 1, s"MeiliRank.search on a tombstoned index: $rank")
     }
   }
 
-  /** the dictionary collect, the tombstone set, then searchDF's one
-    * job (stats and the dictionary size are read without a job);
-    * schema inference would add one job per table read. 4 while
-    * searchDF broadcast its postings into a doclen/ join. */
-  private val FreshTombstonedBudget = 3
+  /** searchDF's one job: stats, the dictionary and the tombstone set
+    * are read on the driver (3 while the dictionary and the tombstones
+    * were Spark collects, 4 while searchDF also broadcast its postings
+    * into a doclen/ join). */
+  private val FreshTombstonedBudget = 1
 
   test("append (no positions, AQE on): <= 10 jobs, steady, and the same on a base of N and 4N docs") {
     // the build session's setting (perfbench builds with AQE on)
@@ -182,7 +202,7 @@ class JobBudgetSpec extends AnyFunSuite {
         s"delta ${Seq("kilo", "lima", "mike")(b - 1)} alpha w$i")
     }.toDS()
     def appendJobs(baseDocs: Int): Seq[Int] = {
-      val d = Files.createTempDirectory("jobbudget-append").toString
+      val d = tempDir("jobbudget-append")
       IndexBuild.build(spark, (0 until baseDocs).map { i =>
         SourceFile(f"r$i%04d", f"p$i%04d.scala", f"c$i%04d", "scala",
           s"alpha w${i % 97} ${if (i % 3 == 0) "merge buffer" else "stream"}")
@@ -203,7 +223,7 @@ class JobBudgetSpec extends AnyFunSuite {
 
   test("derived tables on a tombstoned index: exportDump and stale facet/prefix builds within budget; unchanged reruns run no job") {
     tombstoned
-    val dump = Files.createTempDirectory("jobbudget-dump").toString
+    val dump = tempDir("jobbudget-dump")
     val exported = jobsOf(Dump.exportDump(spark, tombstoned, dump))
     val facet = jobsOf(IndexBuild.buildFacetIndex(spark, tombstoned, Seq("lang")))
     val prefix = jobsOf(IndexBuild.buildPrefixIndex(spark, tombstoned, cfg, minDf = 2))
@@ -232,7 +252,7 @@ class JobBudgetSpec extends AnyFunSuite {
     val emb = (0 until 40).map(i =>
       (i.toLong, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)))
       .toDF("vec_id", "embedding")
-    val d = Files.createTempDirectory("jobbudget-lsh").toString
+    val d = tempDir("jobbudget-lsh")
     Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", d, nPlanes = 4)
     val first = jobsOf(Similarity.lshIndexTopK(spark, d, 0L, 5).collect())
     val warm = steadyJobs(Similarity.lshIndexTopK(spark, d, 0L, 5).collect())

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -20,7 +19,7 @@ import graft.rank.MeiliRank
   * doclen/, on indexes with and without positions, appended,
   * tombstoned, multi-field, with stop words and with prefix tables. The
   * cascade needs positions, so it is checked on the positions indexes. */
-class PostingScoreSpec extends AnyFunSuite {
+class PostingScoreSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -46,10 +45,9 @@ class PostingScoreSpec extends AnyFunSuite {
   private val queries = Seq("merge buffer", "quick brown fox", "stream", "alpha window table",
     "the merge", "\"quick brown\" fox", "merge -stream", "brown w37")
 
-  private def newDir(p: String) = Files.createTempDirectory(p).toString
 
   private def build(name: String, c: IndexConfig) = {
-    val d = newDir(s"postscore-$name")
+    val d = tempDir(s"postscore-$name")
     IndexBuild.build(spark, corpus(contents.indices), d, c)
     d
   }
@@ -59,7 +57,7 @@ class PostingScoreSpec extends AnyFunSuite {
     ("positions off", build("nopos", cfg), false, false),
     ("positions on", build("pos", cfg.copy(positions = true)), true, false)) ++
     Seq(false, true).map { pos =>
-      val d = newDir(s"postscore-append-$pos")
+      val d = tempDir(s"postscore-append-$pos")
       val c = cfg.copy(positions = pos)
       IndexBuild.build(spark, corpus(0 until 110), d, c)
       IndexBuild.append(spark, corpus(110 until 160), d, c, "b1")
@@ -69,7 +67,7 @@ class PostingScoreSpec extends AnyFunSuite {
       IndexBuild.delete(spark, d, Seq(0, 19, 23, 40, 41), "d1")
       ("tombstoned", d, true, false)
     }, {
-      val d = newDir("postscore-mf")
+      val d = tempDir("postscore-mf")
       val df = contents.zipWithIndex.map { case (t, i) =>
         val ws = t.split(" ")
         (i.toLong, ws.take(2).mkString(" "), ws.drop(2).mkString(" "))

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 
 import graft.SparkTestBase
@@ -11,7 +10,7 @@ import graft.index.{IndexBuild, IndexConfig, TermDict}
 /** Specs for the scale-path mechanics: the Levenshtein-automaton walk
   * (sub-linear typo expansion), the bucketed dictionary loader, and the
   * cost-gated BM25 join (no posting broadcast above the Σdf cap). */
-class ScalePathSpec extends AnyFunSuite {
+class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -52,7 +51,7 @@ class ScalePathSpec extends AnyFunSuite {
   // ---- TermDict bucketed mode -------------------------------------------
 
   lazy val dictIdx: String = {
-    val dir = Files.createTempDirectory("tdspec").toString
+    val dir = tempDir("tdspec")
     IndexBuild.build(spark, CorpusGen.generate(spark, 300).as[graft.corpus.SourceFile],
       dir, IndexConfig(docsPerShard = 64, termBuckets = 4, blockSize = 16,
         numPartitions = 4, positions = true))
@@ -138,7 +137,7 @@ class ScalePathSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](e.facetIndex("nope"))
     // rebuild after a delete: counts follow the LIVE docs (the facet
     // index is a live statistics table, unlike Lucene-semantics N/avgdl)
-    val dir2 = Files.createTempDirectory("facetdel").toString
+    val dir2 = tempDir("facetdel")
     IndexBuild.build(spark,
       CorpusGen.generate(spark, 60).as[graft.corpus.SourceFile], dir2,
       IndexConfig(docsPerShard = 16, termBuckets = 2, blockSize = 8,
@@ -224,7 +223,7 @@ class ScalePathSpec extends AnyFunSuite {
       "table route must not also inject per-term prefix derivations")
     // ranked output identical to the on-the-fly expansion route (same
     // corpus, fresh index without prefix tables)
-    val dir2 = Files.createTempDirectory("noprefix").toString
+    val dir2 = tempDir("noprefix")
     IndexBuild.build(spark, CorpusGen.generate(spark, 300).as[graft.corpus.SourceFile],
       dir2, cfg)
     val mr2 = new graft.rank.MeiliRank(new SearchEngine(spark, dir2))
@@ -246,7 +245,7 @@ class ScalePathSpec extends AnyFunSuite {
   test("prefix tables refresh after append (fingerprint-gated, not lineage-frozen)") {
     val cfg = IndexConfig(docsPerShard = 64, termBuckets = 4, blockSize = 16,
       numPartitions = 4, positions = true)
-    val dir = Files.createTempDirectory("prefixappend").toString
+    val dir = tempDir("prefixappend")
     IndexBuild.build(spark, CorpusGen.generate(spark, 200).as[graft.corpus.SourceFile],
       dir, cfg)
     IndexBuild.buildPrefixIndex(spark, dir, cfg, minDf = 5)

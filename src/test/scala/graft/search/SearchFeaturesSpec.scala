@@ -1,14 +1,13 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuild, IndexConfig}
 import graft.rank.MeiliRank
 
-class SearchFeaturesSpec extends AnyFunSuite {
+class SearchFeaturesSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -43,8 +42,8 @@ class SearchFeaturesSpec extends AnyFunSuite {
   }
 
   test("append: delta segments rank identically to a full rebuild") {
-    val dirA = Files.createTempDirectory("appendA").toString
-    val dirB = Files.createTempDirectory("appendB").toString
+    val dirA = tempDir("appendA")
+    val dirB = tempDir("appendB")
     val full = CorpusGen.generate(spark, 400).as[graft.corpus.SourceFile]
     val part1 = full.filter($"repo" < "org-00010")
     val part2 = full.filter($"repo" >= "org-00010")
@@ -85,7 +84,7 @@ class SearchFeaturesSpec extends AnyFunSuite {
   }
 
   test("pagination and totalHits") {
-    val dir = Files.createTempDirectory("page").toString
+    val dir = tempDir("page")
     IndexBuild.build(spark, CorpusGen.generate(spark, 300).as[graft.corpus.SourceFile], dir, cfg)
     val e = new SearchEngine(spark, dir)
     val (all, total) = e.searchPage("return", 0, 1000)
@@ -97,7 +96,7 @@ class SearchFeaturesSpec extends AnyFunSuite {
   }
 
   test("facet-value search: prefix-filtered value counts over candidates") {
-    val dir = Files.createTempDirectory("facetsearch").toString
+    val dir = tempDir("facetsearch")
     IndexBuild.build(spark, CorpusGen.generate(spark, 300).as[graft.corpus.SourceFile], dir, cfg)
     val e = new SearchEngine(spark, dir)
     val vals = e.facetSearch("return", "lang", "s")
@@ -111,7 +110,7 @@ class SearchFeaturesSpec extends AnyFunSuite {
   }
 
   test("facet search typo DFA is PREFIX-accepting (diacritic + prefix + typo compose)") {
-    val dir = Files.createTempDirectory("facetdfa").toString
+    val dir = tempDir("facetdfa")
     val docs = Seq(
       (0L, "alpha town", "Café de la Paix"), (1L, "alpha city", "Café Central"),
       (2L, "alpha spot", "Cofe Corner"), (3L, "alpha misc", "Tea House"))
@@ -141,7 +140,7 @@ class SearchFeaturesSpec extends AnyFunSuite {
   }
 
   test("synonyms expand query-side at zero typo cost, non-exact") {
-    val dir = Files.createTempDirectory("syn").toString
+    val dir = tempDir("syn")
     val docs = Seq((0L, "the quick fox"), (1L, "the fast fox"), (2L, "a dog"))
       .toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))

@@ -5,7 +5,7 @@ import graft.SparkTestBase
 
 /** The streaming query must produce exactly the batch aggregation when
   * fed the same files (AvailableNow trigger = bounded stream). */
-class EventsSpec extends AnyFunSuite {
+class EventsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class EventsSpec extends AnyFunSuite {
       .as[(String, String, Long, Double)].collect().sortBy(r => (r._1, r._2))
 
     // FileStreamSource requires a directory of files
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-events")
+    val streamDir = tempPath("graft-events")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("part-0.parquet"))
@@ -45,11 +45,11 @@ class EventsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val src = spark.read.parquet(s"$dir/events.parquet")
       .withColumn("payload", concat_ws("|", $"event_type", round($"value", 1)))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-events-d")
+    val streamDir = tempPath("graft-events-d")
     src.coalesce(1).write.mode("overwrite").parquet(streamDir.toString)
 
-    val outDir = java.nio.file.Files.createTempDirectory("graft-dedup-out").toString
-    val cpDir = java.nio.file.Files.createTempDirectory("graft-dedup-cp").toString
+    val outDir = tempDir("graft-dedup-out")
+    val cpDir = tempDir("graft-dedup-cp")
     val q = Events.dedupStream(spark, streamDir.toString, "ts", "payload", outDir, cpDir)
     assert(q.awaitTermination(120000), "dedup stream did not finish in time")
 
@@ -67,12 +67,12 @@ class EventsSpec extends AnyFunSuite {
 
   test("append-mode stream emits only finalized windows, each matching batch") {
     val dir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-events-a")
+    val streamDir = tempPath("graft-events-a")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("part-0.parquet"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft-events-out").toString
-    val cpDir = java.nio.file.Files.createTempDirectory("graft-events-cp").toString
+    val outDir = tempDir("graft-events-out")
+    val cpDir = tempDir("graft-events-cp")
     val q = Events.hourlyCountsAppendStream(spark, streamDir.toString, outDir, cpDir)
     q.awaitTermination(120000)
 
