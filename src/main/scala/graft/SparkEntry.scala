@@ -64,7 +64,7 @@ object SparkEntry {
     * semantic-arm routing. */
   private def lshIndexDir(s: SparkSession, dir: String): String = {
     val idxDir = DocIndex.cacheDir("lshidx", dir)
-    if (graft.index.Lineage.readProperties(s, Similarity.paramsPath(idxDir)).isEmpty)
+    if (graft.index.Lineage.readMarker(s, Similarity.paramsPath(idxDir)).isEmpty)
       graft.ops.Similarity.buildLshIndex(s, embDf(s, dir), "vec_id", "embedding",
         idxDir, nPlanes = 4)
     idxDir

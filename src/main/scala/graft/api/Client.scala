@@ -117,7 +117,7 @@ final class Client(spark: SparkSession, rootDir: String) {
         TaskInfo(0L, uid, stage, "processing", 0, None, None, 0L, 0L, None)
       else {
         val rows = committed.getOrElse(stage, Nil)
-        // rowless stages (fields/dict/stats commit Nil) still finish:
+        // rowless stages (positions/doclen/dict/stats commit Nil) still finish:
         // fall back to the _COMMITTED marker's mtime
         val markerTime = java.time.Instant.ofEpochMilli(
           fs.getFileStatus(new Path(p, "_COMMITTED")).getModificationTime).toString

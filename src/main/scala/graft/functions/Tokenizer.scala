@@ -156,18 +156,6 @@ object Tokenizer extends Serializable {
       Set("cmn", "zho", "zh", "jpn", "ja", "kor", "ko")
     def isCjkLocale(code: String): Boolean =
       CjkLocales.contains(code.toLowerCase(java.util.Locale.ROOT))
-
-    /** Parse a persisted `<fid>:<locale>` entry with validation — the
-      * ONE definition for both the engine's tokenizer-table loader and
-      * dump import, so a malformed/hand-touched entry fails with a
-      * diagnosable message at either end instead of a bare
-      * StringIndexOutOfBounds/NumberFormatException. */
-    def parseFidLocale(e: String): (Int, String) = {
-      val i = e.indexOf(':')
-      require(i > 0 && e.substring(0, i).forall(_.isDigit),
-        s"malformed localizedAttributes entry '$e' (want '<fid>:<locale>')")
-      e.substring(0, i).toInt -> e.substring(i + 1)
-    }
   }
 
   /** Length of the multi-char separator starting at `text(i)`, or -1.

@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 import graft.corpus.SourceFile
 
@@ -12,21 +13,25 @@ import graft.corpus.SourceFile
   * 10^12 documents a dump is a parallel-written dataset, not a single
   * archive stream:
   *
-  *   dumpDir/documents/   JSONL, one object per document (all external
-  *                        fields + content — everything needed to
-  *                        rebuild from scratch)
-  *   dumpDir/settings/    one-row JSON ([[SettingsSchemaDdl]]): the
-  *                        writer's `layout` ([[IndexBuild.FormatVersion]]),
-  *                        index parameters that affect build semantics
-  *                        (termBuckets, blockSize, docsPerShard,
-  *                        positions), stop words, tokenizer settings and
-  *                        the derived tables to rebuild
+  *   dumpDir/documents/     JSONL, one object per document (all external
+  *                          fields + content — everything needed to
+  *                          rebuild from scratch)
+  *   dumpDir/manifest.json  the index's [[Manifest]] (its build settings:
+  *                          termBuckets, blockSize, docsPerShard,
+  *                          positions, stop words, tokenizer settings)
+  *                          plus the dump's own keys: the writer's
+  *                          `layout` ([[IndexBuild.FormatVersion]]) and
+  *                          the derived tables to rebuild
+  *                          (`facetColumns`, `hasPrefixTables`). Written
+  *                          and read on the driver, no Spark job
   *
   * Re-export: `dumpDir/_FINGERPRINT` (source dir, its
-  * [[Lineage.generation]] and a hash of [[SettingsSchemaDdl]], written
-  * last) is the dump's signature. It makes exporting an unchanged index
-  * a no-op; after an append, delete or killed export, or over a dump
-  * written with other settings fields, the dump is rewritten.
+  * [[Lineage.generation]] and [[Manifest.CodecTag]], written last) is
+  * the dump's signature. It makes exporting an unchanged index a no-op;
+  * after an append, delete or killed export, or over a dump written
+  * under another manifest codec, the dump is rewritten. A dump without
+  * `manifest.json`, or whose manifest has no `layout`, was not written
+  * by this engine's export and is refused with "re-export".
   *
   * Import rebuilds through the standard lineage-committed pipeline and
   * records the dump's signature in `indexDir/_FINGERPRINT` before the
@@ -38,16 +43,6 @@ import graft.corpus.SourceFile
   */
 object Dump {
 
-  /** The settings row's fixed schema: the export writes it and the
-    * import reads it (no inference job). A dump without `layout` was
-    * written by an older engine and is refused with "re-export". */
-  final val SettingsSchemaDdl =
-    "layout INT, docsPerShard INT, termBuckets INT, blockSize INT, " +
-      "positions BOOLEAN, stopWords ARRAY<STRING>, facetColumns ARRAY<STRING>, " +
-      "separatorTokens ARRAY<STRING>, nonSeparatorTokens ARRAY<STRING>, " +
-      "tokenizerDictionary ARRAY<STRING>, localizedAttributes ARRAY<STRING>, " +
-      "cjkUnigrams STRING, hasPrefixTables BOOLEAN"
-
   /** The signature of the finished dump at `dumpDir` (its
     * `_FINGERPRINT`, written last by [[exportDump]]). */
   def signature(spark: SparkSession, dumpDir: String): String =
@@ -57,40 +52,36 @@ object Dump {
 
   def exportDump(spark: SparkSession, indexDir: String, dumpDir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    Lineage.requireFormat(spark, indexDir)
-    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = Manifest.read(spark, indexDir)
     // multi-field indexes flatten to the concatenated content column in
     // this dump format — exporting one would silently lose the field
     // structure on import, so fail fast (reference dumps carry full
     // per-index settings; multi-field dump support is a format v2)
-    require(!fs.exists(new Path(s"$indexDir/fields")),
+    require(m.fields.isEmpty,
       "exportDump does not support multi-field indexes: the documents.jsonl " +
         "format stores only the concatenated content column")
     val marker = s"$dumpDir/${IndexBuild.FprFile}"
-    val sig = s"$indexDir:${Lineage.generation(spark, indexDir)}:" +
-      Sha.hex(SettingsSchemaDdl).take(8)
+    val sig = s"$indexDir:${Lineage.generation(spark, indexDir)}:${Manifest.CodecTag}"
     if (!Lineage.readMarker(spark, marker).contains(sig)) {
       // an old signature must not vouch for a half-rewritten dump
       new Path(marker).getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(new Path(marker), false)
-      exportBody(spark, indexDir, dumpDir, fs)
+      exportBody(spark, indexDir, dumpDir, m)
       Lineage.writeMarker(spark, marker, sig)
     }
   }
 
   private def exportBody(spark: SparkSession, indexDir: String, dumpDir: String,
-                         fs: org.apache.hadoop.fs.FileSystem): Unit = {
+                         m: Manifest): Unit = {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     // LIVE documents only: a dump taken after delete() but before
     // compact() must not resurrect tombstoned docs on import
-    IndexBuild.liveDocs(spark, indexDir)
+    IndexBuild.liveDocs(spark, indexDir, Nil)
       .select($"repo", $"path", $"commit", $"lang", $"content")
       .write.mode("overwrite").json(s"$dumpDir/documents")
 
-    val stats = IndexBuild.readStats(spark, indexDir)
-    val stop: Seq[String] = IndexBuild.readStopWords(spark, indexDir).toSeq.sorted
-    val positions = fs.exists(new Path(s"$indexDir/positions"))
+    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // facet indexes are derived tables: record their columns so import
     // rebuilds them (the reference dump's settings capture filterable
     // attributes the same way)
@@ -99,22 +90,13 @@ object Dump {
       if (fs.exists(fp)) fs.listStatus(fp).map(_.getPath.getName).toSeq.sorted
       else Nil
     }
-    // tokenizer settings travel with the dump (segmentation must match
-    // on rebuild or indexed terms change); `separatorTokens` entries mix
-    // single- and multi-char strings, like the reference's
-    val (seps, nonSeps, tokDict, locales, cjk) =
-      IndexBuild.tokSettingsRow(IndexBuild.readTokSettings(spark, indexDir))
     // precomputed prefix tables are a build artifact, not a setting —
     // but WHETHER they exist changes serving behavior (capped on-the-fly
     // fallback vs one pseudo-term read), so record it and rebuild on
     // import, like facetColumns
-    val hasPrefixTables = fs.exists(new Path(s"$indexDir/prefix_meta"))
-    spark.createDataFrame(java.util.List.of(Row(IndexBuild.FormatVersion,
-        stats("docsPerShard").toInt, stats("termBuckets").toInt,
-        stats("blockSize").toInt, positions, stop, facetCols,
-        seps, nonSeps, tokDict, locales, cjk, hasPrefixTables)),
-        StructType.fromDDL(SettingsSchemaDdl))
-      .coalesce(1).write.mode("overwrite").json(s"$dumpDir/settings")
+    Lineage.writeJson(spark, Manifest.path(dumpDir), m.toJson ++ Map(
+      "layout" -> IndexBuild.FormatVersion, "facetColumns" -> facetCols,
+      "hasPrefixTables" -> fs.exists(new Path(s"$indexDir/prefix_meta"))))
   }
 
   /** Rebuild an index from a dump into `indexDir` (see the import
@@ -125,6 +107,10 @@ object Dump {
                  cfg: IndexConfig = IndexConfig()): Unit = {
     import spark.implicits._
     val sig = signature(spark, dumpDir)
+    val settings = Lineage.readJson(spark, Manifest.path(dumpDir)).filter(_.has("layout"))
+      .getOrElse(throw new IllegalArgumentException(s"dump at $dumpDir has no " +
+        "manifest.json with a layout: it was written by an older engine; re-export it"))
+    val restored = Manifest.fromJson(settings).config(cfg.numPartitions)
     val marker = s"$indexDir/${IndexBuild.FprFile}"
     Lineage.readMarker(spark, marker) match {
       case Some(`sig`) => ()
@@ -135,42 +121,6 @@ object Dump {
             s"$sig: import into a fresh directory")
         Lineage.writeMarker(spark, marker, sig)
     }
-    val st = spark.read.schema(SettingsSchemaDdl).json(s"$dumpDir/settings").collect()(0)
-    require(!st.isNullAt(st.fieldIndex("layout")), s"dump at $dumpDir has no " +
-      "settings layout: it was written by an older engine; re-export it")
-    def strSeq(f: String): Seq[String] =
-      Option(st.getAs[scala.collection.Seq[String]](f)).fold(Seq.empty[String])(_.toSeq)
-    val restored = cfg.copy(
-      docsPerShard = st.getAs[Int]("docsPerShard"),
-      termBuckets = st.getAs[Int]("termBuckets"),
-      blockSize = st.getAs[Int]("blockSize"),
-      positions = st.getAs[Boolean]("positions"),
-      stopWords = strSeq("stopWords").toSet,
-      storageOrderIds = false,
-      tokenizer = {
-        // a hand-edited settings file can hold empty or malformed
-        // entries — reject with a clear message, not a charAt(0) crash
-        def validated(f: String): Seq[String] = {
-          val es = strSeq(f)
-          require(es.forall(_.nonEmpty), s"dump settings: empty entry in '$f'")
-          es
-        }
-        val seps = validated("separatorTokens")
-        val locs = validated("localizedAttributes")
-        graft.functions.Tokenizer.TokSettings(
-          seps.filter(_.length == 1).map(_.charAt(0)).toSet,
-          validated("nonSeparatorTokens").map(_.charAt(0)).toSet,
-          strSeq("tokenizerDictionary").toSet,
-          separatorStrings = seps.filter(_.length > 1).toSet,
-          localesByFid = locs
-            .map(graft.functions.Tokenizer.TokSettings.parseFidLocale).toMap,
-          cjkUnigrams = {
-            val v = Option(st.getAs[String]("cjkUnigrams")).getOrElse("")
-            require(v.isEmpty || v == "true" || v == "false",
-              s"dump settings: cjkUnigrams must be ''/'true'/'false', got '$v'")
-            if (v.isEmpty) None else Some(v.toBoolean)
-          })
-      })
     // explicit schema: the documents format is fixed (5 string fields),
     // and schema INFERENCE would scan every JSONL byte before the build
     // even starts — a full extra corpus pass per import call, paid even
@@ -182,12 +132,12 @@ object Dump {
       .as[SourceFile]
     IndexBuild.build(spark, docs, indexDir, restored)
     // rebuild the derived facet indexes recorded in the dump settings
-    val facetCols = strSeq("facetColumns")
+    val facetCols = Option(settings.get("facetColumns")).toSeq.flatMap(_.asScala).map(_.asText)
     if (facetCols.nonEmpty) IndexBuild.buildFacetIndex(spark, indexDir, facetCols)
     // the source index served prefixes from precomputed tables: rebuild
     // them so the import doesn't silently downgrade to the capped
     // on-the-fly path for hot prefixes
-    if (st.getAs[Boolean]("hasPrefixTables"))
+    if (Option(settings.get("hasPrefixTables")).exists(_.asBoolean))
       IndexBuild.buildPrefixIndex(spark, indexDir, restored)
   }
 }

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.collection.mutable.ArrayBuffer
@@ -8,7 +8,11 @@ import scala.collection.mutable.ArrayBuffer
 import graft.corpus.SourceFile
 import graft.functions.{BM25, Tokenizer, VByte}
 
-/** Index build configuration.
+/** Index build configuration. The build records every field but the
+  * execution settings `numPartitions` and `storageOrderIds` in the
+  * index's [[Manifest]]; [[IndexBuild.append]] and
+  * [[IndexBuild.buildPrefixIndex]] refuse a config that disagrees with
+  * it.
   *
   * @param docsPerShard docid-range width of one index shard. Shards are
   *   the unit of query-time parallelism (block-max WAND runs per shard)
@@ -82,7 +86,9 @@ final case class IndexConfig(
   * Layout under `indexDir`:
   *   docs/      docId, repo, path, commit, lang, content, content_sha256
   *   dict/      term, termId, df, cf, len
-  *   stats/     base, delta-<batchId>: `key=value` text files (see [[readStats]])
+  *   manifest.json  every build setting and the build's N and Σlen
+  *              ([[Manifest]], written by the stats stage)
+  *   stats/     delta-<batchId>: one append's N and Σlen, JSON (see [[corpusTotals]])
   *   postings/bucket=B/  term, shard, blockId, firstDoc, lastDoc, count,
   *                       docBytes, tfBytes, lenBytes, blockMaxTf, tfSum,
   *                       encBytes (= |docBytes| + |tfBytes|). `lenBytes`
@@ -104,7 +110,7 @@ object IndexBuild {
     * version (Lineage.FormatStamp); a directory written under another
     * format is refused with a rebuild error, never read through a
     * fallback. */
-  final val FormatVersion = 12
+  final val FormatVersion = 13
 
   /** Deterministic term -> bucket (also computed query-side in plain
     * Scala; String.hashCode is specified by the JLS so it is stable
@@ -388,10 +394,11 @@ object IndexBuild {
     * definition of the tombstone-exclusion join (used by facet builds,
     * compaction and dumps; the query side's SearchEngine.liveOnly is
     * the per-engine cached equivalent). Both tables are read with their
-    * writers' schemas (no inference job); a multi-field index's field
-    * columns come from its `fields` table. */
-  def liveDocs(spark: SparkSession, indexDir: String): DataFrame = {
-    val fieldCols = readFields(spark, indexDir).map(_._2)
+    * writers' schemas (no inference job); `fieldCols` are the field
+    * columns of a multi-field index wanted beside the single-field ones
+    * (its [[Manifest.fields]]). */
+  def liveDocs(spark: SparkSession, indexDir: String,
+               fieldCols: Seq[String]): DataFrame = {
     val docs0 = spark.read.schema(docsSchema(fieldCols)).parquet(s"$indexDir/docs")
     if (exists(spark, s"$indexDir/deleted"))
       docs0.join(broadcast(spark.read.schema("docId INT").parquet(s"$indexDir/deleted")),
@@ -560,8 +567,9 @@ object IndexBuild {
   /** Post-docs build stages (the ONE tokenize pass → postings/positions
     * + doclen → dict → stats); shared by every builder ([[build]],
     * [[buildFromTable]], [[buildMultiField]], and through them
-    * [[compact]] and [[Dump.importDump]]). `fieldCols` are the docs/
-    * columns tokenized per document, in fid order. The corpus is
+    * [[compact]] and [[Dump.importDump]]). `fields` are a multi-field
+    * index's (docs/ column, weight) in fid order; a single-field index
+    * tokenizes `content`. The corpus is
     * tokenized exactly once: the token stream flows into EITHER the
     * positions table (when enabled; postings then derive from a narrow
     * (term, docId, tf, len) scan of it) OR straight into the posting
@@ -570,12 +578,10 @@ object IndexBuild {
     * in the posting blocks and positions rows. */
   private def buildFromDocs(spark: SparkSession, indexDir: String,
                             cfg: IndexConfig,
-                            fieldCols: Seq[String] = Seq("content")): Unit = {
-    import spark.implicits._
-    // fixed read schema (no inference job); a single-field index's one
-    // text column is docs/' own `content`
-    val rows = tokenRows(spark.read.schema(docsSchema(fieldCols.filterNot(_ == "content")))
-      .parquet(s"$indexDir/docs"), fieldCols, cfg)
+                            fields: Seq[(String, Int)] = Nil): Unit = {
+    // fixed read schema (no inference job)
+    val rows = tokenRows(spark.read.schema(docsSchema(fields.map(_._1)))
+      .parquet(s"$indexDir/docs"), if (fields.isEmpty) Seq("content") else fields.map(_._1), cfg)
     val tb = cfg.termBuckets
 
     if (cfg.positions) {
@@ -621,22 +627,14 @@ object IndexBuild {
       Nil
     }
 
-    // ---- stage: stats — N and Σlen from the (narrow) doclen table ------
+    // ---- stage: stats — N and Σlen from the (narrow) doclen table, and
+    // the manifest: the query side, appends and dumps take every setting
+    // from it, so all of them segment, filter and encode as the build did
     Lineage.stage(spark, indexDir, "stats") {
       val (n, tokens) = doclenTotals(spark, s"$indexDir/doclen")
-      writeStats(spark, indexDir, "base", n, tokens, Seq("k1" -> BM25.K1,
-        "b" -> BM25.B, "docsPerShard" -> cfg.docsPerShard,
-        "termBuckets" -> cfg.termBuckets, "blockSize" -> cfg.blockSize))
-      // persist the tokenizer settings and the stop-word setting: the
-      // query side loads them from the index, so both ends segment and
-      // filter identically by construction
-      if (!cfg.tokenizer.isDefault)
-        Seq(tokSettingsRow(cfg.tokenizer))
-          .toDF(StructType.fromDDL(TokSchemaDdl).fieldNames.toIndexedSeq: _*)
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/tokenizer")
-      if (cfg.stopWords.nonEmpty)
-        cfg.stopWords.toSeq.sorted.toDF("term").coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/stopwords")
+      Manifest.write(spark, indexDir, Manifest(n, tokens, BM25.K1, BM25.B,
+        cfg.docsPerShard, cfg.termBuckets, cfg.blockSize, cfg.positions, cfg.stopWords,
+        fields.zipWithIndex.map { case ((name, w), fid) => (fid, name, w) }, cfg.tokenizer))
       Nil
     }
   }
@@ -824,15 +822,19 @@ object IndexBuild {
     * still rewritten whole from the posting metadata, in the batch's own
     * `dict_<batchId>` stage. Each batch commits its own lineage stages,
     * so a killed append resumes like a build, and a repeated call of a
-    * committed batch writes nothing. */
+    * committed batch writes nothing. The build settings come from the
+    * index's [[Manifest]]: a `cfg` that disagrees with them is refused
+    * before anything is written; only its `numPartitions` is used. */
   def append(spark: SparkSession, delta: Dataset[SourceFile], indexDir: String,
              cfg: IndexConfig, batchId: String): Unit = {
     import spark.implicits._
+    val m = Manifest.read(spark, indexDir)
     // multi-field docs/ rows also carry every field column, which the
     // single-content delta rows below cannot supply — fail fast
-    require(!exists(spark, s"$indexDir/fields"),
+    require(m.fields.isEmpty,
       "append does not support multi-field indexes: the delta rows store " +
         "only the concatenated content column; rebuild with buildMultiField")
+    val conf = m.checked(cfg, "append")
 
     Lineage.stage(spark, indexDir, s"docs_delta_$batchId") {
       // next free docid = 1 + the highest COMMITTED docs docid, read
@@ -846,7 +848,7 @@ object IndexBuild {
       // staged write (overwrite = idempotent) + tagged publish into docs/:
       // a kill during either step re-runs the stage and converges
       val staging = stagingDir(indexDir, "docs", batchId)
-      val rows = rankDocs(spark, delta, base, staging, cfg.numPartitions,
+      val rows = rankDocs(spark, delta, base, staging, conf.numPartitions,
         s"docs_delta_$batchId")((p, _, c) => s"docs_delta_$batchId:$p:$c")
       Lineage.publishAppend(spark, staging, s"$indexDir/docs", s"b$batchId")
       rows
@@ -857,26 +859,26 @@ object IndexBuild {
       val batch = Lineage.rows(spark, indexDir).filter(_.stage == s"docs_delta_$batchId")
       if (batch.nonEmpty) {
         val (lo, hi) = (batch.map(_.docidMin).min, batch.map(_.docidMax).max)
-        val tb = cfg.termBuckets
+        val tb = conf.termBuckets
         // ONE tokenize pass over the delta, with sentinel len rows riding
         // the same shuffle; the sentinel partition becomes the batch's
         // doclen/ delta
         val rows = tokenRows(spark.read.schema(DocsSchemaDdl).parquet(s"$indexDir/docs")
-          .filter($"docId".between(lo, hi)), Seq("content"), cfg)
+          .filter($"docId".between(lo, hi)), Seq("content"), conf)
         val staging = stagingDir(indexDir, "postings", batchId)
-        if (cfg.positions) {
+        if (conf.positions) {
           val pstaging = stagingDir(indexDir, "positions", batchId)
-          writePositions(rows, pstaging, cfg, math.max(1, cfg.numPartitions / 2))
+          writePositions(rows, pstaging, conf, math.max(1, conf.numPartitions / 2))
           // postings delta from the STAGED positions (narrow scan, no
           // second tokenize)
-          encodeBlocks(positionKeys(spark, pstaging, tb), cfg, staging)
+          encodeBlocks(positionKeys(spark, pstaging, tb), conf, staging)
           writeStatsDelta(spark, indexDir, batchId, s"$pstaging/bucket=$tb")
           // the staged sentinel files move into doclen/ as-is — zero jobs
           Lineage.publishAppend(spark, s"$pstaging/bucket=$tb",
             s"$indexDir/doclen", s"b$batchId")
           Lineage.publishAppend(spark, pstaging, s"$indexDir/positions", s"b$batchId")
         } else {
-          encodeBlocks(rows.toDF(TokenCols: _*), cfg, staging)
+          encodeBlocks(rows.toDF(TokenCols: _*), conf, staging)
           val lstaging = stagingDir(indexDir, "doclen", batchId)
           sentinelDoclen(spark, s"$staging/bucket=$tb").coalesce(1)
             .write.mode("overwrite").parquet(lstaging)
@@ -942,15 +944,15 @@ object IndexBuild {
   def buildFacetIndex(spark: SparkSession, indexDir: String,
                       cols: Seq[String], numPartitions: Int = 4): Unit = {
     import spark.implicits._
-    Lineage.requireFormat(spark, indexDir)
+    val fieldCols = Manifest.read(spark, indexDir).fields.map(_._2)
     val sig = s"${Lineage.generation(spark, indexDir)}:$numPartitions"
     val stale = cols.filterNot(c =>
       Lineage.readMarker(spark, s"$indexDir/facets/$c/$FprFile").contains(sig))
     if (stale.isEmpty) return
+    val docs = liveDocs(spark, indexDir, fieldCols)
     val live =
-      if (stale.contains("len"))
-        liveDocs(spark, indexDir).join(readDoclen(spark, indexDir), Seq("docId"))
-      else liveDocs(spark, indexDir)
+      if (stale.contains("len")) docs.join(readDoclen(spark, indexDir), Seq("docId"))
+      else docs
     stale.foreach { c =>
       live.groupBy(col(c).as("value"))
         .agg(count(lit(1)).as("n"),
@@ -998,11 +1000,14 @@ object IndexBuild {
     * LAST, so a killed rebuild re-runs (idempotent overwrite).
     * Per table, one decode pass and one merge shuffle, then the chunk
     * shuffle of [[encodeBlocks]] or [[writePositions]] — never per
-    * query. */
+    * query. The blocks are encoded under the index's [[Manifest]]
+    * settings: a `cfg` that disagrees with them is refused before
+    * anything is written; only its `numPartitions` is used. */
   def buildPrefixIndex(spark: SparkSession, indexDir: String, cfg: IndexConfig,
                        maxLen: Int = PrefixMaxLen, minDf: Long = PrefixMinDf): Unit = {
     import spark.implicits._
-    Lineage.requireFormat(spark, indexDir)
+    val m = Manifest.read(spark, indexDir)
+    val conf = m.checked(cfg, "buildPrefixIndex")
     val sig = s"${Lineage.generation(spark, indexDir)}:$maxLen:$minDf"
     if (Lineage.readMarker(spark, s"$indexDir/prefix_meta/$FprFile").contains(sig)) return
 
@@ -1041,10 +1046,10 @@ object IndexBuild {
         .groupBy($"prefix", $"docId")
         .agg(sum($"tf").cast("int").as("tf"), max($"len").as("len"))
         .select($"prefix".as("term"), $"docId", $"tf", $"len"),
-      cfg, s"$indexDir/prefixes")
+      conf, s"$indexDir/prefixes")
 
     // merged prefix positions (only when the index has positions)
-    if (exists(spark, s"$indexDir/positions")) {
+    if (m.positions) {
       writePositions(
         spark.read.schema("term STRING, docId INT, tf INT, len INT, positions ARRAY<INT>")
           .parquet(s"$indexDir/positions")
@@ -1060,7 +1065,7 @@ object IndexBuild {
               .as("positions"))
           .select($"prefix".as("term"), $"docId", $"tf", $"len", $"positions")
           .as[TokenRow],
-        s"$indexDir/prefix_positions", cfg, math.max(1, cfg.numPartitions / 2))
+        s"$indexDir/prefix_positions", conf, math.max(1, conf.numPartitions / 2))
     }
     // marker LAST (killed rebuild re-runs); plain file, no Spark job
     Lineage.writeMarker(spark, s"$indexDir/prefix_meta/$FprFile", sig)
@@ -1075,118 +1080,46 @@ object IndexBuild {
     * model: delete() is O(batch), compact() is the amortized rewrite —
     * at 10^12 files it is a full parallel re-index, run it when the
     * tombstone fraction justifies reclaiming scan/skip efficiency).
-    * Reads only docs/ and deleted/ of `indexDir`, so its format stamp is
-    * not checked: compacting into a fresh directory is also the way to
-    * carry an index written by an older format forward. Ids are always
-    * assigned by (repo, path, commit) rank: the live docs are no bare
-    * file scan once anything was deleted. */
+    * A fresh build with the caller's `cfg`: it reads only the
+    * single-field columns of docs/ and deleted/ of `indexDir`, neither
+    * its format stamp nor its manifest, so compacting into a fresh
+    * directory is also the way to carry an index written by an older
+    * format forward. Ids are always assigned by (repo, path, commit)
+    * rank: the live docs are no bare file scan once anything was
+    * deleted. */
   def compact(spark: SparkSession, indexDir: String, outDir: String,
               cfg: IndexConfig): Unit = {
     import spark.implicits._
-    val live = liveDocs(spark, indexDir)
+    val live = liveDocs(spark, indexDir, Nil)
     build(spark, live.select($"repo", $"path", $"commit", $"lang", $"content")
       .as[graft.corpus.SourceFile], outDir, cfg.copy(storageOrderIds = false))
   }
 
-  /** stats/ holds the BM25 corpus totals as small `key=value` text
-    * files, written and read through the FileSystem API like the
-    * lineage stamp (no Spark job): `base` from the build's stats stage
-    * (exact `N` and `tokens` = Σlen as longs, plus k1, b, docsPerShard,
-    * termBuckets, blockSize) and one `delta-<batchId>` per append (that
-    * batch's `N` and `tokens`). An overwrite, so a resumed stage
-    * rewrites the same file. Tombstoned docs stay counted (Lucene
-    * semantics — see [[delete]]); [[compact]] is where statistics
-    * shrink to live. */
-  private def writeStats(spark: SparkSession, indexDir: String, name: String,
-                         n: Long, tokens: Long, params: Seq[(String, Any)] = Nil): Unit =
-    Lineage.writeProperties(spark, s"$indexDir/stats/$name",
-      Seq("N" -> n, "tokens" -> tokens) ++ params)
-
   /** An append batch's `stats/delta-<batchId>` from its staged doclen
-    * rows (one job over the batch only). */
+    * rows (one job over the batch only): the batch's `N` and `tokens`
+    * as a JSON object, written through the FileSystem API like the
+    * manifest. An overwrite, so a resumed stage rewrites the same file. */
   private def writeStatsDelta(spark: SparkSession, indexDir: String,
                               batchId: String, batchDoclen: String): Unit = {
     val (n, tokens) = doclenTotals(spark, batchDoclen)
-    writeStats(spark, indexDir, s"delta-$batchId", n, tokens)
+    Lineage.writeJson(spark, s"$indexDir/stats/delta-$batchId",
+      Map("N" -> n, "tokens" -> tokens))
   }
 
-  /** The index's BM25 statistics: `base` plus every append delta,
-    * summed on the driver. Keys: N, avgdl, k1, b, docsPerShard,
-    * termBuckets, blockSize. avgdl = tokens / N over the exact long
-    * totals, so an index built then appended has the bit-identical N
-    * and avgdl of a from-scratch build of the same docs. */
-  def readStats(spark: SparkSession, indexDir: String): Map[String, Double] = {
+  /** The index's BM25 corpus totals (N, Σlen): the manifest's, from the
+    * build, plus every append's delta, summed on the driver (no Spark
+    * job). Exact longs, so an index built then appended has the
+    * bit-identical N and avgdl of a from-scratch build of the same docs.
+    * Tombstoned docs stay counted (Lucene semantics — see [[delete]]);
+    * [[compact]] is where statistics shrink to live. */
+  def corpusTotals(spark: SparkSession, indexDir: String, m: Manifest): (Long, Long) = {
     val dir = new org.apache.hadoop.fs.Path(s"$indexDir/stats")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def entries(name: String): Map[String, String] =
-      Lineage.readProperties(spark, s"$dir/$name").getOrElse(
-        throw new IllegalStateException(s"index at $indexDir has no stats/$name: " +
-          "its build has not committed the stats stage"))
-    val base = entries("base")
-    val parts = base +: fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("delta-")).map(entries)
-    val n = parts.map(_("N").toLong).sum
-    val tokens = parts.map(_("tokens").toLong).sum
-    (base -- Seq("N", "tokens")).map { case (k, v) => k -> v.toDouble } ++
-      Map("N" -> n.toDouble, "avgdl" -> (if (n == 0) 0.0 else tokens.toDouble / n))
+    val deltas = if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith("delta-")).flatMap(p => Lineage.readJson(spark, p.toString))
+    (m.n + deltas.map(_.get("N").asLong).sum, m.tokens + deltas.map(_.get("tokens").asLong).sum)
   }
-
-  /** tokenizer/ schema, in [[tokSettingsRow]] order. */
-  private final val TokSchemaDdl =
-    "separators ARRAY<STRING>, nonSeparators ARRAY<STRING>, " +
-      "dictionary ARRAY<STRING>, locales ARRAY<STRING>, cjkUnigrams STRING"
-
-  /** [[Tokenizer.TokSettings]] as plain sorted strings — the ONE
-    * serialization, shared by tokenizer/ and dump settings. Separators
-    * mix single-char and multi-char entries in one column; the reader
-    * routes by length (charabia's model: they are all string tokens).
-    * The index-level CJK unigram override is "" for autodetect: it must
-    * roundtrip or the query side would segment CJK differently from the
-    * index. */
-  private[index] def tokSettingsRow(t: Tokenizer.TokSettings)
-      : (Seq[String], Seq[String], Seq[String], Seq[String], String) =
-    ((t.separatorTokens.map(_.toString) ++ t.separatorStrings).toSeq.sorted,
-      t.nonSeparatorTokens.toSeq.map(_.toString).sorted,
-      t.dictionary.toSeq.sorted,
-      t.localesByFid.toSeq.sorted.map { case (fid, loc) => s"$fid:$loc" },
-      t.cjkUnigrams.fold("")(_.toString))
-
-  /** Index-time tokenizer settings persisted by the build (Default when
-    * none were set): the query side and dumps segment with exactly
-    * these, so both ends agree by construction. Read on the driver, no
-    * Spark job. */
-  def readTokSettings(spark: SparkSession, indexDir: String): Tokenizer.TokSettings =
-    readSmall(spark, indexDir, "tokenizer", TokSchemaDdl).headOption match {
-      case None => Tokenizer.TokSettings.Default
-      case Some(r) =>
-        def strs(i: Int): Seq[String] = r.getSeq[String](i)
-        val seps = strs(0).filter(_.nonEmpty)
-        Tokenizer.TokSettings(
-          seps.filter(_.length == 1).map(_.charAt(0)).toSet,
-          strs(1).filter(_.nonEmpty).map(_.charAt(0)).toSet,
-          strs(2).toSet,
-          separatorStrings = seps.filter(_.length > 1).toSet,
-          localesByFid = strs(3).map(Tokenizer.TokSettings.parseFidLocale).toMap,
-          cjkUnigrams = Some(r.getString(4)).filter(_.nonEmpty).map(_.toBoolean))
-    }
-
-  /** Index-time stop words (empty when unset), read on the driver. */
-  def readStopWords(spark: SparkSession, indexDir: String): Set[String] =
-    readSmall(spark, indexDir, "stopwords", "term STRING").map(_.getString(0)).toSet
-
-  /** (fid, name, weight) of a multi-field index's searchable fields
-    * ([[buildMultiField]]) in fid order, read on the driver; empty for
-    * a single-field index. */
-  def readFields(spark: SparkSession, indexDir: String): Seq[(Int, String, Int)] =
-    readSmall(spark, indexDir, "fields", FieldsSchemaDdl)
-      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).sortBy(_._1)
-
-  /** Every row of the settings-sized table `indexDir/table` (none when
-    * it is absent). */
-  private def readSmall(spark: SparkSession, indexDir: String, table: String,
-                        ddl: String): Seq[Row] =
-    LocalParquet.readAll(spark.sparkContext.hadoopConfiguration, s"$indexDir/$table",
-      StructType.fromDDL(ddl))
 
   /** Update-merge ingest (reference S1 replace vs update semantics,
     * document_operation.rs): keep the latest version per primary key
@@ -1230,16 +1163,9 @@ object IndexBuild {
     import spark.implicits._
     require(fields.nonEmpty && fields.size < (1 << 15), "1..32767 fields")
     val fieldCols = fields.map(_._1)
-
-    Lineage.stage(spark, indexDir, "fields") {
-      fields.zipWithIndex.map { case ((name, w), fid) => (fid, name, w) }
-        .toDF("fid", "name", "weight")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/fields")
-      Nil
-    }
     tableDocsStage(spark, df, docIdCol, concat_ws("\n\n", fieldCols.map(col): _*),
       fieldCols, langCol, sourceCol, indexDir)
-    buildFromDocs(spark, indexDir, cfg.copy(positions = true), fieldCols)
+    buildFromDocs(spark, indexDir, cfg.copy(positions = true), fields)
   }
 
   /** The docs stage of a table build ([[buildFromTable]],
@@ -1322,9 +1248,6 @@ object IndexBuild {
     "term STRING, shard INT, blockId INT, firstDoc INT, lastDoc INT, " +
       "count INT, docBytes BINARY, tfBytes BINARY, lenBytes BINARY, " +
       "blockMaxTf INT, tfSum BIGINT, encBytes INT, bucket INT"
-
-  /** Read schema of fields/ ([[buildMultiField]]). */
-  final val FieldsSchemaDdl = "fid INT, name STRING, weight INT"
 
   /** The docs lineage row of a table build: docid range and count from
     * one fixed-schema scan. An empty table commits no row, as

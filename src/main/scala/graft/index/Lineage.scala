@@ -1,5 +1,8 @@
 package graft.index
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper, SerializationFeature}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -48,13 +51,8 @@ object Lineage {
     * scaling efficiency on short builds. */
   def commit(spark: SparkSession, indexDir: String, stage: String,
              rows: Seq[LineageRow]): Unit = {
-    def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    writeMarker(spark, s"$indexDir/lineage/$stage/rows/rows.json", rows.map { r =>
-      s"""{"stage":${js(r.stage)},"partitionId":${r.partitionId},""" +
-        s""""docidMin":${r.docidMin},"docidMax":${r.docidMax},""" +
-        s""""postingCount":${r.postingCount},"bytes":${r.bytes},""" +
-        s""""sha256":${js(r.sha256)},"committedAt":${js(r.committedAt)}}""" + "\n"
-    }.mkString)
+    writeMarker(spark, s"$indexDir/lineage/$stage/rows/rows.json",
+      rows.map(r => Json.writeValueAsString(r) + "\n").mkString)
     fs(spark, indexDir).create(markerPath(indexDir, stage), true).close()
   }
 
@@ -88,25 +86,8 @@ object Lineage {
   def rows(spark: SparkSession, indexDir: String): Seq[LineageRow] =
     committed(spark, indexDir).flatMap { case (p, _) =>
       readMarker(spark, s"$p/rows/rows.json").toSeq
-        .flatMap(_.linesIterator.filter(_.nonEmpty).map(parseRow))
+        .flatMap(_.linesIterator.filter(_.nonEmpty).map(Json.readValue(_, classOf[LineageRow])))
     }
-
-  private val Field = """"([A-Za-z0-9]+)":("(?:[^"\\]|\\.)*"|-?\d+)""".r
-  private val Escape = """\\(.)""".r
-
-  /** One [[commit]] JSON line back to its row; string values undo the
-    * writer's two escapes (`\\` and `\"`). */
-  private def parseRow(line: String): LineageRow = {
-    def unescape(s: String) =
-      Escape.replaceAllIn(s, e => scala.util.matching.Regex.quoteReplacement(e.group(1)))
-    val m = Field.findAllMatchIn(line).map { g =>
-      val v = g.group(2)
-      g.group(1) -> (if (v.startsWith("\"")) unescape(v.substring(1, v.length - 1)) else v)
-    }.toMap
-    LineageRow(m("stage"), m("partitionId").toInt, m("docidMin").toInt,
-      m("docidMax").toInt, m("postingCount").toLong, m("bytes").toLong,
-      m("sha256"), m("committedAt"))
-  }
 
   /** [[rows]] as a local relation (inspection/tests): no Spark job. */
   def read(spark: SparkSession, indexDir: String): org.apache.spark.sql.DataFrame = {
@@ -188,7 +169,7 @@ object Lineage {
       case found => refuse(dir, found)
     }
 
-  /** Small marker files (format stamp, fingerprints, stats): plain
+  /** Small marker files (format stamp, fingerprints, JSON files): plain
     * FileSystem reads and writes, like `_COMMITTED` — no Spark job. */
   private[graft] def readMarker(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
@@ -205,15 +186,21 @@ object Lineage {
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
-  /** `key=value`-lines markers (stats files, LSH parameters). */
-  private[graft] def writeProperties(spark: SparkSession, path: String,
-                                     entries: Seq[(String, Any)]): Unit =
-    writeMarker(spark, path, entries.map { case (k, v) => s"$k=$v\n" }.mkString)
+  /** The one JSON codec of the small index files: lineage rows, the
+    * [[Manifest]], stats deltas, LSH parameters and dump manifests.
+    * Scala maps, sequences, options and case classes serialize as JSON
+    * objects, arrays, values-or-null and objects; map keys in sorted
+    * order, so a file's bytes depend only on its content. */
+  private[graft] val Json: ObjectMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
+    .build()
 
-  private[graft] def readProperties(spark: SparkSession, path: String)
-      : Option[Map[String, String]] =
-    readMarker(spark, path).map(_.linesIterator.filter(_.nonEmpty)
-      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap)
+  private[graft] def writeJson(spark: SparkSession, path: String, value: Any): Unit =
+    writeMarker(spark, path, Json.writeValueAsString(value))
+
+  private[graft] def readJson(spark: SparkSession, path: String): Option[JsonNode] =
+    readMarker(spark, path).map(Json.readTree)
 
   /** Run `body` only if the stage is not yet committed; `body` must
     * return the lineage rows describing what it wrote. */

@@ -160,8 +160,8 @@ object Similarity {
       .sortWithinPartitions(col("id"))
       .write.mode("overwrite").parquet(s"$dir/byid")
     graft.index.Lineage.writeFormat(spark, dir)
-    graft.index.Lineage.writeProperties(spark, paramsPath(dir),
-      Seq("nPlanes" -> nPlanes, "dim" -> d, "seed" -> seed))
+    graft.index.Lineage.writeJson(spark, paramsPath(dir),
+      Map("nPlanes" -> nPlanes, "dim" -> d, "seed" -> seed))
   }
 
   /** The (nPlanes, dim, seed) marker of a persisted LSH index. */
@@ -174,10 +174,10 @@ object Similarity {
     * file reads on every call, no Spark job, nothing cached. */
   private def lshMeta(spark: SparkSession, dir: String): (Int, Int, Long) = {
     graft.index.Lineage.requireFormat(spark, dir)
-    val m = graft.index.Lineage.readProperties(spark, paramsPath(dir)).getOrElse(
+    val m = graft.index.Lineage.readJson(spark, paramsPath(dir)).getOrElse(
       throw new IllegalArgumentException(
         s"LSH index at $dir has no lsh_params: rebuild it with buildLshIndex"))
-    (m("nPlanes").toInt, m("dim").toInt, m("seed").toLong)
+    (m.get("nPlanes").asInt, m.get("dim").asInt, m.get("seed").asLong)
   }
 
   /** One hyperplane-LSH bucket as a self-contained Column (planes

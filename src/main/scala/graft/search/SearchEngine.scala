@@ -74,18 +74,18 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     extends Serializable {
   import spark.implicits._
 
-  // an index written by another format (table layout or normalizer
-  // folds) fails fast with the remedy instead of answering wrong
-  graft.index.Lineage.requireFormat(spark, indexDir)
-
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
   // ---- loaded-once index metadata (the FST/dictionary analogue) -------
-  val stats: Map[String, Double] = IndexBuild.readStats(spark, indexDir)
-  val nDocs: Long = stats("N").toLong
-  val avgdl: Double = stats("avgdl")
-  val termBuckets: Int = stats("termBuckets").toInt
-  val docsPerShard: Int = stats("docsPerShard").toInt
+  /** Every setting the build fixed, read after the format check (an
+    * index written by another format — table layout or normalizer folds
+    * — fails fast with the remedy instead of answering wrong). */
+  val manifest: graft.index.Manifest = graft.index.Manifest.read(spark, indexDir)
+  private val totals = IndexBuild.corpusTotals(spark, indexDir, manifest)
+  val nDocs: Long = totals._1
+  val avgdl: Double = if (nDocs == 0) 0.0 else totals._2.toDouble / nDocs
+  val termBuckets: Int = manifest.termBuckets
+  val docsPerShard: Int = manifest.docsPerShard
 
   /** Dictionary access: full in-memory map below TermDict's threshold,
     * predicate-pushdown bucketed loads (length bands, prefixes, IN
@@ -96,13 +96,12 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * absent from the dictionary, so bag-of-words paths ignore them
     * naturally — the set is for analyzers that must drop them before
     * slot construction (MeiliRank). */
-  val stopWords: Set[String] = IndexBuild.readStopWords(spark, indexDir)
+  val stopWords: Set[String] = manifest.stopWords
 
   /** Index-time tokenizer settings (IndexConfig.tokenizer, persisted by
     * the build): the query side MUST segment with the same settings or
     * query terms would not match indexed terms. */
-  val tokSettings: Tokenizer.TokSettings =
-    IndexBuild.readTokSettings(spark, indexDir)
+  val tokSettings: Tokenizer.TokSettings = manifest.tokenizer
 
   /** Parse a query string under this index's tokenizer settings. A
     * single-field index has exactly one attribute (fid 0), so its
@@ -129,7 +128,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
 
   /** (fid, name, weight) of a multi-field index's searchable fields
     * (IndexBuild.buildMultiField), in fid order; empty for single-field. */
-  private[graft] val fields: Seq[(Int, String, Int)] = IndexBuild.readFields(spark, indexDir)
+  private[graft] val fields: Seq[(Int, String, Int)] = manifest.fields
 
   /** fid → weight for multi-field indexes; empty for single-field. Lower
     * weight = more important field (reference fieldids_weights_map). */
@@ -206,10 +205,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * proximity / attribute rules and any fid-restricted read need it;
     * callers that would otherwise fail mid-query with an opaque
     * missing-path AnalysisException check this up front). */
-  lazy val hasPositions: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/positions")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  val hasPositions: Boolean = manifest.positions
 
   /** (docId, len) as written, tombstoned rows included: the lookup side
     * for joins whose other side is already live-only ([[docsRaw]]),

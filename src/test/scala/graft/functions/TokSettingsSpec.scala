@@ -364,14 +364,4 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     assert(e2.tokSettings.dictionary == cfg.tokenizer.dictionary)
     assert(e2.searchDF("แมวกินปลา", 5).collect().map(_.getInt(0)).head == 0)
   }
-
-  test("parseFidLocale validates the persisted '<fid>:<locale>' shape (shared by engine loader and dump import)") {
-    assert(Tokenizer.TokSettings.parseFidLocale("3:zh") == (3 -> "zh"))
-    assert(Tokenizer.TokSettings.parseFidLocale("10:en-US") == (10 -> "en-US"))
-    Seq("zh", ":zh", "x:zh", "3zh", "").foreach { bad =>
-      val e = intercept[IllegalArgumentException](
-        Tokenizer.TokSettings.parseFidLocale(bad))
-      assert(e.getMessage.contains("localizedAttributes"), s"'$bad': $e")
-    }
-  }
 }

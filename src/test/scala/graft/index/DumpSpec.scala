@@ -149,15 +149,37 @@ class DumpSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     IndexBuild.build(spark, (0 until 4).map(i => src(i, s"word$i")).toDS(), dir,
       IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4, numPartitions = 2))
     Dump.exportDump(spark, dir, dumpDir)
-    // the settings row as an engine without the layout field wrote it
-    val part = new java.io.File(s"$dumpDir/settings").listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    Files.writeString(part.toPath,
-      Files.readString(part.toPath).replaceFirst("\"layout\":\\d+,", ""))
-    new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+    // an index's own manifest in place of the dump's: no dump keys
+    val manifest = new java.io.File(s"$dumpDir/manifest.json").toPath
+    Files.writeString(manifest,
+      Files.readString(manifest).replaceFirst("\"layout\":\\d+,", ""))
+    new java.io.File(s"$dumpDir/.manifest.json.crc").delete()
+    val dst = tempDir("dumpNoLayoutDst")
     val ex = intercept[IllegalArgumentException](Dump.importDump(spark, dumpDir,
-      tempDir("dumpNoLayoutDst"), IndexConfig(numPartitions = 2)))
+      dst, IndexConfig(numPartitions = 2)))
     assert(ex.getMessage.contains("re-export"), ex.getMessage)
+    assert(new java.io.File(dst).list().isEmpty, "a refused import writes nothing")
+  }
+
+  test("a dump with settings/ but no manifest.json is refused with re-export") {
+    val dir = tempDir("dumpOld")
+    val dumpDir = tempDir("dumpOldOut")
+    IndexBuild.build(spark, (0 until 4).map(i => src(i, s"word$i")).toDS(), dir,
+      IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4, numPartitions = 2))
+    Dump.exportDump(spark, dir, dumpDir)
+    // the layout of a dump written before the manifest: a settings/ JSON
+    // row beside documents/ and the signature
+    new java.io.File(s"$dumpDir/manifest.json").delete()
+    new java.io.File(s"$dumpDir/.manifest.json.crc").delete()
+    Files.createDirectories(java.nio.file.Paths.get(dumpDir, "settings"))
+    Files.writeString(java.nio.file.Paths.get(dumpDir, "settings", "part-00000.json"),
+      """{"layout":12,"docsPerShard":8,"termBuckets":2,"blockSize":4,"positions":false}""")
+    val dst = tempDir("dumpOldDst")
+    val ex = intercept[IllegalArgumentException](Dump.importDump(spark, dumpDir,
+      dst, IndexConfig(numPartitions = 2)))
+    assert(ex.getMessage.contains("re-export") && ex.getMessage.contains("manifest.json"),
+      ex.getMessage)
+    assert(new java.io.File(dst).list().isEmpty, "a refused import writes nothing")
   }
 
   test("multi-field indexes fail fast on export (format cannot carry fields)") {

@@ -57,7 +57,13 @@ class FormatSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       // the layout whose posting blocks had no doc-length stream: ranked
       // search would find no lens to score with
       "v11-stamp" -> (d => writeStamp(d,
-        s"layout=11 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")))) {
+        s"layout=11 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")),
+      // the layout whose settings lived in stats/base and the tokenizer/,
+      // stopwords/ and fields/ tables: it has no manifest
+      "v12-stamp" -> { d =>
+        writeStamp(d, s"layout=12 normalizer=${graft.functions.Tokenizer.NormalizerVersion}")
+        fs(d).delete(new Path(Manifest.path(d)), false)
+      })) {
     test(s"$variant index: every entry point refuses with a rebuild error, touching nothing") {
       val dir = tempDir(s"fmt-$variant")
       IndexBuild.build(spark, corpus.toDS(), dir, cfg)
@@ -86,7 +92,9 @@ class FormatSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     def rows(e: SearchEngine) =
       queries.map(q => e.searchDF(q, 20).as[(Int, Double)].collect().toSeq)
     val want = rows(new SearchEngine(spark, dir))
+    // as an index written before the format stamp and the manifest
     fs(dir).delete(Lineage.formatPath(dir), false)
+    fs(dir).delete(new Path(Manifest.path(dir)), false)
 
     val out = tempDir("fmt-compact-dst")
     IndexBuild.compact(spark, dir, out, cfg)

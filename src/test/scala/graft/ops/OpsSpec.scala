@@ -113,9 +113,9 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   test("persisted LSH index: multi-probe recall@10 >= 0.8 vs exact") {
     val dir = tempDir("lshidx")
     Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", dir, nPlanes = 4)
-    // the parameters are a key=value marker, read without a Spark job
-    assert(graft.index.Lineage.readProperties(spark, Similarity.paramsPath(dir)) ==
-      Some(Map("nPlanes" -> "4", "dim" -> "64", "seed" -> "42")))
+    // the parameters are a JSON marker, read without a Spark job
+    assert(graft.index.Lineage.readJson(spark, Similarity.paramsPath(dir)).map(_.toString) ==
+      Some("""{"dim":64,"nPlanes":4,"seed":42}"""))
     val got = Similarity.lshIndexTopK(spark, dir, 0L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(got.head._1 == 0L)
