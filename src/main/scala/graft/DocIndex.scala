@@ -3,11 +3,12 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.Tokenizer
 import graft.index.{IndexBuild, IndexConfig, Lineage, TermDict}
 import graft.search.SearchEngine
 
 /** Cached inverted index over a testdata `documents.parquet` table
-  * (built once per (format-version, sfDir) under /tmp; lineage-committed,
+  * (built once per (format stamp, sfDir) under /tmp; lineage-committed,
   * so repeated callers resume instead of rebuilding), and the one engine
   * cache: a bounded LRU keyed by (session, index dir) whose entry holds
   * the engine and the [[snapshot]] it was opened at. A lookup reuses the
@@ -22,22 +23,23 @@ object DocIndex {
 
   private val slots = TermDict.lru[(SparkSession, String), Slot](32)
 
-  /** /tmp home of the cached index `name` over `sfDir`, versioned by
-    * [[IndexBuild.FormatVersion]]: a format bump moves every cached
-    * index to a fresh directory instead of tripping the format stamp,
-    * and the lookup deletes the `graft-<name>-v<M>` siblings of every
-    * older version M, so superseded copies do not pile up. */
+  /** /tmp home of the cached index `name` over `sfDir`, tagged with both
+    * halves of the format stamp (Lineage.FormatStamp):
+    * `graft-<name>-v<FormatVersion>n<NormalizerVersion>`. A layout or
+    * normalizer bump moves every cached index to a fresh directory
+    * instead of tripping the stamp, and the lookup deletes the name's
+    * siblings under every other tag (including the untagged-normalizer
+    * `-v<M>` form), so superseded copies do not pile up. */
   def cacheDir(name: String, sfDir: String): String = {
-    val Superseded = s"graft-${java.util.regex.Pattern.quote(name)}-v(\\d{1,9})".r
+    val tag = s"v${IndexBuild.FormatVersion}n${Tokenizer.NormalizerVersion}"
+    val Sibling = s"graft-${java.util.regex.Pattern.quote(name)}-(v\\d{1,9}(?:n\\d{1,9})?)".r
     Option(new java.io.File(CacheRoot).listFiles()).toSeq.flatten.foreach { f =>
       f.getName match {
-        case Superseded(v) if v.toInt < IndexBuild.FormatVersion =>
-          org.apache.hadoop.fs.FileUtil.fullyDelete(f): Unit
+        case Sibling(t) if t != tag => org.apache.hadoop.fs.FileUtil.fullyDelete(f): Unit
         case _ =>
       }
     }
-    s"$CacheRoot/graft-$name-v${IndexBuild.FormatVersion}/" +
-      sfDir.replaceAll("[^a-zA-Z0-9.]+", "_")
+    s"$CacheRoot/graft-$name-$tag/" + sfDir.replaceAll("[^a-zA-Z0-9.]+", "_")
   }
 
   private final val CacheRoot = "/tmp"

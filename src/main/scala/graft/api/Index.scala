@@ -211,10 +211,8 @@ final class Index(val engine: SearchEngine,
       // `_matchesPosition` (reference show_matches_position: per-match
       // term + word position + char span over the stored field)
       if (r.showMatchesPosition)
-        extra += (graft.search.Highlighter.matchPositions(text, terms, prefixes,
-            engine.tokSettings) ++
-          phrases.flatMap(p =>
-            graft.search.Highlighter.phrasePositions(text, p, engine.tokSettings)))
+        extra += graft.search.Highlighter
+          .matches(text, terms, prefixes, phrases, engine.tokSettings)
           .sortBy(_.start)
           .map(m => s"${m.term}@${m.pos}[${m.start},${m.end})").mkString(";")
       Row.fromSeq(row.toSeq ++ extra.result())
@@ -289,10 +287,8 @@ final class Index(val engine: SearchEngine,
       if (r.showMatchesPosition)
         extra += retrieved.flatMap { f =>
           val text = fields.getOrElse(f, "")
-          val ms = (H.matchPositions(text, mm.terms, mm.prefixes,
-              engine.tokSettings) ++
-            mm.phrases.flatMap(p => H.phrasePositions(text, p, engine.tokSettings)))
-            .sortBy(_.start)
+          val ms = H.matches(text, mm.terms, mm.prefixes, mm.phrases,
+            engine.tokSettings).sortBy(_.start)
           if (ms.isEmpty) None
           else Some(f -> ms.map(m =>
             s"${m.term}@${m.pos}[${m.start},${m.end})").mkString(";"))

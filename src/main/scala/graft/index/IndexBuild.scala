@@ -120,9 +120,9 @@ object IndexBuild {
 
   /** Pseudo-term carrying the per-document token count (`len`, the BM25
     * norm) through the SAME tokenize pass / shuffle that builds the
-    * postings or positions — the index build tokenizes each document
-    * exactly ONCE (a second countTokens pass over 10^12 files would
-    * double the build's dominant CPU+bandwidth cost). The NUL
+    * postings or positions — the index build scans each document
+    * exactly ONCE (a second scan just to count tokens over 10^12 files
+    * would double the build's dominant CPU+bandwidth cost). The NUL
     * prefix cannot be produced by the tokenizer, so it can never
     * collide with a real term or appear in a query. */
   final val LenTerm = "\u0000len"
@@ -667,7 +667,7 @@ object IndexBuild {
   final val PositionsSchemaDdl =
     "term STRING, docId INT, positions ARRAY<INT>, len INT, bucket INT"
 
-  /** One document's token rows from ONE tokenize call per field: a row
+  /** One document's token rows from ONE tokenizer scan per field: a row
     * per distinct non-stop term (tf summed across fields), then the
     * [[LenTerm]] sentinel whose tf is the FULL token count including
     * stop words (the BM25 `len` norm). Every row carries that count as
@@ -686,14 +686,13 @@ object IndexBuild {
     fields.iterator.zipWithIndex.foreach { case (f, fid) =>
       // per-field locale hints resolve the CJK unigram mode for THIS
       // fid (Tokenizer.TokSettings.forFid; no-op without localesByFid)
-      val toks = Tokenizer.tokenize(f, tok.forFid(fid))
-      total += toks.length
-      toks.foreach { t =>
-        if (stop.isEmpty || !stop.contains(t.term)) {
+      Tokenizer.scan(f, tok.forFid(fid)) { (term, p, _, _) =>
+        total += 1
+        if (stop.isEmpty || !stop.contains(term)) {
           if (positions)
-            pos.getOrElseUpdate(t.term, new ArrayBuffer[Int]) +=
-              ((fid << 16) | math.min(t.pos, 0xffff))
-          else tfs.update(t.term, tfs.getOrElse(t.term, 0) + 1)
+            pos.getOrElseUpdate(term, new ArrayBuffer[Int]) +=
+              ((fid << 16) | math.min(p, 0xffff))
+          else tfs.update(term, tfs.getOrElse(term, 0) + 1)
         }
       }
     }

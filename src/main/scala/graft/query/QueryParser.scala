@@ -28,10 +28,11 @@ final case class ParsedQuery(posTokens: Seq[PosToken],
 final case class PosToken(terms: Seq[String], phrase: Boolean)
 
 object QueryParser {
-  /** Scan for quote/minus syntax; each segment is tokenized with the
-    * engine tokenizer, so `-parseBuffer` negates both subtokens and
-    * `"readBuffer flush"` is the 3-term phrase read|buffer|flush. An
-    * unterminated quote runs to the end of the string (reference
+  /** Scan for quote/minus syntax by code point; each segment is
+    * tokenized with the engine tokenizer, so `-parseBuffer` negates
+    * both subtokens and `"readBuffer flush"` is the 3-term phrase
+    * read|buffer|flush. An unterminated quote runs to the end of the
+    * string (reference
     * behavior). A single-word quoted segment is an exact bag word —
     * kept as a 1-term phrase here so it still bypasses typo expansion.
     * `tok` = the INDEX's tokenizer settings (SearchEngine.parseQuery
@@ -45,9 +46,9 @@ object QueryParser {
     val n = q.length
     var neg = false
     while (i < n) {
-      val c = q.charAt(i)
+      val c = q.codePointAt(i)
       if (c == '-' && !Tokenizer.isWordChar('-', tok) &&
-          (i == 0 || !Tokenizer.isWordChar(q.charAt(i - 1), tok))) {
+          (i == 0 || !Tokenizer.isWordChar(q.codePointBefore(i), tok))) {
         neg = true; i += 1
       } else if (c == '"') {
         val end0 = q.indexOf('"', i + 1)
@@ -58,7 +59,8 @@ object QueryParser {
         i = end + 1
       } else if (Tokenizer.isWordChar(c, tok)) {
         val start = i
-        while (i < n && Tokenizer.isWordChar(q.charAt(i), tok)) i += 1
+        while (i < n && Tokenizer.isWordChar(q.codePointAt(i), tok))
+          i += Character.charCount(q.codePointAt(i))
         val ts = Tokenizer.terms(q.substring(start, i), tok)
         if (ts.nonEmpty) {
           if (neg) negWords ++= ts else pos += PosToken(ts, phrase = false)
@@ -66,7 +68,7 @@ object QueryParser {
         neg = false
       } else {
         neg = false
-        i += 1
+        i += Character.charCount(c)
       }
     }
     ParsedQuery(pos.result(), negWords.result(), negPhrases.result())

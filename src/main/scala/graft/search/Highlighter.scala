@@ -13,34 +13,33 @@ object Highlighter {
 
   final case class MatchPosition(term: String, pos: Int, start: Int, end: Int)
 
-  /** Char spans of query-term matches in `text` (prefix flag matches the
-    * last-word-as-prefix search mode). */
-  def matchPositions(text: String, terms: Set[String],
-                     prefixTerms: Set[String] = Set.empty,
-                     tok: Tokenizer.TokSettings = Tokenizer.TokSettings.Default)
-      : Seq[MatchPosition] =
-    Tokenizer.tokenizeWithOffsets(text, tok).collect {
+  /** Char spans of the query's matches in `text`, from ONE tokenize
+    * pass: first every token equal to a term or starting with a prefix
+    * term (the last-word-as-prefix search mode), then, phrase by
+    * phrase, each site where the phrase occurs as CONSECUTIVE tokens
+    * (positions strictly +1 — the reference matcher highlights a quoted
+    * phrase only where it actually matches as a phrase,
+    * matches/mod.rs MatchingWords phrase arm; a lone member word
+    * elsewhere is NOT a match), one span per occurrence, first-token
+    * start to last-token end. */
+  def matches(text: String, terms: Set[String],
+              prefixTerms: Set[String] = Set.empty,
+              phrases: Seq[Seq[String]] = Nil,
+              tok: Tokenizer.TokSettings = Tokenizer.TokSettings.Default)
+      : Seq[MatchPosition] = {
+    val toks = Tokenizer.tokenize(text, tok)
+    val words = toks.collect {
       case t if terms.contains(t.term) ||
         prefixTerms.exists(p => t.term.startsWith(p)) =>
         MatchPosition(t.term, t.pos, t.start, t.end)
     }
-
-  /** Char spans where `phrase` occurs as CONSECUTIVE tokens (positions
-    * strictly +1 — the reference matcher highlights a quoted phrase
-    * only where it actually matches as a phrase, matches/mod.rs
-    * MatchingWords phrase arm; a lone member word elsewhere is NOT a
-    * match). One span per occurrence, first-token start to last-token
-    * end. */
-  def phrasePositions(text: String, phrase: Seq[String],
-                      tok: Tokenizer.TokSettings = Tokenizer.TokSettings.Default)
-      : Seq[MatchPosition] = {
-    if (phrase.isEmpty) return Nil
-    val toks = Tokenizer.tokenizeWithOffsets(text, tok)
-    (0 to toks.size - phrase.size).collect {
-      case i if phrase.indices.forall(j =>
-        toks(i + j).term == phrase(j) && toks(i + j).pos == toks(i).pos + j) =>
-        MatchPosition(phrase.mkString(" "), toks(i).pos,
-          toks(i).start, toks(i + phrase.size - 1).end)
+    words ++ phrases.filter(_.nonEmpty).flatMap { phrase =>
+      (0 to toks.size - phrase.size).collect {
+        case i if phrase.indices.forall(j =>
+          toks(i + j).term == phrase(j) && toks(i + j).pos == toks(i).pos + j) =>
+          MatchPosition(phrase.mkString(" "), toks(i).pos,
+            toks(i).start, toks(i + phrase.size - 1).end)
+      }
     }
   }
 
@@ -51,8 +50,7 @@ object Highlighter {
                 prefixTerms: Set[String] = Set.empty,
                 phrases: Seq[Seq[String]] = Nil,
                 tok: Tokenizer.TokSettings = Tokenizer.TokSettings.Default): String = {
-    val ms = matchPositions(text, terms, prefixTerms, tok) ++
-      phrases.flatMap(p => phrasePositions(text, p, tok))
+    val ms = matches(text, terms, prefixTerms, phrases, tok)
     if (ms.isEmpty) return text
     val sb = new java.lang.StringBuilder(text.length + ms.size * (pre.length + post.length))
     var cur = 0
@@ -74,7 +72,7 @@ object Highlighter {
   def crop(text: String, terms: Set[String], cropLength: Int = 10,
            marker: String = "…",
            tok: Tokenizer.TokSettings = Tokenizer.TokSettings.Default): String = {
-    val toks = Tokenizer.tokenizeWithOffsets(text, tok)
+    val toks = Tokenizer.tokenize(text, tok)
     if (toks.isEmpty) return text
     val matched = toks.indices.filter(i => terms.contains(toks(i).term))
     if (matched.isEmpty)

@@ -152,9 +152,10 @@ class IndexApiSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       s"lone word must stay bare: ${byId(1)}")
     // a hard separator breaks adjacency: no phrase match across it
     import graft.search.Highlighter
-    assert(Highlighter.phrasePositions("spark. merge", Seq("spark", "merge")).isEmpty)
-    assert(Highlighter.phrasePositions("big spark merge day", Seq("spark", "merge"))
-      .map(m => (m.start, m.end)) == Seq((4, 15)))
+    assert(Highlighter.matches("spark. merge", Set.empty,
+      phrases = Seq(Seq("spark", "merge"))).isEmpty)
+    assert(Highlighter.matches("big spark merge day", Set.empty,
+      phrases = Seq(Seq("spark", "merge"))).map(m => (m.start, m.end)) == Seq((4, 15)))
     // crop must still center on the phrase site for a pure-phrase query
     // (regression: phrase words were dropped from the crop term set)
     val cropped = fmtMap(idx.search(SearchRequest(q = "\"spark merge\"",

@@ -36,7 +36,7 @@ class TokenizerSpec extends AnyFunSuite {
     assert(toks.map(_.term) == Seq("我", "爱", "北", "京", "天", "安", "门"))
     assert(toks.map(_.pos) == (0 to 6))
     // offsets index the original text (highlighting)
-    val off = Tokenizer.tokenizeWithOffsets("spark 北京 merge")
+    val off = Tokenizer.tokenize("spark 北京 merge")
     assert(off.map(_.term) == Seq("spark", "北", "京", "merge"))
     assert(off.map(t => (t.start, t.end)) == Seq((0, 5), (6, 7), (7, 8), (9, 14)))
   }
@@ -44,6 +44,27 @@ class TokenizerSpec extends AnyFunSuite {
   test("normalize lowercases and strips diacritics") {
     assert(Tokenizer.normalize("Café") == "cafe")
     assert(Tokenizer.normalize("ÜBER") == "uber")
+  }
+
+  test("normalize lowercases compatibility capitals after NFKD") {
+    // ℌ (letterlike symbol) and ᴴ (modifier capital) have no lowercase
+    // mapping of their own; NFKD turns them into an uppercase H
+    assert(Tokenizer.normalize("ℌello") == "hello")
+    assert(Tokenizer.normalize("ᴴi") == "hi")
+    assert(Tokenizer.terms("ℌello ᴴi") == Seq("hello", "hi"))
+  }
+
+  test("supplementary-plane letters are word chars on the index and query side") {
+    val extB = new String(Character.toChars(0x20000)) // 𠀀, CJK Ext-B
+    val han = Tokenizer.tokenize(s"${extB}水 abc")
+    assert(han.map(_.term) == Seq(extB, "水", "abc"))
+    assert(han.map(t => (t.start, t.end)) == Seq((0, 2), (2, 3), (4, 7)))
+    val gothic = Tokenizer.tokenize("𐌰𐌱 foo")
+    assert(gothic.map(_.term) == Seq("𐌰𐌱", "foo"))
+    assert(gothic.map(t => (t.pos, t.start, t.end)) == Seq((0, 0, 4), (1, 5, 8)))
+    assert(Tokenizer.terms("𠮷 𐌰x") == Seq("𠮷", "𐌰x"))
+    assert(graft.query.QueryParser.parse(s"${extB}水 abc").words == Seq(extB, "水", "abc"))
+    assert(graft.query.QueryParser.parse("𐌰𐌱 foo").words == Seq("𐌰𐌱", "foo"))
   }
 
   test("positions: +1 per token, +8 across hard separators") {

@@ -36,7 +36,7 @@ class SearchFeaturesSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   }
 
   test("match positions report term, word position and char offsets") {
-    val ms = Highlighter.matchPositions("foo barBaz foo", Set("foo", "baz"))
+    val ms = Highlighter.matches("foo barBaz foo", Set("foo", "baz"))
     assert(ms.map(m => (m.term, m.pos)) == Seq(("foo", 0), ("baz", 2), ("foo", 3)))
     assert(ms.head.start == 0 && ms.head.end == 3)
   }
