@@ -238,8 +238,11 @@ object SparkEntry {
     "q_tokens" -> ((s, dir) =>
       TextMetrics.tokenEstimate(docsDf(s, dir), "doc_id", "text").orderBy(col("id"))),
     // ---- similarity search ---------------------------------------------
-    "q_knn" -> ((s, dir) =>
-      Similarity.cosineTopK(embDf(s, dir), "vec_id", "embedding", 0L, 10)),
+    "q_knn" -> ((s, dir) => {
+      val emb = embDf(s, dir)
+      Similarity.cosineTopK(emb, "vec_id", "embedding",
+        Similarity.queryVector(emb, "vec_id", "embedding", 0L), 10)
+    }),
     // embedding-cosine near-dup pairs: exact all-pairs baseline (oracle
     // setting; the scale path is cosineNearDupPairsLsh, recall-spec'd)
     "q_neardup" -> ((s, dir) =>
@@ -249,8 +252,11 @@ object SparkEntry {
     // index; fully oracle-checked — the DuckDB SQL recomputes the
     // fixed-point bucket assignment from the same plane literals,
     // mirrors the Hamming<=2 probe set, and re-ranks exactly
-    "q_knn_lsh" -> ((s, dir) =>
-      Similarity.lshIndexTopK(s, lshIndexDir(s, dir), 0L, 10)),
+    "q_knn_lsh" -> ((s, dir) => {
+      val lsh = lshIndexDir(s, dir)
+      Similarity.lshIndexTopK(s, lsh,
+        Similarity.queryVector(embDf(s, dir), "vec_id", "embedding", 0L, Some(lsh)), 10)
+    }),
     // similar-documents facade (reference GET /indexes/{uid}/similar,
     // similar.rs): cosine neighbours of doc 3, excluding itself,
     // restricted to the filter universe (the target itself is zh — the
@@ -342,10 +348,10 @@ object SparkEntry {
       // explicit full pool: the oracle checks BOTH arms' auxiliary
       // scores for every returned doc, which needs both full orderings;
       // production callers take the default pool = k (Hybrid.search)
-      graft.search.Hybrid.search(mr, embDf(s, dir), "vec_id", "embedding",
-        "spark merge", queryVecId = 0L, ratio = 0.5, k = 20,
-        candidatePool = 1000000,
-        semanticIndexDir = Some(lshIndexDir(s, dir)))
+      val (emb, lsh) = (embDf(s, dir), lshIndexDir(s, dir))
+      graft.search.Hybrid.search(mr, emb, "vec_id", "embedding", "spark merge",
+        Similarity.queryVector(emb, "vec_id", "embedding", 0L, Some(lsh)),
+        ratio = 0.5, k = 20, candidatePool = 1000000, semanticIndexDir = Some(lsh))
         .select(col("docId").cast("long").as("doc_id"),
           col("hybridScore").as("hybrid_score"),
           col("kwScore").as("kw_score"), col("semScore").as("sem_score"))
@@ -355,7 +361,7 @@ object SparkEntry {
     // that is NOT a corpus row — no query-row lookup anywhere
     "q_hybrid_vec" -> ((s, dir) => {
       val mr = new graft.rank.MeiliRank(DocIndex.engine(s, dir))
-      graft.search.Hybrid.searchVec(mr, embDf(s, dir), "vec_id", "embedding",
+      graft.search.Hybrid.search(mr, embDf(s, dir), "vec_id", "embedding",
         "spark merge", ExtQueryVec, ratio = 0.5, k = 20,
         candidatePool = 1000000,
         semanticIndexDir = Some(lshIndexDir(s, dir)))

@@ -413,11 +413,12 @@ final class Index(val engine: SearchEngine,
     * (similar.rs:97-106).
     *
     * `emb` rows must be keyed by the same ids as the doc store (the
-    * Hybrid contract). Cost routing mirrors [[graft.search.Hybrid]]:
-    * below the exact cap the brute-force cosine runs over the
-    * (filtered) table; above it the persisted LSH index is probed with
-    * the target's vector — the filter becomes a broadcast semi-join
-    * applied BEFORE the top-k, so a filtered request still fills k. */
+    * Hybrid contract). The target's vector comes from
+    * `Similarity.queryVector` and is ranked by Hybrid's one semantic
+    * router ([[graft.search.Hybrid.semanticTopK]]): exact below the cap,
+    * the persisted LSH index above it; the filter becomes a broadcast
+    * semi-join applied BEFORE the top-k, so a filtered request still
+    * fills k. */
   def similar(emb: DataFrame, idCol: String, vecCol: String, id: Long,
               limit: Int = 20, offset: Int = 0,
               filter: Option[String] = None,
@@ -425,30 +426,13 @@ final class Index(val engine: SearchEngine,
               rankingScoreThreshold: Option[Double] = None,
               semanticExactMaxRows: Long =
                 graft.search.Hybrid.SemanticExactMaxRows): DataFrame = {
-    import graft.ops.Similarity
     // the target's vector (the one per-request id lookup; the reference
     // fetches the target's embeddings the same way, similar.rs:67-90)
-    val qRow = emb.where(col(idCol) === id)
-      .select(col(vecCol).cast("array<float>")).collect()
-    require(qRow.nonEmpty, s"unknown document id $id in the embedding table")
-    val qvec = qRow(0).getSeq[Float](0).toArray
+    val qvec = graft.ops.Similarity.queryVector(emb, idCol, vecCol, id, semanticIndexDir)
     val universe = filter.map(f => engine.filteredDocs(f).select(col("docId")))
     val pool = offset + limit + 1 // +1: the target may occupy one slot
-    def estRows: BigInt =
-      emb.queryExecution.optimizedPlan.stats.sizeInBytes / 512
-    val useLsh = semanticIndexDir.isDefined &&
-      (semanticExactMaxRows <= 0 || estRows > semanticExactMaxRows)
-    val ranked =
-      if (useLsh)
-        Similarity.lshIndexTopK(engine.spark, semanticIndexDir.get,
-            qvec, pool, 2, universe)
-          .select(col("vec_id").cast("int").as("docId"), col("score"))
-      else {
-        val filtered = universe.fold(emb)(u =>
-          emb.join(broadcast(u), emb(idCol) === u("docId"), "left_semi"))
-        Similarity.cosineTopK(filtered, idCol, vecCol, qvec, pool)
-          .select(col(idCol).cast("int").as("docId"), col("score"))
-      }
+    val ranked = graft.search.Hybrid.semanticTopK(emb, idCol, vecCol, qvec, pool,
+      semanticIndexDir, semanticExactMaxRows, universe)
     val scored = ranked.where(col("docId") =!= id)
       .transform(df => rankingScoreThreshold.fold(df)(t =>
         df.where(col("score") >= t)))

@@ -5,95 +5,107 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Determinism contract: dot products and norms are computed in
-  * *fixed-point* — each elementwise product is rounded to 1e-9 units and
-  * summed as BIGINT, so the result is independent of summation order
-  * (integer addition is associative) and identical across Spark,
-  * DuckDB, partitionings, and parallelism levels. The final cosine is a
-  * single correctly-rounded double divide + sqrt of exact integers.
+  * One kernel: every dot product, norm (`v·v`) and hyperplane dot is
+  * Σ floor(x·y·1e9 + 0.5) summed as BIGINT — [[dotFx]] in a plan, [[fx]]
+  * on the driver — so the result is independent of summation order
+  * (integer addition is associative) and identical across Spark, DuckDB,
+  * partitionings and parallelism levels. The cosine is one
+  * correctly-rounded divide + sqrt of exact integers, rounded to 6
+  * digits ([[withCosine]]).
+  *
+  * Zero-norm rule: a zero vector has no cosine. Corpus rows with norm 0
+  * are dropped before the divide (which ANSI mode would fail), and a
+  * zero query vector is refused.
+  *
+  * One query shape: every top-k takes a query vector; a corpus id
+  * becomes one through [[queryVector]].
   */
 object Similarity {
 
-  /** v1·v2 in 1e-9 fixed point, as a codegen'd Column expression. */
-  private def dotFx(a: String, b: String) = expr(
-    s"""aggregate(zip_with($a, $b, (x, y) ->
-       |  cast(floor(cast(x as double) * cast(y as double) * 1e9 + 0.5d) as bigint)),
-       |  0L, (acc, v) -> acc + v)""".stripMargin)
+  /** x·y in 1e-9 fixed-point units: the one driver element product. */
+  private def fx(x: Double, y: Double): Long = math.floor(x * y * 1e9 + 0.5).toLong
 
-  private def normFx(a: String) = expr(
-    s"""aggregate(transform($a, x ->
-       |  cast(floor(cast(x as double) * cast(x as double) * 1e9 + 0.5d) as bigint)),
-       |  0L, (acc, v) -> acc + v)""".stripMargin)
-
-  /** Brute-force cosine top-k against the embedding of `queryId`.
-    * One narrow pass over the table + TakeOrderedAndProject: the
-    * correctness baseline. The query vector is a 1-row broadcast
-    * (cross join of a broadcast single row — no shuffle). */
-  def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
-                 queryId: Long, k: Int): DataFrame = {
-    val q = emb.where(col(idCol) === queryId)
-      .select(col(vecCol).as("qvec"), normFx(vecCol).as("qn"))
-    emb.crossJoin(broadcast(q))
-      .withColumn("dot", dotFx(vecCol, "qvec"))
-      .withColumn("nn", normFx(vecCol))
-      .withColumn("score",
-        round(col("dot") / sqrt(col("nn").cast("double") * col("qn").cast("double")), 6))
-      .select(col(idCol), col("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** [[cosineTopK]] for an EXTERNAL query vector (reference
-    * SearchQuery.vector, meilisearch/src/search/mod.rs:64-67: hybrid /
-    * semantic callers supply a fresh query embedding that is not a
-    * corpus row). The vector becomes a literal array column — no query-
-    * row lookup scan at all. Same fixed-point contract, same scores. */
-  def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
-                 queryVec: Array[Float], k: Int): DataFrame = {
-    val qn = normFxLocal(queryVec)
-    emb.withColumn("qvec", array(queryVec.map(v => lit(v)): _*))
-      .withColumn("dot", dotFx(vecCol, "qvec"))
-      .withColumn("nn", normFx(vecCol))
-      .withColumn("score",
-        round(col("dot") / sqrt(col("nn").cast("double") * lit(qn.toDouble)), 6))
-      .select(col(idCol), col("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Driver-side fixed-point dot / norm — the same
-    * floor(x·y·1e9 + 0.5)-per-element, BIGINT-sum contract as the
-    * Column forms, so a driver-computed bucket or norm is bit-identical
-    * to an executor- or DuckDB-computed one. */
-  private def dotFxLocal(v: Array[Float], w: Array[Double]): Long = {
+  /** Driver-side v·v, bit-identical to `dotFx(v, v)` in a plan. */
+  private def norm(v: Array[Float]): Long = {
     var s = 0L; var i = 0
-    while (i < v.length) {
-      s += math.floor(v(i).toDouble * w(i) * 1e9 + 0.5).toLong; i += 1
-    }
+    while (i < v.length) { s += fx(v(i), v(i)); i += 1 }
     s
   }
 
-  private def normFxLocal(v: Array[Float]): Long = {
-    var s = 0L; var i = 0
-    while (i < v.length) {
-      s += math.floor(v(i).toDouble * v(i).toDouble * 1e9 + 0.5).toLong; i += 1
-    }
-    s
+  /** a·b in 1e-9 fixed point: the one plan-side kernel. */
+  private def dotFx(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) =>
+        floor(x.cast("double") * y.cast("double") * 1e9 + 0.5).cast("long")),
+      lit(0L), (acc, v) => acc + v)
+
+  /** `df` plus `name` = round(dot / sqrt(na · nb), 6); rows where either
+    * norm is 0 are dropped first (the zero-norm rule). */
+  private def withCosine(df: DataFrame, name: String, dot: Column,
+                         na: Column, nb: Column): DataFrame =
+    df.where(na > 0L && nb > 0L)
+      .withColumn(name, round(dot / sqrt(na.cast("double") * nb.cast("double")), 6))
+
+  /** `df` restricted to the ids of `universe`'s first column (a filter's
+    * matches) by a broadcast semi-join, applied before the top-k so a
+    * filtered request still fills k. */
+  private def within(df: DataFrame, idCol: String,
+                     universe: Option[DataFrame]): DataFrame =
+    universe.fold(df)(u =>
+      df.join(broadcast(u), df(idCol) === u(u.columns.head), "left_semi"))
+
+  /** Top-k rows of `df` by cosine against `qvec` (ties by id): (id,
+    * score). A row whose vector length differs from the query's fails
+    * the query in the plan (raise_error, no extra job) instead of
+    * scoring null. */
+  private def topK(df: DataFrame, id: String, vec: Column, nn: Column,
+                   qvec: Array[Float], k: Int): DataFrame = {
+    val qn = norm(qvec)
+    require(qn > 0L, "a zero query vector has no cosine")
+    val dot = when(size(vec) =!= qvec.length, raise_error(concat(
+        lit(s"query vector dim ${qvec.length} != embedding dim "),
+        size(vec).cast("string"))))
+      .otherwise(dotFx(vec, array(qvec.map(v => lit(v)): _*)))
+    withCosine(df.withColumn("dot", dot), "score", col("dot"), nn, lit(qn))
+      .select(col(id), col("score"))
+      .orderBy(col("score").desc, col(id).asc)
+      .limit(k)
   }
+
+  /** The embedding of corpus row `id`: the one way a corpus id becomes a
+    * query vector. With an LSH index it is read from the index's
+    * id-sorted byid/ table (only `id` and `vec`, row groups pruned by
+    * id min/max), otherwise from `emb`. One collect job. */
+  def queryVector(emb: DataFrame, idCol: String, vecCol: String, id: Long,
+                  lshDir: Option[String] = None): Array[Float] = {
+    val rows = lshDir.fold(
+      emb.where(col(idCol) === id).select(col(vecCol).cast("array<float>"))) { d =>
+      graft.index.Lineage.requireFormat(emb.sparkSession, d)
+      emb.sparkSession.read.schema("id BIGINT, vec ARRAY<FLOAT>")
+        .parquet(s"$d/byid").where(col("id") === id).select(col("vec"))
+    }.collect()
+    require(rows.nonEmpty, s"unknown document id $id")
+    rows(0).getSeq[Float](0).toArray
+  }
+
+  /** Brute-force cosine top-k of `queryVec` over `emb` (optionally
+    * within `universe`): one narrow pass + TakeOrderedAndProject, the
+    * correctness baseline. The query vector is a literal array column
+    * (reference SearchQuery.vector, meilisearch/src/search/mod.rs:64-67). */
+  def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
+                 queryVec: Array[Float], k: Int,
+                 universe: Option[DataFrame] = None): DataFrame =
+    topK(within(emb, idCol, universe).withColumn("nn", dotFx(col(vecCol), col(vecCol))),
+      idCol, col(vecCol), col("nn"), queryVec, k)
 
   /** LSH bucket of a concrete vector under the index's plane family —
     * pure driver-side arithmetic over the plane literals; no data scan
-    * (the planes are algorithm parameters, not data). */
-  def bucketOfVector(v: Array[Float], nPlanes: Int, seed: Long): Long = {
-    var b = 0L
-    var p = 0
-    while (p < nPlanes) {
-      val pl = Array.tabulate(v.length)(d => planeWeight(seed, p, d))
-      if (dotFxLocal(v, pl) >= 0L) b |= (1L << p)
-      p += 1
+    * (the planes are algorithm parameters, not data). The driver form of
+    * [[bucketCol]]. */
+  def bucketOfVector(v: Array[Float], nPlanes: Int, seed: Long): Long =
+    (0 until nPlanes).foldLeft(0L) { (b, p) =>
+      val dot = v.indices.foldLeft(0L)((s, d) => s + fx(v(d), planeWeight(seed, p, d)))
+      if (dot >= 0L) b | (1L << p) else b
     }
-    b
-  }
 
   /** Plane weight (p, d) of the deterministic pseudo-random hyperplane
     * family (splitmix64-seeded, in [-1, 1]) — exposed so the DuckDB
@@ -103,27 +115,27 @@ object Similarity {
     graft.corpus.CorpusGen.mix(seed ^ (p.toLong << 32) ^ d.toLong)
       .toDouble / Long.MaxValue
 
-  /** Deterministic pseudo-random hyperplanes (splitmix64-seeded) and
-    * the bucket expression: bucket bit i = sign of the dot with plane i
-    * (random-hyperplane LSH, Charikar '02). Plane dots follow the
-    * file-wide fixed-point contract (1e-9 units summed as BIGINT), so a
-    * bucket assignment is bit-identical across partitionings AND across
-    * engines — the DuckDB oracle recomputes it from the same plane
-    * literals. */
-  private def bucketExpr(vecCol: String, nPlanes: Int, dim: Int, seed: Long)
-      : (Column, Column) = {
-    val planes: Array[Array[Double]] = Array.tabulate(nPlanes) { p =>
-      Array.tabulate(dim)(d => planeWeight(seed, p, d))
-    }
-    val planesCol = array(planes.map(pl => array(pl.map(v => lit(v)): _*)): _*)
-    val b = expr(
-      s"""aggregate(zip_with(planes_idx, planes_arr, (i, pl) ->
-         |  if(aggregate(zip_with($vecCol, pl, (x, w) ->
-         |       cast(floor(cast(x as double) * w * 1e9 + 0.5d) as bigint)),
-         |     0L, (a, v) -> a + v) >= 0L, shiftleft(1L, i), 0L)),
-         |  0L, (a, v) -> a + v)""".stripMargin)
-    (planesCol, b)
-  }
+  /** The one hyperplane-LSH bucket Column (random-hyperplane LSH,
+    * Charikar '02): bit p = sign of the [[dotFx]] with plane p, so a
+    * bucket is bit-identical across partitionings AND across engines —
+    * the DuckDB oracle recomputes it from the same plane literals.
+    * Self-contained (planes inlined as literals, no helper columns), so
+    * independent bands can coexist in one projection. */
+  private def bucketCol(vec: Column, nPlanes: Int, dim: Int, seed: Long): Column =
+    (0 until nPlanes).map { p =>
+      val plane = array((0 until dim).map(d => lit(planeWeight(seed, p, d))): _*)
+      when(dotFx(vec, plane) >= 0L, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
+  private def requirePlanes(nPlanes: Int): Unit =
+    require(nPlanes >= 1 && nPlanes <= 64,
+      s"nPlanes $nPlanes outside 1..64 (a bucket is one BIGINT)")
+
+  /** `dim` if set, else the first row's vector length (one 1-row job).
+    * It MUST match the embedding length: zip_with against a shorter/
+    * longer plane yields null dots, which put every vector in bucket 0. */
+  private def dimOf(emb: DataFrame, vecCol: String, dim: Int): Int =
+    if (dim > 0) dim else emb.select(size(col(vecCol))).head().getInt(0)
 
   /** Build-time PERSISTED LSH index (the 100-TB ANN path): one pass over
     * the embedding table writes (id, vec, nn, bucket) partitioned by
@@ -134,25 +146,18 @@ object Similarity {
   def buildLshIndex(spark: SparkSession, emb: DataFrame, idCol: String,
                     vecCol: String, dir: String,
                     nPlanes: Int = 4, dim: Int = 0, seed: Long = 42L): Unit = {
+    requirePlanes(nPlanes)
     // a killed rebuild in place must not leave the old marker behind
     val params = new org.apache.hadoop.fs.Path(paramsPath(dir))
     params.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(params, false)
-    // dim=0: infer from the data (see cosineNearDupPairsLsh — a plane/
-    // vector length mismatch nulls every plane dot and collapses all
-    // buckets to 0)
-    val d = if (dim > 0) dim
-            else emb.select(size(col(vecCol))).head().getInt(0)
-    val (planesCol, bucketCol) = bucketExpr(vecCol, nPlanes, d, seed)
-    emb.withColumn("planes_arr", planesCol)
-      .withColumn("planes_idx", expr(s"sequence(0, ${nPlanes - 1})"))
-      .withColumn("bucket", bucketCol)
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"),
-        normFx(vecCol).as("nn"), col("bucket"))
+    val d = dimOf(emb, vecCol, dim)
+    val v = col(vecCol)
+    emb.select(col(idCol).cast("long").as("id"), v.as("vec"), dotFx(v, v).as("nn"),
+        bucketCol(v, nPlanes, d, seed).as("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/rows")
-    // byid/: (id, bucket, vec, nn) range-sorted by id — the corpus-id
-    // query path resolves the WHOLE query row (bucket + vector + norm)
-    // through parquet row-group min/max pruning in ONE pruned scan; no
-    // lookup ever scans the index
+    // byid/: (id, bucket, vec, nn) range-sorted by id — [[queryVector]]
+    // resolves a corpus id through parquet row-group min/max pruning in
+    // ONE pruned scan; no lookup ever scans the index
     spark.read.parquet(s"$dir/rows")
       .select(col("id"), col("bucket"), col("vec").cast("array<float>"), col("nn"))
       .repartitionByRange(math.max(1, spark.sparkContext.defaultParallelism / 4),
@@ -167,9 +172,6 @@ object Similarity {
   /** The (nPlanes, dim, seed) marker of a persisted LSH index. */
   def paramsPath(dir: String): String = s"$dir/lsh_params"
 
-  /** byid/ schema (partition discovery of rows/ typed `bucket` INT). */
-  private final val ByidSchemaDdl = "id BIGINT, bucket INT, vec ARRAY<FLOAT>, nn BIGINT"
-
   /** (nPlanes, dim, seed) from [[paramsPath]] after the format check:
     * file reads on every call, no Spark job, nothing cached. */
   private def lshMeta(spark: SparkSession, dir: String): (Int, Int, Long) = {
@@ -178,22 +180,6 @@ object Similarity {
       throw new IllegalArgumentException(
         s"LSH index at $dir has no lsh_params: rebuild it with buildLshIndex"))
     (m.get("nPlanes").asInt, m.get("dim").asInt, m.get("seed").asLong)
-  }
-
-  /** One hyperplane-LSH bucket as a self-contained Column (planes
-    * inlined as literals — no helper columns, so independent bands can
-    * coexist in one projection). */
-  private def bucketColInline(vecCol: String, nPlanes: Int, dim: Int,
-                              seed: Long): Column = {
-    (0 until nPlanes).map { p =>
-      val pl = Array.tabulate(dim)(d => planeWeight(seed, p, d))
-      val arr = pl.map(v => s"${v}d").mkString(",")
-      val dot = expr(
-        s"""aggregate(zip_with($vecCol, array($arr), (x, w) ->
-           |  cast(floor(cast(x as double) * w * 1e9 + 0.5d) as bigint)),
-           |  0L, (a, v) -> a + v)""".stripMargin)
-      when(dot >= 0L, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
   }
 
   /** Hard cap for the exact all-pairs baseline: 200k vectors × 64 dims
@@ -214,8 +200,8 @@ object Similarity {
     * fixed-point loop — a sanctioned mapPartitions hot spot: the
     * declarative `zip_with` form allocates a 64-element array per PAIR
     * (measured 22.7 s for 2M pairs at sf0.1; this loop is ~20×
-    * faster, bit-identical math: floor(x·y·1e9 + 0.5) per element,
-    * HALF_UP 6-digit round — exactly the Spark/DuckDB expression). */
+    * faster, bit-identical math: [[fx]] per element, HALF_UP 6-digit
+    * round — exactly the Spark/DuckDB expression). */
   def cosineNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                          minCos: Double): DataFrame = {
     val spark = emb.sparkSession
@@ -233,13 +219,7 @@ object Similarity {
     // the declarative a<b cross join silently excluded them
     side.indices.drop(1).foreach(i => require(side(i)._1 != side(i - 1)._1,
       s"duplicate $idCol ${side(i)._1} in the embedding table"))
-    val norms = side.map { case (_, v) =>
-      var s = 0L; var i = 0
-      while (i < v.length) {
-        s += math.floor(v(i).toDouble * v(i).toDouble * 1e9 + 0.5).toLong; i += 1
-      }
-      s
-    }
+    val norms = side.map(r => norm(r._2))
     val bcSide = spark.sparkContext.broadcast(side)
     val bcNorms = spark.sparkContext.broadcast(norms)
     // probe = indices into the broadcast (the data ships exactly once);
@@ -258,14 +238,11 @@ object Similarity {
           val (idb, vb) = right(j)
           var dot = 0L
           var d = 0
-          while (d < va.length) {
-            dot += math.floor(va(d).toDouble * vb(d).toDouble * 1e9 + 0.5).toLong; d += 1
-          }
+          while (d < va.length) { dot += fx(va(d), vb(d)); d += 1 }
           val denom = math.sqrt(naD * rn(j).toDouble)
-          // zero-norm vectors have no defined cosine: excluded on both
-          // sides — the q_neardup oracle filters nn > 0 identically
-          // (DuckDB would otherwise emit inf/NaN cosines that pass the
-          // threshold; Spark's declarative divide yields NULL)
+          // the zero-norm rule on both sides — the q_neardup oracle
+          // filters nn > 0 identically (DuckDB would otherwise emit
+          // inf/NaN cosines that pass the threshold)
           if (denom == 0d) Iterator.empty
           else {
             val cos = BigDecimal(dot / denom)
@@ -290,15 +267,11 @@ object Similarity {
   def cosineNearDupPairsLsh(emb: DataFrame, idCol: String, vecCol: String,
                             minCos: Double, bands: Int = 8, nPlanes: Int = 8,
                             dim: Int = 0, seed: Long = 42L): DataFrame = {
-    // dim MUST match the embedding length: zip_with against a shorter/
-    // longer plane yields null dots -> every vector lands in bucket 0
-    // -> the candidate join silently degenerates to all-pairs. Infer
-    // from the data by default (one 1-row job).
-    val d = if (dim > 0) dim
-            else emb.select(size(col(vecCol))).head().getInt(0)
+    requirePlanes(nPlanes)
+    val d = dimOf(emb, vecCol, dim)
     val bandCols = (0 until bands).map(bnd =>
       struct(lit(bnd).as("band"),
-        bucketColInline(vecCol, nPlanes, d, seed + 7919L * bnd).as("bh")))
+        bucketCol(col(vecCol), nPlanes, d, seed + 7919L * bnd).as("bh")))
     val buckets = emb.select(col(idCol).cast("long").as("id"),
         explode(array(bandCols: _*)).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bh"))
@@ -307,73 +280,42 @@ object Similarity {
       .where(col("a") < col("b"))
       .select(col("a"), col("b")).distinct()
     val vecs = emb.select(col(idCol).cast("long").as("id"),
-      col(vecCol).as("v"), normFx(vecCol).as("nn"))
-    cands
+      col(vecCol).as("v"), dotFx(col(vecCol), col(vecCol)).as("nn"))
+    val joined = cands
       .join(vecs.select(col("id").as("a"), col("v").as("va"), col("nn").as("na")), Seq("a"))
       .join(vecs.select(col("id").as("b"), col("v").as("vb"), col("nn").as("nb")), Seq("b"))
-      .withColumn("dot", dotFx("va", "vb"))
-      .withColumn("cos",
-        round(col("dot") / sqrt(col("na").cast("double") * col("nb").cast("double")), 6))
+      .withColumn("dot", dotFx(col("va"), col("vb")))
+    withCosine(joined, "cos", col("dot"), col("na"), col("nb"))
       .where(col("cos") >= minCos)
       .select(col("a"), col("b"), col("cos"))
   }
 
-  /** Multi-probe top-k against a persisted LSH index: probes = every
-    * bucket within Hamming distance `probeHamming` of the query's
-    * bucket (sign flips on few hyperplanes are the likeliest misses,
-    * Lv et al. 2007 multi-probe LSH); exact fixed-point cosine re-rank
-    * within the probed partitions. Probe fraction = Σ C(nPlanes,h)/2^n —
+  /** Buckets within Hamming distance `h` of `q` over `nPlanes` bits,
+    * ascending: the C(nPlanes, ≤ h) bit flips of `q`, enumerated — never
+    * a scan of all 2^nPlanes buckets. */
+  private[graft] def probeBuckets(q: Long, nPlanes: Int, h: Int): Seq[Long] =
+    (0 to math.min(h, nPlanes)).flatMap(r => (0 until nPlanes).combinations(r)
+      .map(_.foldLeft(q)((b, p) => b ^ (1L << p)))).sorted
+
+  /** Multi-probe top-k of `queryVec` against a persisted LSH index:
+    * probes = every bucket within Hamming distance `probeHamming` of the
+    * query's bucket (sign flips on few hyperplanes are the likeliest
+    * misses, Lv et al. 2007 multi-probe LSH), computed driver-side from
+    * the plane literals, so the plan reads ONLY the probed bucket
+    * partitions (partition pruning). `universe` (optional docid set,
+    * e.g. a filter's matches) restricts candidates BEFORE the exact
+    * fixed-point re-rank. Probe fraction = Σ C(nPlanes,h)/2^n —
     * vanishing at production plane counts (h≤2 at 16 planes probes
     * 137/65536 buckets). */
-  def lshIndexTopK(spark: SparkSession, dir: String, queryId: Long,
-                   k: Int, probeHamming: Int = 2): DataFrame = {
-    val nPlanes = lshMeta(spark, dir)._1
-    // the whole query row (bucket, vec, nn) from the range-sorted byid
-    // table in ONE row-group-pruned scan
-    val q = spark.read.schema(ByidSchemaDdl).parquet(s"$dir/byid")
-      .where(col("id") === queryId)
-      .select(col("bucket").cast("long"), col("vec"), col("nn")).collect()(0)
-    lshProbedTopK(spark, dir, nPlanes, q.getLong(0),
-      q.getSeq[Float](1).toArray, q.getLong(2), k, probeHamming, None)
-  }
-
-  /** [[lshIndexTopK]] for an EXTERNAL query vector (reference
-    * SearchQuery.vector): the query bucket is computed driver-side from
-    * the plane literals and the meta row, so the plan reads ONLY the
-    * probed bucket partitions — no full-index scan to locate a query
-    * row. `universe` (optional docid set, e.g. a filter's matches)
-    * restricts candidates BEFORE the top-k so a filtered request still
-    * fills k. No default args (the corpus-id overload carries them). */
   def lshIndexTopK(spark: SparkSession, dir: String, queryVec: Array[Float],
-                   k: Int, probeHamming: Int,
-                   universe: Option[DataFrame]): DataFrame = {
+                   k: Int, probeHamming: Int = 2,
+                   universe: Option[DataFrame] = None): DataFrame = {
     val (nPlanes, dim, seed) = lshMeta(spark, dir)
     require(queryVec.length == dim,
       s"query vector dim ${queryVec.length} != index dim $dim")
-    lshProbedTopK(spark, dir, nPlanes, bucketOfVector(queryVec, nPlanes, seed),
-      queryVec, normFxLocal(queryVec), k, probeHamming, universe)
-  }
-
-  /** Shared probe + exact re-rank: read the bucket partitions within
-    * Hamming distance of `qBucket` (partition pruning — the only rows/
-    * IO), optionally intersect with `universe`, exact fixed-point
-    * cosine, top-k. */
-  private def lshProbedTopK(spark: SparkSession, dir: String, nPlanes: Int,
-                            qBucket: Long, qvec: Array[Float], qn: Long,
-                            k: Int, probeHamming: Int,
-                            universe: Option[DataFrame]): DataFrame = {
-    val probes = (0L until (1L << nPlanes))
-      .filter(b => java.lang.Long.bitCount(b ^ qBucket) <= probeHamming)
-    val probed = spark.read.parquet(s"$dir/rows")
-      .where(col("bucket").isin(probes: _*))
-    universe.fold(probed)(u =>
-        probed.join(broadcast(u), probed("id") === u(u.columns.head), "left_semi"))
-      .withColumn("qvec", array(qvec.map(v => lit(v)): _*))
-      .withColumn("dot", dotFx("vec", "qvec"))
-      .withColumn("score",
-        round(col("dot") / sqrt(col("nn").cast("double") * lit(qn.toDouble)), 6))
-      .select(col("id").as("vec_id"), col("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    val probes = probeBuckets(bucketOfVector(queryVec, nPlanes, seed), nPlanes, probeHamming)
+    val probed = spark.read.parquet(s"$dir/rows").where(col("bucket").isin(probes: _*))
+    topK(within(probed, "id", universe).withColumnRenamed("id", "vec_id"),
+      "vec_id", col("vec"), col("nn"), queryVec, k)
   }
 }

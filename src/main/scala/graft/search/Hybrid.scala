@@ -3,6 +3,8 @@ package graft.search
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Similarity
+
 /** Hybrid keyword + semantic search (reference
   * crates/milli/src/search/hybrid.rs: `search_hybrid` runs the keyword
   * and vector searches, weighs each hit's normalized score by the
@@ -58,33 +60,32 @@ object Hybrid {
     * re-reading every vector is the 100-TB anti-pattern. */
   final val SemanticExactMaxRows: Long = 200000L
 
-  /** ONE cost router for both semantic-arm key shapes (corpus id /
-    * external vector) — the routing, the plan-statistics screen and the
-    * bounded-count confirm exist exactly once (a duplicated copy of
-    * this logic, Int.MaxValue-overflow guard included, previously lived
-    * in each overload). */
-  private def routedSemantic(emb: DataFrame, idCol: String, vecCol: String,
-                             query: Either[Long, Array[Float]], pool: Int,
-                             indexDir: Option[String],
-                             exactMaxRows: Long): DataFrame = {
+  /** The one semantic router, for [[search]] and `api.Index.similar`,
+    * cost-routed like `SearchEngine.search` routes to WAND: below
+    * `exactMaxRows` (or with no index built) the exact brute-force
+    * cosine is the right plan AND the oracle baseline; above it the
+    * persisted multi-probe LSH index is read instead — only the probed
+    * bucket partitions are scanned (partition pruning), with an exact
+    * fixed-point re-rank inside them, so returned scores are exact and
+    * recall is the (spec-measured) multi-probe recall. `universe`
+    * (optional docid set, e.g. a filter's matches) restricts both arms
+    * before the top-k. Returns (docId, score). */
+  def semanticTopK(emb: DataFrame, idCol: String, vecCol: String,
+                   queryVec: Array[Float], pool: Int,
+                   indexDir: Option[String] = None,
+                   exactMaxRows: Long = SemanticExactMaxRows,
+                   universe: Option[DataFrame] = None): DataFrame = {
     // routing from plan STATISTICS (free — no per-query count() job;
     // parquet sources report exact byte sizes): 512 B/row is a generous
     // per-embedding-row estimate, so the exact path persists slightly
     // past the cap rather than LSH kicking in early
-    def estRows: BigInt =
-      emb.queryExecution.optimizedPlan.stats.sizeInBytes / 512
+    def estBytes: BigInt = emb.queryExecution.optimizedPlan.stats.sizeInBytes
     val useLsh = indexDir.isDefined &&
-      (exactMaxRows <= 0 || estRows > exactMaxRows)
-    if (useLsh) {
-      val lsh = query match {
-        case Left(id) =>
-          graft.ops.Similarity.lshIndexTopK(emb.sparkSession, indexDir.get, id, pool)
-        case Right(vec) =>
-          graft.ops.Similarity.lshIndexTopK(emb.sparkSession, indexDir.get,
-            vec, pool, 2, None)
-      }
-      lsh.select(col("vec_id").cast("int").as("docId"), col("score"))
-    } else {
+      (exactMaxRows <= 0 || estBytes / 512 > exactMaxRows)
+    if (useLsh)
+      Similarity.lshIndexTopK(emb.sparkSession, indexDir.get, queryVec, pool, 2, universe)
+        .select(col("vec_id").cast("int").as("docId"), col("score"))
+    else {
       // loud guard against the scale anti-pattern when NO index exists.
       // Catalyst size estimates for derived/joined embedding frames can
       // be off by orders of magnitude in either direction, so the plan-
@@ -95,37 +96,20 @@ object Hybrid {
       // bounded limit (and +1 would overflow) — such a cap is
       // effectively "no guard", so skip the confirm
       if (indexDir.isEmpty && exactMaxRows > 0 &&
-          exactMaxRows < Int.MaxValue &&
-          emb.queryExecution.optimizedPlan.stats.sizeInBytes >
-            BigInt(exactMaxRows) * 512)
+          exactMaxRows < Int.MaxValue && estBytes > BigInt(exactMaxRows) * 512)
         require(emb.limit(exactMaxRows.toInt + 1).count() <= exactMaxRows,
           s"embedding table exceeds $exactMaxRows rows and no LSH " +
             "index was given: build one with Similarity.buildLshIndex")
-      val exact = query match {
-        case Left(id) => graft.ops.Similarity.cosineTopK(emb, idCol, vecCol, id, pool)
-        case Right(vec) => graft.ops.Similarity.cosineTopK(emb, idCol, vecCol, vec, pool)
-      }
-      exact.select(col(idCol).cast("int").as("docId"), col("score"))
+      Similarity.cosineTopK(emb, idCol, vecCol, queryVec, pool, universe)
+        .select(col(idCol).cast("int").as("docId"), col("score"))
     }
   }
 
-  /** The semantic arm, cost-routed like `SearchEngine.search` routes to
-    * WAND: below `exactMaxRows` (or with no index built) the exact
-    * brute-force cosine is the right plan AND the oracle baseline;
-    * above it the persisted multi-probe LSH index is read instead —
-    * only the probed bucket partitions are scanned (partition pruning),
-    * with an exact fixed-point re-rank inside them, so returned scores
-    * are exact and recall is the (spec-measured) multi-probe recall. */
-  def semanticTopK(emb: DataFrame, idCol: String, vecCol: String,
-                   queryVecId: Long, pool: Int,
-                   indexDir: Option[String] = None,
-                   exactMaxRows: Long = SemanticExactMaxRows): DataFrame =
-    routedSemantic(emb, idCol, vecCol, Left(queryVecId), pool, indexDir,
-      exactMaxRows)
-
   /** End-to-end: rank `q` with the rule cascade, score embeddings by
-    * cosine against `queryVecId`'s embedding (via [[semanticTopK]]'s
-    * cost routing), merge at `ratio`. `emb` rows must be keyed by the
+    * cosine against `queryVec` (reference SearchQuery.vector +
+    * HybridQuery, meilisearch/src/search/mod.rs:64-67; a corpus row's
+    * vector comes from `Similarity.queryVector`) via [[semanticTopK]]'s
+    * cost routing, merge at `ratio`. `emb` rows must be keyed by the
     * same ids as the doc store.
     *
     * `candidatePool` (default 0 = `k`): per-arm top-N fed to the merge.
@@ -143,41 +127,13 @@ object Hybrid {
     * Pass an explicit larger pool only to materialize a deeper merged
     * ordering than the returned top-k. */
   def search(mr: graft.rank.MeiliRank, emb: DataFrame, idCol: String,
-             vecCol: String, q: String, queryVecId: Long, ratio: Double,
+             vecCol: String, q: String, queryVec: Array[Float], ratio: Double,
              k: Int, candidatePool: Int = 0,
              semanticIndexDir: Option[String] = None,
              semanticExactMaxRows: Long = SemanticExactMaxRows): DataFrame = {
     val pool = if (candidatePool > 0) candidatePool else k
     val kw = kwArm(mr, q, pool)
-    val sem = semanticTopK(emb, idCol, vecCol, queryVecId,
-      pool, semanticIndexDir, semanticExactMaxRows)
-    merge(kw, sem, ratio, k)
-  }
-
-  /** [[semanticTopK]] for an EXTERNAL query vector (reference
-    * SearchQuery.vector + HybridQuery, meilisearch/src/search/mod
-    * .rs:64-67: real hybrid callers supply a fresh query embedding that
-    * is NOT a corpus row). Same cost routing; the LSH arm computes the
-    * probe set from the plane literals driver-side, so neither arm ever
-    * scans the index for a query row. */
-  def semanticTopKVec(emb: DataFrame, idCol: String, vecCol: String,
-                      queryVec: Array[Float], pool: Int,
-                      indexDir: Option[String] = None,
-                      exactMaxRows: Long = SemanticExactMaxRows): DataFrame =
-    routedSemantic(emb, idCol, vecCol, Right(queryVec), pool, indexDir,
-      exactMaxRows)
-
-  /** [[search]] with an external query vector: the production hybrid
-    * entry point — the keyword arm ranks `q`, the semantic arm scores
-    * against `queryVec` via [[semanticTopKVec]]. */
-  def searchVec(mr: graft.rank.MeiliRank, emb: DataFrame, idCol: String,
-                vecCol: String, q: String, queryVec: Array[Float],
-                ratio: Double, k: Int, candidatePool: Int = 0,
-                semanticIndexDir: Option[String] = None,
-                semanticExactMaxRows: Long = SemanticExactMaxRows): DataFrame = {
-    val pool = if (candidatePool > 0) candidatePool else k
-    val kw = kwArm(mr, q, pool)
-    val sem = semanticTopKVec(emb, idCol, vecCol, queryVec,
+    val sem = semanticTopK(emb, idCol, vecCol, queryVec,
       pool, semanticIndexDir, semanticExactMaxRows)
     merge(kw, sem, ratio, k)
   }

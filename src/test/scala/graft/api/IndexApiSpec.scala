@@ -301,6 +301,17 @@ class IndexApiSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       idx.similar(e, "vec_id", "embedding", 99L))
   }
 
+  test("similar ranks through Hybrid's semantic router: with no LSH index a large table is refused") {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    // 3,000 rows: the plan statistics trip a 10-row cap, the bounded
+    // count confirms it
+    val big = spark.range(3000).select(col("id").as("vec_id"),
+      array(lit(1f), (col("id") % 7).cast("float")).as("embedding"))
+    val e = intercept[IllegalArgumentException](
+      idx.similar(big, "vec_id", "embedding", 0L, semanticExactMaxRows = 10L))
+    assert(e.getMessage.contains("exceeds 10 rows and no LSH index was given"), e.getMessage)
+  }
+
   test("showRankingScoreDetails emits a _rankingScoreDetails JSON column") {
     val rows = idx.search(SearchRequest(q = "spark merge",
       showRankingScoreDetails = true)).collect()

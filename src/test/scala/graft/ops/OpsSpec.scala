@@ -103,7 +103,7 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       val s = dotFx(v, q) / math.sqrt((dotFx(v, v) * dotFx(q, q)).toDouble)
       (id, BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }.sortBy { case (id, s) => (-s, id) }.take(10)
-    val got = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
+    val got = Similarity.cosineTopK(emb, "vec_id", "embedding", q, 10)
       .as[(Long, Double)].collect().toSeq
     assert(got.head._1 == 0L && math.abs(got.head._2 - 1.0) < 1e-6)
     assert(got.map(_._1) == want.map(_._1))
@@ -116,16 +116,17 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     // the parameters are a JSON marker, read without a Spark job
     assert(graft.index.Lineage.readJson(spark, Similarity.paramsPath(dir)).map(_.toString) ==
       Some("""{"dim":64,"nPlanes":4,"seed":42}"""))
-    val got = Similarity.lshIndexTopK(spark, dir, 0L, 10)
+    val q0 = Similarity.queryVector(emb, "vec_id", "embedding", 0L, Some(dir))
+    val got = Similarity.lshIndexTopK(spark, dir, q0, 10)
       .as[(Long, Double)].collect().toSeq
     assert(got.head._1 == 0L)
     assert(got.map(_._2).sliding(2).forall(w => w.size < 2 || w(0) >= w(1)))
-    val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
+    val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", q0, 10)
       .as[(Long, Double)].collect().map(_._1).toSet
     val recall = got.map(_._1).count(exact.contains).toDouble / exact.size
     assert(recall >= 0.8, s"multi-probe recall@10 = $recall")
     // probe set never reads the whole table: plan prunes bucket partitions
-    val plan = Similarity.lshIndexTopK(spark, dir, 0L, 10)
+    val plan = Similarity.lshIndexTopK(spark, dir, q0, 10)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"))
   }
@@ -143,30 +144,26 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
         r.getSeq[Float](1).toArray, nPlanes = 4, seed = 42L)
       assert(got == r.getLong(2), s"id ${r.getLong(0)}")
     }
-    // an external vector equal to row 0's embedding returns exactly the
-    // id-based result
+    // the id lookup: row 0's vector resolved through the index's byid/
+    // table equals it resolved through the embedding table and read
+    // directly, and an unknown id is refused by name from either source
     val q0 = emb.where(col("vec_id") === 0L)
       .select(col("embedding").cast("array<float>")).head().getSeq[Float](0).toArray
-    val byId = Similarity.lshIndexTopK(spark, dir, 0L, 10)
-      .as[(Long, Double)].collect().toSeq
-    val byVec = Similarity.lshIndexTopK(spark, dir, q0, 10, 2, None)
-      .as[(Long, Double)].collect().toSeq
-    assert(byId == byVec)
+    assert(Similarity.queryVector(emb, "vec_id", "embedding", 0L, Some(dir)).sameElements(q0))
+    assert(Similarity.queryVector(emb, "vec_id", "embedding", 0L).sameElements(q0))
+    Seq(Some(dir), None).foreach { src =>
+      val e = intercept[IllegalArgumentException](
+        Similarity.queryVector(emb, "vec_id", "embedding", 987654L, src))
+      assert(e.getMessage.contains("unknown document id 987654"), e.getMessage)
+    }
     // plan: bucket partitions pruned AND exactly ONE scan of rows/ (the
-    // id overload needs a second, unpruned scan just to fetch the
-    // query row — the external-vector path must not)
-    val plan = Similarity.lshIndexTopK(spark, dir, q0, 10, 2, None)
+    // query row is never looked up in the index)
+    val plan = Similarity.lshIndexTopK(spark, dir, q0, 10)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"))
     val rowScans = plan.split("\n").count(l => l.contains("/rows") && l.contains("FileScan"))
     assert(rowScans <= 1, s"external-vector query must scan rows/ once:\n$plan")
-    // the exact brute-force external-vector arm agrees too
-    val exactVec = Similarity.cosineTopK(emb, "vec_id", "embedding", q0, 10)
-      .as[(Long, Double)].collect().toSeq
-    val exactId = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(exactVec == exactId)
-    // byid side table: the id path resolves id -> bucket through it
+    // byid side table: the id lookup resolves id -> vector through it
     // (range-sorted, row-group pruned) instead of scanning rows/
     val byidP = new org.apache.hadoop.fs.Path(s"$dir/byid")
     val fs = byidP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -177,8 +174,8 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     perPart.foreach(p => assert(p == p.sorted, "byid must be id-sorted"))
     // an LSH directory without the format stamp is refused, not read
     fs.delete(graft.index.Lineage.formatPath(dir), false)
-    Seq[() => Any](() => Similarity.lshIndexTopK(spark, dir, 0L, 10),
-        () => Similarity.lshIndexTopK(spark, dir, q0, 10, 2, None)).foreach { q =>
+    Seq[() => Any](() => Similarity.queryVector(emb, "vec_id", "embedding", 0L, Some(dir)),
+        () => Similarity.lshIndexTopK(spark, dir, q0, 10)).foreach { q =>
       val e = intercept[IllegalArgumentException](q())
       assert(e.getMessage.contains("rebuild"), e.getMessage)
     }
@@ -226,13 +223,14 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   test("hybrid semantic arm cost-routes to the LSH index (pruned scan, recall >= 0.8, exact scores)") {
     val dir = tempDir("hyblsh")
     graft.ops.Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", dir, nPlanes = 4)
+    val q0 = Similarity.queryVector(emb, "vec_id", "embedding", 0L)
     val exact = graft.search.Hybrid
-      .semanticTopK(emb, "vec_id", "embedding", 0L, 10)
+      .semanticTopK(emb, "vec_id", "embedding", q0, 10)
       .as[(Int, Double)].collect().toSeq
     // exactMaxRows = 0 forces the index route (simulating a table above
     // the cap); the arm must then read ONLY probed bucket partitions
     val viaIdx = graft.search.Hybrid.semanticTopK(emb, "vec_id", "embedding",
-      0L, 10, indexDir = Some(dir), exactMaxRows = 0L)
+      q0, 10, indexDir = Some(dir), exactMaxRows = 0L)
     val plan = viaIdx.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       s"semantic arm must prune bucket partitions:\n$plan")
@@ -246,7 +244,7 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     // below the cap with an index present, the exact path still runs
     // (oracle scale): identical to the no-index exact arm
     val routedExact = graft.search.Hybrid.semanticTopK(emb, "vec_id", "embedding",
-      0L, 10, indexDir = Some(dir)).as[(Int, Double)].collect().toSeq
+      q0, 10, indexDir = Some(dir)).as[(Int, Double)].collect().toSeq
     assert(routedExact == exact)
   }
 
@@ -278,6 +276,86 @@ class OpsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       .count()
     val allPairs = rows.size.toLong * (rows.size - 1) / 2
     assert(nCands < allPairs / 2, s"candidates $nCands vs all-pairs $allPairs")
+  }
+
+  test("zero-norm rows have no cosine: every declarative arm drops them; a zero query vector is refused") {
+    // rows 1 and 4 are zero vectors: under ANSI mode their cosine
+    // divide would fail the whole query
+    val df = Seq((0L, Seq(1f, 0f, 0f)), (1L, Seq(0f, 0f, 0f)),
+        (2L, Seq(0.6f, 0.8f, 0f)), (3L, Seq(1f, 1f, 0f)), (4L, Seq(0f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val q = Array(1f, 0f, 0f)
+    val exact = Similarity.cosineTopK(df, "vec_id", "embedding", q, 10)
+      .as[(Long, Double)].collect().toSeq
+    assert(exact.map(_._1) == Seq(0L, 3L, 2L), s"$exact")
+    val dir = tempDir("lshzero")
+    Similarity.buildLshIndex(spark, df, "vec_id", "embedding", dir, nPlanes = 3)
+    // probing every bucket (h = nPlanes) makes the LSH arm exact
+    val lsh = Similarity.lshIndexTopK(spark, dir, q, 10, probeHamming = 3)
+      .as[(Long, Double)].collect().toSeq
+    assert(lsh == exact)
+    // the two zero rows share every bucket, so they are a candidate pair
+    val pairs = Similarity.cosineNearDupPairsLsh(df, "vec_id", "embedding", -1.0,
+      bands = 2, nPlanes = 1).as[(Long, Long, Double)].collect().toSet
+    val allPairs = Similarity.cosineNearDupPairs(df, "vec_id", "embedding", -1.0)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(pairs.nonEmpty && pairs.subsetOf(allPairs), s"$pairs vs $allPairs")
+    assert(!pairs.exists(p => Set(1L, 4L)(p._1) || Set(1L, 4L)(p._2)), s"$pairs")
+    Seq[() => Any](
+        () => Similarity.cosineTopK(df, "vec_id", "embedding", Array(0f, 0f, 0f), 10),
+        () => Similarity.lshIndexTopK(spark, dir, Array(0f, 0f, 0f), 10)).foreach { f =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("zero query vector"), e.getMessage)
+    }
+  }
+
+  test("a query vector of the wrong length fails the query, naming both lengths") {
+    val df = Seq((0L, Seq(1f, 2f, 3f)), (1L, Seq(3f, 2f, 1f))).toDF("vec_id", "embedding")
+    val e = intercept[Exception](
+      Similarity.cosineTopK(df, "vec_id", "embedding", Array(1f, 2f), 10).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("query vector dim 2 != embedding dim 3"), msgs)
+    val dir = tempDir("lshdim")
+    Similarity.buildLshIndex(spark, df, "vec_id", "embedding", dir, nPlanes = 2)
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.lshIndexTopK(spark, dir, Array(1f, 2f), 10))
+    assert(e2.getMessage.contains("query vector dim 2 != index dim 3"), e2.getMessage)
+  }
+
+  test("multi-probe: the enumerated bit flips equal the Hamming filter over every bucket") {
+    for (n <- 1 to 20; h <- 0 to 3; q <- Seq(0L, (1L << n) - 1, 0x5a5a5L & ((1L << n) - 1))) {
+      val want = (0L until (1L << n)).filter(b => java.lang.Long.bitCount(b ^ q) <= h)
+      assert(Similarity.probeBuckets(q, n, h) == want, s"nPlanes $n, h $h, bucket $q")
+    }
+    assert(Similarity.probeBuckets(-1L, 64, 2).size == 1 + 64 + 64 * 63 / 2)
+  }
+
+  test("LSH plane counts: 63 and 64 planes find each row in its own bucket; 0 and 65 are refused") {
+    val df = (0 until 6).map(i =>
+      (i.toLong, Seq.tabulate(8)(d => ((i * 5 + d * 3) % 7 - 3).toFloat)))
+      .toDF("vec_id", "embedding")
+    Seq(63, 64).foreach { n =>
+      val dir = tempDir(s"lsh$n")
+      Similarity.buildLshIndex(spark, df, "vec_id", "embedding", dir, nPlanes = n)
+      (0L until 6L).foreach { id =>
+        val q = Similarity.queryVector(df, "vec_id", "embedding", id, Some(dir))
+        val got = Similarity.lshIndexTopK(spark, dir, q, 6, probeHamming = 0)
+          .as[(Long, Double)].collect()
+        assert(got.exists(r => r._1 == id && math.abs(r._2 - 1.0) < 1e-9),
+          s"nPlanes $n, id $id: ${got.toSeq}")
+      }
+    }
+    Seq(0, 65).foreach { n =>
+      Seq[() => Any](
+          () => Similarity.buildLshIndex(spark, df, "vec_id", "embedding",
+            tempDir("lshbad"), nPlanes = n),
+          () => Similarity.cosineNearDupPairsLsh(df, "vec_id", "embedding", 0.5,
+            nPlanes = n)).foreach { f =>
+        val e = intercept[IllegalArgumentException](f())
+        assert(e.getMessage.contains(s"nPlanes $n outside 1..64"), e.getMessage)
+      }
+    }
   }
 
   test("tokenEstimate: BPE-piece and chars/4 estimates match a scala recompute") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.index.{IndexBuild, IndexConfig}
+import graft.ops.Similarity
 import graft.rank.MeiliRank
 
 /** Hybrid merge pool semantics: the max-weighted merge's top-k is
@@ -42,7 +43,8 @@ class HybridSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     val mr = new MeiliRank(engine)
     def run(pool: Int) =
       Hybrid.search(mr, emb, "vec_id", "embedding", "spark merge",
-        queryVecId = 0L, ratio = 0.5, k = 10, candidatePool = pool)
+        Similarity.queryVector(emb, "vec_id", "embedding", 0L),
+        ratio = 0.5, k = 10, candidatePool = pool)
         .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
     val defaultPool = run(0)       // 0 -> k
     val fullPool = run(1000000)
@@ -58,12 +60,18 @@ class HybridSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3))).toSeq
+    // a corpus id is a query vector through the one resolver
+    val resolved = Similarity.queryVector(emb, "vec_id", "embedding", 3L)
+    assert(resolved.sameElements(q3))
     val byId = rows(Hybrid.search(mr, emb, "vec_id", "embedding",
-      "spark merge", queryVecId = 3L, ratio = 0.5, k = 10))
-    val byVec = rows(Hybrid.searchVec(mr, emb, "vec_id", "embedding",
+      "spark merge", resolved, ratio = 0.5, k = 10))
+    val byVec = rows(Hybrid.search(mr, emb, "vec_id", "embedding",
       "spark merge", q3, ratio = 0.5, k = 10))
     assert(byId == byVec)
     assert(byVec.nonEmpty)
+    val e = intercept[IllegalArgumentException](
+      Similarity.queryVector(emb, "vec_id", "embedding", 40L))
+    assert(e.getMessage.contains("unknown document id 40"), e.getMessage)
   }
 
   test("ratio extremes: pool = k stays exact for pure keyword and pure semantic") {
@@ -71,7 +79,8 @@ class HybridSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     Seq(0.0, 1.0).foreach { ratio =>
       def run(pool: Int) =
         Hybrid.search(mr, emb, "vec_id", "embedding", "batch stream",
-          queryVecId = 3L, ratio = ratio, k = 5, candidatePool = pool)
+          Similarity.queryVector(emb, "vec_id", "embedding", 3L),
+          ratio = ratio, k = 5, candidatePool = pool)
           .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
       assert(run(0) == run(1000000), s"ratio $ratio mismatch")
     }

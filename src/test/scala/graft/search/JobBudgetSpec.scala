@@ -256,15 +256,22 @@ class JobBudgetSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     * postings and positions reads inferred their schemas). */
   private val PrefixBudget = 10
 
+  /** Measured 3 for an id query, the byid/ lookup included. */
+  private val LshBudget = 3
+
   test("LSH: the first lshIndexTopK call on a fresh dir runs as many jobs as a warm call") {
     val emb = (0 until 40).map(i =>
       (i.toLong, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)))
       .toDF("vec_id", "embedding")
     val d = tempDir("jobbudget-lsh")
     Similarity.buildLshIndex(spark, emb, "vec_id", "embedding", d, nPlanes = 4)
-    val first = jobsOf(Similarity.lshIndexTopK(spark, d, 0L, 5).collect())
-    val warm = steadyJobs(Similarity.lshIndexTopK(spark, d, 0L, 5).collect())
+    // a corpus id: its vector from byid/, then the vector query
+    def byId(): Any = Similarity.lshIndexTopK(spark, d,
+      Similarity.queryVector(emb, "vec_id", "embedding", 0L, Some(d)), 5).collect()
+    val first = jobsOf(byId())
+    val warm = steadyJobs(byId())
     info(s"lshIndexTopK: first $first, warm $warm jobs")
     assert(first == warm, s"first call $first vs warm $warm")
+    assert(warm <= LshBudget, s"warm $warm > $LshBudget")
   }
 }
