@@ -21,7 +21,7 @@ object DocIndex {
   /** One key's (snapshot, engine), guarded by the slot's lock. */
   private final class Slot { var entry: (String, SearchEngine) = null }
 
-  private val slots = TermDict.lru[(SparkSession, String), Slot](32)
+  private val slots = new TermDict.Lru[(SparkSession, String), Slot](32, _ => 1)
 
   /** /tmp home of the cached index `name` over `sfDir`, tagged with both
     * halves of the format stamp (Lineage.FormatStamp):
@@ -71,7 +71,7 @@ object DocIndex {
     * read before the open: a racing commit only makes the next lookup
     * reopen. */
   private def cached(spark: SparkSession, dir: String)(prepare: => Unit): SearchEngine = {
-    val slot = slots.computeIfAbsent((spark, dir), _ => new Slot)
+    val slot = slots.synchronized(slots.get((spark, dir)).getOrElse(slots.put((spark, dir), new Slot)))
     slot.synchronized {
       if (slot.entry == null || snapshot(spark, dir) != slot.entry._1) {
         prepare

@@ -85,7 +85,8 @@ final case class IndexConfig(
   *
   * Layout under `indexDir`:
   *   docs/      docId, repo, path, commit, lang, content, content_sha256
-  *   dict/      term, termId, df, cf, len
+  *   dict/len=L/  term, df, cf — L is the term's UTF-16 length; each file
+  *              sorted by term in small row groups ([[writeTerms]])
   *   manifest.json  every build setting and the build's N and Σlen
   *              ([[Manifest]], written by the stats stage)
   *   stats/     delta-<batchId>: one append's N and Σlen, JSON (see [[corpusTotals]])
@@ -110,7 +111,7 @@ object IndexBuild {
     * version (Lineage.FormatStamp); a directory written under another
     * format is refused with a rebuild error, never read through a
     * fallback. */
-  final val FormatVersion = 13
+  final val FormatVersion = 14
 
   /** Deterministic term -> bucket (also computed query-side in plain
     * Scala; String.hashCode is specified by the JLS so it is stable
@@ -797,16 +798,27 @@ object IndexBuild {
     * partition is extracted and deleted before dict derivation). */
   private def writeDict(spark: SparkSession, indexDir: String): Unit = {
     import spark.implicits._
-    spark.read.schema(BlocksSchemaDdl).parquet(s"$indexDir/postings")
+    writeTerms(spark.read.schema(BlocksSchemaDdl).parquet(s"$indexDir/postings")
       .filter($"term" =!= LenTerm)
       .groupBy($"term")
-      .agg(sum($"count").as("df"), sum($"tfSum").as("cf"))
-      // len supports predicate-pushdown length-band loads (TermDict):
-      // typo expansion reads only |len(t)-len(w)| <= budget rows
-      .select($"term", xxhash64($"term").as("termId"), $"df", $"cf",
-        length($"term").as("len"))
-      .write.mode("overwrite").parquet(s"$indexDir/dict")
+      .agg(sum($"count").as("df"), sum($"tfSum").as("cf")), s"$indexDir/dict")
   }
+
+  /** Rows per row group of dict/ and prefix_dict/: a narrow term range. */
+  private final val TermRowGroupRows = 1024
+
+  /** dict/ and prefix_dict/ in the layout [[TermDict]]'s pruned reads
+    * need: `terms` (a row per term) partitioned by `len`
+    * ([[TermDict.lenOf]]), each file sorted by term in small row groups.
+    * The sort stays within the caller's term-hash partitions: no
+    * exchange is added, so the few length bands that hold most terms
+    * never land on a few reducers. */
+  private[graft] def writeTerms(terms: DataFrame, dir: String): Unit =
+    terms.withColumn("len", udf((t: String) => TermDict.lenOf(t)).apply(col("term")))
+      .sortWithinPartitions("len", "term")
+      .write.mode("overwrite").partitionBy("len")
+      .option("parquet.block.row.count.limit", TermRowGroupRows.toLong)
+      .parquet(dir)
 
   /** Incremental append (reference U1 del/add delta indexing,
     * update/new/extract cache deltas — here the append-only variant for
@@ -976,8 +988,8 @@ object IndexBuild {
     * expands a short prefix on the fly).
     *
     * Spark re-expression, three tables under `indexDir`:
-    *   prefix_dict/       (term=prefix, df=Σ member df, len) — the
-    *                      selection set; TermDict-compatible schema
+    *   prefix_dict/       (term=prefix, df=Σ member df) — the
+    *                      selection set, in dict/'s layout ([[writeTerms]])
     *   prefixes/bucket=B/ merged posting blocks keyed by the prefix
     *                      (same EncodedCols layout as postings/, so the
     *                      query-side decode path is shared verbatim)
@@ -1010,16 +1022,14 @@ object IndexBuild {
     val sig = s"${Lineage.generation(spark, indexDir)}:$maxLen:$minDf"
     if (Lineage.readMarker(spark, s"$indexDir/prefix_meta/$FprFile").contains(sig)) return
 
-    spark.read.schema(TermDict.SchemaDdl).parquet(s"$indexDir/dict")
+    writeTerms(spark.read.schema(TermDict.SchemaDdl).parquet(s"$indexDir/dict")
       .select($"term", $"df").as[(String, Long)]
       .flatMap { case (t, df) =>
         (1 to math.min(maxLen, t.length)).map(l => (t.substring(0, l), df))
       }
       .toDF("term", "df")
       .groupBy($"term").agg(sum($"df").as("df"))
-      .filter($"df" >= minDf)
-      .select($"term", $"df", length($"term").as("len"))
-      .write.mode("overwrite").parquet(s"$indexDir/prefix_dict")
+      .filter($"df" >= minDf), s"$indexDir/prefix_dict")
 
     val sel = spark.read.schema(TermDict.SchemaDdl).parquet(s"$indexDir/prefix_dict")
       .select($"term".as("prefix"))

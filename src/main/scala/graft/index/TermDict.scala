@@ -1,137 +1,134 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Query-side dictionary access with a bounded driver footprint.
-  *
-  * The reference keeps an FST over all words in LMDB and streams the
-  * relevant key ranges per query (crates/milli/src/index.rs:62 words
-  * FST; compute_derivations.rs walks it). The Spark analogue must NOT
-  * collect the dictionary to the driver: at web scale the vocabulary is
-  * 10^8-10^9 terms. This class:
-  *
-  *  - small dictionaries (≤ `collectThreshold` terms): one driver-side
-  *    read (no Spark job), all lookups served from an in-memory
-  *    map/array — interactive-query fast, and exactly what a 60k-doc
-  *    index wants;
-  *  - large dictionaries: per-query *bucketed* loads with predicate
-  *    pushdown on the dict parquet — exact-term lookups push an `IN`
-  *    filter, typo expansion loads only the query word's length band
-  *    (|len(t)−len(w)| ≤ budget is a necessary edit-distance condition),
-  *    prefix expansion pushes a startsWith range with an optional row
-  *    cap (TakeOrdered, never an unbounded collect). Loaded bands are
-  *    cached in a size-capped LRU, so a long-lived serving process over
-  *    a changing workload stays bounded.
-  */
+/** Query-side dictionary access: every read is a pruned parquet read on
+  * the driver, with no Spark job and no whole-dictionary map, so a
+  * 31-term test index and a 10^9-term vocabulary take one route (the
+  * reference streams the key ranges a query needs from one words FST,
+  * crates/milli/src/index.rs:62, compute_derivations.rs:45-165).
+  * [[IndexBuild.writeTerms]] partitions dict/ and prefix_dict/ by term
+  * length ([[lenOf]]) and sorts each file by term in small row groups:
+  *  - `lookup` reads, in the `len=|t|` directory, the files and row
+  *    groups whose term range covers `t` ([[LocalParquet.KeyIndex]]);
+  *  - `lengthBand` reads the band's `len=` directories whole (the typo
+  *    walk needs every term with |len(t) − len(w)| ≤ budget);
+  *  - `withPrefix` reads each `len ≥ |p|` directory over the prefix's
+  *    range, at most `cap` rows per file (the reference's
+  *    MAX_PREFIX_COUNT guard, compute_derivations.rs:215).
+  * Answers sit in one synchronized LRU bounded in terms held. The
+  * listing and footers are read once, so the owner must be a snapshot
+  * of the index (a [[graft.search.SearchEngine]]). */
 final class TermDict(spark: SparkSession, dictPath: String,
-                     collectThreshold: Long = TermDict.DefaultCollectThreshold,
-                     cacheEntries: Int = TermDict.DefaultCacheEntries)
-    extends Serializable {
-  import spark.implicits._
-  import org.apache.spark.sql.functions._
+                     cacheTerms: Int = TermDict.DefaultCacheTerms) extends Serializable {
+  import TermDict._
 
-  /** The one dict/ (or prefix_dict/) relation, read with the writers'
-    * fixed schema: no schema-inference job. */
-  @transient private lazy val dictDf =
-    spark.read.schema(TermDict.SchemaDdl).parquet(dictPath)
+  /** The benchmark harness's constructor (perfbench SearchLayers is its
+    * only caller): there is one read path, so the threshold is ignored. */
+  def this(spark: SparkSession, dictPath: String, collectThreshold: Long) = this(spark, dictPath)
 
-  /** Term count without a Spark job: dict/ and prefix_dict/ hold one
-    * row per term, so it is the sum of the parquet footers' row counts,
-    * read on the driver. */
-  lazy val size: Long = LocalParquet.rowCount(spark.sparkContext.hadoopConfiguration, dictPath)
+  @transient private lazy val conf = spark.sparkContext.hadoopConfiguration
 
-  /** Small-mode full map (None above the threshold — callers must use
-    * the bucketed APIs), read on the driver without a Spark job. */
-  lazy val fullMap: Option[Map[String, Long]] =
-    if (size <= collectThreshold)
-      Some(LocalParquet.readAll(spark.sparkContext.hadoopConfiguration, dictPath,
-        StructType.fromDDL("term STRING, df BIGINT")).iterator
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    else None
+  /** length → footer index of its `len=` directory. */
+  @transient private lazy val byLen: Map[Int, LocalParquet.KeyIndex[String]] =
+    LocalParquet.dataFiles(conf, dictPath).map(_.getPath.getParent.getName).distinct.collect {
+      case s"len=$n" => n.toInt -> new LocalParquet.KeyIndex[String](conf, s"$dictPath/len=$n", "term")
+    }.toMap
 
-  private val bandCache = TermDict.lru[(Int, Int), (Array[String], Array[Long])](cacheEntries)
-  private val prefixCache = TermDict.lru[(String, Int), Array[(String, Long)]](cacheEntries)
+  @transient private lazy val cache = new Lru[Read, Terms](cacheTerms, _._1.length.max(1))
 
-  /** current cached-entry counts (specs assert the cap holds) */
-  def cacheSizes: (Int, Int) = (bandCache.size(), prefixCache.size())
+  private def cached(k: Read)(load: => Terms): Terms = cache.get(k).getOrElse(cache.put(k, load))
 
-  /** Batch df lookup (one pushed-down scan in large mode). */
-  def lookup(terms: Seq[String]): Map[String, Long] = fullMap match {
-    case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
-    case None =>
-      if (terms.isEmpty) Map.empty
-      else dictDf.filter($"term".isin(terms.distinct: _*))
-        .select($"term", $"df").as[(String, Long)].collect().toMap
+  /** Term count: dict/ and prefix_dict/ hold one row per term, so it is
+    * the sum of the parquet footers' row counts. */
+  lazy val size: Long = LocalParquet.rowCount(conf, dictPath)
+
+  /** Terms held by the cache (specs assert its bound). */
+  def cachedTerms: Long = cache.held
+
+  /** term → df for the given terms that are in the dictionary. */
+  def lookup(ts: Seq[String]): Map[String, Long] = {
+    val known = ts.distinct.map(t => t -> cache.get(Term(t)))
+    val read = known.collect { case (t, None) => t }.groupBy(lenOf).flatMap { case (n, want) =>
+      val found = byLen.get(n).fold(Map.empty[String, Row])(_.rows(want, Schema))
+      want.foreach(t => cache.put(Term(t), sorted(found.get(t).toSeq)))
+      found.map { case (t, r) => t -> r.getLong(1) }
+    }
+    known.flatMap { case (t, c) => c.flatMap(_._2.headOption).map(t -> _) }.toMap ++ read
   }
 
   def contains(term: String): Boolean = lookup(Seq(term)).contains(term)
 
   /** All terms with length in [lo, hi], sorted ascending, with their
-    * dfs (parallel arrays). Cached per band (LRU). */
-  def lengthBand(lo: Int, hi: Int): (Array[String], Array[Long]) = {
-    val k = (lo, hi)
-    val hit = bandCache.get(k)
-    if (hit != null) hit
-    else {
-      val rows = fullMap match {
-        case Some(m) => m.iterator
-          .filter { case (t, _) => t.length >= lo && t.length <= hi }.toArray
-        case None => dictDf.filter($"len".between(lo, hi))
-          .select($"term", $"df").as[(String, Long)].collect()
-      }
-      val sorted = rows.sortBy(_._1)
-      val v = (sorted.map(_._1), sorted.map(_._2))
-      bandCache.put(k, v)
-      v
-    }
-  }
+    * dfs (parallel arrays). */
+  def lengthBand(lo: Int, hi: Int): (Array[String], Array[Long]) =
+    cached(Band(lo, hi))(sorted(byLen.keys.filter(n => lo <= n && n <= hi).toSeq
+      .flatMap(n => LocalParquet.readAll(conf, s"$dictPath/len=$n", Schema))))
 
-  /** (term, df) pairs with the given prefix, sorted ascending, capped at
-    * `cap` rows (the reference's MAX_PREFIX_COUNT guard,
-    * compute_derivations.rs:215 — a 1-char prefix over a web-scale
-    * vocabulary must not collect millions of terms to the driver; the
-    * cap is pushed into the scan as TakeOrdered in large-dict mode). */
+  /** (term, df) pairs with the given prefix, sorted ascending: the `cap`
+    * smallest in code-point order, the files' order. The range ends at
+    * `p` + U+10FFFF (U+FFFF would stop below every supplementary
+    * character). */
   def withPrefix(p: String, cap: Int = Int.MaxValue): Array[(String, Long)] = {
-    val k = (p, cap)
-    val hit = prefixCache.get(k)
-    if (hit != null) hit
-    else {
-      val v = fullMap match {
-        case Some(m) =>
-          val all = m.iterator.filter(_._1.startsWith(p)).toArray.sortBy(_._1)
-          if (cap < all.length) all.take(cap) else all
-        case None =>
-          val base = dictDf.filter($"term".startsWith(p)).select($"term", $"df")
-          if (cap == Int.MaxValue)
-            base.as[(String, Long)].collect().sortBy(_._1)
-          else base.orderBy($"term").limit(cap).as[(String, Long)].collect()
+    val (ts, dfs) = cached(Prefix(p, cap)) {
+      val rows = byLen.toSeq.flatMap { case (n, ix) =>
+        if (n < lenOf(p)) Nil else ix.range(p, p + MaxCodePoint, Schema, cap)
       }
-      prefixCache.put(k, v)
-      v
+      sorted(if (rows.size <= cap) rows
+        else rows.sortBy(r => Binary.fromString(r.getString(0))).take(cap))
     }
+    ts.zip(dfs)
   }
 }
 
 object TermDict {
-  /** Access-ordered, synchronized LRU with a hard entry cap: caches must
-    * not grow monotonically in a long-lived serving process. */
-  private[graft] def lru[K, V](cap: Int): java.util.Map[K, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-          this.size() > cap
-      })
+  /** A term's length as dict/'s `len` stores it and every length band
+    * bounds it: UTF-16 units (`String.length`), the unit `LevWalk` and
+    * the typo budgets count in. */
+  def lenOf(term: String): Int = term.length
 
-  /** Above this many terms the dictionary is no longer collected whole;
-    * ~2M terms ≈ tens of MB — comfortably a driver map, while real
-    * web-scale vocabularies (10^8+) route to the bucketed path. */
-  final val DefaultCollectThreshold: Long = 2L << 20
+  private val MaxCodePoint = new String(Character.toChars(Character.MAX_CODE_POINT))
 
-  /** The columns TermDict reads: dict/ and prefix_dict/ both carry
-    * them (dict/'s termId and cf are pruned). */
-  final val SchemaDdl = "term STRING, df BIGINT, len INT"
+  /** The columns TermDict reads: dict/ and prefix_dict/ both carry them
+    * (dict/'s `cf` is pruned). */
+  final val SchemaDdl = "term STRING, df BIGINT"
+  private val Schema = StructType.fromDDL(SchemaDdl)
 
-  /** LRU entry cap for the band/prefix caches. */
-  final val DefaultCacheEntries: Int = 64
+  /** A cached answer, terms sorted, and what it answers. */
+  private type Terms = (Array[String], Array[Long])
+  private sealed trait Read
+  private final case class Term(t: String) extends Read
+  private final case class Band(lo: Int, hi: Int) extends Read
+  private final case class Prefix(p: String, cap: Int) extends Read
+
+  private def sorted(rows: Seq[Row]): Terms = {
+    val s = rows.sortBy(_.getString(0))
+    (s.map(_.getString(0)).toArray, s.map(_.getLong(1)).toArray)
+  }
+
+  /** Cache cap in terms held: about 64 MB of short terms. */
+  final val DefaultCacheTerms: Int = 1 << 20
+
+  /** Access-ordered, synchronized LRU bounded by the summed `weight` of
+    * its values, so a long-lived serving process stays bounded. A value
+    * heavier than the cap is returned but not kept. */
+  private[graft] final class Lru[K, V](cap: Long, weight: V => Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+    private var total = 0L
+
+    def held: Long = synchronized(total)
+    def get(k: K): Option[V] = synchronized(Option(m.get(k)))
+    def put(k: K, v: V): V = synchronized {
+      val w = weight(v)
+      if (w <= cap) {
+        Option(m.put(k, v)).foreach(old => total -= weight(old))
+        total += w
+        val it = m.values.iterator
+        while (total > cap) { total -= weight(it.next()); it.remove() }
+      }
+      v
+    }
+  }
 }

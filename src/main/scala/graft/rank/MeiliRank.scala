@@ -138,8 +138,8 @@ final class MeiliRank(engine: SearchEngine,
 
   /** Analyze a parsed query into slots with typo-budgeted derivations.
     * ONE batched dictionary lookup covers every membership test (words,
-    * synonym expansions, split candidates, ngram merges) — in large-dict
-    * mode a single pushed-down IN scan; typo derivations come from the
+    * synonym expansions, split candidates, ngram merges) — one pruned
+    * driver read per term length; typo derivations come from the
     * Levenshtein-automaton walk (sub-linear in vocabulary). */
   def analyzeParsed(pq: ParsedQuery, lastIsPrefix: Boolean = false): Seq[Slot] = {
     // stop words are dropped as query terms (reference keeps position

@@ -41,12 +41,12 @@ final case class Hit(docId: Int, score: Double)
   * LIFETIME: an engine is a SNAPSHOT of the index at construction —
   * stats (driver-side text files) and the stop-word, tokenizer and
   * field settings (parquet read on the driver, [[graft.index.LocalParquet]])
-  * load eagerly with no Spark job; the dictionary (read on the driver
-  * below TermDict's threshold; its size comes from parquet footers) and
-  * the tombstone set load on the first search, and table listings and
-  * the doc store's footer index lazily (`tableDFs`, `docStore`,
-  * TermDict's band caches: they live and die with this snapshot). After
-  * an append, delete or facet/prefix rebuild, open a new engine (the
+  * load eagerly with no Spark job; the tombstone set loads on the first
+  * search, and table listings, the doc store's footer index and the
+  * dictionary's listing, footers and answer cache lazily (`tableDFs`,
+  * `docStore`, `td`: they live and die with this snapshot; every
+  * dictionary read is a pruned driver read, [[graft.index.TermDict]]).
+  * After an append, delete or facet/prefix rebuild, open a new engine (the
   * reference's RoTxn snapshot semantics): `DocIndex.open`, which
   * `api.Client` goes through, does so when `Lineage.generation` or a
   * derived marker moves. A held instance is never refreshed.
@@ -59,10 +59,9 @@ final case class Hit(docId: Int, score: Double)
   * documents are read on the driver, [[docRows]]); JobBudgetSpec holds
   * these. A fresh engine costs 0 jobs to open, and its first `searchDF`
   * on a tombstoned index 1 (the dictionary and the tombstone set are
-  * read on the driver). A request filter adds its own broadcast; only
-  * a filter naming `len` joins doclen/
-  * ([[filteredDocs]]). For a latency-sensitive service, run the query
-  * session with
+  * read on the driver). A request filter adds its own broadcast; only a
+  * filter naming `len` joins doclen/ ([[filteredDocs]]). For a
+  * latency-sensitive service, run the query session with
   * `spark.sql.adaptive.enabled=false`: these plans are pruned scans +
   * broadcast joins with nothing for AQE to re-plan, and each AQE
   * exchange otherwise materializes as an extra driver round trip
@@ -87,9 +86,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   val termBuckets: Int = manifest.termBuckets
   val docsPerShard: Int = manifest.docsPerShard
 
-  /** Dictionary access: full in-memory map below TermDict's threshold,
-    * predicate-pushdown bucketed loads (length bands, prefixes, IN
-    * lists) above it — the driver never holds a web-scale vocabulary. */
+  /** Dictionary access: exact terms, length bands and prefixes, each a
+    * pruned driver-side read of dict/. */
   val td = new graft.index.TermDict(spark, s"$indexDir/dict")
 
   /** Index-time stop-word setting (empty when unset); stop terms are
@@ -133,11 +131,6 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   /** fid → weight for multi-field indexes; empty for single-field. Lower
     * weight = more important field (reference fieldids_weights_map). */
   val fieldWeights: Map[Int, Int] = fields.map(f => f._1 -> f._3).toMap
-
-  /** Small-mode convenience view (tests, tooling). Throws above the
-    * TermDict threshold by design — engine paths use `td`. */
-  lazy val dict: Map[String, Long] = td.fullMap.getOrElse(
-    throw new IllegalStateException("dictionary too large to collect; use td"))
 
   /** Tombstoned docids (IndexBuild.delete): every read path excludes
     * them — postings/positions of deleted docs remain on disk until
@@ -194,7 +187,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   /** docs/ keyed by docId for [[docRows]]: its footer index is read on
     * the first fetch and lives as long as this snapshot. */
   @transient private lazy val docStore =
-    new graft.index.LocalParquet.KeyIndex(hadoopConf, s"$indexDir/docs", "docId")
+    new graft.index.LocalParquet.KeyIndex[Int](hadoopConf, s"$indexDir/docs", "docId")
 
   /** Live doc store WITHOUT the derived `len` column — the cheap view
     * for paths that don't need the BM25 norm. */
@@ -233,13 +226,12 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
 
   /** Dictionary-resolved QueryTerms for already-tokenized terms. */
   def termsOf(ts: Seq[String]): Seq[QueryTerm] = {
-    val dts = ts.distinct
-    val dfs = td.lookup(dts)
-    dts.flatMap { t =>
-      dfs.get(t).map(df =>
-        QueryTerm(t, df, BM25.idf(df, nDocs), IndexBuild.bucketOf(t, termBuckets)))
-    }
+    val dfs = td.lookup(ts)
+    ts.distinct.flatMap(t => dfs.get(t).map(queryTerm(t, _)))
   }
+
+  private def queryTerm(t: String, df: Long) =
+    QueryTerm(t, df, BM25.idf(df, nDocs), IndexBuild.bucketOf(t, termBuckets))
 
   /** Query analysis: quoted phrases and `-` negatives are parsed from
     * the query string (reference parse_query.rs:25-192); all positive
@@ -552,17 +544,12 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
 
   // ---- precomputed prefix tables (IndexBuild.buildPrefixIndex) --------
 
-  /** Selection dictionary of materialized prefixes (None when the index
-    * has no prefix tables). */
-  lazy val prefixDict: Option[graft.index.TermDict] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/prefix_dict")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(new graft.index.TermDict(spark, s"$indexDir/prefix_dict"))
-    else None
-  }
+  /** Selection dictionary of materialized prefixes (empty when the
+    * index has no prefix tables). */
+  lazy val prefixDict = new graft.index.TermDict(spark, s"$indexDir/prefix_dict")
 
   /** True iff `p` has a materialized merged posting list. */
-  def prefixIndexed(p: String): Boolean = prefixDict.exists(_.contains(p))
+  def prefixIndexed(p: String): Boolean = prefixDict.contains(p)
 
   /** (term=prefix, docId) rows of a PRECOMPUTED prefix — the union of
     * all member terms' docids, read as ordinary posting blocks (one
@@ -576,13 +563,9 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     decoded(Seq(prefixTerm(p)), table = "prefixes")
       .toDF().select($"term", $"docId")
 
-  /** The routing QueryTerm of a precomputed prefix: df comes from
-    * prefix_dict, so downstream broadcast/WAND cost screens see the
-    * prefix's real weight (a df=0 slot always looked broadcast-cheap). */
-  def prefixTerm(p: String): QueryTerm = {
-    val df = prefixDict.flatMap(_.lookup(Seq(p)).get(p)).getOrElse(0L)
-    QueryTerm(p, df, BM25.idf(df, nDocs), IndexBuild.bucketOf(p, termBuckets))
-  }
+  /** The routing QueryTerm of a precomputed prefix, its df from
+    * prefix_dict (a df=0 slot always looked broadcast-cheap). */
+  def prefixTerm(p: String): QueryTerm = queryTerm(p, prefixDict.lookup(Seq(p)).getOrElse(p, 0L))
 
   /** Exploded (docId, pos) rows of a precomputed prefix (merged member
     * positions; fid restriction as in [[positionRows]]). */
@@ -640,31 +623,24 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     candidates(q).join(negDocs, Seq("docId"), "left_anti")
   }
 
-  /** Prefix expansion: dictionary terms starting with `prefix`
-    * (reference on-the-fly word-range scan, compute_derivations.rs:45-78)
-    * — a pushed-down range load in large-dict mode, capped at `cap`
-    * terms (reference MAX_PREFIX_COUNT, compute_derivations.rs:215;
-    * prefixes hot enough to overflow the cap should be served by the
-    * precomputed tables instead — see [[prefixDocs]]). */
+  /** Prefix expansion: the first `cap` dictionary terms starting with
+    * `prefix`, a pruned range read of dict/ (reference on-the-fly
+    * word-range scan, compute_derivations.rs:45-78, capped at
+    * MAX_PREFIX_COUNT, :215; prefixes hot enough to overflow the cap
+    * should be served by the precomputed tables, [[prefixDocs]]). */
   def prefixTerms(prefix: String,
                   cap: Int = SearchEngine.MaxPrefixCount): Seq[String] =
     td.withPrefix(Tokenizer.normalize(prefix), cap).map(_._1).toSeq
 
-  /** Docs matching any dictionary term with the prefix, with the count
-    * of distinct matched terms. Term enumeration is capped like
-    * [[prefixTerms]] (MAX_PREFIX_COUNT); a workload needing unbounded
-    * prefix coverage should use the precomputed tables ([[prefixDocs]])
-    * instead of enumerating. */
-  def prefixSearch(prefix: String,
-                   cap: Int = SearchEngine.MaxPrefixCount): DataFrame = {
-    val ts = td.withPrefix(Tokenizer.normalize(prefix), cap).map { case (t, df) =>
-      QueryTerm(t, df, BM25.idf(df, nDocs), IndexBuild.bucketOf(t, termBuckets))
-    }.toSeq
-    if (ts.isEmpty) return spark.range(0)
-      .select($"id".cast("int").as("docId"), lit(0L).as("nTerms"))
-    decoded(ts).toDF().groupBy($"docId")
-      .agg(countDistinct($"term").as("nTerms"))
-  }
+  /** Docs matching any of [[prefixTerms]], with the count of distinct
+    * matched terms. */
+  def prefixSearch(prefix: String, cap: Int = SearchEngine.MaxPrefixCount): DataFrame =
+    termDocs(td.withPrefix(Tokenizer.normalize(prefix), cap).toSeq.map((queryTerm _).tupled))
+
+  /** Docs matching any of `ts`, with the count of distinct matched terms. */
+  private def termDocs(ts: Seq[QueryTerm]): DataFrame =
+    if (ts.isEmpty) spark.range(0).select($"id".cast("int").as("docId"), lit(0L).as("nTerms"))
+    else decoded(ts).toDF().groupBy($"docId").agg(countDistinct($"term").as("nTerms"))
 
   /** Typo expansion: dictionary (term, distance) pairs within `maxDist`
     * edits (reference Levenshtein-DFA ∩ words-FST,
@@ -678,19 +654,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     LevWalk(terms, w, maxDist)
   }
 
-  def typoTerms(word: String, maxDist: Int): Seq[String] =
-    typoCandidates(word, maxDist).map(_._1)
-
-  def typoSearch(word: String, maxDist: Int): DataFrame = {
-    val matched = typoTerms(word, maxDist)
-    val dfs = td.lookup(matched)
-    val ts = matched.map(t =>
-      QueryTerm(t, dfs(t), BM25.idf(dfs(t), nDocs), IndexBuild.bucketOf(t, termBuckets)))
-    if (ts.isEmpty) return spark.range(0)
-      .select($"id".cast("int").as("docId"), lit(0L).as("nTerms"))
-    decoded(ts).toDF().groupBy($"docId")
-      .agg(countDistinct($"term").as("nTerms"))
-  }
+  def typoSearch(word: String, maxDist: Int): DataFrame =
+    termDocs(termsOf(typoCandidates(word, maxDist).map(_._1)))
 
   /** Adjacent-pair doc counts for MANY (left, right) word pairs in ONE
     * job (reference split_best_frequency consults the pair-proximity-1

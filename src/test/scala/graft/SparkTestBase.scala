@@ -21,6 +21,12 @@ object SparkTestBase {
     s
   }
 
+  /** term → df of a dict/ or prefix_dict/ table, read by Spark: the
+    * reference TermDict's driver reads are checked against. */
+  def dictRows(dir: String): Map[String, Long] =
+    spark.read.schema(graft.index.TermDict.SchemaDdl).parquet(dir)
+      .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
   /** Temp directories of a suite, deleted with their trees after the
     * suite, so repeated runs do not fill the temp filesystem. */
   trait TempDirs extends BeforeAndAfterAll { this: Suite =>

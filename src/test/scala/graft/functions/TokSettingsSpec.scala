@@ -54,7 +54,7 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     val e = new SearchEngine(spark, dir)
     assert(e.tokSettings == settings, "settings persisted and loaded")
     // index side: 'foo-bar' is ONE term; 'fooxbar' split to foo|bar
-    assert(e.dict.contains("foo-bar") && !e.dict.contains("fooxbar"))
+    assert(e.td.contains("foo-bar") && !e.td.contains("fooxbar"))
     // query side segments the same way: "foo-bar" matches only doc 0
     val hyph = e.searchDF("foo-bar", 10).collect().map(_.getInt(0)).toSet
     assert(hyph == Set(0), s"$hyph")
@@ -141,8 +141,9 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     val e = new SearchEngine(spark, dir)
     assert(e.tokSettings == st, s"${e.tokSettings}")
     // fid 0 is locale-en: the Han run indexed whole, not unigrams
-    assert(e.dict.contains("北京") && !e.dict.contains("北"), s"${e.dict.keySet}")
-    assert(e.dict.contains("foo") && !e.dict.contains("fooxxbar"))
+    assert(e.td.contains("北京") && !e.td.contains("北"),
+      s"${SparkTestBase.dictRows(s"${e.indexDir}/dict").keySet}")
+    assert(e.td.contains("foo") && !e.td.contains("fooxxbar"))
     val hits = e.searchDF("foo", 10).collect().map(_.getInt(0)).toSet
     assert(hits == Set(0, 1), s"$hits")
     // dump roundtrip carries both new settings
@@ -152,7 +153,7 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     Dump.importDump(spark, dumpDir, dir2, IndexConfig(numPartitions = 2))
     val e2 = new SearchEngine(spark, dir2)
     assert(e2.tokSettings == st, s"${e2.tokSettings}")
-    assert(e2.dict.contains("北京") && !e2.dict.contains("北"))
+    assert(e2.td.contains("北京") && !e2.td.contains("北"))
   }
 
   test("index-level cjkUnigrams override persists; locale hint applies " +
@@ -169,8 +170,9 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
         numPartitions = 2, positions = false,
         tokenizer = Tokenizer.TokSettings(localesByFid = Map(0 -> "en"))))
     val e = new SearchEngine(spark, dir)
-    assert(e.dict.contains("北京") && !e.dict.contains("北"),
-      s"non-positions build must honor forFid(0): ${e.dict.keySet}")
+    assert(e.td.contains("北京") && !e.td.contains("北"),
+      s"non-positions build must honor forFid(0): " +
+        s"${SparkTestBase.dictRows(s"${e.indexDir}/dict").keySet}")
     // the single-field query side resolves the same hint: the whole-run
     // query term matches, the unigram segmentation would not
     assert(e.searchDF("北京", 10).collect().map(_.getInt(0)).toSet == Set(0))
@@ -182,7 +184,7 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
         numPartitions = 2, positions = false, tokenizer = off))
     val e2 = new SearchEngine(spark, dir2)
     assert(e2.tokSettings == off, s"${e2.tokSettings}")
-    assert(e2.dict.contains("北京") && !e2.dict.contains("北"))
+    assert(e2.td.contains("北京") && !e2.td.contains("北"))
     // and through a dump
     val dumpDir = tempDir("tokcjkdump")
     val dir3 = tempDir("tokcjk3")
@@ -206,7 +208,7 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
         numPartitions = 2, positions = true,
         tokenizer = Tokenizer.TokSettings(localesByFid = Map(0 -> "en"))))
     val e = new SearchEngine(spark, dir)
-    assert(e.dict.contains("北京") && !e.dict.contains("北"))
+    assert(e.td.contains("北京") && !e.td.contains("北"))
     val idx = new Index(e)
     // multi-field default (auto): the query unigram-splits to 北|京 and
     // only the NGRAM-MERGE derivation (cost n-1 = 1, reference query
@@ -345,8 +347,8 @@ class TokSettingsSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       "lang", "source", dir, cfg)
     val e = new graft.search.SearchEngine(spark, dir)
     // the index holds WORD tokens, not the whole phrase run
-    assert(e.dict.contains(Tokenizer.normalize("แมว")))
-    assert(!e.dict.contains(Tokenizer.normalize("แมวกินปลา")))
+    assert(e.td.contains(Tokenizer.normalize("แมว")))
+    assert(!e.td.contains(Tokenizer.normalize("แมวกินปลา")))
     // query side segments the same unspaced run with the same dictionary
     assert(e.searchDF("แมว", 5).collect().map(_.getInt(0)).toSet == Set(0, 1))
     assert(e.searchDF("แมวกินปลา", 5).collect().map(_.getInt(0)).head == 0)

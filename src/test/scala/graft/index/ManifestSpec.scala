@@ -167,7 +167,7 @@ class ManifestSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     assert(ids(e.searchDF("\"quick brown\"", 10)) == Set(8))
     assert(ids(e.phrase(Seq("quick", "brown"))) == Set(8))
     assert(ids(new MeiliRank(e).search("quick brown", 10)) == Set(8))
-    assert(!e.dict.contains("the"), "a stop word must stay out of dict/")
+    assert(!e.td.contains("the"), "a stop word must stay out of dict/")
   }
 
   test("buildPrefixIndex with settings other than the manifest's is refused; with the build's, every doc is found") {

@@ -64,7 +64,7 @@ class ResumeSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     IndexBuild.append(spark, delta, dir, cfg, "b1")
 
     val e = new SearchEngine(spark, dir)
-    assert(e.dict("zulu") == 4, "delta term df counted exactly once")
+    assert(e.td.lookup(Seq("zulu")) == Map("zulu" -> 4L), "delta term df counted exactly once")
     assert(e.nDocs == 12, "the batch's stats delta counted exactly once")
     assert(e.searchDF("zulu", 10).collect().length == 4)
   }

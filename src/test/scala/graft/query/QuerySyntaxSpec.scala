@@ -178,7 +178,7 @@ class QuerySyntaxSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
         numPartitions = 2, positions = true, stopWords = Set("the", "over")))
     val e = new SearchEngine(spark, dir)
     assert(e.stopWords == Set("over", "the"))
-    assert(!e.dict.contains("the"), "stop word must not be indexed")
+    assert(!e.td.contains("the"), "stop word must not be indexed")
     // len still counts stop words (doc 1 'the quick brown fox' = 4)
     assert(e.docs.where($"docId" === 1).select($"len").as[Int].head() == 4)
     // query containing the stop word behaves like the query without it

@@ -41,7 +41,7 @@ class MultiFieldSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     // that kept it would match and rank by a term no posting list has
     val e = multiField(stopWords = Set("the"))
     assert(e.stopWords == Set("the"))
-    assert(!e.dict.contains("the"))
+    assert(!e.td.contains("the"))
     val m = new MeiliRank(e)
     def rows(q: String) = m.search(q, 10).collect().map(_.toSeq).toSeq
     assert(rows("pasta").nonEmpty)
@@ -53,7 +53,7 @@ class MultiFieldSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     // doc 2 has 'pasta' in both fields: tf 2, len 2
     val d2 = engine.docs.where($"docId" === 2).select($"len").as[Int].head()
     assert(d2 == 2)
-    assert(engine.dict("pasta") == 4, "df counts docs, not fields")
+    assert(engine.td.lookup(Seq("pasta")) == Map("pasta" -> 4L), "df counts docs, not fields")
   }
 
   test("fid rule: title match outranks body match, weights reorder results") {

@@ -156,7 +156,7 @@ class DocFetchSpec extends AnyFunSuite with SparkTestBase.TempDirs {
 
   test("the driver-side reader refuses a column type it cannot read before opening a file") {
     val conf = spark.sparkContext.hadoopConfiguration
-    val err = intercept[IllegalArgumentException](new LocalParquet.KeyIndex(conf,
+    val err = intercept[IllegalArgumentException](new LocalParquet.KeyIndex[Int](conf,
       "/nonexistent-docfetch", "docId").rows(Seq(1), StructType.fromDDL("docId INT, score DOUBLE")))
     assert(err.getMessage.contains("'score' has type double"))
     assert(LocalParquet.readAll(conf, "/nonexistent-docfetch", StructType.fromDDL("a INT")).isEmpty)

@@ -9,7 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkTestBase
 import graft.api.{Index, SearchRequest}
 import graft.corpus.SourceFile
-import graft.index.{Dump, IndexBuild, IndexConfig}
+import graft.index.{Dump, IndexBuild, IndexConfig, LocalParquet, TermDict}
 import graft.ops.Similarity
 import graft.rank.MeiliRank
 
@@ -161,6 +161,41 @@ class JobBudgetSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       assert(e.stopWords == Set("lazy") && e.fields.map(_._2) == Seq("title", "body") &&
         e.tokSettings.nonSeparatorTokens == Set('#'), "manifest settings were not loaded")
       assert(steadyJobs(new SearchEngine(spark, withSettings)) == 0, "settings index")
+    }
+  }
+
+  /** Bytes the driver's local file system read while `body` ran (its
+    * Hadoop statistics; nothing else reads meanwhile). Vectored reads
+    * bypass those counters, so they are off while `body` runs. */
+  private def bytesRead(body: => Any): Long = {
+    import scala.jdk.CollectionConverters._
+    @annotation.nowarn("cat=deprecation")
+    def total = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = "parquet.hadoop.vectored.io.enabled"
+    val prev = Option(conf.get(key))
+    conf.set(key, "false")
+    try {
+      val before = total
+      body
+      total - before
+    } finally prev.fold(conf.unset(key))(conf.set(key, _))
+  }
+
+  test("dictionary reads on a fresh TermDict run no Spark job, and an exact lookup prunes") {
+    withoutAqe {
+      val dictDir = s"$dir/dict"
+      def fresh = new TermDict(spark, dictDir)
+      assert(steadyJobs(fresh.lookup(Seq("alpha", "stream", "nosuchterm"))) == 0, "lookup")
+      assert(steadyJobs(fresh.lengthBand(4, 6)) == 0, "lengthBand")
+      assert(steadyJobs(fresh.withPrefix("wo", 3)) == 0, "withPrefix")
+      assert(steadyJobs(fresh.size) == 0, "size")
+      val whole = LocalParquet.dataFiles(spark.sparkContext.hadoopConfiguration, dictDir)
+        .map(_.getLen).sum
+      val exact = bytesRead(assert(fresh.lookup(Seq("alpha")).contains("alpha")))
+      info(s"exact lookup read $exact of dict/'s $whole bytes")
+      assert(exact > 0 && exact < whole, s"exact lookup read $exact of $whole bytes")
     }
   }
 

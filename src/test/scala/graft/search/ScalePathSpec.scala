@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions.col
 
 import graft.SparkTestBase
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuild, IndexConfig, TermDict}
+import graft.corpus.SourceFile
+import graft.index.{IndexBuild, IndexConfig, LocalParquet, TermDict}
+import graft.SparkTestBase.dictRows
 
 /** Specs for the scale-path mechanics: the Levenshtein-automaton walk
-  * (sub-linear typo expansion), the bucketed dictionary loader, and the
+  * (sub-linear typo expansion), the pruned dictionary reads, and the
   * cost-gated BM25 join (no posting broadcast above the Σdf cap). */
 class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
@@ -48,7 +50,7 @@ class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     assert(res.size == naive)
   }
 
-  // ---- TermDict bucketed mode -------------------------------------------
+  // ---- TermDict: pruned driver reads ------------------------------------
 
   lazy val dictIdx: String = {
     val dir = tempDir("tdspec")
@@ -58,24 +60,67 @@ class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     dir
   }
 
-  test("TermDict bucketed mode (no full collect) equals small mode") {
-    val small = new TermDict(spark, s"$dictIdx/dict")
-    val big = new TermDict(spark, s"$dictIdx/dict", collectThreshold = 0)
-    assert(big.fullMap.isEmpty, "above threshold the dict must not be collected")
-    val m = small.fullMap.get
-    val probe = m.keys.take(5).toSeq :+ "notaterm"
-    assert(big.lookup(probe) == small.lookup(probe))
-    val (bt, bd) = big.lengthBand(4, 7)
-    val (st, sd) = small.lengthBand(4, 7)
-    assert(bt.toSeq == st.toSeq && bd.toSeq == sd.toSeq)
-    assert(bt.forall(t => t.length >= 4 && t.length <= 7))
-    assert(big.withPrefix("re").toSeq == small.withPrefix("re").toSeq)
+  private def gothic(i: Int) = new String(Character.toChars(0x10330 + i))
+
+  // lookup, lengthBand and withPrefix with and without a cap
+  test("TermDict reads equal a Spark read of multi-row-group dict/") {
+    val rnd = new scala.util.Random(5)
+    val latin = Seq.fill(60000)((1 to 3 + rnd.nextInt(6)).map(_ => ('a' + rnd.nextInt(8)).toChar).mkString)
+    val supp = Seq.fill(300)((1 to 2 + rnd.nextInt(3)).map(_ => gothic(rnd.nextInt(27))).mkString)
+    val words = (latin ++ supp).distinct
+    val dir = tempDir("tdrows") + "/dict"
+    IndexBuild.writeTerms(words.zipWithIndex.map { case (t, i) => (t, (i % 97 + 1).toLong) }
+      .toDF("term", "df").repartition(2, $"term"), dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rowGroups = LocalParquet.dataFiles(conf, dir).map { s =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(rowGroups.max >= 3, s"row groups per file: $rowGroups")
+    // len is the UTF-16 length, for supplementary-plane terms too
+    assert(spark.read.parquet(dir).select("term", "len").as[(String, Int)].collect()
+      .forall { case (t, n) => n == t.length })
+    val ref = dictRows(dir)
+    val td = new TermDict(spark, dir)
+    assert(td.size == ref.size)
+    val probe = ref.keys.toSeq.sorted.grouped(97).map(_.head).toSeq ++ supp.take(20) ++
+      Seq("hhhhhhhhh", "zz", gothic(3) * 5, "a" + gothic(1))
+    assert(td.lookup(probe) == ref.filter { case (t, _) => probe.contains(t) })
+    for ((lo, hi) <- Seq((3, 3), (4, 7), (1, 2), (0, 100), (9, 12))) {
+      val want = ref.toSeq.filter { case (t, _) => lo <= t.length && t.length <= hi }.sortBy(_._1)
+      val (ts, dfs) = td.lengthBand(lo, hi)
+      assert(ts.toSeq == want.map(_._1) && dfs.toSeq == want.map(_._2), s"band [$lo, $hi]")
+    }
+    for (p <- Seq("a", "hg", "bcd", "z", gothic(2), gothic(2) + gothic(4));
+         cap <- Seq(Int.MaxValue, 1, 25)) {
+      val want = ref.toSeq.filter(_._1.startsWith(p))
+        .sortBy(t => org.apache.parquet.io.api.Binary.fromString(t._1)).take(cap).sortBy(_._1)
+      assert(td.withPrefix(p, cap).toSeq == want, s"prefix '$p' cap $cap")
+    }
+  }
+
+  test("a supplementary-plane term sits in its UTF-16 length band on every route") {
+    // 4 Gothic letters: 8 UTF-16 units, one wrong letter is 1 edit
+    val term = (0 until 4).map(gothic).mkString
+    val typo = (0 until 3).map(gothic).mkString + gothic(9)
+    val dir = tempDir("gothic")
+    IndexBuild.build(spark, Seq(SourceFile("r0", "a.txt", "c0", "text", s"$term alpha"),
+      SourceFile("r1", "b.txt", "c1", "text", "alpha beta")).toDS(), dir,
+      IndexConfig(docsPerShard = 8, termBuckets = 2, blockSize = 4, numPartitions = 2))
+    val e = new SearchEngine(spark, dir)
+    assert(e.td.contains(term))
+    assert(e.typoCandidates(typo, 1).map(_._1) == Seq(term))
+    // the old threshold argument names the same one route
+    val viaThreshold = new TermDict(spark, s"$dir/dict", collectThreshold = 0)
+    assert(viaThreshold.lengthBand(typo.length - 1, typo.length + 1)._1.toSeq == Seq(term))
+    assert(viaThreshold.withPrefix(gothic(0)).toSeq == Seq(term -> 1L))
   }
 
   test("typo and prefix engine paths work against the bucketed dict") {
     val e = new SearchEngine(spark, dictIdx)
     val viaWalk = e.typoCandidates("retur", 1).map(_._1).toSet
-    val naive = e.dict.keys.filter(t => Levenshtein("retur", t) <= 1).toSet
+    val naive = dictRows(s"$dictIdx/dict").keys.filter(t => Levenshtein("retur", t) <= 1).toSet
     assert(viaWalk == naive)
   }
 
@@ -195,7 +240,7 @@ class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     val e = new SearchEngine(spark, dictIdx)
     assert(e.prefixIndexed("re"), "a hot 2-char prefix must be materialized")
     // merged prefix docids == union over member terms' posting lists
-    val members = e.td.fullMap.get.keys.filter(_.startsWith("re")).toSeq
+    val members = dictRows(s"$dictIdx/dict").keys.filter(_.startsWith("re")).toSeq
     assert(members.size >= 2)
     val expect = members.flatMap(t =>
       e.decoded(e.termsOf(Seq(t))).collect().map(_.docId)).toSet
@@ -233,13 +278,11 @@ class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
           r.getAs[Int]("typoCost"), r.getAs[Int]("proxCost"),
           r.getAs[Int]("posCost"), r.getAs[Double]("rankingScore"))).toSeq
     assert(rows(mr) == rows(mr2))
-    // on-the-fly fallback is capped (MAX_PREFIX_COUNT analogue), and the
-    // cap is honored by the dictionary loader in both modes
+    // on-the-fly fallback is capped (MAX_PREFIX_COUNT analogue): the
+    // smallest `cap` terms with the prefix
     val e2 = new SearchEngine(spark, dir2)
-    assert(e2.prefixTerms("r", cap = 3).size == 3)
-    val big = new TermDict(spark, s"$dir2/dict", collectThreshold = 0)
-    assert(big.withPrefix("r", 3).toSeq ==
-      new TermDict(spark, s"$dir2/dict").withPrefix("r", 3).toSeq)
+    assert(e2.prefixTerms("r", cap = 3) ==
+      dictRows(s"$dir2/dict").keys.filter(_.startsWith("r")).toSeq.sorted.take(3))
   }
 
   test("prefix tables refresh after append (fingerprint-gated, not lineage-frozen)") {
@@ -260,7 +303,7 @@ class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     val after = new SearchEngine(spark, dir)
     val got = after.prefixDocs("re").select($"docId").as[Int].collect().toSet
     // merged list covers the appended docs too (== fresh union)
-    val want = after.td.fullMap.get.keys.filter(_.startsWith("re")).toSeq
+    val want = dictRows(s"$dir/dict").keys.filter(_.startsWith("re")).toSeq
       .flatMap(t => after.decoded(after.termsOf(Seq(t))).collect().map(_.docId)).toSet
     assert(got == want, s"stale prefix table: ${want -- got} missing")
     assert(got.size > beforeDocs, "appended docs must join the merged list")
@@ -281,16 +324,28 @@ class ScalePathSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   }
 
   test("TermDict caches are LRU-bounded with unchanged lookup results") {
-    val td = new TermDict(spark, s"$dictIdx/dict", cacheEntries = 2)
+    val cap = 300
+    val td = new TermDict(spark, s"$dictIdx/dict", cacheTerms = cap)
     val fresh = new TermDict(spark, s"$dictIdx/dict")
-    val prefixes = Seq("re", "im", "pa", "so", "re") // 4 distinct > cap, then re-hit
+    val prefixes = Seq("re", "im", "pa", "so", "re") // 4 distinct, then a re-hit
     prefixes.foreach { p =>
       assert(td.withPrefix(p).toSeq == fresh.withPrefix(p).toSeq,
         s"evicted-and-reloaded prefix '$p' must return identical results")
     }
     td.lengthBand(3, 5); td.lengthBand(4, 6); td.lengthBand(5, 7)
-    assert(td.cacheSizes._1 <= 2 && td.cacheSizes._2 <= 2,
-      s"caches must stay under the cap: ${td.cacheSizes}")
+    val probe = dictRows(s"$dictIdx/dict").keys.toSeq.sorted.take(400) :+ "notaterm"
+    assert(td.lookup(probe) == fresh.lookup(probe))
+    assert(td.cachedTerms > 0 && td.cachedTerms <= cap,
+      s"cache must stay under the cap: ${td.cachedTerms}")
     assert(td.lengthBand(3, 5)._1.toSeq == fresh.lengthBand(3, 5)._1.toSeq)
+    // two clients on one dictionary get the serial answers
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val work = (1 to 20).map(j => (probe.slice(j * 10, j * 10 + 30), prefixes(j % 4)))
+    def answer(d: TermDict) = work.map { case (ts, p) => (d.lookup(ts), d.withPrefix(p, 5).toSeq) }
+    val want = answer(fresh)
+    Seq.fill(2)(Future(answer(td))).foreach(f => assert(Await.result(f, 2.minutes) == want))
+    assert(td.cachedTerms <= cap)
   }
 }
