@@ -369,9 +369,10 @@ final class MeiliRank(engine: SearchEngine,
     * candidate set the cascade ranks. Slots empty / derivation-free →
     * empty perDoc.
     *
-    * ONE exchange for the whole candidate computation: match rows and
-    * (optionally) position rows union into a single tagged stream that
-    * ONE groupBy(docId) collects; per-slot minima/maxima and the words
+    * ONE exchange for the whole candidate computation: match rows,
+    * (optionally) position rows and the query syntax's tagged rows
+    * union into a single stream that ONE groupBy(docId) collects, over
+    * `engine.exchangeWidth(Σdf)` reducers; per-slot minima/maxima and the words
     * rank are array expressions over the collected rows inside
     * whole-stage codegen. The previous shape paid two (docId, slot)
     * pre-aggregations, a (docId) aggregation, a separate (docId)
@@ -413,24 +414,29 @@ final class MeiliRank(engine: SearchEngine,
           .select($"docId", $"slot", lit(null).cast("int").as("cost"),
             lit(null).cast("int").as("exact"), MeiliRank.NoLen, $"pos"))
     // quoted phrases / negatives restrict the universe (docId level),
-    // under the SAME field restriction as slot matching
-    val (phraseDocs, negDocs) = engine.syntaxDocs(pq, searchOnFids)
-    val rows1 = phraseDocs.fold(rows0)(p =>
-      rows0.join(p.select($"docId"), Seq("docId"), "left_semi"))
-    val rows = negDocs.fold(rows1)(nd =>
-      rows1.join(nd, Seq("docId"), "left_anti"))
+    // under the SAME field restriction as slot matching: their tagged
+    // rows ride the same stream (slot null)
+    val syn = engine.syntaxRows(pq, searchOnFids)
+    // the exchange is sized by the Σdf of every term a slot reads (a
+    // term shared by slots counts once per slot, like its rows), the
+    // precomputed prefixes' df and the negative terms' df
+    val slotTerms = slots.flatMap(s => s.derivations.map(_._1) ++ s.phraseDerivs.flatMap(_._1))
+    val dfs = engine.td.lookup(slotTerms.distinct)
+    val width = engine.exchangeWidth(slotTerms.map(dfs.getOrElse(_, 0L)).sum +
+      slots.flatMap(_.prefixDerivs).map(engine.prefixTerm(_).df).sum + syn.negDf)
+    val rows = syn.under(rows0).repartition(width, $"docId")
 
-    // collect_list skips null entries, so the two row families split
-    // back apart inside the single aggregation; `len` is the doc's own
-    // on every row that carries one (max skips the nulls)
+    // collect_list skips null entries, so the row families split back
+    // apart inside the single aggregation; `len` is the doc's own on
+    // every row that carries one (max skips the nulls)
     val aggCols =
-      collect_list(when($"pos".isNull,
+      collect_list(when($"pos".isNull && $"slot".isNotNull,
         struct($"kpos", $"cost", $"exact"))).as("m") +:
       max($"len").as("len") +:
-      (if (withPositions)
+      ((if (withPositions)
         Seq(collect_list(when($"pos".isNotNull,
           struct($"slot", $"pos"))).as("sp"))
-      else Nil)
+      else Nil) ++ syn.tags)
     def perKpos(i: Int, f: Column => Column): Column =
       f(filter($"m", x => x.getField("kpos") === i))
     // words rank: longest fully-matched prefix in keep order; typo /
@@ -442,7 +448,7 @@ final class MeiliRank(engine: SearchEngine,
         aggregate(sequence(lit(0), lit(n - 1)), lit(0),
           (acc, i) => when(acc === i &&
             exists($"m", x => x.getField("kpos") === i), acc + 1).otherwise(acc)))
-      .filter($"wordsRank" >= 1)
+      .filter($"wordsRank" >= 1 && syn.admits)
       .withColumn("typoCost",
         (0 until n).map(i => when(lit(i) < $"wordsRank",
           coalesce(perKpos(i, a => array_min(transform(a, _.getField("cost")))),
@@ -451,7 +457,7 @@ final class MeiliRank(engine: SearchEngine,
         (0 until n).map(i => when(lit(i) < $"wordsRank",
           coalesce(perKpos(i, a => array_max(transform(a, _.getField("exact")))),
             lit(0))).otherwise(lit(0))).reduce(_ + _))
-      .drop("m")
+      .drop("m", "syn")
     val perDoc = strategy match {
       case TermsMatching.All => perDoc0.filter($"wordsRank" === n)
       case _ => perDoc0

@@ -16,6 +16,26 @@ final case class Posting(docId: Int, term: String, tf: Int)
 /** Top-k search result row. */
 final case class Hit(docId: Int, score: Double)
 
+/** A query's universe restrictions as tagged (docId, syn) rows
+  * ([[SearchEngine.syntaxRows]]): a plan unions them [[under]] its
+  * posting rows, collects each doc's [[tags]] in its per-doc aggregate
+  * and keeps the docs the tags [[admits]]. `negDf` is the negative
+  * terms' Σdf, which the rows add to the exchange. */
+private[graft] final case class SyntaxRows(rows: Option[DataFrame], phrases: Int, negDf: Long) {
+  /** `df` plus the tagged rows, each side's missing columns null. */
+  def under(df: DataFrame): DataFrame =
+    rows.fold(df)(r => df.unionByName(r, allowMissingColumns = true))
+
+  /** The aggregate column of a doc's distinct tags (none without rows). */
+  def tags: Seq[Column] = rows.map(_ => collect_set(col("syn")).as("syn")).toSeq
+
+  /** Every phrase and no negative among the doc's tags. */
+  def admits: Column =
+    if (rows.isEmpty) lit(true)
+    else (1 to phrases).foldLeft(!array_contains(col("syn"), -1))((ok, i) =>
+      ok && array_contains(col("syn"), i))
+}
+
 /** The read side: BM25 top-k ranked retrieval over the index written by
   * [[graft.index.IndexBuild]] (Spark-first re-expression of the
   * reference's search path, crates/milli/src/search/new/mod.rs: universe
@@ -60,7 +80,14 @@ final case class Hit(docId: Int, score: Double)
   * these. A fresh engine costs 0 jobs to open, and its first `searchDF`
   * on a tombstoned index 1 (the dictionary and the tombstone set are
   * read on the driver). A request filter adds its own broadcast; only a
-  * filter naming `len` joins doclen/ ([[filteredDocs]]). For a
+  * filter naming `len` joins doclen/ ([[filteredDocs]]). Each
+  * posting-keyed aggregate runs [[exchangeWidth]](Σdf) reducers,
+  * ⌈Σdf / PostingsPerReducer⌉ clamped to [1, the session's
+  * `spark.sql.shuffle.partitions`], not the session's build-sized
+  * width: on ExchangeWidthSpec's 40-doc index a call costs the same
+  * tasks at widths 4 and 200 (`searchDF` 3, `searchWand` 3, a cascade
+  * page 9), where a session-wide exchange ran one reducer per
+  * partition of the session width. For a
   * latency-sensitive service, run the query session with
   * `spark.sql.adaptive.enabled=false`: these plans are pruned scans +
   * broadcast joins with nothing for AQE to re-plan, and each AQE
@@ -239,35 +266,37 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   def analyze(q: String): Seq[QueryTerm] =
     termsOf(parseQuery(q).positiveTerms)
 
-  /** Universe restrictions implied by query syntax: docs that contain
-    * every quoted phrase (semi-join side) and docs matching any negative
-    * word/phrase (anti-join side, reference search/new/mod.rs:268-295).
-    * `fids` (attributesToSearchOn) restricts phrase AND negative
-    * resolution to the searched fields — every universe restriction
-    * must see the same field set the slot matching does (reference
-    * routes phrase resolution through restricted_fids too). Phrases
-    * made ENTIRELY of stop words restrict nothing. */
-  private[graft] def syntaxDocs(pq: graft.query.ParsedQuery,
-                                fids: Option[Set[Int]] = None)
-      : (Option[DataFrame], Option[DataFrame]) = {
-    val pos = pq.phrases
-      .filter(_.exists(w => !stopWords.contains(Tokenizer.normalize(w))))
-      .map(ws => phrase(ws, fids))
-      .reduceOption((a, b) => a.join(b, Seq("docId"), "left_semi"))
-    val negWordDocs = {
-      val negTerms = termsOf(pq.negWords)
+  /** Universe restrictions implied by query syntax, as (docId, syn)
+    * rows a plan unions into its posting rows ahead of its one
+    * per-doc aggregate ([[SyntaxRows]]): syn = i on each row of a doc
+    * holding the i-th quoted phrase, -1 on each row of a doc matching
+    * a negative word or phrase (reference search/new/mod.rs:268-295).
+    * A join against docId sets instead would need a partitioning of its
+    * own: the optimizer pushes a semi- or anti-join below the posting
+    * side's repartition, so the join and the aggregate could not share
+    * the query-sized exchange. `fids` (attributesToSearchOn) restricts
+    * phrase AND negative resolution to the searched fields — every
+    * universe restriction must see the same field set the slot
+    * matching does (reference routes phrase resolution through
+    * restricted_fids too). Phrases made ENTIRELY of stop words restrict
+    * nothing. */
+  private[graft] def syntaxRows(pq: graft.query.ParsedQuery,
+                                fids: Option[Set[Int]] = None): SyntaxRows = {
+    def active(ws: Seq[String]) = ws.exists(w => !stopWords.contains(Tokenizer.normalize(w)))
+    def tagged(rows: DataFrame, tag: Int) = rows.select($"docId", lit(tag).as("syn"))
+    val phrases = pq.phrases.filter(active)
+    val negTerms = termsOf(pq.negWords)
+    val negWordRows =
       if (negTerms.isEmpty) Nil
       else fids match {
-        case Some(_) =>
-          Seq(positionRows(negTerms.map(_.term), fids).select($"docId").distinct())
-        case None => Seq(decoded(negTerms).toDF().select($"docId"))
+        case Some(_) => Seq(positionRows(negTerms.map(_.term), fids))
+        case None => Seq(decoded(negTerms).toDF())
       }
-    }
-    val negPhraseDocs = pq.negPhrases
-      .filter(_.exists(w => !stopWords.contains(Tokenizer.normalize(w))))
-      .map(ws => phrase(ws, fids).select($"docId"))
-    val negs = (negWordDocs ++ negPhraseDocs).reduceOption(_.unionByName(_))
-    (pos, negs.map(_.distinct()))
+    val rows =
+      phrases.zipWithIndex.map { case (ws, i) => tagged(phraseRows(ws, fids), i + 1) } ++
+        (negWordRows ++ pq.negPhrases.filter(active).map(phraseRows(_, fids)))
+          .map(tagged(_, -1))
+    SyntaxRows(rows.reduceOption(_ unionByName _), phrases.size, negTerms.map(_.df).sum)
   }
 
   /** Posting blocks for the given terms: bucket partition pruning + term
@@ -320,6 +349,23 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
       }
   }
 
+  /** Postings per reducer of [[exchangeWidth]]: [[SearchEngine.PostingsPerReducer]],
+    * lowered only by specs that need a small index's plans at full width. */
+  private[graft] var postingsPerReducer: Long = SearchEngine.PostingsPerReducer
+
+  /** Reduce width of a query exchange over `postings` rows (a query's
+    * Σdf, which the driver holds from the dictionary before any job):
+    * ⌈postings / PostingsPerReducer⌉, clamped to [1, the session's
+    * `spark.sql.shuffle.partitions`]. Plan-time partition coalescing
+    * from dictionary statistics: AQE would shrink the build-sized
+    * session width at run time, at the cost of a job per exchange; a
+    * head term still gets the full width. The session conf is read,
+    * never written (concurrent clients share it). */
+  def exchangeWidth(postings: Long): Int = {
+    val reducers = (postings + postingsPerReducer - 1) / postingsPerReducer
+    math.max(1L, math.min(reducers, spark.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
+  }
+
   /** Declarative BM25 search. `conjunctive=true` = AND semantics (docs
     * matching all query terms), false = OR. `candidates` (optional)
     * restricts the universe (filter-before-rank, reference
@@ -342,20 +388,18 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     }
     // quoted phrases / negative terms restrict the universe BEFORE
     // scoring (filter-before-rank; per-doc BM25 is universe-independent)
-    val (phraseDocs, negDocs) = syntaxDocs(pq)
-    val afterPhrase = phraseDocs.fold(afterCand)(p =>
-      afterCand.join(p.select($"docId"), Seq("docId"), "left_semi"))
-    val universe = negDocs.fold(afterPhrase)(nd =>
-      afterPhrase.join(nd, Seq("docId"), "left_anti"))
+    val syn = syntaxRows(pq)
     // deterministic f64 evaluation order: sum per-term scores in
     // ascending term order (SURVEY §7(e)) so ranks are bit-stable
     // across parallelism levels and across the WAND plan
-    val agg = universe.groupBy($"docId")
-      .agg(count(lit(1)).as("nMatched"),
-        aggregate(array_sort(collect_list(struct($"term", $"tscore"))),
-          lit(0.0), (acc, x) => acc + x.getField("tscore")).as("score"))
-    val filtered = if (conjunctive) agg.filter($"nMatched" === terms.size) else agg
-    filtered.select($"docId", $"score")
+    val agg = syn.under(afterCand)
+      .repartition(exchangeWidth(terms.map(_.df).sum + syn.negDf), $"docId")
+      .groupBy($"docId")
+      .agg(count($"term").as("nMatched"),
+        aggregate(array_sort(collect_list(when($"term".isNotNull, struct($"term", $"tscore")))),
+          lit(0.0), (acc, x) => acc + x.getField("tscore")).as("score") +: syn.tags: _*)
+    agg.filter(matched(conjunctive, terms.size) && syn.admits)
+      .select($"docId", $"score")
       .orderBy($"score".desc, $"docId".asc).limit(k)
   }
 
@@ -407,18 +451,22 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     if (!pq.isPlain) return searchDF(q, k, conjunctive)
     val terms = analyze(q)
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
+    // idf per term travels in the task closure, like decodedWith's
+    // constants: a per-call broadcast would outlive the request
     val termStats = terms.map(t => t.term -> t.idf).toMap
-    val bTermStats = spark.sparkContext.broadcast(termStats)
     val bAvgdl = avgdl
     val conj = conjunctive
     val kk = k
     val del = deletedSet
+    // grouped on the shard column itself, so the query-sized
+    // repartition is the plan's one exchange
     val blocks = blocksFor(terms)
-      .select(struct($"term", $"shard", $"firstDoc", $"lastDoc", $"count",
-        $"docBytes", $"tfBytes", $"blockMaxTf").as("_1"), $"lenBytes".as("_2"))
-      .as[(Wand.Block, Array[Byte])]
-    val hits = blocks.groupByKey(_._1.shard).flatMapGroups { (_, rows) =>
-      val bs = rows.toArray
+      .select($"shard", struct($"term", $"shard", $"firstDoc", $"lastDoc", $"count",
+        $"docBytes", $"tfBytes", $"blockMaxTf").as("block"), $"lenBytes")
+      .repartition(exchangeWidth(terms.map(_.df).sum), $"shard")
+      .groupBy($"shard").as[Int, (Int, Wand.Block, Array[Byte])]
+    val hits = blocks.flatMapGroups { (_, rows) =>
+      val bs = rows.map(r => (r._2, r._3)).toArray
       val lens = new scala.collection.mutable.HashMap[Int, Int]
       bs.foreach { case (b, lb) =>
         val ids = VByte.decodeDeltas(b.docBytes); val ls = VByte.decode(lb)
@@ -428,7 +476,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
           i += 1
         }
       }
-      Wand.topKShard(bs.map(_._1), lens, bTermStats.value, bAvgdl, kk, conj)
+      Wand.topKShard(bs.map(_._1), lens, termStats, bAvgdl, kk, conj)
     }
     hits.toDF("docId", "score")
       .orderBy($"score".desc, $"docId".asc).limit(k)
@@ -436,20 +484,24 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
 
   /** Universe of docids matching the query (no ranking): the
     * "resolve_universe" step of the reference (search/new/mod.rs:781). */
-  def candidates(q: String, conjunctive: Boolean = true): DataFrame = {
-    val pq = parseQuery(q)
+  def candidates(q: String, conjunctive: Boolean = true): DataFrame =
+    candidatesOf(parseQuery(q), conjunctive)
+
+  private def candidatesOf(pq: graft.query.ParsedQuery, conjunctive: Boolean): DataFrame = {
     val terms = termsOf(pq.positiveTerms)
     if (terms.isEmpty) return spark.range(0).select($"id".cast("int").as("docId"))
-    val agg = decoded(terms).toDF().groupBy($"docId")
-      .agg(count(lit(1)).as("nMatched"))
-    val f = if (conjunctive) agg.filter($"nMatched" === terms.size) else agg
-    val (phraseDocs, negDocs) = syntaxDocs(pq)
-    val afterPhrase = phraseDocs.fold(f)(p =>
-      f.join(p.select($"docId"), Seq("docId"), "left_semi"))
-    negDocs.fold(afterPhrase)(nd =>
-      afterPhrase.join(nd, Seq("docId"), "left_anti"))
+    val syn = syntaxRows(pq)
+    syn.under(decoded(terms).toDF())
+      .repartition(exchangeWidth(terms.map(_.df).sum + syn.negDf), $"docId")
+      .groupBy($"docId").agg(count($"term").as("nMatched"), syn.tags: _*)
+      .filter(matched(conjunctive, terms.size) && syn.admits)
       .select($"docId")
   }
+
+  /** A doc's posting-row count `nMatched` admits it: every query term
+    * (AND) or any (OR; a doc seen only through syntax rows has none). */
+  private def matched(conjunctive: Boolean, nTerms: Int): Column =
+    if (conjunctive) $"nMatched" === nTerms else $"nMatched" > 0
 
   /** Facet distribution: value -> doc count over the query's candidates
     * (reference facet_distribution.rs:332 execute; max_values_per_facet
@@ -581,8 +633,12 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * constraint while the remaining words keep their original offsets —
     * "the quick fox" with "the" stopped still matches docs where
     * quick/fox sit two apart. A phrase of ONLY stop words matches every
-    * doc (callers skip the restriction — see syntaxDocs). */
-  def phrase(words: Seq[String], fids: Option[Set[Int]] = None): DataFrame = {
+    * doc (callers skip the restriction — see syntaxRows). */
+  def phrase(words: Seq[String], fids: Option[Set[Int]] = None): DataFrame =
+    phraseRows(words, fids).distinct()
+
+  /** [[phrase]]'s docIds before the distinct: a row per matched start. */
+  private def phraseRows(words: Seq[String], fids: Option[Set[Int]]): DataFrame = {
     require(words.nonEmpty)
     require(hasPositions, "quoted and negative phrases need a positions-enabled " +
       "index (IndexConfig.positions = true)")
@@ -595,7 +651,7 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     }
     // doc has the phrase iff some start position p0 appears in every list
     exploded.reduce((a, b) => a.join(b, Seq("docId", "p0"), "left_semi"))
-      .select($"docId").distinct()
+      .select($"docId")
   }
 
   /** Per-doc proximity between two words: the reference's asymmetric
@@ -617,10 +673,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   /** Docs matching `q` (AND) that do NOT contain `negTerm` (reference
     * negative terms, search/new/mod.rs:268-295: subtract from universe). */
   def negative(q: String, negTerm: String): DataFrame = {
-    val neg = analyze(negTerm)
-    val negDocs = if (neg.isEmpty) spark.range(0).select($"id".cast("int").as("docId"))
-      else decoded(neg).toDF().select($"docId").distinct()
-    candidates(q).join(negDocs, Seq("docId"), "left_anti")
+    val pq = parseQuery(q)
+    candidatesOf(pq.copy(negWords = pq.negWords ++ parseQuery(negTerm).positiveTerms), true)
   }
 
   /** Prefix expansion: the first `cap` dictionary terms starting with
@@ -640,7 +694,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   /** Docs matching any of `ts`, with the count of distinct matched terms. */
   private def termDocs(ts: Seq[QueryTerm]): DataFrame =
     if (ts.isEmpty) spark.range(0).select($"id".cast("int").as("docId"), lit(0L).as("nTerms"))
-    else decoded(ts).toDF().groupBy($"docId").agg(countDistinct($"term").as("nTerms"))
+    else decoded(ts).toDF().repartition(exchangeWidth(ts.map(_.df).sum), $"docId")
+      .groupBy($"docId").agg(countDistinct($"term").as("nTerms"))
 
   /** Typo expansion: dictionary (term, distance) pairs within `maxDist`
     * edits (reference Levenshtein-DFA ∩ words-FST,
@@ -817,6 +872,16 @@ object SearchEngine {
     * corpus) exceeds it immediately, and WAND skips its blocks instead
     * of materializing a row per posting. */
   final val BroadcastDfCap: Long = 4L << 20
+
+  /** Postings one reducer of a query exchange takes
+    * ([[SearchEngine.exchangeWidth]]). Below tens of thousands of rows
+    * a reducer's cost is its task launch: on a 5,000-doc index whose
+    * 31 terms each sit in ~3,900 docs, `searchDF` p50 was 99 ms at
+    * width 4 and 162 ms at width 32 (local[4]). perfbench's corpus has
+    * 3,000 docs, so no term holds more than 3,000 postings and its
+    * requests take one reducer; a head term of a large index gets one
+    * per 65,536 postings, up to the session width. */
+  final val PostingsPerReducer: Long = 1L << 16
 
   /** Max tombstones held as a task-local set (4M Ints ≈ 16 MB);
     * beyond it, compact. */

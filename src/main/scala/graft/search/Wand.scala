@@ -59,9 +59,6 @@ object Wand {
     def exhausted: Boolean = bi >= blocks.length
     def curDoc: Int = if (exhausted) Int.MaxValue else ids(pi)
     def curTf: Int = tfs(pi)
-    /** Upper bound of the block the cursor is currently in. */
-    def curBlockMax: Double = if (exhausted) 0.0 else bms(blocks(bi))
-    def curBlockLast: Int = if (exhausted) Int.MaxValue else blocks(bi).lastDoc
 
     def next(): Unit = {
       pi += 1

@@ -112,9 +112,9 @@ class MultiFieldSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     assert(!allFields.contains(1), s"$allFields")
     // phrase restriction follows the field set too: "cooking pasta" as
     // a phrase exists in doc 0's TITLE and doc 1's BODY
-    val ph = engine.syntaxDocs(
+    val ph = engine.syntaxRows(
       graft.query.QueryParser.parse("\"cooking pasta\""), Some(Set(0)))
-      ._1.get.collect().map(_.getInt(0)).toSet
+      .rows.get.collect().map(_.getInt(0)).toSet
     assert(ph == Set(0), s"title-restricted phrase universe: $ph")
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.corpus.SourceFile
-import graft.functions.BM25
+import graft.functions.{BM25, Tokenizer}
 import graft.index.{IndexBuild, IndexConfig}
 import graft.rank.MeiliRank
 
@@ -95,7 +95,13 @@ class PostingScoreSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     if (terms.isEmpty) return Nil
     val base = e.decoded(terms, shardCap).toDF()
       .withColumn("idf", element_at(typedLit(terms.map(t => t.term -> t.idf).toMap), $"term"))
-    val (phraseDocs, negDocs) = e.syntaxDocs(pq)
+    // docs holding every quoted phrase, and docs matching a negative
+    val active = (ws: Seq[String]) => ws.exists(w => !e.stopWords.contains(Tokenizer.normalize(w)))
+    val phraseDocs = pq.phrases.filter(active).map(e.phrase(_))
+      .reduceOption((a, b) => a.join(b, Seq("docId"), "left_semi"))
+    val negTerms = e.termsOf(pq.negWords)
+    val negDocs = ((if (negTerms.isEmpty) Nil else Seq(e.decoded(negTerms).toDF().select($"docId"))) ++
+      pq.negPhrases.filter(active).map(e.phrase(_))).reduceOption(_ unionByName _).map(_.distinct())
     val afterPhrase = phraseDocs.fold(base)(p =>
       base.join(p.select($"docId"), Seq("docId"), "left_semi"))
     val universe = negDocs.fold(afterPhrase)(nd => afterPhrase.join(nd, Seq("docId"), "left_anti"))
