@@ -309,9 +309,11 @@ final class MeiliRank(engine: SearchEngine,
     // phrase derivations (split words, multi-word synonyms): the slot
     // matches where the words occur adjacently; never exact. Splits
     // cost 1 (a typo-class derivation) — under exactFids they match in
-    // typo-enabled fields only
+    // typo-enabled fields only. No distinct: a row per matched start,
+    // deduped by the per-doc aggregation (a distinct would be its own
+    // exchange at the session width)
     val phraseDfs = slots.flatMap(s => s.phraseDerivs.map { case (ws, cost) =>
-      engine.phrase(ws, if (cost > 0) typoFids(fids) else fids)
+      engine.phraseRows(ws, if (cost > 0) typoFids(fids) else fids)
         .select($"docId", lit(s.idx).as("slot"),
           lit(cost).as("cost"), lit(0).as("exact"), MeiliRank.NoLen)
     })

@@ -349,10 +349,6 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
       }
   }
 
-  /** Postings per reducer of [[exchangeWidth]]: [[SearchEngine.PostingsPerReducer]],
-    * lowered only by specs that need a small index's plans at full width. */
-  private[graft] var postingsPerReducer: Long = SearchEngine.PostingsPerReducer
-
   /** Reduce width of a query exchange over `postings` rows (a query's
     * Σdf, which the driver holds from the dictionary before any job):
     * ⌈postings / PostingsPerReducer⌉, clamped to [1, the session's
@@ -362,7 +358,8 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
     * head term still gets the full width. The session conf is read,
     * never written (concurrent clients share it). */
   def exchangeWidth(postings: Long): Int = {
-    val reducers = (postings + postingsPerReducer - 1) / postingsPerReducer
+    val per = SearchEngine.PostingsPerReducer
+    val reducers = (postings + per - 1) / per
     math.max(1L, math.min(reducers, spark.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
   }
 
@@ -637,8 +634,9 @@ final class SearchEngine(val spark: SparkSession, val indexDir: String,
   def phrase(words: Seq[String], fids: Option[Set[Int]] = None): DataFrame =
     phraseRows(words, fids).distinct()
 
-  /** [[phrase]]'s docIds before the distinct: a row per matched start. */
-  private def phraseRows(words: Seq[String], fids: Option[Set[Int]]): DataFrame = {
+  /** [[phrase]]'s docIds before the distinct: a row per matched start,
+    * for plans whose per-doc aggregate dedups them anyway. */
+  private[graft] def phraseRows(words: Seq[String], fids: Option[Set[Int]]): DataFrame = {
     require(words.nonEmpty)
     require(hasPositions, "quoted and negative phrases need a positions-enabled " +
       "index (IndexConfig.positions = true)")
@@ -874,14 +872,18 @@ object SearchEngine {
   final val BroadcastDfCap: Long = 4L << 20
 
   /** Postings one reducer of a query exchange takes
-    * ([[SearchEngine.exchangeWidth]]). Below tens of thousands of rows
-    * a reducer's cost is its task launch: on a 5,000-doc index whose
-    * 31 terms each sit in ~3,900 docs, `searchDF` p50 was 99 ms at
-    * width 4 and 162 ms at width 32 (local[4]). perfbench's corpus has
-    * 3,000 docs, so no term holds more than 3,000 postings and its
-    * requests take one reducer; a head term of a large index gets one
-    * per 65,536 postings, up to the session width. */
-  final val PostingsPerReducer: Long = 1L << 16
+    * ([[SearchEngine.exchangeWidth]]). Calibrated on local[4] with the
+    * reduce width forced to 1, 2 and 4, p50 ms of `searchDF` and of a
+    * `MeiliRank.search` page over AND queries of two or three terms: at
+    * Σdf ≈ 1,000 (the sf0.01 test data) the widths tie; at Σdf 8,000
+    * width 1 is already the slowest (`searchDF` 124 / 110 / 118, the
+    * cascade 401 / 352 / 373; on sf0.1, Σdf 7,800-11,700, `searchDF`
+    * took 111 ms at width 1 and 99 at width 4); at 16,000 it runs
+    * 168 / 140 / 137 and 463 / 418 / 388, and at 66,000 220 / 180 / 166
+    * and 651 / 538 / 456. So a reducer takes 4,096 postings: below that
+    * a query runs one reducer, Σdf 8,000 two and a head term one per
+    * 4,096 postings, up to the session width. */
+  final val PostingsPerReducer: Long = 1L << 12
 
   /** Max tombstones held as a task-local set (4M Ints ≈ 16 MB);
     * beyond it, compact. */

@@ -20,9 +20,11 @@ import graft.rank.MeiliRank
   * (`SearchEngine.exchangeWidth`), not from the session's
   * `spark.sql.shuffle.partitions`: tasks per call are the same in a
   * query session of width 4 and of width 200, no plan gains an
-  * exchange, and answers are bit-identical at every width, a forced
-  * full width included. One small positions index, query sessions with
-  * AQE off (the SearchEngine scaladoc's serving setting). */
+  * exchange, and answers are bit-identical at every width. A small
+  * positions index where every query takes one reducer, and one whose
+  * two head terms take more than PostingsPerReducer postings; query
+  * sessions with AQE off (the SearchEngine scaladoc's serving
+  * setting). */
 class ExchangeWidthSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -40,6 +42,25 @@ class ExchangeWidthSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
     }.toDS(), d, cfg)
     d
   }
+
+  /** 2,100 docs, each holding the phrase "alpha beta": "alpha beta"
+    * reads 4,200 postings, more than one reducer's PostingsPerReducer. */
+  private lazy val headDir: String = {
+    val d = tempDir("exchwidth-head")
+    IndexBuild.build(spark, (0 until 2100).map { i =>
+      SourceFile(f"r${i % 10}%02d", f"p$i%04d.scala", f"c$i%04d", "scala",
+        Seq("alpha", "beta", f"w${i % 50}%02d", if (i % 7 == 0) "quick brown" else "lazy dog")
+          .mkString(" "))
+    }.toDS(), d, cfg.copy(docsPerShard = 512))
+    d
+  }
+
+  /** Rows of `df`, doubles as raw bits, in a fixed order. */
+  private def bits(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(r => r.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).sortBy(_.mkString(","))
 
   /** A query session of the given width: AQE off, its own conf. */
   private def session(width: Int): SparkSession = {
@@ -105,6 +126,8 @@ class ExchangeWidthSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
         "searchDF" -> steadyTasks(e.searchDF("merge buffer", 10).collect()),
         "searchWand" -> steadyTasks(e.searchWand("merge buffer", 10).collect()),
         "MeiliRank.search" -> steadyTasks(mr.search("quick brown fox", 5).collect()),
+        // a split-word derivation: "quickbrown" matches the phrase quick brown
+        "MeiliRank.search split" -> steadyTasks(mr.search("quickbrown", 5).collect()),
         "Index page" -> steadyTasks(idx.search(SearchRequest(q = "quick brown", limit = 5)).collect()),
         "Index page lang" -> steadyTasks(idx.search(
           SearchRequest(q = "quick brown", limit = 5, filter = Some("lang = scala"))).collect()))
@@ -118,18 +141,19 @@ class ExchangeWidthSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
 
   /** Tasks per call on this index: the query's scan tasks plus one
     * reducer; the page's filter adds its broadcast's scan. Exchanges at
-    * the session width cost 6, 6, 12, 12 and 14 at width 4 and 202, 202,
-    * 208, 208 and 210 at width 200. */
+    * the session width cost 6, 6, 12, 14, 12 and 14 at width 4 and 202,
+    * 202, 208, 406, 208 and 210 at width 200. */
   private val TaskBudget = Map("searchDF" -> 3, "searchWand" -> 3,
-    "MeiliRank.search" -> 9, "Index page" -> 9, "Index page lang" -> 11)
+    "MeiliRank.search" -> 9, "MeiliRank.search split" -> 7, "Index page" -> 9,
+    "Index page lang" -> 11)
 
   /** Exchanges (shuffle + broadcast) in each plan before the width
     * rule: a plan may lose exchanges, never gain one. */
   private val ParentExchanges = Map("plain" -> 1, "or" -> 1, "phrase" -> 4,
     "negative" -> 5, "filtered" -> 2, "wand" -> 1, "totalHits universe" -> 6,
-    "facetDistribution" -> 3)
+    "facetDistribution" -> 3, "split cascade" -> 2)
 
-  test("plans keep their exchange counts, run every shuffle at the query's width, and answer bit for bit at widths 1, 4, 200 and at full width") {
+  test("plans keep their exchange counts, run every shuffle at the query's width, and answer bit for bit at widths 1, 4 and 200") {
     def plans(e: SearchEngine): Seq[(String, DataFrame)] = Seq(
       "plain" -> e.searchDF("merge buffer", 40),
       "or" -> e.searchDF("quick stream", 40, conjunctive = false),
@@ -138,12 +162,10 @@ class ExchangeWidthSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       "filtered" -> e.searchDF("alpha quick", 40, candidates = Some(e.filteredDocs("lang = scala"))),
       "wand" -> e.searchWand("alpha quick", 40, conjunctive = false),
       "totalHits universe" -> e.candidates("alpha \"quick brown\" -merge"),
-      "facetDistribution" -> e.facetDistribution("alpha quick", "lang"))
+      "facetDistribution" -> e.facetDistribution("alpha quick", "lang"),
+      "split cascade" -> new MeiliRank(e).matchedDocs("quickbrown"))
     def answers(e: SearchEngine): Seq[Any] =
-      plans(e).map { case (_, df) => df.collect().toSeq.map(r => r.toSeq.map {
-        case d: Double => java.lang.Double.doubleToRawLongBits(d)
-        case v => v
-      }).sortBy(_.mkString(",")) } ++ Seq(e.totalHits("alpha quick", filter = Some("lang = scala")),
+      plans(e).map { case (_, df) => bits(df) } ++ Seq(e.totalHits("alpha quick", filter = Some("lang = scala")),
         e.totalHits("alpha -\"lazy dog\""))
     val at = Seq(1, 4, 200).map { w =>
       val e = new SearchEngine(session(w), dir)
@@ -160,17 +182,39 @@ class ExchangeWidthSpec extends AnyFunSuite with graft.SparkTestBase.TempDirs {
       }
       answers(e)
     }
-    // every exchange at its full session width, as a head term gets it
-    val full = Seq(4, 200).map { w =>
-      val e = new SearchEngine(session(w), dir)
-      e.postingsPerReducer = 1
-      answers(e)
-    }
-    (at.tail ++ full).foreach(a => assert(a == at.head))
+    at.tail.foreach(a => assert(a == at.head))
     assert(at.head.forall {
       case rows: Seq[_] => rows.nonEmpty
       case n: Long => n > 0
       case _ => true
     }, s"every query must match: ${at.head}")
+  }
+
+  test("a head-term query runs one reducer per PostingsPerReducer postings and answers bit for bit at every width") {
+    assert(SearchEngine.PostingsPerReducer < 4200, "the fixture must need more than one reducer")
+    def plans(e: SearchEngine): Seq[(String, DataFrame)] = {
+      val mr = new MeiliRank(e)
+      Seq(
+        "searchDF" -> e.searchDF("alpha beta", 50),
+        "negative" -> e.searchDF("alpha beta -lazy", 50),
+        "wand" -> e.searchWand("alpha beta", 50, conjunctive = false),
+        "candidates" -> e.candidates("alpha beta \"quick brown\""),
+        "cascade" -> mr.matchedDocs("alpha beta"),
+        "split cascade" -> mr.matchedDocs("alphabeta quick"))
+    }
+    val at = Seq(1, 4, 200).map { w =>
+      val e = new SearchEngine(session(w), headDir)
+      val mr = new MeiliRank(e)
+      plans(e).foreach { case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        val reducers = plan.collect { case x: ShuffleExchangeExec => x.outputPartitioning.numPartitions }
+        assert(reducers.nonEmpty && reducers.forall(r => if (w == 1) r == 1 else r > 1 && r < w),
+          s"$name at width $w:\n$plan")
+      }
+      plans(e).map { case (_, df) => bits(df) } ++
+        Seq(bits(mr.search("alpha beta quick", 20)), bits(mr.search("alphabeta quick", 20)))
+    }
+    at.tail.foreach(a => assert(a == at.head))
+    assert(at.head.forall(_.nonEmpty), s"every query must match: ${at.head}")
   }
 }
